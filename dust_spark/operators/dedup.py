@@ -21,6 +21,7 @@ All signature/sketch computation is pure Catalyst expressions
 
 from __future__ import annotations
 
+import functools
 import os
 
 import numpy as np
@@ -28,6 +29,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dust_spark.fixtures import memo, plan_key
 from dust_spark.functions import (
     hamming64,
     jaccard,
@@ -76,10 +78,6 @@ def exact_dedup_count(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 _EMPTY_MIN = 0x7FFFFFFFFFFFFFFF  # sentinel for empty shingle sets
-
-# session-scoped memo of decontaminate's broadcast-gate probe scalar
-# (keyed on the canonicalized benchmark plan — see the gate comment)
-_probe_cache: dict[tuple, int] = {}
 
 
 _MERSENNE61 = (1 << 61) - 1
@@ -304,12 +302,9 @@ def _arrow_kernel_pays(df: DataFrame) -> bool:
 
 
 # the sig kernel carries no data closure (only num_hashes), so one
-# UDF object per k serves every call — a fresh pandas_udf per call
-# would serialize a distinct Python command each time and defeat
-# plan-cache matching of the persisted sigs frames (the c2d lesson)
-_portable_sig_udf_cache: dict[int, object] = {}
-
-
+# UDF object per k serves every call (the same-object rule of
+# dust_spark.fixtures: persisted sigs frames keep plan-matching)
+@functools.cache
 def _portable_sig_udf(num_hashes: int):
     """Arrow-batched portable MinHash signature kernel (r13 opt): the
     per-character Horner folds (``h0 = fold (acc*31 + codepoint) % M``,
@@ -328,9 +323,6 @@ def _portable_sig_udf(num_hashes: int):
     with no shingles return NULL — the caller's Catalyst sentinel
     branch covers them (it needs the row id, which the kernel does not
     see)."""
-    if num_hashes in _portable_sig_udf_cache:
-        return _portable_sig_udf_cache[num_hashes]
-
     from pyspark.sql.functions import pandas_udf
 
     from dust_spark.functions import PORTABLE_HASH_MOD
@@ -374,7 +366,6 @@ def _portable_sig_udf(num_hashes: int):
             out[r] = sig[j]
         return pd.Series(out)
 
-    _portable_sig_udf_cache[num_hashes] = sig_kernel
     return sig_kernel
 
 
@@ -1008,28 +999,15 @@ def decontaminate(
         # benchmark side at BUILD time on every run. Deterministic for
         # a fixed input plan within a session; affects only the
         # broadcast-vs-shuffle hint, never result rows.
-        try:
-            pkey = (
-                benchmark.sparkSession,
-                benchmark._jdf.queryExecution().analyzed().canonicalized().toString(),
-                benchmark_text_col,
-            )
-        except Exception:  # noqa: BLE001 — memo is an optimization only
-            pkey = None
-        if pkey is not None and pkey in _probe_cache:
-            approx_grams = _probe_cache[pkey]
-        else:
-            from dust_spark.operators.similarity import _evict_stopped_sessions
+        def probe() -> int:
+            total = benchmark.select(F.sum(F.size(tokens(benchmark_text_col))).alias("s"))
+            return total.first()["s"] or 0
 
-            _evict_stopped_sessions(_probe_cache)
-            approx_grams = (
-                benchmark.select(
-                    F.sum(F.size(tokens(benchmark_text_col))).alias("s")
-                ).first()["s"]
-                or 0
-            )
-            if pkey is not None:
-                _probe_cache[pkey] = approx_grams
+        approx_grams = memo(
+            benchmark.sparkSession,
+            ("decontaminate_probe", plan_key(benchmark), benchmark_text_col),
+            probe,
+        )
         hinted = F.broadcast(bench_grams) if approx_grams <= broadcast_limit else bench_grams
     else:
         hinted = F.broadcast(bench_grams)

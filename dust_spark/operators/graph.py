@@ -24,12 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# session-scoped CC memo: three catalog queries (c1f/c9j/c10b) run the
-# closure over the SAME pair fixture, each paying the size-gate probe +
-# the union-find collect (local path) per invocation. Keyed on the
-# canonicalized pair plan; the local path's LocalRelation result is
-# memoized by OBJECT so downstream plans cache-match (r13 finding 2).
-_cc_cache: dict[tuple, DataFrame] = {}
+from dust_spark.fixtures import memo, plan_key
 
 
 def connected_components(
@@ -49,41 +44,24 @@ def connected_components(
     collect of the ALREADY-REDUCED pair set — never corpus data. Larger
     graphs take the O(log n)-round distributed pointer-jumping loop,
     which is the 100 TB path.
+
+    Memoized per session on the pair plan: three catalog queries
+    (c1f/c9j/c10b) run the closure over the same pair fixture.
     """
-    from dust_spark.operators.similarity import _evict_stopped_sessions
+    return memo(
+        pairs.sparkSession,
+        ("cc", plan_key(pairs), src, dst, max_iterations, local_threshold),
+        lambda: _components(pairs, src, dst, max_iterations, local_threshold),
+    )
 
-    try:
-        plan = pairs._jdf.queryExecution().analyzed().canonicalized().toString()
-        # LocalRelation / LogicalRDD canonicalize to their SCHEMA only (no
-        # rows), so two different createDataFrame inputs with the same shape
-        # would share a key — never memoize those (the catalog queries feed
-        # parquet plans, whose canonicalized string includes file locations)
-        if "LocalRelation" in plan or "LogicalRDD" in plan:
-            key = None
-        else:
-            key = (
-                pairs.sparkSession,
-                plan,
-                src,
-                dst,
-                max_iterations,
-                local_threshold,
-            )
-    except Exception:  # noqa: BLE001 — memo is an optimization only
-        key = None
-    if key is not None and key in _cc_cache:
-        return _cc_cache[key]
-    _evict_stopped_sessions(_cc_cache)
 
-    def _memo(out: DataFrame) -> DataFrame:
-        if key is not None:
-            _cc_cache[key] = out
-        return out
-
+def _components(
+    pairs: DataFrame, src: str, dst: str, max_iterations: int, local_threshold: int
+) -> DataFrame:
     if local_threshold:
         cap = pairs.select(src, dst).limit(local_threshold + 1).count()
         if cap <= local_threshold:
-            return _memo(_local_components(pairs, src, dst))
+            return _local_components(pairs, src, dst)
     edges = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
@@ -129,9 +107,7 @@ def connected_components(
     edges.unpersist()
     # distributed path: labels are checkpoint-pinned, so the memoized
     # handle replays the identical result without re-running the loop
-    return _memo(
-        labels.select(F.col("u").alias("node"), F.col("label").alias("component"))
-    )
+    return labels.select(F.col("u").alias("node"), F.col("label").alias("component"))
 
 
 def _local_components(pairs: DataFrame, src: str, dst: str) -> DataFrame:

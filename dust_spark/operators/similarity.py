@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dust_spark.fixtures import memo, plan_key
 from dust_spark.functions import cosine, vec_dot, vec_norm
 
 
@@ -101,9 +102,6 @@ def rp_signature(vec_col, planes: np.ndarray):
     return F.array(*words)
 
 
-_rp_udf_cache: dict[tuple, object] = {}
-
-
 def _rp_tables_udf(df: DataFrame, planes: np.ndarray, n_tables: int, bits: int):
     """Per-table LSH signatures as one Arrow-batched scorer: sign bits
     of vec·planes (``>= 0``, matching :func:`rp_signature`), packed
@@ -112,32 +110,29 @@ def _rp_tables_udf(df: DataFrame, planes: np.ndarray, n_tables: int, bits: int):
     plan size and codegen time are O(1) in the plane count.
 
     r13 opt: the UDF (and its broadcast) memoizes per (session, plane
-    bytes, layout). A fresh broadcast per call gave every run a
-    distinct serialized UDF command, so persisted bucket indexes built
-    over it could never plan-match Spark's cache manager across runs
-    (the LocalRelation lesson, Python-UDF flavored)."""
+    bytes, layout), so persisted bucket indexes built over it
+    plan-match Spark's cache manager across runs."""
     from pyspark.sql.functions import pandas_udf
 
     P0 = np.ascontiguousarray(planes, dtype=np.float64)
-    key = (df.sparkSession, P0.tobytes(), P0.shape, n_tables, bits)
-    if key in _rp_udf_cache:
-        return _rp_udf_cache[key]
-    _evict_stopped_sessions(_rp_udf_cache)
-    bc = df.sparkSession.sparkContext.broadcast(P0)
 
-    @pandas_udf("array<long>")
-    def sigs(v: pd.Series) -> pd.Series:
-        P = bc.value
-        M = _batch_matrix(v, P.shape[1])
-        bits_m = (M @ P.T) >= 0  # (n, n_tables*bits)
-        words = np.zeros((len(M), n_tables), dtype=np.int64)
-        for t in range(n_tables):
-            for j in range(bits):
-                words[:, t] |= bits_m[:, t * bits + j].astype(np.int64) << j
-        return pd.Series(list(words))
+    def build():
+        bc = df.sparkSession.sparkContext.broadcast(P0)
 
-    _rp_udf_cache[key] = sigs
-    return sigs
+        @pandas_udf("array<long>")
+        def sigs(v: pd.Series) -> pd.Series:
+            P = bc.value
+            M = _batch_matrix(v, P.shape[1])
+            bits_m = (M @ P.T) >= 0  # (n, n_tables*bits)
+            words = np.zeros((len(M), n_tables), dtype=np.int64)
+            for t in range(n_tables):
+                for j in range(bits):
+                    words[:, t] |= bits_m[:, t * bits + j].astype(np.int64) << j
+            return pd.Series(list(words))
+
+        return sigs
+
+    return memo(df.sparkSession, ("rp_udf", P0.tobytes(), P0.shape, n_tables, bits), build)
 
 
 def _planes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
@@ -257,25 +252,18 @@ def portable_planes(dim: int, nbits: int) -> list[list[float]]:
     ]
 
 
-# r13 opt: the one-row planes LocalRelation is memoized per (session,
-# dim, nbits). Two createDataFrame calls with identical array data do
-# NOT plan-match for Spark's CacheManager (array cells compare by
-# reference), so any persisted frame built over a fresh planes frame —
-# the c2i bucket index, most importantly — could never re-hit its cache
-# across runs; reusing the same DataFrame object restores the match.
-_planes_df_cache: dict[tuple, DataFrame] = {}
-
-
 def _portable_planes_df(spark, dim: int, nbits: int) -> DataFrame:
-    key = (spark, dim, nbits)
-    if key not in _planes_df_cache:
-        _evict_stopped_sessions(_planes_df_cache)
-        planes = portable_planes(dim, nbits)
-        _planes_df_cache[key] = spark.createDataFrame(
-            [([[float(x) for x in p] for p in planes],)],
+    """The one-row planes LocalRelation, memoized per (session, dim,
+    nbits) so persisted frames built over it — the c2i bucket index,
+    most importantly — re-hit their cache across runs."""
+    return memo(
+        spark,
+        ("planes", dim, nbits),
+        lambda: spark.createDataFrame(
+            [([[float(x) for x in p] for p in portable_planes(dim, nbits)],)],
             "__planes: array<array<double>>",
-        )
-    return _planes_df_cache[key]
+        ),
+    )
 
 
 def rp_lsh_topk_portable(
@@ -593,38 +581,6 @@ def _probe_udf(bc, n_probe: int):
     return probes
 
 
-_lloyd_cache: dict[tuple, list] = {}
-# LocalRelation frames memoized BY VALUE: two createDataFrame calls
-# with identical array data do NOT plan-match for Spark's CacheManager
-# (array cells compare by reference), so a downstream .persist() would
-# never re-hit across runs unless the SAME frame object is reused.
-_lloyd_frame_cache: dict[tuple, DataFrame] = {}
-# session-scoped PQ codebook training memo (see _pq_train_encode)
-_pq_cb_cache: dict[tuple, dict] = {}
-# session-scoped IVF quantizer memo (see ivf_topk)
-_kmeans_cents_cache: dict[tuple, object] = {}
-# session-scoped MIPS memo: (max squared norm, persisted augmented
-# corpus bucket index) per canonicalized corpus plan (see
-# mips_topk_portable)
-_mips_cache: dict[tuple, tuple] = {}
-
-
-def _evict_stopped_sessions(*caches: dict) -> None:
-    """Drop memo entries owned by stopped SparkSessions (the
-    queries_tierc r8 discipline): keys are (spark, ...) tuples, so an
-    O(len) sweep on cache-miss is the cheapest correct eviction."""
-    for cache in caches:
-        dead = []
-        for k in cache:
-            try:
-                if k[0].sparkContext._jsc is None:
-                    dead.append(k)
-            except Exception:  # noqa: BLE001 — any probe failure = dead
-                dead.append(k)
-        for k in dead:
-            cache.pop(k, None)
-
-
 def _lloyd_cents_key(cents) -> tuple:
     return tuple((cid, tuple(c)) for cid, c in cents)
 
@@ -633,16 +589,17 @@ def _lloyd_cents_df(spark, cents) -> DataFrame:
     """(cid, c) centroid table as a LocalRelation — zero lineage."""
     from pyspark.sql import types as T
 
-    key = (spark, "cents", _lloyd_cents_key(cents))
-    if key not in _lloyd_frame_cache:
-        schema = T.StructType(
-            [
-                T.StructField("cid", T.IntegerType(), False),
-                T.StructField("c", T.ArrayType(T.DoubleType()), False),
-            ]
-        )
-        _lloyd_frame_cache[key] = spark.createDataFrame(list(cents), schema)
-    return _lloyd_frame_cache[key]
+    schema = T.StructType(
+        [
+            T.StructField("cid", T.IntegerType(), False),
+            T.StructField("c", T.ArrayType(T.DoubleType()), False),
+        ]
+    )
+    return memo(
+        spark,
+        ("cents", _lloyd_cents_key(cents)),
+        lambda: spark.createDataFrame(list(cents), schema),
+    )
 
 
 def _lloyd_carr_df(spark, cents) -> DataFrame:
@@ -651,28 +608,27 @@ def _lloyd_carr_df(spark, cents) -> DataFrame:
     zero lineage."""
     from pyspark.sql import types as T
 
-    key = (spark, "carr", _lloyd_cents_key(cents))
-    if key not in _lloyd_frame_cache:
-        schema = T.StructType(
-            [
-                T.StructField(
-                    "__ca",
-                    T.ArrayType(
-                        T.StructType(
-                            [
-                                T.StructField("i", T.IntegerType(), False),
-                                T.StructField(
-                                    "c", T.ArrayType(T.DoubleType()), False
-                                ),
-                            ]
-                        )
-                    ),
-                    False,
-                )
-            ]
-        )
-        _lloyd_frame_cache[key] = spark.createDataFrame([(list(cents),)], schema)
-    return _lloyd_frame_cache[key]
+    schema = T.StructType(
+        [
+            T.StructField(
+                "__ca",
+                T.ArrayType(
+                    T.StructType(
+                        [
+                            T.StructField("i", T.IntegerType(), False),
+                            T.StructField("c", T.ArrayType(T.DoubleType()), False),
+                        ]
+                    )
+                ),
+                False,
+            )
+        ]
+    )
+    return memo(
+        spark,
+        ("carr", _lloyd_cents_key(cents)),
+        lambda: spark.createDataFrame([(list(cents),)], schema),
+    )
 
 
 def _lloyd_assign(base: DataFrame, cents, with_v: bool = False) -> DataFrame:
@@ -738,11 +694,10 @@ def _portable_lloyd_py(
     bounded collect. The previous all-DataFrame loop re-planned and
     re-ran the whole centroid lineage per consumer (c3i: 30 stages for
     k=4; now ~6). Training results memoize per session keyed on the
-    CANONICALIZED analyzed plan of ``base`` (expr-id-normalized, so
-    the same logical input re-built on a later run hits) + (k,
-    iterations) — the _pq_ann_result warm discipline at operator
-    level; fixtures are immutable within a session, so identical input
-    plans yield identical training results: cold runs pay the training
+    canonicalized plan of ``base`` + (k, iterations) — the
+    _pq_ann_result warm discipline at operator level; fixtures are
+    immutable within a session, so identical input plans yield
+    identical training results: cold runs pay the training
     jobs, warm runs replay the memoized ROUND(6) centroids bit-exactly.
     Values are bit-identical to the r12 loop: collected doubles
     round-trip exactly through Py4J and the broadcast-row arrays fold
@@ -750,57 +705,38 @@ def _portable_lloyd_py(
     for API compatibility (the returned cents frame is already a local
     relation, so there is no lineage left to truncate)."""
     spark = base.sparkSession
-    try:
-        canon = base._jdf.queryExecution().analyzed().canonicalized().toString()
-        # LocalRelation/LogicalRDD canonicalize to SCHEMA-ONLY strings
-        # (the graph.connected_components probe): two different inputs
-        # with the same shape would share a key — never plan-memoize
-        # those (value-level memos, e.g. _gated_route, cover them).
-        if "LocalRelation" in canon or "LogicalRDD" in canon or "ExistingRDD" in canon:
-            key = None
-        else:
-            key = (spark, canon, k, iterations)
-    except Exception:  # noqa: BLE001 — memo is an optimization only
-        key = None
-    if key is not None and key in _lloyd_cache:
-        cents_py = _lloyd_cache[key]
-        return (
-            _lloyd_assign(base, cents_py),
-            _lloyd_cents_df(spark, cents_py),
-            cents_py,
-        )
-    _evict_stopped_sessions(_lloyd_cache, _lloyd_frame_cache, _pq_cb_cache)
-    init = (
-        base.orderBy("vid")
-        .limit(k)
-        .select(F.col("v").cast("array<double>").alias("c"))
-        .collect()
-    )
-    cents_py: list[tuple[int, list[float]]] = [
-        (i + 1, [float(x) for x in r["c"]]) for i, r in enumerate(init)
-    ]
-    for _ in range(iterations - 1):
-        upd = (
-            _lloyd_assign(base, cents_py, with_v=True)
-            .select("cid", F.posexplode(F.col("v").cast("array<double>")).alias("d", "x"))
-            .groupBy("cid", "d")
-            .agg(
-                F.round(
-                    F.sum(F.col("x").cast("decimal(25,12)")).cast("double")
-                    / F.count("*"),
-                    6,
-                ).alias("m")
-            )
+
+    def train() -> list[tuple[int, list[float]]]:
+        init = (
+            base.orderBy("vid")
+            .limit(k)
+            .select(F.col("v").cast("array<double>").alias("c"))
             .collect()
         )
-        byc: dict[int, dict[int, float]] = {}
-        for r in upd:
-            byc.setdefault(r["cid"], {})[r["d"]] = float(r["m"])
-        cents_py = [
-            (cid, [byc[cid][d] for d in sorted(byc[cid])]) for cid in sorted(byc)
-        ]
-    if key is not None:
-        _lloyd_cache[key] = cents_py
+        cents_py = [(i + 1, [float(x) for x in r["c"]]) for i, r in enumerate(init)]
+        for _ in range(iterations - 1):
+            upd = (
+                _lloyd_assign(base, cents_py, with_v=True)
+                .select("cid", F.posexplode(F.col("v").cast("array<double>")).alias("d", "x"))
+                .groupBy("cid", "d")
+                .agg(
+                    F.round(
+                        F.sum(F.col("x").cast("decimal(25,12)")).cast("double")
+                        / F.count("*"),
+                        6,
+                    ).alias("m")
+                )
+                .collect()
+            )
+            byc: dict[int, dict[int, float]] = {}
+            for r in upd:
+                byc.setdefault(r["cid"], {})[r["d"]] = float(r["m"])
+            cents_py = [
+                (cid, [byc[cid][d] for d in sorted(byc[cid])]) for cid in sorted(byc)
+            ]
+        return cents_py
+
+    cents_py = memo(spark, ("lloyd", plan_key(base), k, iterations), train)
     return _lloyd_assign(base, cents_py), _lloyd_cents_df(spark, cents_py), cents_py
 
 
@@ -960,24 +896,11 @@ def ivf_topk(
     # r13 opt: memoize the (deterministic: seeded init, bounded sample)
     # quantizer per session keyed on the canonicalized corpus plan —
     # the driver-side numpy training collected its sample on every run
-    try:
-        ckey = (
-            corpus.sparkSession,
-            corpus._jdf.queryExecution().analyzed().canonicalized().toString(),
-            vec_col,
-            n_lists,
-            iterations,
-            seed,
-        )
-    except Exception:  # noqa: BLE001 — memo is an optimization only
-        ckey = None
-    if ckey is not None and ckey in _kmeans_cents_cache:
-        cents = _kmeans_cents_cache[ckey]
-    else:
-        _evict_stopped_sessions(_kmeans_cents_cache)
-        cents = kmeans_centroids(corpus, vec_col, n_lists, iterations, seed=seed)
-        if ckey is not None:
-            _kmeans_cents_cache[ckey] = cents
+    cents = memo(
+        corpus.sparkSession,
+        ("ivf", plan_key(corpus), vec_col, n_lists, iterations, seed),
+        lambda: kmeans_centroids(corpus, vec_col, n_lists, iterations, seed=seed),
+    )
 
     if cents.size <= _CATALYST_CENTROID_CAP:
         # small coarse quantizer: zero Python workers (the Arrow path
@@ -1159,28 +1082,27 @@ def _pq_dist():
     )
 
 
+def _pq_cb_key(cb_py) -> tuple:
+    return tuple((s, cid, tuple(c)) for s in sorted(cb_py) for cid, c in cb_py[s])
+
+
 def _pq_cb_df(spark, cb_py) -> DataFrame:
     """(s, cid, c) codebook table as a value-memoized LocalRelation."""
     from pyspark.sql import types as T
 
-    key = (
-        spark,
-        "pqcb",
-        tuple(
-            (s, cid, tuple(c)) for s in sorted(cb_py) for cid, c in cb_py[s]
-        ),
+    schema = T.StructType(
+        [
+            T.StructField("s", T.IntegerType(), False),
+            T.StructField("cid", T.IntegerType(), False),
+            T.StructField("c", T.ArrayType(T.DoubleType()), False),
+        ]
     )
-    if key not in _lloyd_frame_cache:
-        schema = T.StructType(
-            [
-                T.StructField("s", T.IntegerType(), False),
-                T.StructField("cid", T.IntegerType(), False),
-                T.StructField("c", T.ArrayType(T.DoubleType()), False),
-            ]
-        )
-        rows = [(s, cid, c) for s in sorted(cb_py) for cid, c in cb_py[s]]
-        _lloyd_frame_cache[key] = spark.createDataFrame(rows, schema)
-    return _lloyd_frame_cache[key]
+    rows = [(s, cid, c) for s in sorted(cb_py) for cid, c in cb_py[s]]
+    return memo(
+        spark,
+        ("pqcb", _pq_cb_key(cb_py)),
+        lambda: spark.createDataFrame(rows, schema),
+    )
 
 
 def _pq_cb_row_df(spark, cb_py) -> DataFrame:
@@ -1189,37 +1111,30 @@ def _pq_cb_row_df(spark, cb_py) -> DataFrame:
     construction in _pq_subspaces)."""
     from pyspark.sql import types as T
 
-    key = (
-        spark,
-        "pqrow",
-        tuple(
-            (s, cid, tuple(c)) for s in sorted(cb_py) for cid, c in cb_py[s]
-        ),
-    )
-    if key not in _lloyd_frame_cache:
-        schema = T.StructType(
-            [
-                T.StructField(
-                    "__cb",
+    schema = T.StructType(
+        [
+            T.StructField(
+                "__cb",
+                T.ArrayType(
                     T.ArrayType(
-                        T.ArrayType(
-                            T.StructType(
-                                [
-                                    T.StructField("i", T.IntegerType(), False),
-                                    T.StructField(
-                                        "c", T.ArrayType(T.DoubleType()), False
-                                    ),
-                                ]
-                            )
+                        T.StructType(
+                            [
+                                T.StructField("i", T.IntegerType(), False),
+                                T.StructField("c", T.ArrayType(T.DoubleType()), False),
+                            ]
                         )
-                    ),
-                    False,
-                )
-            ]
-        )
-        data = [[[(cid, c) for cid, c in cb_py[s]] for s in sorted(cb_py)]]
-        _lloyd_frame_cache[key] = spark.createDataFrame([(data[0],)], schema)
-    return _lloyd_frame_cache[key]
+                    )
+                ),
+                False,
+            )
+        ]
+    )
+    data = [[(cid, c) for cid, c in cb_py[s]] for s in sorted(cb_py)]
+    return memo(
+        spark,
+        ("pqrow", _pq_cb_key(cb_py)),
+        lambda: spark.createDataFrame([(data,)], schema),
+    )
 
 
 def _pq_assign(sub_base: DataFrame, cb_py, with_sv: bool = False) -> DataFrame:
@@ -1264,19 +1179,8 @@ def _pq_train_encode(sub_base: DataFrame, n_codes: int, iterations: int):
     from pyspark.sql import Window as W
 
     spark = sub_base.sparkSession
-    try:
-        key = (
-            spark,
-            sub_base._jdf.queryExecution().analyzed().canonicalized().toString(),
-            n_codes,
-            iterations,
-        )
-    except Exception:  # noqa: BLE001 — memo is an optimization only
-        key = None
-    if key is not None and key in _pq_cb_cache:
-        cb_py = _pq_cb_cache[key]
-    else:
-        _evict_stopped_sessions(_lloyd_cache, _lloyd_frame_cache, _pq_cb_cache)
+
+    def train() -> dict[int, list]:
         w0 = W.partitionBy("s").orderBy("vid")
         init = (
             sub_base.withColumn("cid", F.row_number().over(w0))
@@ -1317,8 +1221,9 @@ def _pq_train_encode(sub_base: DataFrame, n_codes: int, iterations: int):
                 ]
                 for s in sorted(nb)
             }
-        if key is not None:
-            _pq_cb_cache[key] = cb_py
+        return cb_py
+
+    cb_py = memo(spark, ("pq_codebooks", plan_key(sub_base), n_codes, iterations), train)
     codebooks = _pq_cb_df(spark, cb_py)
     codes = (
         _pq_assign(sub_base, cb_py)
@@ -1496,24 +1401,7 @@ def mips_topk_portable(
             v, F.lit(0.0), lambda s, x: s + x.cast("double") * x.cast("double")
         )
 
-    # r13 opt: the max-norm probe (an eager corpus agg) and the corpus
-    # bucket index (the expensive n × nbits·(dim+1) dot pass) re-ran on
-    # every invocation — memoize both per (session, canonicalized
-    # corpus plan), the build-once-LSH discipline of c2d/c3c. Cold
-    # pays, warm replays bit-identical (m2 is a collected double, the
-    # index a persisted deterministic plan).
     spark = corpus.sparkSession
-    try:
-        ckey = (
-            spark,
-            corpus._jdf.queryExecution().analyzed().canonicalized().toString(),
-            id_col,
-            vec_col,
-            dim,
-            nbits,
-        )
-    except Exception:  # noqa: BLE001 — memo is an optimization only
-        ckey = None
 
     def augmented(df_, extra):
         return df_.select(
@@ -1545,10 +1433,7 @@ def mips_topk_portable(
         )
         return dotted.select(idname, word.alias(bname))
 
-    if ckey is not None and ckey in _mips_cache:
-        m2, cb = _mips_cache[ckey]
-    else:
-        _evict_stopped_sessions(_mips_cache)
+    def index():
         m2 = corpus.agg(F.max(sq_norm(F.col(vec_col)))).collect()[0][0]
         if m2 is None:
             m2 = 0.0  # empty corpus: keep the plan valid, result is empty anyway
@@ -1557,8 +1442,15 @@ def mips_topk_portable(
             "nid",
             "bucket",
         ).persist()
-        if ckey is not None:
-            _mips_cache[ckey] = (m2, cb)
+        return m2, cb
+
+    # r13 opt: the max-norm probe (an eager corpus agg) and the corpus
+    # bucket index (the expensive n × nbits·(dim+1) dot pass) re-ran on
+    # every invocation — memoize both per (session, canonicalized
+    # corpus plan), the build-once-LSH discipline of c2d/c3c. Cold
+    # pays, warm replays bit-identical (m2 is a collected double, the
+    # index a persisted deterministic plan).
+    m2, cb = memo(spark, ("mips", plan_key(corpus), id_col, vec_col, dim, nbits), index)
 
     c_aug = augmented(corpus, F.sqrt(F.lit(float(m2)) - sq_norm(F.col(vec_col))))
     q_aug = augmented(queries, F.lit(0.0))
@@ -1607,30 +1499,30 @@ def _gated_route(spark, cents_py, n_coarse: int):
     Python floats are the same IEEE doubles, so the values are
     bit-identical; probed against the Catalyst path in
     ``test_gated_argmin_probe_all_equals_flat``). Memoized per session
-    BY VALUE (the centroid tuple), never by plan — the coarse base is
-    a LocalRelation, whose canonicalized plan is schema-only.
+    by value (the centroid tuple): the coarse base is a LocalRelation,
+    which :func:`plan_key` refuses.
 
     Returns ``(gcents_py, cmap)``: the coarse centroids and the
     fine-cid → coarse-gid map."""
-    key = (spark, "gated_route", _lloyd_cents_key(cents_py), n_coarse)
-    if key in _lloyd_cache:
-        return _lloyd_cache[key]
-    cbase = _lloyd_cents_df(spark, cents_py).select(
-        F.col("cid").alias("vid"), F.col("c").cast("array<double>").alias("v")
-    )
-    _, _, gcents_py = _portable_lloyd_py(cbase, n_coarse, 2)
-    cmap: dict[int, int] = {}
-    for cid, c in cents_py:
-        best = None
-        for gid, gc in gcents_py:
-            s = 0.0
-            for x, y in zip(c, gc):
-                s = s + (x - y) * (x - y)
-            if best is None or (s, gid) < best:
-                best = (s, gid)
-        cmap[cid] = best[1]
-    _lloyd_cache[key] = (gcents_py, cmap)
-    return gcents_py, cmap
+
+    def route():
+        cbase = _lloyd_cents_df(spark, cents_py).select(
+            F.col("cid").alias("vid"), F.col("c").cast("array<double>").alias("v")
+        )
+        _, _, gcents_py = _portable_lloyd_py(cbase, n_coarse, 2)
+        cmap: dict[int, int] = {}
+        for cid, c in cents_py:
+            best = None
+            for gid, gc in gcents_py:
+                s = 0.0
+                for x, y in zip(c, gc):
+                    s = s + (x - y) * (x - y)
+                if best is None or (s, gid) < best:
+                    best = (s, gid)
+            cmap[cid] = best[1]
+        return gcents_py, cmap
+
+    return memo(spark, ("gated_route", _lloyd_cents_key(cents_py), n_coarse), route)
 
 
 def _flat_argmin(base: DataFrame, cents_py):

@@ -17,30 +17,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dust_spark import operators as ops
+from dust_spark.fixtures import memo
 from dust_spark.queries import register
 from dust_spark.tables import register_views, spread
-
-
-_input_cache: dict[tuple, DataFrame] = {}
-
-
-def _evict_stopped_sessions(*caches: dict) -> None:
-    """Drop cache entries owned by stopped SparkSessions (r8 ADVICE):
-    a long pytest/driver run creates many sessions, and keeping handles
-    keyed on dead ones pins the session objects (their persisted
-    storage dies with the session; the leak is the Python-side pin).
-    Keys are (spark, ...) tuples, so a WeakKeyDictionary can't carry
-    them — an O(len) sweep on access is cheap (a handful of entries)."""
-    for cache in caches:
-        dead = []
-        for k in cache:
-            try:
-                if k[0].sparkContext._jsc is None:
-                    dead.append(k)
-            except Exception:  # noqa: BLE001 — any probe failure = dead
-                dead.append(k)
-        for k in dead:
-            cache.pop(k, None)
 
 
 def _cached_input(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -49,14 +28,12 @@ def _cached_input(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     queries don't each re-scan + re-repartition. At real corpus scale
     this cache is simply not used (spread() keeps the native splits and
     persist of a 100 TB table would be disabled by storage level)."""
-    # key on the session object itself — id() can be reused after a
-    # stopped session is garbage-collected
-    key = (spark, sf_dir, name)
-    if key not in _input_cache:
-        _evict_stopped_sessions(_input_cache, _pairs_cache, _sig_cache)
+
+    def build() -> DataFrame:
         register_views(spark, sf_dir)
-        _input_cache[key] = spread(spark.table(name)).persist()
-    return _input_cache[key]
+        return spread(spark.table(name)).persist()
+
+    return memo(spark, (name, sf_dir), build)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -67,21 +44,16 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cached_input(spark, sf_dir, "embeddings")
 
 
-_pairs_cache: dict[tuple, DataFrame] = {}
-
-
 def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Jaccard pairs at threshold 0.2 — consumed by both c2c and
     c10b; computed once per (session, sf_dir). The operator already
     persists its (tiny) pair output, so memoizing the DataFrame handle
     is enough to share the materialization."""
-    key = (spark, sf_dir)
-    if key not in _pairs_cache:
-        _pairs_cache[key] = ops.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.2)
-    return _pairs_cache[key]
-
-
-_sig_cache: dict[tuple, object] = {}
+    return memo(
+        spark,
+        ("ngram_pairs", sf_dir),
+        lambda: ops.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.2),
+    )
 
 
 def _pq_ann_result(spark: SparkSession, sf_dir: str, ivf: bool) -> DataFrame:
@@ -90,8 +62,8 @@ def _pq_ann_result(spark: SparkSession, sf_dir: str, ivf: bool) -> DataFrame:
     c3l/c3m the identical IVF-PQ top-10, so each codebook-training
     chain runs once per session instead of once per query (the recall
     twin was re-training everything). Persisted, session-owned."""
-    key = (spark, sf_dir, "ivfpq" if ivf else "pq")
-    if key not in _sig_cache:
+
+    def build() -> DataFrame:
         emb = _emb(spark, sf_dir)
         q = emb.filter(F.col("vec_id") <= 5)
         df = (
@@ -99,8 +71,9 @@ def _pq_ann_result(spark: SparkSession, sf_dir: str, ivf: bool) -> DataFrame:
             if ivf
             else ops.pq_topk_portable(q, emb, k=10)
         )
-        _sig_cache[key] = df.persist()
-    return _sig_cache[key]
+        return df.persist()
+
+    return memo(spark, ("ivfpq" if ivf else "pq", sf_dir), build)
 
 
 def _xx_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,12 +82,11 @@ def _xx_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures, so the Arrow sig kernel runs once per session instead
     of once per query. Persisted here (caller-owned per the operator's
     ``sigs=`` contract)."""
-    key = (spark, sf_dir, "xx")
-    if key not in _sig_cache:
-        _sig_cache[key] = ops.minhash_signatures(
-            _docs(spark, sf_dir), include_shingles=False
-        ).persist()
-    return _sig_cache[key]
+    return memo(
+        spark,
+        ("xx", sf_dir),
+        lambda: ops.minhash_signatures(_docs(spark, sf_dir), include_shingles=False).persist(),
+    )
 
 
 def _gram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -123,25 +95,23 @@ def _gram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     consume the identical table, so the tokenize + shingle-explode +
     distinct corpus pass runs once per session instead of once per
     side per query. Persisted, caller-owned."""
-    key = (spark, sf_dir, "grampairs")
-    if key not in _sig_cache:
-        _sig_cache[key] = ops._distinct_gram_pairs(
-            _docs(spark, sf_dir), "text", 3, "doc_id"
-        ).persist()
-    return _sig_cache[key]
+    return memo(
+        spark,
+        ("grampairs", sf_dir),
+        lambda: ops._distinct_gram_pairs(_docs(spark, sf_dir), "text", 3, "doc_id").persist(),
+    )
 
 
 def _portable_sigs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Shared portable-hash (shingle sets, signatures) pair over the
     document corpus — consumed by c2g/c2j (whole corpus) and c2h
     (parity-filtered sides). Both halves persisted, caller-owned."""
-    key = (spark, sf_dir, "portable")
-    if key not in _sig_cache:
-        sh, sigs = ops.dedup._portable_shingle_sigs(
-            _docs(spark, sf_dir), "text", "doc_id", 64, 3
-        )
-        _sig_cache[key] = (sh.persist(), sigs.persist())
-    return _sig_cache[key]
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        sh, sigs = ops.dedup._portable_shingle_sigs(_docs(spark, sf_dir), "text", "doc_id", 64, 3)
+        return sh.persist(), sigs.persist()
+
+    return memo(spark, ("portable", sf_dir), build)
 
 
 def warm_shared_fixtures(spark: SparkSession, sf_dir: str) -> None:
@@ -429,13 +399,12 @@ def _rp_ann_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     query set — c3f returns it and c3g grades it against the exact
     top-10, so the probe/candidate/re-rank chain runs once per session
     instead of once per query (r13; the _pq_ann_result discipline)."""
-    key = (spark, sf_dir, "rp")
-    if key not in _sig_cache:
+
+    def build() -> DataFrame:
         emb = _emb(spark, sf_dir)
-        _sig_cache[key] = ops.rp_lsh_topk_portable(
-            emb.filter(F.col("vec_id") <= 5), emb, k=10
-        ).persist()
-    return _sig_cache[key]
+        return ops.rp_lsh_topk_portable(emb.filter(F.col("vec_id") <= 5), emb, k=10).persist()
+
+    return memo(spark, ("rp", sf_dir), build)
 
 
 @register("c3f_ann_portable", oracle=_PORTABLE_ANN_ORACLE, tags=("tierc", "similarity", "jit"))

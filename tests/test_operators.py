@@ -5,6 +5,7 @@ their correctness story, SURVEY.md §2.C)."""
 from __future__ import annotations
 
 import itertools
+import math
 
 import pytest
 from pyspark.sql import Row
@@ -1645,6 +1646,59 @@ def test_mips_topk_empty_corpus(spark):
         [Row(vec_id=1, embedding=[1.0] * 8)], "vec_id long, embedding array<double>"
     )
     assert ops.mips_topk_portable(queries, corpus, k=3, dim=8, nbits=4).count() == 0
+
+
+def _vectors(spark, shift: int):
+    rows = [(i, [math.sin(1.3 * i + d + shift) for d in range(4)]) for i in range(24)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def _pairs(spark, shift: int):
+    return spark.createDataFrame(
+        [(shift + i, shift + i + 1) for i in range(3)], "id_a long, id_b long"
+    )
+
+
+def _probe_queries(corpus):
+    return corpus.filter(F.col("vec_id") < 3)
+
+
+@pytest.mark.parametrize(
+    "make, op",
+    [
+        pytest.param(
+            _vectors,
+            lambda c: ops.mips_topk_portable(_probe_queries(c), c, k=3, dim=4, nbits=4),
+            id="mips_topk_portable",
+        ),
+        pytest.param(
+            _vectors,
+            lambda c: ops.ivf_topk(_probe_queries(c), c, k=3, n_lists=4, n_probe=1, iterations=2),
+            id="ivf_topk",
+        ),
+        pytest.param(
+            _vectors,
+            lambda c: ops.pq_topk_portable(
+                _probe_queries(c), c, k=3, m=2, n_codes=2, iterations=2, dim=4
+            ),
+            id="pq_topk_portable",
+        ),
+        pytest.param(_pairs, ops.connected_components, id="connected_components"),
+    ],
+)
+def test_session_memo_keeps_in_memory_inputs_apart(spark, tmp_path, make, op):
+    """Two createDataFrame inputs with one schema and different rows
+    canonicalize to the same schema-only plan. An operator memo keyed
+    on that plan handed the second input the first one's bucket index,
+    centroids or components; the second result must equal a fresh
+    computation over the same rows (read back from parquet, whose plan
+    names its files)."""
+    op(make(spark, 0)).collect()
+    c2 = make(spark, 5)
+    got = sorted(op(c2).collect())
+    c2.coalesce(1).write.parquet(str(tmp_path / "c2"))
+    want = sorted(op(spark.read.parquet(str(tmp_path / "c2"))).collect())
+    assert got == want
 
 
 def test_rolling_zscore_constant_series_emits_null(spark):
