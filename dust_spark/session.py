@@ -927,27 +927,31 @@ class DustSession:
             if fk.on_delete not in allowed:
                 raise DustError(f"unsupported: ON DELETE {fk.on_delete}")
 
-    def _fk_update_action_children(self, overlay: Overlay, parent: str) -> bool:
-        """True when some table's FK references ``parent`` with an ON
-        UPDATE action (CASCADE/SET NULL/SET DEFAULT) — the update paths
-        then carry pre-image key columns so `_check_child_fks` can map
-        old→new key values."""
-        cats = [self.catalog, *self._attached.values()]
-        for cat in cats:
+    def _fk_children(self, overlay: Overlay, parent: str):
+        """Yield ``(child, child state, fk)`` for every foreign key, in
+        any attached catalog, that references ``parent``."""
+        names: set[str] = set()
+        for cat in [self.catalog, *self._attached.values()]:
             ov = overlay.sibling(cat)
-            names = set(cat.tables) | {n for n, cst in ov.staged.items() if cst is not None}
-            for child in names:
-                cst = self._route(overlay, child).get(child)
-                if cst is None:
-                    continue
-                for fk in cst.tdef.foreign_keys:
-                    if fk.ref_table == parent and fk.on_update in (
-                        "CASCADE",
-                        "SET NULL",
-                        "SET DEFAULT",
-                    ):
-                        return True
-        return False
+            names |= set(cat.tables) | {n for n, cst in ov.staged.items() if cst is not None}
+        for child in sorted(names):
+            cst = self._route(overlay, child).get(child)
+            if cst is None:
+                continue
+            for fk in cst.tdef.foreign_keys:
+                if fk.ref_table == parent:
+                    yield child, cst, fk
+
+    def _fk_action_children(self, overlay: Overlay, parent: str, dml: str = "update") -> bool:
+        """True when some foreign key references ``parent`` with an ON
+        UPDATE (or ON DELETE) action — CASCADE/SET NULL/SET DEFAULT.
+        The update paths then carry pre-image key columns so
+        `_check_child_fks` can map old→new key values."""
+        return any(
+            (fk.on_delete if dml == "delete" else fk.on_update)
+            in ("CASCADE", "SET NULL", "SET DEFAULT")
+            for _, _, fk in self._fk_children(overlay, parent)
+        )
 
     def _drop_table(self, overlay: Overlay, sql: str) -> Response:
         """DROP TABLE / VIEW / INDEX with SQLite's probed error strings
@@ -2384,18 +2388,6 @@ class DustSession:
         if ins.on_conflict is not None:
             return self._upsert(overlay, st, tdef, ins, new_rows)
 
-        if tdef.implicit_rowid and tdef.rowid_column in cols and not ins.or_ignore and not ins.or_replace:
-            # explicit rowid values on an implicit table: enforce rowid
-            # uniqueness (auto ids can never conflict, so only explicit
-            # batches pay this check)
-            rc_ = tdef.rowid_column
-            cand = new_rows.select(rc_).na.drop()
-            if (
-                cand.groupBy(rc_).count().filter(F.col("count") > 1).limit(1).count() > 0
-                or cand.join(existing.select(rc_), [rc_], "left_semi").limit(1).count() > 0
-            ):
-                raise DustError(f"UNIQUE constraint failed: {tdef.name}.rowid")
-
         trig_b = self._table_triggers(ins.table, "INSERT", "BEFORE")
         trig_a = self._table_triggers(ins.table, "INSERT", "AFTER")
         fired = None
@@ -2515,27 +2507,32 @@ class DustSession:
                     ai_list = _images(new_rows, before=False)
                     fired = [p for _, p in ai_list]
 
-        self._check_constraints(
-            overlay, tdef, new_rows.drop("__rn", "__auto"), None if ins.or_replace else existing
+        # one constraint pass, with the row count and id stats folded
+        # in. Auto-assigned rowids cannot conflict, so the rowid set is
+        # checked only when the column list names it
+        rc = tdef.rowid_column
+        stats = {"n": (F.lit(1), F.count)}
+        if rc:
+            stats["mx"] = (F.col(rc), F.max)
+            stats["last"] = (F.struct(F.col("__rn"), F.col(rc)), F.max)
+        res = self._check_constraints(
+            overlay,
+            tdef,
+            new_rows,
+            changed=F.lit(True),
+            order=F.col("__rn"),
+            rest=existing,
+            ipk=rc in cols,
+            stats=stats,
+            broadcast=exact_seq,
         )
-
-        if tdef.rowid_column:
-            # fold the row count into the id-stats aggregation — one
-            # job instead of two on every rowid-table insert (r14)
-            stats = new_rows.agg(
-                F.count("*").alias("__n"),
-                F.max(tdef.rowid_column).alias("mx"),
-                F.max(F.struct(F.col("__rn"), F.col(tdef.rowid_column))).alias("last"),
-            ).collect()[0]
-            n = int(stats["__n"])
-            if n == 0:
-                return self._ok(0)
-            high_water = max(st.high_water, int(stats.mx))
-            last_id = int(stats.last[tdef.rowid_column])
+        n = int(res["n"])
+        if n == 0:
+            return self._ok(0)
+        if rc:
+            high_water = max(st.high_water, int(res["mx"]))
+            last_id = int(res["last"][rc])
         else:
-            n = new_rows.count()
-            if n == 0:
-                return self._ok(0)
             high_water = st.high_water + n
             last_id = high_water
 
@@ -3132,8 +3129,6 @@ class DustSession:
 
         if self._capture_returning:
             fresh = fresh.localCheckpoint(eager=True)  # reused below
-        n_fresh = fresh.count()
-        if self._capture_returning:
             upd_rows = (
                 marked.filter(F.col("__upd") == 1).drop("__upd")
                 if kind == "update"
@@ -3142,17 +3137,42 @@ class DustSession:
             self._returning_df = upd_rows.unionByName(fresh.drop("__rn"))
             self._returning_table = ins.table
         out_df = updated.unionByName(fresh.drop("__rn"))
-        self._check_constraints(overlay, tdef, out_df, None, full_table=True)
         # REPLACE removes conflicting parent rows: ON DELETE actions run
         out_df = self._check_child_fks(overlay, ins.table, out_df, dml="delete")
-
-        if n_fresh and tdef.rowid_column:
-            stats = fresh.agg(
-                F.max(tdef.rowid_column).alias("mx"),
-                F.max(F.struct(F.col("__rn"), F.col(tdef.rowid_column))).alias("last"),
-            ).collect()[0]
-            high_water = max(st.high_water, int(stats.mx))
-            self._last_insert_id = int(stats.last[tdef.rowid_column])
+        # constraint pass over the written rows: inserted (__rn > 0, in
+        # batch order) and DO UPDATE'd (__upd = 1, ahead of them). Each
+        # DO UPDATE'd row needs an order of its own, below every __rn:
+        # the in-batch duplicate branch compares written rows by order,
+        # so a shared one would let two updates write the same key
+        fresh_w = fresh.withColumn("__w", F.lit(1))
+        if kind == "update":
+            rows = marked.withColumn(
+                "__rn", F.monotonically_increasing_id() - F.lit(1 << 62)
+            ).withColumnRenamed("__upd", "__w").unionByName(fresh_w)
+            rest = rows.filter(F.col("__w") == 0)
+        else:
+            rows, rest = fresh_w, existing
+        new = F.col("__rn") > 0
+        rc = tdef.rowid_column
+        stats = {"n": (F.when(new, F.lit(1)), F.count)}
+        if rc:
+            stats["mx"] = (F.when(new, F.col(rc)), F.max)
+            stats["last"] = (F.when(new, F.struct(F.col("__rn"), F.col(rc))), F.max)
+        res = self._check_constraints(
+            overlay,
+            tdef,
+            rows,
+            changed=F.col("__w") == 1,
+            order=F.col("__rn"),
+            rest=rest,
+            ipk=True,
+            restrict=(existing, out_df, "delete"),
+            stats=stats,
+        )
+        n_fresh = int(res["n"])
+        if n_fresh and rc:
+            high_water = max(st.high_water, int(res["mx"]))
+            self._last_insert_id = int(res["last"][rc])
         elif n_fresh:
             high_water = st.high_water + n_fresh
             self._last_insert_id = high_water
@@ -3646,6 +3666,9 @@ class DustSession:
             extra = ", " + ", ".join(
                 f"`{c}` AS `__old_{c}`" for c in assigned
             ) + ", monotonically_increasing_id() AS __scan"
+        # SQLite's scan order for the constraint pass: the old rowid
+        rc = tdef.rowid_column
+        extra += f", `{rc}` AS __ord" if rc else ", monotonically_increasing_id() AS __ord"
         tg_cols: list[str] = []
         if want_pairs:
             # carry the full OLD row image + a scan-order id through the
@@ -3655,7 +3678,7 @@ class DustSession:
                 f"`{c}` AS `__tg_{c}`" for c in tg_cols
             ) + ", monotonically_increasing_id() AS __tg_ord"
         fk_change_cols: list[str] = []
-        if self._fk_enabled and self._fk_update_action_children(overlay, up.table):
+        if self._fk_enabled and self._fk_action_children(overlay, up.table):
             # some child FK declares an ON UPDATE action — carry the
             # pre-image so _check_child_fks can map old→new key values
             fk_change_cols = [f.name for f in tdef.schema.fields]
@@ -3714,36 +3737,62 @@ class DustSession:
                     marked = marked.localCheckpoint(eager=True)
                     pairs = [p for i, p in enumerate(pairs) if i not in ign]
             marked = marked.drop("__tg_ord", *[f"__tg_{c}" for c in tg_cols])
-        n = marked.filter(F.col("__m") == 1).count()
         changes_df = None
         if fk_change_cols:
             changes_df = marked.filter(F.col("__m") == 1)
             marked = marked.drop(*[f"__fkold_{c}" for c in fk_change_cols])
-        new_df = marked.drop("__m")
+        new_df = marked.drop("__m", "__ord")
         if self._capture_returning:
-            self._returning_df = marked.filter(F.col("__m") == 1).drop("__m")
+            self._returning_df = marked.filter(F.col("__m") == 1).drop("__m", "__ord")
             self._returning_table = up.table
 
         # child FK actions first (a self-referencing ON UPDATE CASCADE
-        # fixes the post-image), then the table's own constraints on the
-        # final frame — SQLite checks FKs after actions have applied
+        # fixes the post-image), then the constraint pass on the final
+        # frame — SQLite checks FKs after actions have applied
         new_df = self._check_child_fks(
             overlay, up.table, new_df, dml="update", changes_df=changes_df
         )
-        self._check_constraints(overlay, tdef, new_df, None, full_table=True)
-
-        hw = st.high_water
-        if tdef.rowid_column in assigned:
-            # SQLite's next auto rowid is max(rowid)+1, so an UPDATE
-            # that moves the max moves the sequence either way
-            # (sqlite3-probed; AUTOINCREMENT stays monotone)
-            mx = new_df.agg(F.max(tdef.rowid_column)).collect()[0][0]
-            hw = max(hw, int(mx or 0)) if tdef.autoincrement else int(mx or 0)
+        n, hw = self._update_checks(overlay, st, marked, assigned, new_df)
         new_st = overlay.catalog.materialize(up.table, TableState(tdef, new_df, hw, st.version + 1))
         overlay.put(up.table, new_st)
         if pairs and not after_fired:
             self._fire_pairs(overlay, tdef, trig_b, trig_a, pairs, before_done=before_fired)
         return self._ok(n)
+
+    def _update_checks(
+        self, overlay: Overlay, st: TableState, marked: DataFrame, assigned, new_df: DataFrame
+    ) -> tuple[int, int]:
+        """The UPDATE paths' constraint pass over the marked post-image
+        (``__m`` = changed, ``__ord`` = scan order), with the change
+        count and, when the rowid moves, the new high-water folded in.
+        ``new_df`` is the post-image after FK actions: the parent side
+        checks children against it."""
+        tdef = st.tdef
+        rc = tdef.rowid_column
+        hit = F.col("__m") == 1
+        stats = {"n": (F.when(hit, F.lit(1)), F.count)}
+        if rc in assigned:
+            stats["mx"] = (F.col(rc), F.max)
+        res = self._check_constraints(
+            overlay,
+            tdef,
+            marked,
+            changed=hit,
+            order=F.col("__ord"),
+            assigned=set(assigned),
+            rest=marked.filter(~hit),
+            ipk=True,
+            restrict=(st.df, new_df, "update"),
+            stats=stats,
+        )
+        hw = st.high_water
+        if rc in assigned:
+            # SQLite's next auto rowid is max(rowid)+1, so an UPDATE
+            # that moves the max moves the sequence either way
+            # (sqlite3-probed; AUTOINCREMENT stays monotone)
+            mx = int(res["mx"] or 0)
+            hw = max(hw, mx) if tdef.autoincrement else mx
+        return int(res["n"]), hw
 
     def _apply_generated(self, tdef: TableDef, df: DataFrame) -> DataFrame:
         """(Re)compute GENERATED ALWAYS AS columns from the current row
@@ -3830,7 +3879,7 @@ class DustSession:
             extras = [
                 F.col(c)
                 for c in marked.columns
-                if c.startswith("__fkold_") or c.startswith("__tg_")
+                if c.startswith("__fkold_") or c.startswith("__tg_") or c == "__ord"
             ]
             return marked.select(
                 *cols,
@@ -3858,7 +3907,7 @@ class DustSession:
             *[
                 F.col(c)
                 for c in marked.columns
-                if c.startswith("__fkold_") or c.startswith("__tg_")
+                if c.startswith("__fkold_") or c.startswith("__tg_") or c == "__ord"
             ],
             F.col("__m"),
         )
@@ -3983,19 +4032,22 @@ class DustSession:
             hit_col = F.when(ign_cond, F.lit(0)).otherwise(
                 F.coalesce(F.col("__hit"), F.lit(0))
             )
-            marked = joined.select(*rev_cols, hit_col.alias("__m"))
+            marked = joined.select(*rev_cols, hit_col.alias("__m"), F.col("__rid").alias("__ord"))
         else:
-            marked = joined.select(*cols, F.coalesce(F.col("__hit"), F.lit(0)).alias("__m"))
+            marked = joined.select(
+                *cols,
+                F.coalesce(F.col("__hit"), F.lit(0)).alias("__m"),
+                F.col("__rid").alias("__ord"),
+            )
         marked = self._apply_generated(tdef, marked)
         marked = marked.localCheckpoint(eager=True)
-        n = marked.filter(F.col("__m") == 1).count()
-        new_df = marked.drop("__m")
+        new_df = marked.drop("__m", "__ord")
         if self._capture_returning:
-            self._returning_df = marked.filter(F.col("__m") == 1).drop("__m")
+            self._returning_df = marked.filter(F.col("__m") == 1).drop("__m", "__ord")
             self._returning_table = t
 
         changes_df = None
-        if self._fk_enabled and self._fk_update_action_children(overlay, t):
+        if self._fk_enabled and self._fk_action_children(overlay, t):
             hit_rows = joined.filter(F.col("__hit") == 1)
             if ign_cond is not None:
                 hit_rows = hit_rows.filter(~ign_cond)
@@ -4007,8 +4059,8 @@ class DustSession:
         new_df = self._check_child_fks(
             overlay, t, new_df, dml="update", changes_df=changes_df
         )
-        self._check_constraints(overlay, tdef, new_df, None, full_table=True)
-        new_st = overlay.catalog.materialize(t, TableState(tdef, new_df, st.high_water, st.version + 1))
+        n, hw = self._update_checks(overlay, st, marked, assigned, new_df)
+        new_st = overlay.catalog.materialize(t, TableState(tdef, new_df, hw, st.version + 1))
         overlay.put(t, new_st)
         if pairs and not after_fired:
             self._fire_pairs(overlay, tdef, trig_b, trig_a, pairs, before_done=before_fired)
@@ -4087,43 +4139,35 @@ class DustSession:
                 self._returning_table = de.table
             new_df = rid_df.join(victims, "__rid", "left_anti").drop("__rid").localCheckpoint(eager=True)
             new_df = self._check_child_fks(overlay, de.table, new_df, dml="delete")
+            _, hw = self._delete_checks(overlay, st, new_df, new_df)
             new_st = overlay.catalog.materialize(
-                de.table,
-                TableState(
-                    st.tdef, new_df, self._post_delete_high_water(st, new_df), st.version + 1
-                ),
+                de.table, TableState(st.tdef, new_df, hw, st.version + 1)
             )
             overlay.put(de.table, new_st)
             if pairs and not after_fired:
                 self._fire_pairs(overlay, st.tdef, trig_b, trig_a, pairs, before_done=before_fired)
             return self._ok(n)
-        if de.where is None:
-            n = st.df.count()
-            if self._capture_returning:
-                self._returning_df = st.df
-                self._returning_table = de.table
-            victims_df = st.df if want_pairs else None
-            new_df = self.spark.createDataFrame([], st.tdef.schema)
+        # one flagged copy of the stage: the count, the survivors' max
+        # rowid and the parent-side FK check are one aggregate over it
+        flagged = self.spark.sql(
+            f"{with_prefix}SELECT *, coalesce(({de.where or 'TRUE'}), false) AS __del "
+            f"FROM __dust_stage AS `{de.table}`"
+        ).localCheckpoint(eager=True)
+        gone = F.col("__del")
+        new_df = flagged.filter(~gone).drop("__del")
+        victims_df = flagged.filter(gone).drop("__del") if want_pairs else None
+        if self._capture_returning:
+            self._returning_df = flagged.filter(gone).drop("__del")
+            self._returning_table = de.table
+        # triggers and FK actions can change the post-image: the checks
+        # then wait for the final frame
+        settled = victims_df is None and not (
+            self._fk_enabled and self._fk_action_children(overlay, de.table, "delete")
+        )
+        if settled:
+            n, hw = self._delete_checks(overlay, st, flagged, new_df, deleted=gone)
         else:
-            new_df = self.spark.sql(
-                f"{with_prefix}SELECT * FROM __dust_stage AS `{de.table}` "
-                f"WHERE NOT coalesce(({de.where}), false)"
-            ).localCheckpoint(eager=True)
-            n = st.df.count() - new_df.count()
-            victims_df = (
-                self.spark.sql(
-                    f"{with_prefix}SELECT * FROM __dust_stage AS `{de.table}` "
-                    f"WHERE coalesce(({de.where}), false)"
-                )
-                if want_pairs
-                else None
-            )
-            if self._capture_returning:
-                self._returning_df = self.spark.sql(
-                    f"{with_prefix}SELECT * FROM __dust_stage AS `{de.table}` "
-                    f"WHERE coalesce(({de.where}), false)"
-                )
-                self._returning_table = de.table
+            n = flagged.filter(gone).count()
         pairs = []
         before_fired = False
         after_fired = False
@@ -4162,27 +4206,39 @@ class DustSession:
                         self._returning_df = vdf.filter(
                             ~F.col("__tg_ord").isin(bad)
                         ).drop("__tg_ord")
-        new_df = self._check_child_fks(overlay, de.table, new_df, dml="delete")
+        if not settled:
+            new_df = self._check_child_fks(overlay, de.table, new_df, dml="delete")
+            _, hw = self._delete_checks(overlay, st, new_df, new_df)
         new_st = overlay.catalog.materialize(
-            de.table,
-            TableState(st.tdef, new_df, self._post_delete_high_water(st, new_df), st.version + 1),
+            de.table, TableState(st.tdef, new_df, hw, st.version + 1)
         )
         overlay.put(de.table, new_st)
         if pairs and not after_fired:
             self._fire_pairs(overlay, st.tdef, trig_b, trig_a, pairs, before_done=before_fired)
         return self._ok(n)
 
-    def _post_delete_high_water(self, st: TableState, new_df: DataFrame) -> int:
-        """SQLite's auto-rowid base is max(rowid) over the CURRENT rows
+    def _delete_checks(
+        self, overlay: Overlay, st: TableState, rows: DataFrame, post: DataFrame, deleted=None
+    ) -> tuple[int | None, int]:
+        """A DELETE's one aggregate over ``rows``: the deleted count
+        (``deleted`` marks them; None: not counted), the parent-side FK
+        check of the post-image ``post``, and the new high-water.
+        SQLite's auto-rowid base is max(rowid) over the CURRENT rows
         (ids free up when the max row is deleted, sqlite3-probed);
         AUTOINCREMENT tables keep the monotone high-water instead."""
-        tdef = st.tdef
-        if not tdef.rowid_column or tdef.autoincrement:
-            return st.high_water
-        mx = new_df.agg(F.max(tdef.rowid_column)).collect()[0][0]
-        return int(mx or 0)
-
-    # -- constraints (SURVEY §4.2 custom: Spark doesn't enforce) ----------
+        rc = st.tdef.rowid_column
+        track = bool(rc) and not st.tdef.autoincrement
+        stats = {}
+        if deleted is not None:
+            stats["n"] = (F.when(deleted, F.lit(1)), F.count)
+        if track:
+            keep = F.col(rc) if deleted is None else F.when(~deleted, F.col(rc))
+            stats["mx"] = (keep, F.max)
+        res = self._check_constraints(
+            overlay, st.tdef, rows, restrict=(st.df, post, "delete"), stats=stats
+        )
+        n = int(res["n"]) if deleted is not None else None
+        return n, (int(res["mx"] or 0) if track else st.high_water)
 
     def _check_strict_types(self, tdef: TableDef, df: DataFrame, pairs) -> None:
         """STRICT table type enforcement (sqlite3-probed matrix,
@@ -4285,8 +4341,7 @@ class DustSession:
     ) -> DataFrame:
         """Reverse FK enforcement with the full ON DELETE / ON UPDATE
         action matrix: a parent DELETE applies each child FK's declared
-        ON DELETE action — NO ACTION / RESTRICT raise 'FOREIGN KEY
-        constraint failed', CASCADE deletes the orphaned child rows
+        ON DELETE action — CASCADE deletes the orphaned child rows
         (recursively, through grandchildren and self-reference chains),
         SET NULL nulls the child key columns, SET DEFAULT rewrites them
         to the column defaults (then re-verifies the defaulted key
@@ -4296,8 +4351,9 @@ class DustSession:
         changed (old→new mapping from ``changes_df``, which carries the
         pre-image as ``__fkold_<col>`` columns next to the post-image):
         CASCADE rewrites child keys to the new values, SET NULL /
-        SET DEFAULT as above; NO ACTION / RESTRICT (or an update path
-        that supplies no pre-image) restrict. Returns the possibly-
+        SET DEFAULT as above. NO ACTION / RESTRICT are not checked here:
+        the statement's `_check_constraints` pass does that (its
+        ``restrict``) on the final post-image. Returns the possibly-
         modified parent post-image — self-referencing actions change it,
         and the caller materializes the returned frame. Real SQLite
         semantics via PRAGMA foreign_keys=ON (reference pass-through
@@ -4305,234 +4361,218 @@ class DustSession:
         test_fk_on_update_actions_sqlite_differential)."""
         if not self._fk_enabled:
             return parent_new_df
-        cats = [self.catalog, *self._attached.values()]
-        names: set[str] = set()
-        for cat in cats:
-            ov = overlay.sibling(cat)
-            names |= set(cat.tables) | {n for n, cst in ov.staged.items() if cst is not None}
-        for child in sorted(names):
-            cst = self._route(overlay, child).get(child)
-            if cst is None:
-                continue
-            for fk in cst.tdef.foreign_keys:
-                if fk.ref_table != parent:
-                    continue
-                rcs = self._fk_ref_columns(overlay, cst.tdef, fk)
-                action = fk.on_delete if dml == "delete" else fk.on_update
-                if (
-                    dml == "update"
-                    and action not in ("NO ACTION", "RESTRICT")
-                    and changes_df is None
-                ):
-                    action = "NO ACTION"  # no pre-image on this path: restrict
+        for child, cst, fk in self._fk_children(overlay, parent):
+            rcs = self._fk_ref_columns(overlay, cst.tdef, fk)
+            action = fk.on_delete if dml == "delete" else fk.on_update
+            if action in ("NO ACTION", "RESTRICT"):
+                continue  # checked by the statement's constraint pass
 
-                def refsel(pdf):
-                    return pdf.select(
-                        *[F.col(rc).alias(f"__ref{j}") for j, rc in enumerate(rcs)]
-                    ).distinct()
+            def refsel(pdf):
+                return pdf.select(
+                    *[F.col(rc).alias(f"__ref{j}") for j, rc in enumerate(rcs)]
+                ).distinct()
 
-                nn = None  # match NONE: ANY NULL child key column exempts the row
-                for c in fk.columns:
-                    cond = F.col(c).isNotNull()
-                    nn = cond if nn is None else (nn & cond)
-                on = None
+            nn = None  # match NONE: ANY NULL child key column exempts the row
+            for c in fk.columns:
+                cond = F.col(c).isNotNull()
+                nn = cond if nn is None else (nn & cond)
+            on = None
+            for j, c in enumerate(fk.columns):
+                cond = F.col(c) == F.col(f"__ref{j}")
+                on = cond if on is None else (on & cond)
+
+            # self-referencing tables check against their post-image
+            child_df = parent_new_df if child == parent else cst.df
+
+            # FK actions fire the child table's own triggers even
+            # with recursive_triggers off (sqlite3-probed r7):
+            # CASCADE deletes fire child DELETE triggers, SET NULL
+            # fires child UPDATE triggers
+            del_b = self._table_triggers(child, "DELETE", "BEFORE")
+            del_a = self._table_triggers(child, "DELETE", "AFTER")
+
+            if dml == "update" and action in ("CASCADE", "SET NULL", "SET DEFAULT"):
+                # old→new mapping of the rows whose referenced key
+                # changed; parent ref columns are PK/UNIQUE, so each
+                # old key maps to at most one new key
+                mp = changes_df.select(
+                    *[
+                        F.col(f"__fkold_{rc}").alias(f"__oldr{j}")
+                        for j, rc in enumerate(rcs)
+                    ],
+                    *[F.col(rc).alias(f"__newr{j}") for j, rc in enumerate(rcs)],
+                )
+                chg = None
+                for j in range(len(rcs)):
+                    c_ = ~F.col(f"__oldr{j}").eqNullSafe(F.col(f"__newr{j}"))
+                    chg = c_ if chg is None else (chg | c_)
+                mp = mp.filter(chg).distinct().withColumn("__fkhit", F.lit(1))
+                on_old = None
                 for j, c in enumerate(fk.columns):
-                    cond = F.col(c) == F.col(f"__ref{j}")
-                    on = cond if on is None else (on & cond)
-
-                # self-referencing tables check against their post-image
-                child_df = parent_new_df if child == parent else cst.df
-
-                # FK actions fire the child table's own triggers even
-                # with recursive_triggers off (sqlite3-probed r7):
-                # CASCADE deletes fire child DELETE triggers, SET NULL
-                # fires child UPDATE triggers
-                del_b = self._table_triggers(child, "DELETE", "BEFORE")
-                del_a = self._table_triggers(child, "DELETE", "AFTER")
-
-                if dml == "update" and action in ("CASCADE", "SET NULL", "SET DEFAULT"):
-                    # old→new mapping of the rows whose referenced key
-                    # changed; parent ref columns are PK/UNIQUE, so each
-                    # old key maps to at most one new key
-                    mp = changes_df.select(
-                        *[
-                            F.col(f"__fkold_{rc}").alias(f"__oldr{j}")
-                            for j, rc in enumerate(rcs)
-                        ],
-                        *[F.col(rc).alias(f"__newr{j}") for j, rc in enumerate(rcs)],
-                    )
-                    chg = None
-                    for j in range(len(rcs)):
-                        c_ = ~F.col(f"__oldr{j}").eqNullSafe(F.col(f"__newr{j}"))
-                        chg = c_ if chg is None else (chg | c_)
-                    mp = mp.filter(chg).distinct().withColumn("__fkhit", F.lit(1))
-                    on_old = None
-                    for j, c in enumerate(fk.columns):
-                        cond = F.col(c) == F.col(f"__oldr{j}")
-                        on_old = cond if on_old is None else (on_old & cond)
-                    marked2 = child_df.join(mp, on_old, "left")
-                    if marked2.filter(F.col("__fkhit").isNotNull()).limit(1).count() == 0:
-                        continue
-                    newvals = {}
-                    for j, c in enumerate(fk.columns):
-                        if action == "CASCADE":
-                            newvals[c] = F.col(f"__newr{j}")
-                        elif action == "SET NULL":
-                            newvals[c] = F.lit(None)
-                        else:
-                            d_ = cst.tdef.defaults.get(c)
-                            newvals[c] = F.expr(d_) if d_ is not None else F.lit(None)
-                    res = self._apply_fk_child_update(
-                        overlay,
-                        parent,
-                        child,
-                        cst,
-                        fk,
-                        marked2,
-                        newvals,
-                        verify_refs=refsel(parent_new_df)
-                        if action == "SET DEFAULT"
-                        else None,
-                        depth=depth,
-                    )
-                    if child == parent:
-                        parent_new_df = res
+                    cond = F.col(c) == F.col(f"__oldr{j}")
+                    on_old = cond if on_old is None else (on_old & cond)
+                marked2 = child_df.join(mp, on_old, "left")
+                if marked2.filter(F.col("__fkhit").isNotNull()).limit(1).count() == 0:
                     continue
+                newvals = {}
+                for j, c in enumerate(fk.columns):
+                    if action == "CASCADE":
+                        newvals[c] = F.col(f"__newr{j}")
+                    elif action == "SET NULL":
+                        newvals[c] = F.lit(None)
+                    else:
+                        d_ = cst.tdef.defaults.get(c)
+                        newvals[c] = F.expr(d_) if d_ is not None else F.lit(None)
+                res = self._apply_fk_child_update(
+                    overlay,
+                    parent,
+                    child,
+                    cst,
+                    fk,
+                    marked2,
+                    newvals,
+                    verify_refs=refsel(parent_new_df)
+                    if action == "SET DEFAULT"
+                    else None,
+                    depth=depth,
+                )
+                if child == parent:
+                    parent_new_df = res
+                continue
 
-                if action == "CASCADE":
-                    if child == parent:
-                        # self-reference chains: removing a row can
-                        # orphan the next — iterate to a fixpoint on the
-                        # post-image (caller materializes the result)
-                        initial = parent_new_df
-                        for _ in range(64):
-                            keep = parent_new_df.filter(~nn).unionByName(
-                                parent_new_df.filter(nn).join(
-                                    refsel(parent_new_df), on, "left_semi"
-                                )
-                            ).localCheckpoint(eager=True)
-                            if keep.count() == parent_new_df.count():
-                                break
-                            parent_new_df = keep
-                        else:
-                            raise DustError("foreign key cascade depth exceeded")
-                        if del_b or del_a:
-                            cascaded = self._scan_order(cst.tdef, [
-                                (r.asDict(), None)
-                                for r in initial.exceptAll(parent_new_df).collect()
-                            ])
-                            self._fire_pairs(
-                                overlay, cst.tdef, del_b, del_a, cascaded
+            if action == "CASCADE":
+                if child == parent:
+                    # self-reference chains: removing a row can
+                    # orphan the next — iterate to a fixpoint on the
+                    # post-image (caller materializes the result)
+                    initial = parent_new_df
+                    for _ in range(64):
+                        keep = parent_new_df.filter(~nn).unionByName(
+                            parent_new_df.filter(nn).join(
+                                refsel(parent_new_df), on, "left_semi"
                             )
-                        continue
-                    pairs = []
+                        ).localCheckpoint(eager=True)
+                        if keep.count() == parent_new_df.count():
+                            break
+                        parent_new_df = keep
+                    else:
+                        raise DustError("foreign key cascade depth exceeded")
                     if del_b or del_a:
-                        victims = child_df.filter(nn).join(
-                            refsel(parent_new_df), on, "left_anti"
+                        cascaded = self._scan_order(cst.tdef, [
+                            (r.asDict(), None)
+                            for r in initial.exceptAll(parent_new_df).collect()
+                        ])
+                        self._fire_pairs(
+                            overlay, cst.tdef, del_b, del_a, cascaded
                         )
-                        pairs = self._scan_order(
-                            cst.tdef, [(r.asDict(), None) for r in victims.collect()]
-                        )
-                    keep = child_df.filter(~nn).unionByName(
-                        child_df.filter(nn).join(refsel(parent_new_df), on, "left_semi")
-                    ).localCheckpoint(eager=True)
-                    if keep.count() == child_df.count():
-                        continue  # no orphans — leave the child untouched
-                    # cascade ripples to the child's own children
-                    keep = self._check_child_fks(overlay, child, keep, dml="delete")
-                    new_cst = overlay.catalog.materialize(
-                        child, TableState(cst.tdef, keep, cst.high_water, cst.version + 1)
-                    )
-                    self._route(overlay, child).put(child, new_cst)
-                    if pairs:
-                        self._fire_pairs(overlay, cst.tdef, del_b, del_a, pairs)
                     continue
+                pairs = []
+                if del_b or del_a:
+                    victims = child_df.filter(nn).join(
+                        refsel(parent_new_df), on, "left_anti"
+                    )
+                    pairs = self._scan_order(
+                        cst.tdef, [(r.asDict(), None) for r in victims.collect()]
+                    )
+                keep = child_df.filter(~nn).unionByName(
+                    child_df.filter(nn).join(refsel(parent_new_df), on, "left_semi")
+                ).localCheckpoint(eager=True)
+                if keep.count() == child_df.count():
+                    continue  # no orphans — leave the child untouched
+                # cascade ripples to the child's own children
+                keep = self._check_child_fks(overlay, child, keep, dml="delete")
+                self._check_constraints(
+                    overlay, cst.tdef, keep, restrict=(child_df, keep, "delete")
+                )
+                new_cst = overlay.catalog.materialize(
+                    child, TableState(cst.tdef, keep, cst.high_water, cst.version + 1)
+                )
+                self._route(overlay, child).put(child, new_cst)
+                if pairs:
+                    self._fire_pairs(overlay, cst.tdef, del_b, del_a, pairs)
+                continue
 
-                if action == "SET NULL":
-                    hit = refsel(parent_new_df).withColumn("__hit", F.lit(1))
-                    marked = child_df.join(hit, on, "left")
-                    orphan = nn & F.col("__hit").isNull()
-                    if marked.filter(orphan).limit(1).count() == 0:
-                        continue
-                    for c in fk.columns:
-                        if c in cst.tdef.not_null:
-                            raise DustError(
-                                f"NOT NULL constraint failed: {cst.tdef.name}.{c}"
-                            )
-                    upd_b = self._table_triggers(
-                        child, "UPDATE", "BEFORE", assigned=list(fk.columns)
-                    )
-                    upd_a = self._table_triggers(
-                        child, "UPDATE", "AFTER", assigned=list(fk.columns)
-                    )
-                    pairs = []
-                    if upd_b or upd_a:
-                        fields = [f_.name for f_ in cst.tdef.schema.fields]
-                        for r in marked.filter(orphan).collect():
-                            d = r.asDict()
-                            old = {c: d[c] for c in fields}
-                            new = dict(old, **{c: None for c in fk.columns})
-                            pairs.append((old, new))
-                        pairs = self._scan_order(cst.tdef, pairs)
-                    cols = []
-                    for f_ in cst.tdef.schema.fields:
-                        if f_.name in fk.columns:
-                            cols.append(
-                                F.when(orphan, F.lit(None).cast(f_.dataType))
-                                .otherwise(F.col(f_.name))
-                                .alias(f_.name)
-                            )
-                        else:
-                            cols.append(F.col(f_.name))
-                    nulled = marked.select(*cols).localCheckpoint(eager=True)
-                    if child == parent:
-                        parent_new_df = nulled
-                        if pairs:
-                            self._fire_pairs(overlay, cst.tdef, upd_b, upd_a, pairs)
-                        continue
-                    new_cst = overlay.catalog.materialize(
-                        child, TableState(cst.tdef, nulled, cst.high_water, cst.version + 1)
-                    )
-                    self._route(overlay, child).put(child, new_cst)
+            if action == "SET NULL":
+                hit = refsel(parent_new_df).withColumn("__hit", F.lit(1))
+                marked = child_df.join(hit, on, "left")
+                orphan = nn & F.col("__hit").isNull()
+                if marked.filter(orphan).limit(1).count() == 0:
+                    continue
+                for c in fk.columns:
+                    if c in cst.tdef.not_null:
+                        raise DustError(
+                            f"NOT NULL constraint failed: {cst.tdef.name}.{c}"
+                        )
+                upd_b = self._table_triggers(
+                    child, "UPDATE", "BEFORE", assigned=list(fk.columns)
+                )
+                upd_a = self._table_triggers(
+                    child, "UPDATE", "AFTER", assigned=list(fk.columns)
+                )
+                pairs = []
+                if upd_b or upd_a:
+                    fields = [f_.name for f_ in cst.tdef.schema.fields]
+                    for r in marked.filter(orphan).collect():
+                        d = r.asDict()
+                        old = {c: d[c] for c in fields}
+                        new = dict(old, **{c: None for c in fk.columns})
+                        pairs.append((old, new))
+                    pairs = self._scan_order(cst.tdef, pairs)
+                cols = []
+                for f_ in cst.tdef.schema.fields:
+                    if f_.name in fk.columns:
+                        cols.append(
+                            F.when(orphan, F.lit(None).cast(f_.dataType))
+                            .otherwise(F.col(f_.name))
+                            .alias(f_.name)
+                        )
+                    else:
+                        cols.append(F.col(f_.name))
+                nulled = marked.select(*cols).localCheckpoint(eager=True)
+                if child == parent:
+                    parent_new_df = nulled
                     if pairs:
                         self._fire_pairs(overlay, cst.tdef, upd_b, upd_a, pairs)
                     continue
+                new_cst = overlay.catalog.materialize(
+                    child, TableState(cst.tdef, nulled, cst.high_water, cst.version + 1)
+                )
+                self._route(overlay, child).put(child, new_cst)
+                if pairs:
+                    self._fire_pairs(overlay, cst.tdef, upd_b, upd_a, pairs)
+                continue
 
-                if action == "SET DEFAULT":
-                    hitp = refsel(parent_new_df).withColumn("__php", F.lit(1))
-                    marked2 = (
-                        child_df.join(hitp, on, "left")
-                        .withColumn(
-                            "__fkhit",
-                            F.when(nn & F.col("__php").isNull(), F.lit(1)),
-                        )
-                        .drop("__php", *[f"__ref{j}" for j in range(len(rcs))])
+            if action == "SET DEFAULT":
+                hitp = refsel(parent_new_df).withColumn("__php", F.lit(1))
+                marked2 = (
+                    child_df.join(hitp, on, "left")
+                    .withColumn(
+                        "__fkhit",
+                        F.when(nn & F.col("__php").isNull(), F.lit(1)),
                     )
-                    if marked2.filter(F.col("__fkhit").isNotNull()).limit(1).count() == 0:
-                        continue
-                    newvals = {}
-                    for c in fk.columns:
-                        d_ = cst.tdef.defaults.get(c)
-                        newvals[c] = F.expr(d_) if d_ is not None else F.lit(None)
-                    res = self._apply_fk_child_update(
-                        overlay,
-                        parent,
-                        child,
-                        cst,
-                        fk,
-                        marked2,
-                        newvals,
-                        verify_refs=refsel(parent_new_df),
-                        depth=depth,
-                    )
-                    if child == parent:
-                        parent_new_df = res
+                    .drop("__php", *[f"__ref{j}" for j in range(len(rcs))])
+                )
+                if marked2.filter(F.col("__fkhit").isNotNull()).limit(1).count() == 0:
                     continue
+                newvals = {}
+                for c in fk.columns:
+                    d_ = cst.tdef.defaults.get(c)
+                    newvals[c] = F.expr(d_) if d_ is not None else F.lit(None)
+                res = self._apply_fk_child_update(
+                    overlay,
+                    parent,
+                    child,
+                    cst,
+                    fk,
+                    marked2,
+                    newvals,
+                    verify_refs=refsel(parent_new_df),
+                    depth=depth,
+                )
+                if child == parent:
+                    parent_new_df = res
+                continue
 
-                # NO ACTION / RESTRICT: refuse while children point here
-                dangling = child_df.filter(nn).join(refsel(parent_new_df), on, "left_anti")
-                if dangling.limit(1).count() > 0:
-                    raise DustError("FOREIGN KEY constraint failed")
         return parent_new_df
 
     def _apply_fk_child_update(
@@ -4604,7 +4644,7 @@ class DustSession:
                 pairs.append((old, new))
             pairs = self._scan_order(tdef, pairs)
         new_child = upd.drop("__fkhit", *[f"__prev{j}" for j in range(len(fk.columns))])
-        if depth < 32 and child != parent and self._fk_update_action_children(overlay, child):
+        if depth < 32 and child != parent and self._fk_action_children(overlay, child):
             fkcols = list(fk.columns)
             changes = upd.filter(hit).select(
                 *[F.col(f_) for f_ in fields],
@@ -4618,6 +4658,9 @@ class DustSession:
             new_child = self._check_child_fks(
                 overlay, child, new_child, dml="update", changes_df=changes, depth=depth + 1
             )
+            self._check_constraints(
+                overlay, tdef, new_child, restrict=(cst.df, new_child, "update")
+            )
         if child == parent:
             if pairs:
                 self._fire_pairs(overlay, tdef, upd_b, upd_a, pairs)
@@ -4630,71 +4673,237 @@ class DustSession:
             self._fire_pairs(overlay, tdef, upd_b, upd_a, pairs)
         return None
 
+    @staticmethod
+    def _refs(expr: str, col: str) -> bool:
+        """Whether SQL text ``expr`` names column ``col`` (string
+        literals aside) — the reference test SQLite applies before
+        re-checking a CHECK or generated column on UPDATE."""
+        bare = re.sub(r"'(?:[^']|'')*'", "''", expr)
+        return re.search(rf"(?<![\w$]){re.escape(col)}(?![\w$])", bare, re.I) is not None
+
+    @staticmethod
+    def _unique_order(tdef: TableDef) -> list[list[str]]:
+        """UNIQUE sets other than the INTEGER PRIMARY KEY, in SQLite's
+        check order. SQLite prepends each new index to the table's
+        list, so the sets run in reverse declaration order
+        (sqlite3-probed: ``UNIQUE a, b, c`` reports ``t.c``). The
+        parser files a non-rowid PRIMARY KEY first; it goes back to its
+        column's place, a composite one after the column-level sets."""
+        sets = [list(u) for u in tdef.unique if u != [tdef.rowid_column]]
+        pk = list(tdef.primary_key)
+        if pk in sets:
+            sets.remove(pk)
+            names = [f.name for f in tdef.schema.fields]
+
+            def later(u: list) -> bool:
+                return len(u) > 1 or (
+                    len(pk) == 1 and names.index(u[0]) > names.index(pk[0])
+                )
+
+            sets.insert(next((i for i, u in enumerate(sets) if later(u)), len(sets)), pk)
+        return sets[::-1]
+
     def _check_constraints(
         self,
         overlay: Overlay,
         tdef: TableDef,
-        new_rows: DataFrame,
-        existing: DataFrame | None,
-        full_table: bool = False,
-    ) -> None:
-        """NOT NULL → UNIQUE → FK, with SQLite error strings. For inserts
-        ``new_rows`` are the incoming rows and ``existing`` the current
-        table; for updates ``new_rows`` is the whole post-image
-        (full_table=True)."""
-        for c in sorted(tdef.not_null):
-            if new_rows.filter(F.col(c).isNull()).limit(1).count() > 0:
-                raise DustError(f"NOT NULL constraint failed: {tdef.name}.{c}")
+        rows: DataFrame,
+        *,
+        changed=None,
+        order=None,
+        assigned=None,
+        rest: DataFrame | None = None,
+        ipk: bool = False,
+        restrict: tuple | None = None,
+        stats: dict | None = None,
+        broadcast: bool = False,
+    ):
+        """The statement's constraint pass: ONE Spark action that returns
+        the caller's ``stats`` aggregates over ``rows`` and raises the
+        first failing constraint, with SQLite's error text.
 
-        # CHECK constraints (SQLite enforces these on every write; the
-        # reference inherits that via its pass-through, db/src/db.rs:176).
-        # SQLite rule: a row passes when the expression is TRUE or NULL —
-        # only FALSE/0 fails; error label = constraint name or expr text.
-        for label, expr in tdef.checks:
-            viol = new_rows.filter(F.expr(f"NOT {self._check_pass_sql(expr, tdef)}"))
-            if viol.limit(1).count() > 0:
-                raise DustError(f"CHECK constraint failed: {label}")
+        ``rows`` filtered by ``changed`` are the rows the statement
+        writes (``changed=None``: it writes none, as in a DELETE), taken
+        in ``order``; ``rest`` is the rest of the table's post-image.
+        ``stats`` maps a name to ``(column over rows, aggregate)``; the
+        aggregate must ignore NULLs. ``restrict=(pre, post, dml)`` adds
+        the parent side for NO ACTION / RESTRICT children of keys the
+        statement removed from this table (in ``pre``, not in ``post``);
+        on a one-row UPDATE, children of the key it added offset them.
 
-        for colset in tdef.unique:
-            cand = new_rows.select(*colset).na.drop()
-            label = ", ".join(f"{tdef.name}.{c}" for c in colset)
-            # one job for both violation kinds (r14): the table invariant
-            # makes `existing` duplicate-free, so a key group with count
-            # > 1 in (cand ∪ existing) is exactly "dup within the batch
-            # OR clash with the table" — the error string is identical
-            # either way, so the split probes (2 jobs per statement on
-            # every keyed insert) collapse into one aggregation
-            if not full_table and existing is not None:
-                cand = cand.unionByName(existing.select(*colset).na.drop())
-            if cand.groupBy(*colset).count().filter(F.col("count") > 1).limit(1).count() > 0:
-                raise DustError(f"UNIQUE constraint failed: {label}")
+        Precedence (sqlite3-probed): the first failing row wins; within
+        a row, NOT NULL in column declaration order, then CHECK in
+        declaration order, then the rowid (``ipk``), then the other
+        UNIQUE sets in reverse declaration order; an immediate FOREIGN
+        KEY failure is reported only when no row fails anything else.
 
-        if self._fk_enabled:
+        SQLite skips what cannot fail, and so does this pass. An UPDATE
+        (``assigned`` = its SET columns) checks NOT NULL, CHECK, UNIQUE
+        and child foreign keys only where they involve an assigned
+        column, and only on the changed rows; the parent side only for
+        keys it assigns. The caller drops the rowid set when every id
+        is auto-assigned (``ipk``).
+
+        Row-local tests are flag columns of the written rows; each
+        UNIQUE set and foreign key is a tagged branch of the same
+        union, the written rows broadcast against the table when the
+        caller knows they are few (``broadcast``). Everything reduces
+        as ``min(struct(is_fk, order, rank))``."""
+        stats = stats or {}
+        name = tdef.name
+        eff = None  # columns the statement changes; None = every column
+        if assigned is not None:
+            eff = set(assigned)
+            for g, e in tdef.generated.items():  # recomputed from what changed
+                if any(self._refs(e, c) for c in eff):
+                    eff.add(g)
+
+        def touched(cs) -> bool:
+            return eff is None or bool(eff & set(cs))
+
+        def vio(fk: int, o, r) -> "F.Column":
+            return F.struct(
+                F.lit(fk).alias("f"), o.cast("long").alias("o"), F.lit(r).cast("int").alias("r")
+            )
+
+        def eq(left: list, right: list):
+            cond = None
+            for a, b in zip(left, right):
+                cond = (a == b) if cond is None else (cond & (a == b))
+            return cond
+
+        def not_null(cs: list):
+            cond = None
+            for c in cs:
+                cond = F.col(c).isNotNull() if cond is None else (cond & F.col(c).isNotNull())
+            return cond
+
+        msgs: list[str] = []
+        flags = []
+        branches: list[DataFrame] = []
+        if changed is not None:
+            for f_ in tdef.schema.fields:
+                if f_.name in tdef.not_null and touched([f_.name]):
+                    flags.append(F.col(f_.name).isNull())
+                    msgs.append(f"NOT NULL constraint failed: {name}.{f_.name}")
+            for label, expr in tdef.checks:
+                if eff is None or any(self._refs(expr, c) for c in eff):
+                    flags.append(~F.expr(self._check_pass_sql(expr, tdef)))
+                    msgs.append(f"CHECK constraint failed: {label}")
+            staged = rows.filter(changed)
+            sets = []
+            if ipk and tdef.rowid_column and touched([tdef.rowid_column]):
+                label = "rowid" if tdef.implicit_rowid else tdef.rowid_column
+                sets.append(([tdef.rowid_column], f"{name}.{label}"))
+            sets += [
+                (u, ", ".join(f"{name}.{c}" for c in u))
+                for u in self._unique_order(tdef)
+                if touched(u)
+            ]
+            for u, label in sets:
+                r = len(msgs)
+                msgs.append(f"UNIQUE constraint failed: {label}")
+                ks = [f"__k{j}" for j in range(len(u))]
+                qs = [f"__q{j}" for j in range(len(u))]
+                keys = staged.filter(not_null(u)).select(
+                    *[F.col(c).alias(k) for c, k in zip(u, ks)], order.cast("long").alias("__o")
+                )
+                keys_b = F.broadcast(keys) if broadcast else keys
+                if rest is not None:
+                    # a written row meeting a key the table keeps
+                    other = rest.select(*[F.col(c).alias(q) for c, q in zip(u, qs)])
+                    branches.append(
+                        other.join(keys_b, eq([F.col(q) for q in qs], [F.col(k) for k in ks]))
+                        .select(vio(0, F.col("__o"), r).alias("__v"))
+                    )
+                # an earlier written row with the same key
+                prior = keys.select(*[F.col(k).alias(q) for k, q in zip(ks, qs)], F.col("__o").alias("__p"))
+                cond = eq([F.col(k) for k in ks], [F.col(q) for q in qs]) & (F.col("__o") > F.col("__p"))
+                branches.append(
+                    keys.join(F.broadcast(prior) if broadcast else prior, cond)
+                    .select(vio(0, F.col("__o"), r).alias("__v"))
+                )
+        fk_rank = len(msgs)
+        msgs.append("FOREIGN KEY constraint failed")
+        if self._fk_enabled and changed is not None:
             for fk in tdef.foreign_keys:
-                rcs_i = self._fk_ref_columns(overlay, tdef, fk)
-                refsel = [
-                    F.col(rc).alias(f"__ref{j}") for j, rc in enumerate(rcs_i)
-                ]
-                if fk.ref_table == tdef.name:
-                    ref = new_rows.select(*refsel)
-                    if not full_table and existing is not None:
-                        ref = ref.unionByName(existing.select(*refsel))
+                if not touched(fk.columns):
+                    continue
+                rcs = self._fk_ref_columns(overlay, tdef, fk)
+                refs = [F.col(rc).alias(f"__ref{j}") for j, rc in enumerate(rcs)]
+                if fk.ref_table == name:
+                    parents = staged.select(*refs)
+                    if rest is not None:
+                        parents = parents.unionByName(rest.select(*refs))
                 else:
                     ref_st = overlay.get(fk.ref_table)
                     if ref_st is None:
                         raise DustError(f"no such table: {fk.ref_table}")
-                    ref = ref_st.df.select(*refsel)
-                nn = None  # match NONE: ANY NULL child key column exempts the row
-                for c in fk.columns:
-                    cond = F.col(c).isNotNull()
-                    nn = cond if nn is None else (nn & cond)
-                on = None
-                for j, c in enumerate(fk.columns):
-                    cond = F.col(c) == F.col(f"__ref{j}")
-                    on = cond if on is None else (on & cond)
-                dangling = new_rows.filter(nn).join(ref.distinct(), on, "left_anti")
-                if dangling.limit(1).count() > 0:
-                    raise DustError("FOREIGN KEY constraint failed")
+                    parents = ref_st.df.select(*refs)
+                on = eq([F.col(c) for c in fk.columns], [F.col(f"__ref{j}") for j in range(len(rcs))])
+                branches.append(
+                    staged.filter(not_null(fk.columns))
+                    .join(parents, on, "left_anti")
+                    .select(vio(1, F.lit(0), fk_rank).alias("__v"))
+                )
+        counts: list[DataFrame] = []
+        if restrict is not None and self._fk_enabled:
+            # SQLite's statement counter, per written row: +1 per child
+            # of the old key, then, on UPDATE and only while the counter
+            # is not zero, -1 per child of the new key (sqlite3-probed:
+            # UPDATE p SET id = 99 WHERE id = 1 passes when a dangling
+            # child points at 99). Over key sets that sum is exact for
+            # one changed row; with several the skip depends on row
+            # order, so they fail on any child of a removed key
+            pre, post, dml = restrict
+            for child, cst, fk in self._fk_children(overlay, name):
+                if (fk.on_delete if dml == "delete" else fk.on_update) not in ("NO ACTION", "RESTRICT"):
+                    continue
+                rcs = self._fk_ref_columns(overlay, cst.tdef, fk)
+                if not touched(rcs):
+                    continue
+                refs = [f"__ref{j}" for j in range(len(rcs))]
+
+                def keys(df: DataFrame) -> DataFrame:
+                    return df.select(*[F.col(rc).alias(r) for rc, r in zip(rcs, refs)]).na.drop()
+
+                kids = (post if child == name else cst.df).filter(not_null(fk.columns))
+                on = eq([F.col(c) for c in fk.columns], [F.col(r) for r in refs])
+                sides = [(keys(pre).join(keys(post), refs, "left_anti"), "__fkp")]
+                if dml == "update":
+                    sides.append((keys(post).join(keys(pre), refs, "left_anti"), "__fkm"))
+                for side, tag in sides:
+                    counts.append(kids.join(side, on).select(F.lit(1).alias(tag)))
+        if not flags and not branches and not counts and not stats:
+            return None
+        rank = F.coalesce(*[F.when(fl, F.lit(i)) for i, fl in enumerate(flags)]) if flags else None
+        v = (
+            F.when(changed & rank.isNotNull(), vio(0, order, rank))
+            if rank is not None
+            else F.lit(None).cast("struct<f:int,o:bigint,r:int>")
+        )
+        tally = {}  # changed rows, children of removed keys, of added keys
+        if counts:
+            none = F.lit(None).cast("int")
+            chg = F.when(changed, F.lit(1)) if changed is not None else none
+            tally = {"__chg": chg, "__fkp": none, "__fkm": none}
+        u = rows.select(
+            v.alias("__v"),
+            *[c.alias(t) for t, c in tally.items()],
+            *[c.alias(f"__s_{k}") for k, (c, _) in stats.items()],
+        )
+        for b in branches + counts:
+            u = u.unionByName(b, allowMissingColumns=True)
+        res = u.agg(
+            F.min("__v").alias("__v"),
+            *[F.count(t).alias(t) for t in tally],
+            *[fn(F.col(f"__s_{k}")).alias(k) for k, (_, fn) in stats.items()],
+        ).collect()[0]
+        if res["__v"] is not None:
+            raise DustError(msgs[res["__v"]["r"]])
+        if counts and res["__fkp"] and (res["__fkp"] > res["__fkm"] or res["__chg"] != 1):
+            raise DustError(msgs[fk_rank])
+        return res
 
     # ------------------------------------------------------------------
     # read path helpers

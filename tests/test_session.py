@@ -5,6 +5,8 @@ SURVEY.md §5.2 requires these to match exactly."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from dust_spark import DustSession, Request, Statement
@@ -1443,3 +1445,128 @@ def test_attach_prefix_alias_routing(spark, tmp_path, db):
     # a double-quoted string containing 'a.t' is data, not a name
     out = q(db, "SELECT 'a.t' AS s FROM a.t")
     assert '"values":[["a.t"]]' in out
+
+
+# -- constraint-pass precedence and skip rules (sqlite3-differential) -------
+
+_FK_ORPHAN = [
+    "CREATE TABLE p (id INTEGER PRIMARY KEY, v INT)",
+    "CREATE TABLE c (id INTEGER PRIMARY KEY, pid INTEGER REFERENCES p(id), w INT)",
+    "INSERT INTO p VALUES (1, 1)",
+    "INSERT INTO c VALUES (1, 99, 1)",  # an orphan, admitted while FKs are off
+    "PRAGMA foreign_keys=ON",
+]
+
+
+@pytest.mark.parametrize(
+    "stmts",
+    [
+        # NOT NULL in column declaration order, not name order
+        ["CREATE TABLE t (b INT NOT NULL, a INT NOT NULL)", "INSERT INTO t VALUES (NULL, NULL)"],
+        # the first failing row wins, whichever constraint it fails
+        [
+            "CREATE TABLE t (a TEXT CHECK (a <> 'z'), b INT CHECK (b > 0))",
+            "INSERT INTO t VALUES ('x', -1), ('z', 5)",
+        ],
+        [
+            "CREATE TABLE t (a TEXT NOT NULL, b INT CHECK (b > 0))",
+            "INSERT INTO t VALUES ('x', -1), (NULL, 5)",
+        ],
+        [
+            "CREATE TABLE t (a TEXT UNIQUE, b INT NOT NULL)",
+            "INSERT INTO t VALUES ('x', 1)",
+            "INSERT INTO t VALUES ('x', 1), ('y', NULL)",
+        ],
+        # UNIQUE sets run in reverse declaration order
+        [
+            "CREATE TABLE t (a INT UNIQUE, b INT UNIQUE)",
+            "INSERT INTO t VALUES (1, 1)",
+            "INSERT INTO t VALUES (1, 1)",
+        ],
+        [
+            "CREATE TABLE t (b INT UNIQUE, a INT UNIQUE)",
+            "INSERT INTO t VALUES (1, 1)",
+            "INSERT INTO t VALUES (1, 1)",
+        ],
+        [
+            "CREATE TABLE t (a INT UNIQUE, b INT UNIQUE, c INT UNIQUE)",
+            "INSERT INTO t VALUES (1, 1, 1)",
+            "INSERT INTO t VALUES (1, 1, 1)",
+        ],
+        # an UPDATE checks only what it assigns: a pre-existing orphan
+        # does not fail updates of non-key columns on either side
+        _FK_ORPHAN + ["UPDATE p SET v = 2", "UPDATE c SET w = 2", "UPDATE c SET pid = pid"],
+        # a one-row key UPDATE that leaves a live child behind but gives
+        # the orphan its parent passes (SQLite's statement counter); with
+        # no orphan to offset it, the live child fails it
+        _FK_ORPHAN + ["INSERT INTO c VALUES (2, 1, 1)", "UPDATE p SET id = 99 WHERE id = 1"],
+        _FK_ORPHAN + ["INSERT INTO c VALUES (2, 1, 1)", "UPDATE p SET id = 98 WHERE id = 1"],
+        # two DO UPDATE arms may not write the same UNIQUE key, nor the
+        # same rowid
+        [
+            "CREATE TABLE t (id INTEGER PRIMARY KEY, a TEXT UNIQUE)",
+            "INSERT INTO t VALUES (1, 'x'), (2, 'y')",
+            "INSERT INTO t VALUES (1, 'q'), (2, 'q') ON CONFLICT(id) DO UPDATE SET a = 'z'",
+            "INSERT INTO t VALUES (1, 'q'), (2, 'q') ON CONFLICT(id) DO UPDATE SET id = 5",
+            "INSERT INTO t VALUES (1, 'q'), (2, 'q') ON CONFLICT(id) DO UPDATE SET a = 'z' || id",
+        ],
+    ],
+    ids=["nn-decl-order", "first-row-check", "check-before-later-nn", "unique-before-nn", "unique-ab", "unique-ba",
+         "unique-abc", "fk-orphan-untouched", "fk-orphan-offset", "fk-live-child",
+         "upsert-two-updates"],
+)
+def test_constraint_precedence_sqlite_differential(db, stmts):
+    import sqlite3
+
+    ref = sqlite3.connect(":memory:")
+    ref.isolation_level = None
+    try:
+        for sql in stmts:
+            try:
+                ref.execute(sql)
+                want = ""
+            except sqlite3.Error as e:
+                want = str(e)
+            assert db.execute_string_stmt(sql)[0].error == want, sql
+        for (name,) in ref.execute("SELECT name FROM sqlite_master WHERE type = 'table'"):
+            want = sorted(map(list, ref.execute(f"SELECT * FROM {name}")), key=repr)
+            have = sorted(db.query_string_stmt(f"SELECT * FROM {name}")[0].values, key=repr)
+            assert have == want, name
+    finally:
+        ref.close()
+
+
+def test_constraint_pass_job_budget(spark, tmp_path):
+    """Guards the one-action constraint pass: a keyed single-row INSERT
+    into ``txn`` and an ``UPDATE acct SET balance ...`` on the benchmark's
+    oltp_durable schema (disk warehouse, FK on) stay within the Spark
+    job counts measured when the pass landed (6 and 4 in the benchmark).
+    Before it, with one ``limit(1).count()`` action per constraint, they
+    took 14 and 20 jobs."""
+    db = DustSession(spark, warehouse=str(tmp_path / "wh"))
+    sc = spark.sparkContext
+    try:
+        for sql in [
+            "PRAGMA foreign_keys=ON",
+            "CREATE TABLE acct (id INTEGER PRIMARY KEY, email TEXT NOT NULL UNIQUE, "
+            "balance REAL NOT NULL CHECK(balance>=0), note TEXT)",
+            "CREATE TABLE txn (id INTEGER PRIMARY KEY, acct_id INTEGER NOT NULL "
+            "REFERENCES acct(id), amount REAL NOT NULL)",
+            "INSERT INTO acct(email, balance, note) VALUES ('a@x', 1.5, NULL), ('b@x', 2.5, 'k')",
+            "INSERT INTO txn(acct_id, amount) VALUES (1, 3.0), (2, 4.0)",
+        ]:
+            assert db.execute_string_stmt(sql)[0].error == ""
+
+        def jobs(tag: str, sql: str) -> int:
+            sc.setJobGroup(tag, tag, False)
+            try:
+                assert db.execute_string_stmt(sql)[0].error == ""
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+        tag = uuid.uuid4().hex
+        assert jobs(f"ins-{tag}", "INSERT INTO txn(acct_id, amount) VALUES (2, 5.0)") <= 6
+        assert jobs(f"upd-{tag}", "UPDATE acct SET balance = balance + 1.0, note = 'n' WHERE id = 1") <= 4
+    finally:
+        db.close()
