@@ -554,7 +554,12 @@ def parse_create_table(sql: str) -> TableDef:
             r"\bCOLLATE\s+(RTRIM|UTF8_BINARY_RTRIM)\b", rest
         ):
             dtype = T.StringType("UTF8_BINARY_RTRIM")
-        if "NOT NULL" in rest:
+        # the constraint itself, not text inside a parenthesised body or
+        # a string literal: CHECK (a IS NOT NULL) is a CHECK
+        bare = re.sub(r"'(?:[^']|'')*'", "''", rest)
+        while re.search(r"\([^()]*\)", bare):
+            bare = re.sub(r"\([^()]*\)", "", bare)
+        if re.search(r"\bNOT\s+NULL\b", bare):
             td.not_null.add(col)
         if "PRIMARY KEY" in rest:
             td.primary_key = [col]

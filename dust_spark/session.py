@@ -37,6 +37,7 @@ import os
 import re
 import uuid
 from contextlib import contextmanager
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1290,82 +1291,112 @@ class DustSession:
                 d[alias] = ordinal
         return d
 
-    def _fire_pairs(
-        self,
-        overlay: Overlay,
-        tdef,
-        trig_b: list,
-        trig_a: list,
-        pairs: list,
-        before_done: bool = False,
-    ) -> None:
+    def _fire_pairs(self, overlay: Overlay, tdef, trig_b: list, trig_a: list, pairs: list) -> None:
         """Post-mutation trigger firing that preserves SQLite's per-row
         interleave (B:row1, A:row1, B:row2, ...) when BOTH timings have
-        triggers. With only one timing the caller's phase placement
-        already matches SQLite's observable order; ``before_done`` marks
-        that BEFORE triggers were fired pre-mutation (single-timing
-        fast path)."""
-        if not pairs:
-            return
-        if before_done or not trig_b:
+        triggers."""
+        if not trig_b:
             self._fire_triggers(overlay, tdef, trig_a, pairs)
             return
         for p in pairs:
             self._fire_triggers(overlay, tdef, trig_b, [p])
             self._fire_triggers(overlay, tdef, trig_a, [p])
 
-    def _fire_pairs_ignorable(
-        self, overlay: Overlay, tdef, trig_b: list, trig_a: list, pairs: list
-    ) -> set:
-        """Pre-mutation per-row interleave for may-RAISE(IGNORE) BEFORE
-        + AFTER statements (r8): B(row), then A(row) unless the row was
-        ignored — SQLite's observable log order (B1,A1,B2,A2,...; was
-        B1..Bn,A1..An through r7, documented). The batch data mutation
-        applies afterwards to the surviving rows, so a body reading its
-        own table mid-statement sees pre-statement state where SQLite
-        sees the row-partial image — the same documented own-table-read
-        altitude as the post-mutation interleave in _fire_pairs.
-        Returns the ignored row indices."""
-        ignored: set = set()
-        for i, p in enumerate(pairs):
-            if self._fire_triggers(overlay, tdef, trig_b, [p]):
-                ignored.add(i)
-                continue
-            self._fire_triggers(overlay, tdef, trig_a, [p])
-        return ignored
+    @staticmethod
+    def _scan_key(tdef) -> str:
+        """SQL for SQLite's scan order over a table, the b-tree order:
+        rowid ASC (frame order diverges as soon as a small explicit id
+        is inserted after larger auto ids), or the PRIMARY KEY tuple on
+        WITHOUT ROWID tables (sqlite3-probed)."""
+        if tdef.rowid_column:
+            return f"`{tdef.rowid_column}`"
+        pk = ", ".join(f"`{c}`" for c in tdef.primary_key)
+        return f"row_number() OVER (ORDER BY {pk})" if pk else "monotonically_increasing_id()"
 
     @staticmethod
-    def _scan_order(tdef, pairs: list, *aux: list):
-        """Reorder multi-row UPDATE/DELETE trigger pairs into SQLite's
-        firing order: the table b-tree scan = rowid ASC (sqlite3-probed
-        by the trigger-machine differential — frame/insertion order
-        diverges as soon as an explicit small id is inserted after
-        larger auto ids). ``aux`` lists parallel to ``pairs`` (ords,
-        rids, vrows) are permuted identically. WITHOUT ROWID tables
-        scan their PK index — PK-tuple order (sqlite3-probed, r8);
-        non-comparable mixed-type keys fall back to frame order."""
-        rc = getattr(tdef, "rowid_column", None)
-        if not pairs:
-            return (pairs, *aux) if aux else pairs
-        if rc and rc in pairs[0][0]:
-            order = sorted(
-                range(len(pairs)),
-                key=lambda i: (pairs[i][0][rc] is None, pairs[i][0][rc] or 0),
-            )
+    def _row_pairs(tdef, rows: DataFrame, update: bool) -> tuple[list, list]:
+        """The (OLD, NEW) row pairs of ``rows`` with their ``__ord``
+        keys, in SQLite's firing order: ``__ord`` (``_scan_key``), or on
+        a frame without it (the child rows of an FK action, whose keys
+        are then None) the rowid or PRIMARY KEY tuple of OLD, keeping
+        frame order where keys do not compare. An UPDATE's rows carry
+        OLD as ``__old_<col>`` next to NEW; a DELETE's rows are OLD and
+        have no NEW."""
+        fields = [f.name for f in tdef.schema.fields]
+        got = []
+        for r in rows.collect():
+            d = r.asDict()
+            cur = {c: d[c] for c in fields}
+            pair = ({c: d[f"__old_{c}"] for c in fields}, cur) if update else (cur, None)
+            got.append((d.get("__ord"), pair))
+        if "__ord" in rows.columns:
+            got.sort(key=lambda g: g[0])
         else:
-            pk = list(getattr(tdef, "primary_key", None) or [])
-            if not pk or any(c not in pairs[0][0] for c in pk):
-                return (pairs, *aux) if aux else pairs
+            key = [tdef.rowid_column] if tdef.rowid_column else list(tdef.primary_key)
             try:
-                order = sorted(
-                    range(len(pairs)),
-                    key=lambda i: tuple(pairs[i][0][c] for c in pk),
-                )
+                got = sorted(got, key=lambda g: tuple(g[1][0][c] for c in key))
             except TypeError:
-                return (pairs, *aux) if aux else pairs
-        out = [pairs[i] for i in order]
-        outa = tuple([a[i] for i in order] for a in aux)
-        return (out, *outa) if aux else out
+                pass
+        return [p for _, p in got], [o for o, _ in got]
+
+    def _row_triggers(
+        self, overlay: Overlay, tdef, trig_b: list, trig_a: list, marked: DataFrame, update: bool, admit=None
+    ):
+        """The row triggers of an UPDATE or DELETE over its marked frame
+        (``__m`` = 1 on the rows it changes, ``__ord`` their scan key):
+        runs what must fire before the write and returns the ``__ord``
+        keys of the rows to revert out of the change, and the step to
+        run after the write.
+
+        Rows fire in scan order, and ``admit(ord, old, new)`` (UPDATE
+        OR IGNORE) decides row by row whether a change lands. BEFORE
+        triggers alone fire before the write; with AFTER triggers both
+        timings fire after it, interleaved per row (B1, A1, B2, ...) as
+        SQLite logs them, so an AFTER body's writes to its own table
+        land. A row that ``admit`` reverts fires its BEFORE triggers
+        only (sqlite3-probed: its AFTER triggers neither change nor
+        count). When a BEFORE trigger may RAISE(IGNORE), the interleave
+        runs before the write instead, skipping the AFTER triggers of
+        the rows it reverts.
+        A body reading its own table sees the pre- or post-statement
+        state where SQLite sees the row-partial image (documented)."""
+        if not (trig_b or trig_a or admit):
+            return [], lambda: None
+        pairs, ords = self._row_pairs(tdef, marked.filter(F.col("__m") == 1), update)
+        if trig_a and not (trig_b and self._may_ignore(trig_b)):
+            ignored = [o for o, p in zip(ords, pairs) if admit and not admit(o, *p)]
+            skip = set(ignored)
+
+            def after():
+                for o, p in zip(ords, pairs):
+                    self._fire_triggers(overlay, tdef, trig_b, [p])
+                    if o not in skip:
+                        self._fire_triggers(overlay, tdef, trig_a, [p])
+
+            return ignored, after
+        ignored = []
+        for o, p in zip(ords, pairs):
+            if self._fire_triggers(overlay, tdef, trig_b, [p]) or (admit and not admit(o, *p)):
+                ignored.append(o)
+            else:
+                self._fire_triggers(overlay, tdef, trig_a, [p])
+        return ignored, lambda: None
+
+    @staticmethod
+    def _key_norm(tdef, c: str):
+        """How column ``c``'s Spark collation compares a key value, for
+        conflict matching in Python dicts (NOCASE/UTF8_LCASE → lower,
+        RTRIM → rstrip(' ')), else 'kEy' misses a held 'Key' that the
+        engine's own joins match; None when values compare as they
+        are."""
+        f = next((x for x in tdef.schema.fields if x.name == c), None)
+        if f is not None and isinstance(f.dataType, T.StringType):
+            ds = str(f.dataType)
+            if "LCASE" in ds:
+                return lambda v: v.lower() if isinstance(v, str) else v
+            if "RTRIM" in ds:
+                return lambda v: v.rstrip(" ") if isinstance(v, str) else v
+        return None
 
     def _fire_view_triggers(self, overlay: Overlay, trigs: list, rows: list) -> Response:
         """Fire INSTEAD OF triggers and return the outer statement's
@@ -2299,24 +2330,7 @@ class DustSession:
                 # approximation
                 c = F.coalesce(c, F.lit(st.high_water) + F.col("__rn"))
             else:
-                # SQLite auto-rowid is SEQUENTIAL: each NULL id takes
-                # (max rowid seen so far, incl. larger EXPLICIT ids
-                # earlier in this batch) + 1. Closed form over the batch
-                # order: id(rn) = A(rn) + max(high_water,
-                # max_{j<=rn, explicit}(E(j) − A(j))) where A = running
-                # count of auto rows. All-auto batches reduce to the old
-                # high_water + row_number.
-                run = Window.orderBy("__rn").rowsBetween(
-                    Window.unboundedPreceding, Window.currentRow
-                )
-                a_run = F.sum(F.when(c.isNull(), 1).otherwise(0)).over(run)
-                e_base = F.max(
-                    F.when(c.isNotNull(), c.cast("long") - a_run)
-                ).over(run)
-                auto_id = a_run + F.greatest(
-                    F.lit(st.high_water).cast("long"), F.coalesce(e_base, F.lit(st.high_water).cast("long"))
-                )
-                c = F.coalesce(c, auto_id)
+                c = self._seq_rowids(c, st.high_water)
             new_rows = new_rows.withColumn(tdef.rowid_column, c.cast(f.dataType))
             if ins.or_ignore and ins.on_conflict is None:
                 # explicit-rowid conflicts drop under OR IGNORE (auto
@@ -2381,9 +2395,11 @@ class DustSession:
                     .filter(F.col("__rk") == 1)
                     .drop("__rk")
                 )
+                # a USING join moves the key columns first: restore the
+                # table's column order
                 existing = existing.join(
                     new_rows.select(*colset).na.drop().distinct(), list(colset), "left_anti"
-                )
+                ).select(*st.df.columns)
 
         if ins.on_conflict is not None:
             return self._upsert(overlay, st, tdef, ins, new_rows)
@@ -2483,25 +2499,13 @@ class DustSession:
                     new_rows = new_rows.filter(~F.col("__rn").isin(list(bad)))
                     if tdef.rowid_column is not None:
                         # ignored rows don't consume auto ids (probed):
-                        # null the auto slots back out and replay the
-                        # sequential closed form from the assignment
-                        # section above over the survivors
+                        # null the auto slots back out and assign them
+                        # again over the survivors
                         rc = tdef.rowid_column
                         fld = next(fl for fl in tdef.schema.fields if fl.name == rc)
                         cnull = F.when(F.col("__auto"), F.lit(None)).otherwise(F.col(rc))
-                        run2 = Window.orderBy("__rn").rowsBetween(
-                            Window.unboundedPreceding, Window.currentRow
-                        )
-                        a2 = F.sum(F.when(cnull.isNull(), 1).otherwise(0)).over(run2)
-                        e2 = F.max(
-                            F.when(cnull.isNotNull(), cnull.cast("long") - a2)
-                        ).over(run2)
-                        hw0 = F.lit(st.high_water).cast("long")
                         new_rows = new_rows.withColumn(
-                            rc,
-                            F.coalesce(
-                                cnull, a2 + F.greatest(hw0, F.coalesce(e2, hw0))
-                            ).cast(fld.dataType),
+                            rc, self._seq_rowids(cnull, st.high_water).cast(fld.dataType)
                         )
                     new_rows = new_rows.localCheckpoint(eager=True)
                     ai_list = _images(new_rows, before=False)
@@ -2572,6 +2576,21 @@ class DustSession:
                 self._fire_triggers(overlay, tdef, trig_a, fired)
             self._last_insert_id = last_id  # body inserts must not leak out
         return Response(last_insert_id=last_id, rows_affected=n)
+
+    @staticmethod
+    def _seq_rowids(c, high_water: int):
+        """Rowid column ``c`` with its NULLs auto-assigned the way
+        SQLite does, SEQUENTIALLY over the batch order ``__rn``: each
+        NULL id takes (max rowid seen so far, incl. larger EXPLICIT ids
+        earlier in this batch) + 1. Closed form: id(rn) = A(rn) +
+        max(high_water, max_{j<=rn, explicit}(E(j) − A(j))) where A =
+        running count of auto rows; all-auto batches reduce to
+        high_water + row_number."""
+        run = Window.orderBy("__rn").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        a_run = F.sum(F.when(c.isNull(), 1).otherwise(0)).over(run)
+        e_base = F.max(F.when(c.isNotNull(), c.cast("long") - a_run)).over(run)
+        hw = F.lit(high_water).cast("long")
+        return F.coalesce(c, a_run + F.greatest(hw, F.coalesce(e_base, hw)))
 
     def _override_rowids(self, new_rows: DataFrame, tdef, id_map: dict) -> DataFrame:
         """Replace upstream-assigned auto rowids with the sequential
@@ -2867,18 +2886,36 @@ class DustSession:
             need_replay = (tb_ and self._may_ignore(tb_)) or (
                 bu_ and self._may_ignore(bu_)
             )
+        # SQLite checks a proposed row's NOT NULL and CHECK constraints
+        # before it looks for a conflict, so a row that would update or
+        # be skipped fails them too (sqlite3-probed): ``first_bad`` is
+        # the first such row's (__rn, flag index)
+        flags = [
+            (F.col(c).isNull(), f"NOT NULL constraint failed: {tdef.name}.{c}")
+            for c in schema_cols
+            if c in tdef.not_null
+        ] + [
+            (~F.expr(self._check_pass_sql(e, tdef)), f"CHECK constraint failed: {label}")
+            for label, e in tdef.checks
+        ]
+        rank = F.coalesce(*[F.when(fl, F.lit(i)) for i, (fl, _) in enumerate(flags)]) if flags else F.lit(None)
+        first_bad = F.min(F.when(rank.isNotNull(), F.struct(F.col("__rn"), rank.alias("r"))))
+        bad, checked = None, False
+        # rows with NULL in any target column never conflict (SQLite
+        # NULL semantics) — exempt them from in-batch dedup entirely
+        null_target = None
+        for c in target:
+            cnd = F.col(c).isNull()
+            null_target = cnd if null_target is None else (null_target | cnd)
         if not need_replay and kind == "update":
             # multi-row conflict groups (r8): SQLite applies the DO
             # UPDATE arm per batch row with evolving target values and
             # counts each arm — run the exact sequential replay for the
-            # data too (closing the documented one-fold divergence)
-            nn = new_rows
-            for c in target:
-                nn = nn.filter(F.col(c).isNotNull())
-            need_replay = (
-                nn.groupBy(*target).count().filter(F.col("count") > 1).limit(1).count()
-                > 0
-            )
+            # data too (closing the documented one-fold divergence).
+            # The same action finds the first failing proposed row
+            dup = F.when(null_target, F.lit(0)).otherwise(F.count("*").over(Window.partitionBy(*target)))
+            got = new_rows.withColumn("__nk", dup).agg(F.max("__nk") > 1, first_bad).first()
+            need_replay, bad, checked = bool(got[0]), got[1], True
         if not need_replay and tdef.rowid_column and batch_trig_df is not None:
             # auto rowids must not burn on conflicting rows (sqlite
             # allocates max+1 only on successful insert — r8 ADVICE);
@@ -2931,14 +2968,14 @@ class DustSession:
                 )
             new_rows = self._override_rowids(new_rows, tdef, upd_id_map)
 
-        conflict_keys = existing.select(*target).na.drop().distinct()
+        if flags and (seq_replay is not None or not checked):
+            bad = new_rows.agg(first_bad).first()[0]
+        if bad is not None:
+            # the rows ahead of it run first: a failure of their own wins
+            self._upsert(overlay, st, tdef, ins, new_rows.filter(F.col("__rn") < bad["__rn"]))
+            raise DustError(flags[bad["r"]][1])
 
-        # rows with NULL in any target column never conflict (SQLite
-        # NULL semantics) — exempt them from in-batch dedup entirely
-        null_target = None
-        for c in target:
-            cnd = F.col(c).isNull()
-            null_target = cnd if null_target is None else (null_target | cnd)
+        conflict_keys = existing.select(*target).na.drop().distinct()
 
         if kind == "nothing" and seq_replay is not None:
             # the replay is the exact sequential insert set (r9): use
@@ -3224,23 +3261,10 @@ class DustSession:
         fields = [f.name for f in tdef.schema.fields]
 
         # collated key columns (r9): the replay's conflict matching is a
-        # Python dict lookup — normalize key values the way the column's
-        # Spark collation compares (NOCASE/UTF8_LCASE → lower, RTRIM →
-        # rstrip(' ')), else 'kEy' misses the seeded 'Key' even though
-        # the engine's own joins match them. The merge joins re-compare
-        # normalized literals through the collated columns, so
-        # normalized seed keys still join correctly.
-        def _norm_fn(c: str):
-            f = next((x for x in tdef.schema.fields if x.name == c), None)
-            if f is not None and isinstance(f.dataType, T.StringType):
-                ds = str(f.dataType)
-                if "LCASE" in ds:
-                    return lambda v: v.lower() if isinstance(v, str) else v
-                if "RTRIM" in ds:
-                    return lambda v: v.rstrip(" ") if isinstance(v, str) else v
-            return None
-
-        norm_fns = [[_norm_fn(c) for c in tgt] for tgt in targets]
+        # Python dict lookup over collation-normalized keys. The merge
+        # joins re-compare normalized literals through the collated
+        # columns, so normalized seed keys still join correctly.
+        norm_fns = [[self._key_norm(tdef, c) for c in tgt] for tgt in targets]
 
         def norm_key(ti: int, vals) -> tuple:
             return tuple(
@@ -3601,36 +3625,25 @@ class DustSession:
             if g in assigned:
                 raise DustError(f'cannot UPDATE generated column "{g}"')
 
+        trig_b = self._table_triggers(up.table, "UPDATE", "BEFORE", assigned)
+        trig_a = self._table_triggers(up.table, "UPDATE", "AFTER", assigned)
+        # one pre-image serves conflict resolution, the triggers' OLD rows
+        # and the old→new key map of FK ON UPDATE actions
+        olds = []
+        if up.or_action or trig_b or trig_a or (
+            self._fk_enabled and self._fk_action_children(overlay, up.table)
+        ):
+            olds = [f"`{f.name}` AS `__old_{f.name}`" for f in tdef.schema.fields]
         if up.from_sql is not None:
             if up.tail is not None:
                 raise DustError("unsupported: UPDATE ... FROM with ORDER BY/LIMIT")
-            # documented scope limit: UPDATE...FROM does not fire
-            # triggers (COVERAGE.md)
-            return self._update_from(overlay, st, up, where, assigned)
-
-        trig_b = self._table_triggers(up.table, "UPDATE", "BEFORE", assigned)
-        trig_a = self._table_triggers(up.table, "UPDATE", "AFTER", assigned)
-        want_pairs = bool(trig_b or trig_a)
+            marked = self._update_from(overlay, st, up, where, assigned, olds)
+            return self._row_change(overlay, st, up.table, marked, trig_b, trig_a, assigned, up.or_action)
 
         # WITH-CTE DML: the CTE list prefixes the rewrite so SET/WHERE
         # subqueries can reference it (SQLite CTE-DML semantics)
         with_prefix = (up.with_sql + " ") if up.with_sql else ""
-        if up.tail is not None:
-            # SQLITE_ENABLE_UPDATE_DELETE_LIMIT: rank the WHERE matches
-            # by the ORDER BY, keep LIMIT/OFFSET of them, update only
-            # those — implemented by restricting WHERE to the victim
-            # row ids (scan order = monotonic id, like SQLite's rowid
-            # scan when no ORDER BY is given)
-            rid_df = st.df.withColumn("__rid", F.monotonically_increasing_id()).localCheckpoint(eager=True)
-            rid_df.createOrReplaceTempView("__dust_stage")
-            tail = dialect.resolve_rowid(up.tail, tdef)
-            self.spark.sql(
-                f"{with_prefix}SELECT __rid AS __vrid FROM __dust_stage AS `{up.table}` "
-                f"WHERE coalesce(({where}), false) {tail}"
-            ).localCheckpoint(eager=True).createOrReplaceTempView("__dust_victims")
-            where = "`__rid` IN (SELECT __vrid FROM __dust_victims)"
-        else:
-            st.df.createOrReplaceTempView("__dust_stage")
+        where = self._stage_where(st, up.table, where, up.tail, with_prefix)
         if tdef.strict and assigned:
             # STRICT: evaluate each SET expression uncast over the
             # matched rows and run the storage-class matrix on it
@@ -3659,104 +3672,97 @@ class DustSession:
                 )
             else:
                 projs.append(f"`{f.name}`")
-        extra = ""
-        if up.or_action:
-            # conflict-resolution needs pre-update values (revert) and a
-            # scan-order row id (first/last-wins within a key group)
-            extra = ", " + ", ".join(
-                f"`{c}` AS `__old_{c}`" for c in assigned
-            ) + ", monotonically_increasing_id() AS __scan"
-        # SQLite's scan order for the constraint pass: the old rowid
-        rc = tdef.rowid_column
-        extra += f", `{rc}` AS __ord" if rc else ", monotonically_increasing_id() AS __ord"
-        tg_cols: list[str] = []
-        if want_pairs:
-            # carry the full OLD row image + a scan-order id through the
-            # projection so triggers see (old, new) pairs in scan order
-            tg_cols = [f.name for f in tdef.schema.fields]
-            extra += ", " + ", ".join(
-                f"`{c}` AS `__tg_{c}`" for c in tg_cols
-            ) + ", monotonically_increasing_id() AS __tg_ord"
-        fk_change_cols: list[str] = []
-        if self._fk_enabled and self._fk_action_children(overlay, up.table):
-            # some child FK declares an ON UPDATE action — carry the
-            # pre-image so _check_child_fks can map old→new key values
-            fk_change_cols = [f.name for f in tdef.schema.fields]
-            extra += ", " + ", ".join(
-                f"`{c}` AS `__fkold_{c}`" for c in fk_change_cols
-            )
         # alias the staged view as the target table so correlated
         # subqueries (SET v = (SELECT ... WHERE b.id = t.id)) resolve
         marked = self.spark.sql(
-            f"{with_prefix}SELECT {', '.join(projs)}, CASE WHEN ({where}) THEN 1 ELSE 0 END AS __m"
-            f"{extra} FROM __dust_stage AS `{up.table}`"
+            f"{with_prefix}SELECT {', '.join(projs + olds)}, "
+            f"CASE WHEN ({where}) THEN 1 ELSE 0 END AS __m, {self._scan_key(tdef)} AS __ord "
+            f"FROM __dust_stage AS `{up.table}`"
         )
-        if up.or_action:
-            marked = self._update_resolve_conflicts(tdef, assigned, marked, up.or_action)
-        marked = self._apply_generated(tdef, marked)
+        return self._row_change(overlay, st, up.table, marked, trig_b, trig_a, assigned, up.or_action)
+
+    def _stage_where(self, st: TableState, table: str, where: str, tail, with_prefix: str) -> str:
+        """Stage ``st`` as ``__dust_stage`` for an UPDATE or DELETE and
+        return the statement's WHERE over it. With an ORDER BY/LIMIT
+        ``tail`` (SQLITE_ENABLE_UPDATE_DELETE_LIMIT) the WHERE matches
+        are ranked by the ORDER BY, or in scan order when it has none
+        (sqlite3-probed: rowid order, not frame order), and the WHERE is
+        restricted to the LIMIT/OFFSET-selected victims' row ids."""
+        if tail is None:
+            st.df.createOrReplaceTempView("__dust_stage")
+            return where
+        rid_df = st.df.withColumn("__rid", F.expr(self._scan_key(st.tdef))).localCheckpoint(eager=True)
+        rid_df.createOrReplaceTempView("__dust_stage")
+        tail = dialect.resolve_rowid(tail, st.tdef)
+        if not re.match(r"ORDER\s+BY\b", tail, re.I):
+            tail = f"ORDER BY __rid {tail}"
+        self.spark.sql(
+            f"{with_prefix}SELECT __rid AS __vrid FROM __dust_stage AS `{table}` "
+            f"WHERE coalesce(({where}), false) {tail}"
+        ).localCheckpoint(eager=True).createOrReplaceTempView("__dust_victims")
+        return "`__rid` IN (SELECT __vrid FROM __dust_victims)"
+
+    def _row_change(
+        self, overlay: Overlay, st: TableState, table: str, marked: DataFrame, trig_b: list, trig_a: list,
+        assigned=None, or_action=None,
+    ) -> Response:
+        """The shared tail of every UPDATE, UPDATE...FROM and DELETE,
+        over the statement's marked frame: the table's columns (an
+        UPDATE's post-image), ``__m`` (1 on the rows it changes),
+        ``__ord`` (SQLite's scan order: the old rowid, or a monotone id
+        on WITHOUT ROWID tables) and, when an UPDATE's conflict
+        resolution, triggers or FK ON UPDATE actions need it, the
+        pre-image as ``__old_<col>``. ``assigned`` holds an UPDATE's SET
+        columns and is None on a DELETE."""
+        tdef = st.tdef
+        fields = [f.name for f in tdef.schema.fields]
+        update = assigned is not None
+        if or_action == "replace":
+            marked = self._update_replace(tdef, marked)
+        if update:
+            marked = self._apply_generated(tdef, marked)
         marked = marked.localCheckpoint(eager=True)
-        pairs: list = []
-        before_fired = False
-        after_fired = False
-        if want_pairs:
-            ords: list = []
-            for r in marked.filter(F.col("__m") == 1).orderBy("__tg_ord").collect():
-                d = r.asDict()
-                pairs.append(
-                    ({c: d[f"__tg_{c}"] for c in tg_cols}, {c: d[c] for c in tg_cols})
-                )
-                ords.append(d["__tg_ord"])
-            pairs, ords = self._scan_order(tdef, pairs, ords)
-            may_ign_b = trig_b and self._may_ignore(trig_b)
-            if not trig_a or may_ign_b:
-                # BEFORE pre-mutation; when RAISE(IGNORE) may fire, even
-                # with AFTER triggers present, so ignored rows can be
-                # reverted out of the batch post-image. With BOTH
-                # timings the B/A interleave runs per row (r8 — SQLite's
-                # observable log order)
-                before_fired = True
-                if trig_a:
-                    after_fired = True
-                    ign = self._fire_pairs_ignorable(
-                        overlay, tdef, trig_b, trig_a, pairs
-                    )
-                else:
-                    ign = self._fire_triggers(overlay, tdef, trig_b, pairs)
-                if ign:
-                    # RAISE(IGNORE)d rows revert to their OLD image and
-                    # don't count toward changes(); their AFTER triggers
-                    # never fire (sqlite3-probed)
-                    cond = F.col("__tg_ord").isin([ords[i] for i in ign])
-                    for c in tg_cols:
-                        marked = marked.withColumn(
-                            c, F.when(cond, F.col(f"__tg_{c}")).otherwise(F.col(c))
-                        )
-                    marked = marked.withColumn(
-                        "__m", F.when(cond, F.lit(0)).otherwise(F.col("__m"))
-                    )
-                    marked = marked.localCheckpoint(eager=True)
-                    pairs = [p for i, p in enumerate(pairs) if i not in ign]
-            marked = marked.drop("__tg_ord", *[f"__tg_{c}" for c in tg_cols])
-        changes_df = None
-        if fk_change_cols:
-            changes_df = marked.filter(F.col("__m") == 1)
-            marked = marked.drop(*[f"__fkold_{c}" for c in fk_change_cols])
-        new_df = marked.drop("__m", "__ord")
+
+        def revert(back) -> DataFrame:
+            # reverted rows keep their OLD image and don't count toward
+            # changes() (sqlite3-probed; a LIMIT does not backfill)
+            return marked.select(
+                *[F.when(back, F.col(f"__old_{c}")).otherwise(F.col(c)).alias(c) if update else c for c in fields],
+                F.when(back, F.lit(0)).otherwise(F.col("__m")).alias("__m"),
+                *[c for c in marked.columns if c not in fields and c != "__m"],
+            )
+
+        admit = None
+        if or_action == "ignore":
+            back, admit = self._update_ignore(tdef, assigned, marked, bool(trig_b or trig_a))
+            if back is not None:
+                marked = revert(back)
+        ignored, after = self._row_triggers(overlay, tdef, trig_b, trig_a, marked, update, admit)
+        if ignored:
+            marked = revert(F.col("__ord").isin(ignored)).localCheckpoint(eager=True)
+        hit = F.col("__m") == 1
+        new_df = (marked if update else marked.filter(~hit)).select(*fields)
         if self._capture_returning:
-            self._returning_df = marked.filter(F.col("__m") == 1).drop("__m", "__ord")
-            self._returning_table = up.table
+            self._returning_df = marked.filter(hit).select(*fields)
+            self._returning_table = table
 
         # child FK actions first (a self-referencing ON UPDATE CASCADE
         # fixes the post-image), then the constraint pass on the final
         # frame — SQLite checks FKs after actions have applied
-        new_df = self._check_child_fks(
-            overlay, up.table, new_df, dml="update", changes_df=changes_df
-        )
-        n, hw = self._update_checks(overlay, st, marked, assigned, new_df)
-        new_st = overlay.catalog.materialize(up.table, TableState(tdef, new_df, hw, st.version + 1))
-        overlay.put(up.table, new_st)
-        if pairs and not after_fired:
-            self._fire_pairs(overlay, tdef, trig_b, trig_a, pairs, before_done=before_fired)
+        if update:
+            new_df = self._check_child_fks(
+                overlay, table, new_df, dml="update", changes_df=marked.filter(hit)
+            )
+            n, hw = self._update_checks(overlay, st, marked, assigned, new_df)
+        elif self._fk_enabled and self._fk_action_children(overlay, table, "delete"):
+            n = marked.filter(hit).count()
+            new_df = self._check_child_fks(overlay, table, new_df, dml="delete")
+            _, hw = self._delete_checks(overlay, st, new_df, new_df)
+        else:
+            n, hw = self._delete_checks(overlay, st, marked, new_df, deleted=hit)
+        new_st = overlay.catalog.materialize(table, TableState(tdef, new_df, hw, st.version + 1))
+        overlay.put(table, new_st)
+        after()
         return self._ok(n)
 
     def _update_checks(
@@ -3820,97 +3826,116 @@ class DustSession:
             df = df.withColumn(g, self._affine_cast(val, rtype, dtype))
         return df
 
-    def _update_resolve_conflicts(
-        self, tdef: TableDef, assigned: dict[str, str], marked: DataFrame, action: str
-    ) -> DataFrame:
-        """UPDATE OR IGNORE / OR REPLACE conflict resolution over the
-        set-based post-image (sqlite3-probed):
+    def _update_ignore(self, tdef: TableDef, assigned, marked: DataFrame, replay: bool):
+        """UPDATE OR IGNORE, decided row by row in scan order as SQLite
+        does (sqlite3-probed): a changed row keeps its update unless it
+        fails NOT NULL or CHECK, or one of its new UNIQUE keys (the
+        rowid's included) is held at that moment — by a row the
+        statement leaves alone, by a row already updated to it, or by
+        an updated row still at its old key (later in the scan, or
+        itself reverted). FK violations still error: conflict
+        algorithms don't apply to foreign keys.
 
-        - ``ignore``: a row whose UPDATE would violate NOT NULL, CHECK
-          or a UNIQUE constraint reverts to its old values and does not
-          count toward changes(); within an in-batch colliding group the
-          first row in scan order keeps its update (SQLite's row-by-row
-          scan), unless a non-updated row already holds the key.
-        - ``replace``: rows conflicting with an updated row's new key
-          are DELETED (the last updated row in scan order wins the key);
-          changes() counts only the updates, like SQLite.
-
-        Residual divergence (documented): second-order effects of a
-        revert (a reverted row's OLD key re-colliding with another
-        row's NEW key) resolve set-based here where SQLite's sequential
-        scan may interleave differently — multi-row key-swap batches.
-        FK violations still error: conflict algorithms don't apply to
-        foreign keys."""
-        W = Window
+        Returns ``(revert, admit)``. One Spark action first looks for a
+        key that a changed row claims and another row holds or claims.
+        Without one, no decision depends on the order: unless triggers
+        fire (``replay``), ``revert`` marks the rows that fail NOT NULL
+        or CHECK and nothing is collected. Otherwise ``admit(ord, old,
+        new)`` is the test that ``_row_triggers`` runs on each changed
+        row, collected to the driver, after its BEFORE triggers; it
+        tracks the keys of the rows it lets through."""
         upd = F.col("__m") == 1
-        if action == "ignore":
-            viol = F.lit(False)
-            for c in sorted(tdef.not_null):
-                if c in assigned:
-                    viol = viol | (upd & F.col(c).isNull())
-            for _lbl, expr in tdef.checks:
-                viol = viol | (upd & ~F.expr(self._check_pass_sql(expr, tdef)))
-            for colset in tdef.unique:
-                nullk = None
-                for c in colset:
-                    cnd = F.col(c).isNull()
-                    nullk = cnd if nullk is None else (nullk | cnd)
-                w = W.partitionBy(*colset)
-                grp_cnt = F.count("*").over(w)
-                has_nonupd = F.max(F.when(~upd, 1).otherwise(0)).over(w)
-                first_upd = F.min(F.when(upd, F.col("__scan"))).over(w)
-                viol = viol | (
-                    upd
-                    & ~nullk
-                    & (grp_cnt > 1)
-                    & ((has_nonupd == 1) | (F.col("__scan") != first_upd))
+        bad = F.lit(False)
+        for c in tdef.not_null & set(assigned):
+            bad = bad | F.col(c).isNull()
+        for _lbl, expr in tdef.checks:
+            bad = bad | ~F.expr(self._check_pass_sql(expr, tdef))
+        # only a set with an assigned (or generated) column can change key
+        eff = set(assigned) | set(tdef.generated)
+        sets = [list(u) for u in tdef.unique if eff & set(u)]
+        if tdef.rowid_column in eff and [tdef.rowid_column] not in sets:
+            sets.append([tdef.rowid_column])
+        probes = []
+        for u in sets:
+            # each key's claimants (__c = 1) and its holder before the
+            # statement; __i is the row, NULL for a row left alone
+            keys = marked.filter(upd).select(*u, F.col("__ord").alias("__i"), F.lit(1).alias("__c"))
+            keys = keys.unionByName(
+                marked.select(
+                    *[F.when(upd, F.col(f"__old_{c}")).otherwise(F.col(c)).alias(c) for c in u],
+                    F.when(upd, F.col("__ord")).alias("__i"),
+                    F.lit(0).alias("__c"),
                 )
-            marked = marked.withColumn("__viol", viol)
-            cols = []
-            for f in tdef.schema.fields:
-                if f.name in assigned:
-                    cols.append(
-                        F.when(F.col("__viol"), F.col(f"__old_{f.name}"))
-                        .otherwise(F.col(f.name))
-                        .alias(f.name)
-                    )
-                else:
-                    cols.append(F.col(f.name))
-            extras = [
-                F.col(c)
-                for c in marked.columns
-                if c.startswith("__fkold_") or c.startswith("__tg_") or c == "__ord"
-            ]
-            return marked.select(
-                *cols,
-                *extras,
-                F.when(F.col("__viol"), F.lit(0)).otherwise(F.col("__m")).alias("__m"),
+            ).na.drop(subset=u)
+            clash = (F.max("__c") == 1) & (
+                (F.count("__i") < F.count("*")) | (F.min("__i") < F.max("__i"))
             )
-        # action == "replace": drop rows losing their key to an update
+            probes.append(keys.groupBy(*u).agg(clash.alias("x")))
+        clash = bool(probes) and bool(reduce(DataFrame.unionAll, probes).agg(F.max("x")).first()[0])
+        if not (clash or replay):
+            return upd & bad, None
+        if not clash:
+            sets = []
+        failing = {r[0] for r in marked.filter(upd & bad).select("__ord").collect()}
+        norms = [[self._key_norm(tdef, c) or (lambda v: v) for c in u] for u in sets]
+
+        def key(i: int, row) -> tuple | None:
+            vals = tuple(fn(row[c]) for fn, c in zip(norms[i], sets[i]))
+            return None if None in vals else vals  # NULLs never conflict
+
+        # the holder of every key an update claims: None for a row the
+        # statement leaves alone, else the updated row's __ord
+        held = []
+        for i, u in enumerate(sets):
+            at = marked.select(
+                *[F.when(upd, F.col(f"__old_{c}")).otherwise(F.col(c)).alias(c) for c in u],
+                F.when(upd, F.col("__ord")).alias("__h"),
+            )
+            claimed = at.join(marked.filter(upd).select(*u), u, "left_semi")
+            held.append({key(i, r): r["__h"] for r in claimed.collect()})
+
+        def admit(o, old: dict, new: dict) -> bool:
+            keys = [key(i, new) for i in range(len(sets))]
+            if o in failing or any(k is not None and h.get(k, o) != o for h, k in zip(held, keys)):
+                return False
+            for i, (h, k) in enumerate(zip(held, keys)):
+                prev = key(i, old)
+                if prev is not None and h.get(prev) == o:
+                    del h[prev]
+                if k is not None:
+                    h[k] = o
+            return True
+
+        return None, admit
+
+    @staticmethod
+    def _update_replace(tdef: TableDef, marked: DataFrame) -> DataFrame:
+        """UPDATE OR REPLACE over the set-based post-image
+        (sqlite3-probed): rows conflicting with an updated row's new key
+        are DELETED, the last updated row in scan order (``__ord``)
+        winning the key; changes() counts only the updates, like SQLite.
+
+        Residual divergence (documented): SQLite visits the rowids it
+        collected up front, so a row that moves onto a later row's rowid
+        (deleting it) is updated once more from there — key chains
+        resolve set-based here. FK violations still error: conflict
+        algorithms don't apply to foreign keys."""
+        upd = F.col("__m") == 1
         drop = F.lit(False)
         for colset in tdef.unique:
             nullk = None
             for c in colset:
                 cnd = F.col(c).isNull()
                 nullk = cnd if nullk is None else (nullk | cnd)
-            w = W.partitionBy(*colset)
+            w = Window.partitionBy(*colset)
             grp_cnt = F.count("*").over(w)
             has_upd = F.max(F.when(upd, 1).otherwise(0)).over(w)
-            last_upd = F.max(F.when(upd, F.col("__scan"))).over(w)
+            last_upd = F.max(F.when(upd, F.col("__ord"))).over(w)
             drop = drop | (
-                ~nullk & (grp_cnt > 1) & (has_upd == 1) & (F.col("__scan") != last_upd)
+                ~nullk & (grp_cnt > 1) & (has_upd == 1) & (F.col("__ord") != last_upd)
             )
         # windows can't sit in a WHERE — materialize the flag first
-        keep = marked.withColumn("__drop", drop).filter(~F.col("__drop"))
-        return keep.select(
-            *[F.col(f.name) for f in tdef.schema.fields],
-            *[
-                F.col(c)
-                for c in marked.columns
-                if c.startswith("__fkold_") or c.startswith("__tg_") or c == "__ord"
-            ],
-            F.col("__m"),
-        )
+        return marked.withColumn("__drop", drop).filter(~F.col("__drop")).drop("__drop")
 
     def _update_from(
         self,
@@ -3919,19 +3944,21 @@ class DustSession:
         up: "dialect.UpdateStmt",
         where: str,
         assigned: dict[str, str],
-    ) -> Response:
-        """``UPDATE t SET ... FROM src WHERE ...`` (SQLite >= 3.33,
-        reached through the reference's pass-through db/src/db.rs:176).
-        Each target row takes the SET values from its LAST matching
-        source row in source scan order (probed against sqlite3: with
-        matches 100,200,300 the row ends at 300); rows_affected counts
-        distinct target rows with at least one match, value-change or
-        not. For a non-plain-table FROM (subquery/join) SQLite documents
-        the chosen row as unspecified — we use join-output order there."""
+        olds: list[str],
+    ) -> DataFrame:
+        """The marked frame of ``UPDATE t SET ... FROM src WHERE ...``
+        (SQLite >= 3.33, reached through the reference's pass-through
+        db/src/db.rs:176), with the pre-image columns ``olds``. Each
+        target row takes the SET values from its LAST matching source
+        row in source scan order (probed against sqlite3: with matches
+        100,200,300 the row ends at 300); rows_affected counts distinct
+        target rows with at least one match, value-change or not. For a
+        non-plain-table FROM (subquery/join) SQLite documents the chosen
+        row as unspecified — we use join-output order there."""
         tdef = st.tdef
         t = up.table
         with_prefix = (up.with_sql + " ") if up.with_sql else ""
-        rid = st.df.withColumn("__rid", F.monotonically_increasing_id()).localCheckpoint(eager=True)
+        rid = st.df.withColumn("__rid", F.expr(self._scan_key(tdef))).localCheckpoint(eager=True)
         rid.createOrReplaceTempView("__dust_upd_t")
 
         from_clause = up.from_sql
@@ -3964,7 +3991,6 @@ class DustSession:
             .drop("__rn", "__pos")
             .withColumn("__hit", F.lit(1))
         )
-        joined = rid.join(winners, "__rid", "left")
         idx = {c: i for i, c in enumerate(assigned)}
         cols = []
         for f in tdef.schema.fields:
@@ -3978,93 +4004,12 @@ class DustSession:
                 )
             else:
                 cols.append(F.col(f.name))
-        # UPDATE...FROM fires UPDATE triggers like any UPDATE
-        # (sqlite3-probed) — OLD = pre-statement row, NEW = the row with
-        # its last-match SET values, in table scan (__rid) order
-        trig_b = self._table_triggers(t, "UPDATE", "BEFORE", assigned=list(assigned))
-        trig_a = self._table_triggers(t, "UPDATE", "AFTER", assigned=list(assigned))
-        pairs: list = []
-        before_fired = False
-        after_fired = False
-        ign_cond = None
-        if trig_b or trig_a:
-            olds = [F.col(f.name).alias(f"__old_{f.name}") for f in tdef.schema.fields]
-            hits = (
-                joined.filter(F.col("__hit") == 1)
-                .select(*cols, F.col("__rid"), *olds)
-                .orderBy("__rid")
-                .collect()
-            )
-            rids: list = []
-            for r in hits:
-                d = r.asDict()
-                pairs.append(
-                    (
-                        {f.name: d[f"__old_{f.name}"] for f in tdef.schema.fields},
-                        {f.name: d[f.name] for f in tdef.schema.fields},
-                    )
-                )
-                rids.append(d["__rid"])
-            pairs, rids = self._scan_order(tdef, pairs, rids)
-            if not trig_a or (trig_b and self._may_ignore(trig_b)):
-                # BEFORE pre-mutation (see _update_impl: with a
-                # may-RAISE(IGNORE) trigger even when AFTER triggers
-                # exist, so ignored rows revert to their old values;
-                # both timings interleave per row — r8)
-                before_fired = True
-                if trig_a:
-                    after_fired = True
-                    ign = self._fire_pairs_ignorable(
-                        overlay, tdef, trig_b, trig_a, pairs
-                    )
-                else:
-                    ign = self._fire_triggers(overlay, tdef, trig_b, pairs)
-                if ign:
-                    ign_cond = F.col("__rid").isin([rids[i] for i in ign])
-                    pairs = [p for i, p in enumerate(pairs) if i not in ign]
-        if ign_cond is not None:
-            # RAISE(IGNORE)d rows keep their pre-statement values and
-            # don't count toward changes() (sqlite3-probed)
-            rev_cols = [
-                F.when(ign_cond, F.col(f.name)).otherwise(c).alias(f.name)
-                for f, c in zip(tdef.schema.fields, cols)
-            ]
-            hit_col = F.when(ign_cond, F.lit(0)).otherwise(
-                F.coalesce(F.col("__hit"), F.lit(0))
-            )
-            marked = joined.select(*rev_cols, hit_col.alias("__m"), F.col("__rid").alias("__ord"))
-        else:
-            marked = joined.select(
-                *cols,
-                F.coalesce(F.col("__hit"), F.lit(0)).alias("__m"),
-                F.col("__rid").alias("__ord"),
-            )
-        marked = self._apply_generated(tdef, marked)
-        marked = marked.localCheckpoint(eager=True)
-        new_df = marked.drop("__m", "__ord")
-        if self._capture_returning:
-            self._returning_df = marked.filter(F.col("__m") == 1).drop("__m", "__ord")
-            self._returning_table = t
-
-        changes_df = None
-        if self._fk_enabled and self._fk_action_children(overlay, t):
-            hit_rows = joined.filter(F.col("__hit") == 1)
-            if ign_cond is not None:
-                hit_rows = hit_rows.filter(~ign_cond)
-            changes_df = hit_rows.select(
-                *cols,
-                *[F.col(f.name).alias(f"__fkold_{f.name}") for f in tdef.schema.fields],
-            )
-            changes_df = self._apply_generated(tdef, changes_df)
-        new_df = self._check_child_fks(
-            overlay, t, new_df, dml="update", changes_df=changes_df
+        return rid.join(winners, "__rid", "left").select(
+            *cols,
+            F.coalesce(F.col("__hit"), F.lit(0)).alias("__m"),
+            F.col("__rid").alias("__ord"),
+            *[F.expr(o) for o in olds],
         )
-        n, hw = self._update_checks(overlay, st, marked, assigned, new_df)
-        new_st = overlay.catalog.materialize(t, TableState(tdef, new_df, hw, st.version + 1))
-        overlay.put(t, new_st)
-        if pairs and not after_fired:
-            self._fire_pairs(overlay, tdef, trig_b, trig_a, pairs, before_done=before_fired)
-        return self._ok(n)
 
     def _delete(self, overlay: Overlay, sql: str) -> Response:
         de = dialect.parse_delete(sql)
@@ -4078,144 +4023,22 @@ class DustSession:
             return self._delete_impl(overlay, st, de)
 
     def _delete_impl(self, overlay: Overlay, st: TableState, de) -> Response:
-        st.df.createOrReplaceTempView("__dust_stage")
+        tdef = st.tdef
         with_prefix = (de.with_sql + " ") if de.with_sql else ""
+        where = "TRUE"
+        if de.where is not None:
+            where = self._dml_condition(dialect.resolve_rowid(de.where, tdef), tdef)
+        where = self._stage_where(st, de.table, where, de.tail, with_prefix)
+        # one marked copy of the stage: the count, the survivors' max
+        # rowid and the parent-side FK check are one aggregate over it
+        marked = self.spark.sql(
+            f"{with_prefix}SELECT {', '.join(f'`{f.name}`' for f in tdef.schema.fields)}, "
+            f"CASE WHEN ({where}) THEN 1 ELSE 0 END AS __m, {self._scan_key(tdef)} AS __ord "
+            f"FROM __dust_stage AS `{de.table}`"
+        )
         trig_b = self._table_triggers(de.table, "DELETE", "BEFORE")
         trig_a = self._table_triggers(de.table, "DELETE", "AFTER")
-        want_pairs = bool(trig_b or trig_a)
-        if de.where is not None:
-            de = de.__class__(
-                de.table,
-                self._dml_condition(
-                    dialect.resolve_rowid(de.where, st.tdef), st.tdef
-                ),
-                de.with_sql,
-                de.tail,
-            )
-        if de.tail is not None:
-            # SQLITE_ENABLE_UPDATE_DELETE_LIMIT: delete only the ORDER
-            # BY/LIMIT-selected victims (see the UPDATE twin above)
-            rid_df = st.df.withColumn("__rid", F.monotonically_increasing_id()).localCheckpoint(eager=True)
-            rid_df.createOrReplaceTempView("__dust_stage_rid")
-            tail = dialect.resolve_rowid(de.tail, st.tdef)
-            victims = self.spark.sql(
-                f"{with_prefix}SELECT __rid FROM __dust_stage_rid AS `{de.table}` "
-                f"WHERE coalesce(({de.where or 'TRUE'}), false) {tail}"
-            ).localCheckpoint(eager=True)
-            n = victims.count()
-            pairs: list = []
-            before_fired = after_fired = False
-            if want_pairs:
-                vr: list = []
-                for r in (
-                    rid_df.join(victims, "__rid", "left_semi").orderBy("__rid").collect()
-                ):
-                    d = r.asDict()
-                    vr.append(d.pop("__rid"))
-                    pairs.append((d, None))
-                pairs, vr = self._scan_order(st.tdef, pairs, vr)
-                may_ign_b = trig_b and self._may_ignore(trig_b)
-                if not trig_a or may_ign_b:
-                    # RAISE(IGNORE)d victims are restored and not counted
-                    # (r8 — sqlite3-probed: the LIMIT does NOT backfill);
-                    # both timings interleave per row
-                    before_fired = True
-                    if trig_a:
-                        after_fired = True
-                        ign = self._fire_pairs_ignorable(
-                            overlay, st.tdef, trig_b, trig_a, pairs
-                        )
-                    else:
-                        ign = self._fire_triggers(overlay, st.tdef, trig_b, pairs)
-                    if ign:
-                        bad = [vr[i] for i in ign]
-                        victims = victims.filter(
-                            ~F.col("__rid").isin(bad)
-                        ).localCheckpoint(eager=True)
-                        n -= len(ign)
-                        pairs = [p for i, p in enumerate(pairs) if i not in ign]
-            if self._capture_returning:
-                self._returning_df = rid_df.join(victims, "__rid", "left_semi").drop("__rid")
-                self._returning_table = de.table
-            new_df = rid_df.join(victims, "__rid", "left_anti").drop("__rid").localCheckpoint(eager=True)
-            new_df = self._check_child_fks(overlay, de.table, new_df, dml="delete")
-            _, hw = self._delete_checks(overlay, st, new_df, new_df)
-            new_st = overlay.catalog.materialize(
-                de.table, TableState(st.tdef, new_df, hw, st.version + 1)
-            )
-            overlay.put(de.table, new_st)
-            if pairs and not after_fired:
-                self._fire_pairs(overlay, st.tdef, trig_b, trig_a, pairs, before_done=before_fired)
-            return self._ok(n)
-        # one flagged copy of the stage: the count, the survivors' max
-        # rowid and the parent-side FK check are one aggregate over it
-        flagged = self.spark.sql(
-            f"{with_prefix}SELECT *, coalesce(({de.where or 'TRUE'}), false) AS __del "
-            f"FROM __dust_stage AS `{de.table}`"
-        ).localCheckpoint(eager=True)
-        gone = F.col("__del")
-        new_df = flagged.filter(~gone).drop("__del")
-        victims_df = flagged.filter(gone).drop("__del") if want_pairs else None
-        if self._capture_returning:
-            self._returning_df = flagged.filter(gone).drop("__del")
-            self._returning_table = de.table
-        # triggers and FK actions can change the post-image: the checks
-        # then wait for the final frame
-        settled = victims_df is None and not (
-            self._fk_enabled and self._fk_action_children(overlay, de.table, "delete")
-        )
-        if settled:
-            n, hw = self._delete_checks(overlay, st, flagged, new_df, deleted=gone)
-        else:
-            n = flagged.filter(gone).count()
-        pairs = []
-        before_fired = False
-        after_fired = False
-        if victims_df is not None:
-            vdf = victims_df.withColumn(
-                "__tg_ord", F.monotonically_increasing_id()
-            ).localCheckpoint(eager=True)
-            vrows = vdf.orderBy("__tg_ord").collect()
-            pairs = [
-                ({k: v for k, v in r.asDict().items() if k != "__tg_ord"}, None)
-                for r in vrows
-            ]
-            pairs, vrows = self._scan_order(st.tdef, pairs, list(vrows))
-            may_ign_b = trig_b and self._may_ignore(trig_b)
-            if not trig_a or may_ign_b:
-                # BEFORE pre-mutation; with a may-RAISE(IGNORE) trigger
-                # even when AFTER triggers exist, so ignored victims can
-                # be restored to the table (not deleted, not counted,
-                # no AFTER triggers — sqlite3-probed). Both timings
-                # interleave per row (r8)
-                before_fired = True
-                if trig_a:
-                    after_fired = True
-                    ign = self._fire_pairs_ignorable(
-                        overlay, st.tdef, trig_b, trig_a, pairs
-                    )
-                else:
-                    ign = self._fire_triggers(overlay, st.tdef, trig_b, pairs)
-                if ign:
-                    bad = [vrows[i]["__tg_ord"] for i in ign]
-                    keep = vdf.filter(F.col("__tg_ord").isin(bad)).drop("__tg_ord")
-                    new_df = new_df.unionByName(keep).localCheckpoint(eager=True)
-                    n -= len(ign)
-                    pairs = [p for i, p in enumerate(pairs) if i not in ign]
-                    if self._capture_returning:
-                        self._returning_df = vdf.filter(
-                            ~F.col("__tg_ord").isin(bad)
-                        ).drop("__tg_ord")
-        if not settled:
-            new_df = self._check_child_fks(overlay, de.table, new_df, dml="delete")
-            _, hw = self._delete_checks(overlay, st, new_df, new_df)
-        new_st = overlay.catalog.materialize(
-            de.table, TableState(st.tdef, new_df, hw, st.version + 1)
-        )
-        overlay.put(de.table, new_st)
-        if pairs and not after_fired:
-            self._fire_pairs(overlay, st.tdef, trig_b, trig_a, pairs, before_done=before_fired)
-        return self._ok(n)
+        return self._row_change(overlay, st, de.table, marked, trig_b, trig_a)
 
     def _delete_checks(
         self, overlay: Overlay, st: TableState, rows: DataFrame, post: DataFrame, deleted=None
@@ -4348,8 +4171,9 @@ class DustSession:
         against the parent — sqlite3-probed: a default with no matching
         parent row fails the whole statement). A parent UPDATE applies
         the ON UPDATE action to rows whose referenced key actually
-        changed (old→new mapping from ``changes_df``, which carries the
-        pre-image as ``__fkold_<col>`` columns next to the post-image):
+        changed (old→new mapping from ``changes_df``, the changed rows of
+        the statement's marked frame: pre-image ``__old_<col>`` next to
+        the post-image):
         CASCADE rewrites child keys to the new values, SET NULL /
         SET DEFAULT as above. NO ACTION / RESTRICT are not checked here:
         the statement's `_check_constraints` pass does that (its
@@ -4397,7 +4221,7 @@ class DustSession:
                 # old key maps to at most one new key
                 mp = changes_df.select(
                     *[
-                        F.col(f"__fkold_{rc}").alias(f"__oldr{j}")
+                        F.col(f"__old_{rc}").alias(f"__oldr{j}")
                         for j, rc in enumerate(rcs)
                     ],
                     *[F.col(rc).alias(f"__newr{j}") for j, rc in enumerate(rcs)],
@@ -4458,22 +4282,17 @@ class DustSession:
                     else:
                         raise DustError("foreign key cascade depth exceeded")
                     if del_b or del_a:
-                        cascaded = self._scan_order(cst.tdef, [
-                            (r.asDict(), None)
-                            for r in initial.exceptAll(parent_new_df).collect()
-                        ])
-                        self._fire_pairs(
-                            overlay, cst.tdef, del_b, del_a, cascaded
+                        cascaded, _ = self._row_pairs(
+                            cst.tdef, initial.exceptAll(parent_new_df), False
                         )
+                        self._fire_pairs(overlay, cst.tdef, del_b, del_a, cascaded)
                     continue
                 pairs = []
                 if del_b or del_a:
                     victims = child_df.filter(nn).join(
                         refsel(parent_new_df), on, "left_anti"
                     )
-                    pairs = self._scan_order(
-                        cst.tdef, [(r.asDict(), None) for r in victims.collect()]
-                    )
+                    pairs, _ = self._row_pairs(cst.tdef, victims, False)
                 keep = child_df.filter(~nn).unionByName(
                     child_df.filter(nn).join(refsel(parent_new_df), on, "left_semi")
                 ).localCheckpoint(eager=True)
@@ -4509,15 +4328,6 @@ class DustSession:
                 upd_a = self._table_triggers(
                     child, "UPDATE", "AFTER", assigned=list(fk.columns)
                 )
-                pairs = []
-                if upd_b or upd_a:
-                    fields = [f_.name for f_ in cst.tdef.schema.fields]
-                    for r in marked.filter(orphan).collect():
-                        d = r.asDict()
-                        old = {c: d[c] for c in fields}
-                        new = dict(old, **{c: None for c in fk.columns})
-                        pairs.append((old, new))
-                    pairs = self._scan_order(cst.tdef, pairs)
                 cols = []
                 for f_ in cst.tdef.schema.fields:
                     if f_.name in fk.columns:
@@ -4528,6 +4338,10 @@ class DustSession:
                         )
                     else:
                         cols.append(F.col(f_.name))
+                pairs = []
+                if upd_b or upd_a:
+                    olds = [F.col(f_.name).alias(f"__old_{f_.name}") for f_ in cst.tdef.schema.fields]
+                    pairs, _ = self._row_pairs(cst.tdef, marked.filter(orphan).select(*cols, *olds), True)
                 nulled = marked.select(*cols).localCheckpoint(eager=True)
                 if child == parent:
                     parent_new_df = nulled
@@ -4616,8 +4430,8 @@ class DustSession:
                 )
             else:
                 sel.append(F.col(f_.name))
-        prevs = [F.col(c).alias(f"__prev{j}") for j, c in enumerate(fk.columns)]
-        upd = marked2.select(*sel, *prevs, F.col("__fkhit")).localCheckpoint(eager=True)
+        olds = [F.col(c).alias(f"__old_{c}") for c in fields]
+        upd = marked2.select(*sel, *olds, F.col("__fkhit")).localCheckpoint(eager=True)
         for c in fk.columns:
             if c in tdef.not_null and upd.filter(hit & F.col(c).isNull()).limit(1).count() > 0:
                 raise DustError(f"NOT NULL constraint failed: {tdef.name}.{c}")
@@ -4635,28 +4449,11 @@ class DustSession:
         upd_a = self._table_triggers(child, "UPDATE", "AFTER", assigned=list(fk.columns))
         pairs = []
         if upd_b or upd_a:
-            for r in upd.filter(hit).collect():
-                d = r.asDict()
-                new = {c: d[c] for c in fields}
-                old = dict(new)
-                for j, c in enumerate(fk.columns):
-                    old[c] = d[f"__prev{j}"]
-                pairs.append((old, new))
-            pairs = self._scan_order(tdef, pairs)
-        new_child = upd.drop("__fkhit", *[f"__prev{j}" for j in range(len(fk.columns))])
+            pairs, _ = self._row_pairs(tdef, upd.filter(hit), True)
+        new_child = upd.select(*fields)
         if depth < 32 and child != parent and self._fk_action_children(overlay, child):
-            fkcols = list(fk.columns)
-            changes = upd.filter(hit).select(
-                *[F.col(f_) for f_ in fields],
-                *[
-                    (
-                        F.col(f"__prev{fkcols.index(f_)}") if f_ in fkcols else F.col(f_)
-                    ).alias(f"__fkold_{f_}")
-                    for f_ in fields
-                ],
-            )
             new_child = self._check_child_fks(
-                overlay, child, new_child, dml="update", changes_df=changes, depth=depth + 1
+                overlay, child, new_child, dml="update", changes_df=upd.filter(hit), depth=depth + 1
             )
             self._check_constraints(
                 overlay, tdef, new_child, restrict=(cst.df, new_child, "update")

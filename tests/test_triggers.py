@@ -1095,6 +1095,43 @@ def test_recursion_past_old_cap_completes(pair):
     q_both(db, ref, "SELECT count(*), min(a), max(a) FROM x")
 
 
+@pytest.mark.parametrize(
+    "stmts",
+    [
+        [
+            "CREATE TABLE t (id INTEGER PRIMARY KEY, v INT, n INT DEFAULT 0)",
+            "CREATE TRIGGER au AFTER UPDATE OF v ON t BEGIN "
+            "UPDATE t SET n = n + 1 WHERE id = NEW.id; END",
+            "INSERT INTO t(id, v) VALUES (1, 1)",
+            "UPDATE OR IGNORE t SET v = 2 WHERE id = 1",
+        ],
+        # the shift is blocked for row 1 (row 2 still holds id 2): its
+        # BEFORE trigger fires, its AFTER trigger does not
+        [
+            "CREATE TABLE t (id INTEGER PRIMARY KEY, v INT, n INT DEFAULT 0)",
+            "CREATE TRIGGER bu BEFORE UPDATE ON t BEGIN "
+            "INSERT INTO log VALUES ('bu-'||OLD.id); END",
+            "CREATE TRIGGER au AFTER UPDATE OF id ON t BEGIN "
+            "UPDATE t SET n = n + 1 WHERE id = NEW.id; "
+            "INSERT INTO log VALUES ('au-'||NEW.id); END",
+            "INSERT INTO t(id, v) VALUES (1, 1), (2, 2), (4, 4)",
+            "UPDATE OR IGNORE t SET id = id + 1",
+        ],
+    ],
+    ids=["after-update-of-v", "after-update-of-id-shift"],
+)
+def test_or_ignore_after_trigger_writes_own_table_differential(pair, stmts):
+    """UPDATE OR IGNORE fires its AFTER triggers after the write, so an
+    AFTER body's update of its own table lands like in sqlite3."""
+    db, ref = pair
+    run_both(db, ref, "CREATE TABLE log (m TEXT)", *stmts[:-1])
+    ref.execute(stmts[-1])
+    assert db.execute_string_stmt(stmts[-1])[0].error == ""
+    q_both(db, ref, "SELECT changes()")
+    q_both(db, ref, "SELECT * FROM t ORDER BY id")
+    q_both(db, ref, "SELECT m FROM log ORDER BY rowid")
+
+
 # ---------------------------------------------------------------------------
 # r7 fourth wave: hypothesis trigger machines — random trigger zoos x
 # random DML sequences, every step differential against sqlite3
@@ -1117,6 +1154,11 @@ _ZOO = [
     "INSERT INTO log VALUES ('bd-'||OLD.id); END",
     "CREATE TRIGGER tg_ab AFTER INSERT ON t WHEN NEW.v = 7 BEGIN "
     "SELECT RAISE(ABORT, 'no sevens'); END",
+    "CREATE TRIGGER tg_ad AFTER DELETE ON t BEGIN "
+    "INSERT INTO log VALUES ('ad-'||OLD.id||'-'||OLD.v); END",
+    # writes its own table: fires on the OR IGNORE id shift
+    "CREATE TRIGGER tg_aw AFTER UPDATE OF id ON t BEGIN "
+    "UPDATE t SET v = v + 1 WHERE id = NEW.id; END",
 ]
 
 _IGN_ZOO = [
@@ -1130,10 +1172,24 @@ _IGN_ZOO = [
     "SELECT RAISE(IGNORE) WHERE OLD.id = 2; END",
     "CREATE TRIGGER tg_au2 AFTER UPDATE ON t BEGIN "
     "INSERT INTO log VALUES ('au-'||OLD.id); END",
+    "CREATE TRIGGER tg_ad2 AFTER DELETE ON t BEGIN "
+    "INSERT INTO log VALUES ('ad-'||OLD.id); END",
 ]
 
 _V = st.integers(0, 9)
 _ID = st.integers(1, 6)
+_N = st.integers(1, 3)
+
+# the UPDATE and DELETE shapes that share one row-change path: LIMIT-ed,
+# FROM a seeded source table (see _drive), and OR IGNORE moving keys
+_ROW_CHANGE_OPS = [
+    st.tuples(_V, _N).map(lambda x: f"DELETE FROM t WHERE v > {x[0]} ORDER BY id LIMIT {x[1]}"),
+    st.tuples(_V, _N).map(
+        lambda x: f"UPDATE t SET v = v + 1 WHERE v < {x[0]} ORDER BY id LIMIT {x[1]}"
+    ),
+    st.just("UPDATE t SET v = s.nv FROM s WHERE t.id = s.id"),
+    _V.map(lambda v: f"UPDATE OR IGNORE t SET id = id + 1 WHERE v < {v}"),
+]
 
 _FULL_OPS = st.one_of(
     _V.map(lambda v: f"INSERT INTO t(v) VALUES ({v})"),
@@ -1152,6 +1208,7 @@ _FULL_OPS = st.one_of(
     ),
     _V.map(lambda v: f"UPDATE t SET v = v + 1 WHERE v < {v}"),
     _ID.map(lambda i: f"DELETE FROM t WHERE id = {i}"),
+    *_ROW_CHANGE_OPS,
 )
 
 # r8: RAISE(IGNORE) row-skip is wired through upserts and REPLACE too
@@ -1179,6 +1236,7 @@ _PLAIN_OPS = st.one_of(
     _ID.map(lambda i: f"UPDATE t SET v = v + 1 WHERE id = {i}"),
     _ID.map(lambda i: f"DELETE FROM t WHERE id = {i}"),
     _V.map(lambda v: f"DELETE FROM t WHERE v = {v}"),
+    *_ROW_CHANGE_OPS,
 )
 
 
@@ -1213,6 +1271,8 @@ def _drive(spark, trig_sqls, ops, log_order):
         for s in (
             "CREATE TABLE t (id INTEGER PRIMARY KEY, v INT)",
             "CREATE TABLE log (m TEXT)",
+            "CREATE TABLE s (id INTEGER PRIMARY KEY, nv INT)",
+            "INSERT INTO s VALUES (1, 5), (3, 9), (4, 0)",
             *trig_sqls,
         ):
             ref.execute(s)
