@@ -10,11 +10,227 @@ evaluation stays inside Catalyst (SURVEY.md §4.2 "custom needed" rows).
 
 from __future__ import annotations
 
+import bisect
+import functools
 import math
 import re
+import threading
 from dataclasses import dataclass, field
 
 from pyspark.sql import types as T
+
+# --------------------------------------------------------------------------
+# the lexer: SQLite's lexical rules (tokenize.c) in one place. Every
+# scanner in this module asks it what is a string literal, a quoted
+# identifier ("x", `x`, [x]), a comment (-- to end of line, /* to */ or
+# end of text) and where a paren group ends. Unterminated literals,
+# identifiers and comments run to the end of the text, as in SQLite; a
+# character no rule covers is a one-character ``other`` token, so lexing
+# never fails.
+# --------------------------------------------------------------------------
+
+_TOKEN_RE = re.compile(
+    r"""(?P<ws>\s+)
+      | (?P<comment>--[^\n]*|/\*(?:.*?\*/|.*))
+      | (?P<blob>[xX]'[0-9A-Fa-f]*')
+      | (?P<str>'(?:[^']|'')*'?)
+      | (?P<qid>"(?:[^"]|"")*"?|`(?:[^`]|``)*`?|\[[^\]]*\]?)
+      | (?P<num>0[xX][0-9A-Fa-f]+|(?:\d+\.\d*|\.\d+|\d+)(?:[eE][+-]?\d+)?[dD]?)
+      | (?P<word>[A-Za-z_]\w*)
+      | (?P<op><=|>=|<>|!=|==|\|\||<<|>>|[=<>/*%+\-.,();&|~?:@])
+      | (?P<other>.)
+    """,
+    re.X | re.S,
+)
+
+#: a table / column / constraint name in the statement-shape regexes
+_IDENT = r"(?:\"[^\"]+\"|`[^`]+`|\[[^\]]+\]|\w+)"
+
+#: token kinds whose text is opaque to every rewrite
+_OPAQUE = frozenset(("str", "blob", "qid", "comment"))
+
+
+#: the total length of the texts whose tokens each memo below keeps: the
+#: tokens of ``_lex`` and ``tokens`` together take ~200 bytes per
+#: character of text, so both memos hold at most ~13 MB; a longer text
+#: is lexed per call and kept nowhere
+_CACHE_CHARS = 1 << 16
+
+
+def _text_memo(fn):
+    """``fn`` of one text, memoised least-recently-used first out within
+    a budget of ``_CACHE_CHARS`` characters of text."""
+    memo: dict[str, tuple] = {}
+    held = 0
+    lock = threading.Lock()
+
+    @functools.wraps(fn)
+    def lookup(sql: str):
+        nonlocal held
+        with lock:
+            got = memo.pop(sql, None)
+            if got is not None:
+                memo[sql] = got  # now the most recent
+                return got
+        got = fn(sql)
+        if len(sql) <= _CACHE_CHARS:
+            with lock:
+                if sql not in memo:
+                    held += len(sql)
+                memo[sql] = got
+                while held > _CACHE_CHARS:
+                    old = next(iter(memo))
+                    held -= len(old)
+                    del memo[old]
+        return got
+
+    return lookup
+
+
+@_text_memo
+def _lex(sql: str) -> tuple:
+    """All non-whitespace tokens of ``sql``, comments included, as
+    (kind, text, start, end)."""
+    return tuple(
+        (m.lastgroup, m.group(), m.start(), m.end())
+        for m in _TOKEN_RE.finditer(sql)
+        if m.lastgroup != "ws"
+    )
+
+
+@_text_memo
+def tokens(sql: str) -> tuple:
+    """The code tokens of ``sql`` — comments are whitespace — as
+    (kind, text, start, end, depth, mate): ``depth`` counts the paren
+    groups enclosing the token (a paren counts as outside its own
+    group) and ``mate`` is the index of a paren's partner (-1 for an
+    unmatched paren and for every other token)."""
+    out, stack = [], []
+    for kind, text, s, e in _lex(sql):
+        if kind == "comment":
+            continue
+        if text == "(" and kind == "op":
+            stack.append(len(out))
+            out.append([kind, text, s, e, len(stack) - 1, -1])
+        elif text == ")" and kind == "op" and stack:
+            o = stack.pop()
+            out[o][5] = len(out)
+            out.append([kind, text, s, e, len(stack), o])
+        else:
+            out.append([kind, text, s, e, len(stack), -1])
+    return tuple(map(tuple, out))
+
+
+def _tok_at(toks, i: int) -> int:
+    """Index of the token starting at offset ``i`` (-1: none does)."""
+    k = bisect.bisect_left(toks, i, key=lambda t: t[2])
+    return k if k < len(toks) and toks[k][2] == i else -1
+
+
+def blank_comments(sql: str) -> str:
+    """``sql`` with every comment replaced by spaces of the same length,
+    so the statement-shape regexes read comments as whitespace and
+    their match offsets still index the original text. The session
+    blanks a statement once, where it dispatches it, and every
+    statement parser reads that text; only the consumers that keep
+    comments (CREATE TABLE / TRIGGER source text and CHECK labels, the
+    RETURNING split, whose core is journaled, and SQLite's expression
+    column names) blank their own copy."""
+    if "--" not in sql and "/*" not in sql:
+        return sql
+    out, last = [], 0
+    for kind, _, s, e in _lex(sql):
+        if kind == "comment":
+            out.append(sql[last:s])
+            out.append(" " * (e - s))
+            last = e
+    out.append(sql[last:])
+    return "".join(out)
+
+
+def _span(sql: str, toks) -> str:
+    """The text from the first to the last of ``toks`` (interior
+    comments kept, leading and trailing ones dropped)."""
+    return sql[toks[0][2] : toks[-1][3]] if toks else ""
+
+
+def split_top_level(s: str, sep: str = ",") -> list[str]:
+    """Split on ``sep`` outside parens, literals, identifiers and
+    comments; each part is the text of its own tokens, so a part never
+    starts or ends inside a comment."""
+    parts, cur = [], []
+    for t in tokens(s):
+        if t[4] == 0 and t[1] == sep and t[0] == "op":
+            parts.append(_span(s, cur))
+            cur = []
+        else:
+            cur.append(t)
+    parts.append(_span(s, cur))
+    return [p for p in parts if p]
+
+
+def find_top_level(s: str, pat, start: int = 0) -> int:
+    """Offset of the first code token at or after ``start``, outside
+    any paren group that opens after ``start``, where ``pat`` matches;
+    -1 when there is none. ``pat`` is a compiled regex or a keyword
+    (case-insensitive; a multi-word keyword such as "ON CONFLICT"
+    tolerates any whitespace between its words). A keyword matches
+    only at a word token, never as the prefix of a longer word."""
+    if isinstance(pat, str):
+        pat = _keyword_re(pat)
+    toks = tokens(s)
+    k = bisect.bisect_left(toks, start, key=lambda t: t[2])
+    if k == len(toks):
+        return -1
+    base = toks[k][4]
+    for t in toks[k:]:
+        if t[4] < base:
+            return -1  # the group holding ``start`` closed
+        if t[4] == base and pat.match(s, t[2]):
+            return t[2]
+    return -1
+
+
+@functools.lru_cache(maxsize=64)
+def _keyword_re(keyword: str):
+    return re.compile(
+        r"\s+".join(re.escape(w) for w in keyword.split()) + r"(?![\w$])", re.I
+    )
+
+
+def paren_end(s: str, i: int) -> int:
+    """``i`` at '(' → offset one past its matching ')'."""
+    toks = tokens(s)
+    k = _tok_at(toks, i)
+    if k < 0 or toks[k][5] < 0 or toks[k][1] != "(":
+        raise ValueError("unbalanced parentheses")
+    return toks[toks[k][5]][3]
+
+
+def _map_outside_strings(sql: str, fn) -> str:
+    """Apply ``fn`` to the code between literals, quoted identifiers and
+    comments (which pass through untouched)."""
+    out, last = [], 0
+    for kind, _, s, e in _lex(sql):
+        if kind in _OPAQUE:
+            out.append(fn(sql[last:s]))
+            out.append(sql[s:e])
+            last = e
+    out.append(fn(sql[last:]))
+    return "".join(out)
+
+
+def _map_tokens(sql: str, kinds, fn) -> str:
+    """Replace each token whose kind is in ``kinds`` by ``fn(text)``."""
+    out, last = [], 0
+    for kind, text, s, e in _lex(sql):
+        if kind in kinds:
+            out.append(sql[last:s])
+            out.append(fn(text))
+            last = e
+    out.append(sql[last:])
+    return "".join(out)
+
 
 # --------------------------------------------------------------------------
 # statement classification
@@ -38,7 +254,7 @@ WRITE_KINDS = {
 
 
 _WITH_HEAD_RE = re.compile(r"^\s*WITH\s+(?:RECURSIVE\s+)?", re.I)
-_CTE_DEF_RE = re.compile(r'\s*("[^"]+"|`[^`]+`|\[[^\]]+\]|\w+)\s*(\([^)]*\))?\s+AS\s*\(', re.I)
+_CTE_DEF_RE = re.compile(rf"\s*{_IDENT}\s*(\([^)]*\))?\s+AS\s*\(", re.I)
 
 
 _SP_NAME = r"(?:\"(?P<dq>[^\"]+)\"|'(?P<sq>[^']+)'|`(?P<bq>[^`]+)`|\[(?P<br>[^\]]+)\]|(?P<id>[A-Za-z_][\w$]*))"
@@ -59,7 +275,7 @@ def parse_savepoint_stmt(sql: str):
         ("RELEASE", _RELEASE_RE),
         ("ROLLBACK_TO", _ROLLBACK_TO_RE),
     ):
-        m = rx.match(sql or "")
+        m = rx.match(sql)
         if m:
             name = next(g for g in (m.group("dq"), m.group("sq"), m.group("bq"), m.group("br"), m.group("id")) if g is not None)
             return op, name
@@ -78,7 +294,7 @@ def split_with_prefix(sql: str):
         if not mm:
             return None
         try:
-            i = _balanced_end(sql, mm.end() - 1)
+            i = paren_end(sql, mm.end() - 1)
         except ValueError:
             return None
         mc = re.match(r"\s*,", sql[i:])
@@ -94,7 +310,8 @@ def statement_kind(sql: str) -> str:
     """First keyword, uppercased: SELECT / INSERT / CREATE / ... ;
     'EMPTY' for blank statements. ``WITH ctes INSERT/UPDATE/DELETE``
     classifies as the DML statement it wraps (SQLite allows CTEs on
-    DML), plain ``WITH ... SELECT`` stays a read."""
+    DML), plain ``WITH ... SELECT`` stays a read. ``sql`` is code text
+    (:func:`blank_comments`)."""
     m = _FIRST_WORD.match(sql or "")
     if not m:
         return "EMPTY"
@@ -142,12 +359,13 @@ _NONDET = re.compile(
 
 
 def nondeterministic_reason(sql: str) -> str | None:
-    m = _NONDET.search(sql)
-    if m:
-        return (
-            f"non-deterministic function '{m.group(1)}' rejected: statement-based "
-            "replication requires deterministic SQL"
-        )
+    for t in tokens(sql):
+        m = _NONDET.match(sql, t[2]) if t[0] == "word" else None
+        if m:
+            return (
+                f"non-deterministic function '{m.group(1)}' rejected: statement-based "
+                "replication requires deterministic SQL"
+            )
     return None
 
 
@@ -156,47 +374,27 @@ def nondeterministic_reason(sql: str) -> str | None:
 # --------------------------------------------------------------------------
 
 
+def _closed(text: str) -> bool:
+    """A literal or quoted-identifier token has its closing quote."""
+    q = text[0]
+    if q == "[":
+        return text.endswith("]")
+    return len(text) > 1 and text.count(q) % 2 == 0
+
+
+def _dequote(q: str) -> str:
+    """The content of a literal or quoted-identifier token, read the way
+    sqlite3Dequote reads it: doubled quotes are one, and an unterminated
+    token runs to the end of the text."""
+    body = q[1:-1] if _closed(q) else q[1:]
+    return body if q[0] == "[" else body.replace(q[0] * 2, q[0])
+
+
 def unquote_ident(name: str) -> str:
     name = name.strip()
-    if len(name) >= 2 and name[0] == name[-1] and name[0] in ('"', "`", "[", "'"):
-        return name[1:-1]
-    if name.startswith("[") and name.endswith("]"):
-        return name[1:-1]
+    if name[:1] in ('"', "`", "[", "'") and _closed(name):
+        return _dequote(name)
     return name
-
-
-def split_top_level(s: str, sep: str = ",") -> list[str]:
-    """Split on ``sep`` outside parens/quotes."""
-    parts, depth, cur, i = [], 0, [], 0
-    in_str: str | None = None
-    while i < len(s):
-        ch = s[i]
-        if in_str:
-            cur.append(ch)
-            if ch == in_str:
-                if i + 1 < len(s) and s[i + 1] == in_str:  # doubled quote escape
-                    cur.append(s[i + 1])
-                    i += 1
-                else:
-                    in_str = None
-        elif ch in ("'", '"', "`"):
-            in_str = ch
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == sep and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    if cur:
-        parts.append("".join(cur))
-    return [p.strip() for p in parts if p.strip()]
 
 
 # --------------------------------------------------------------------------
@@ -348,7 +546,7 @@ class TableDef:
 
 _CTAS_RE = re.compile(
     r"^\s*CREATE\s+(?:TEMP(?:ORARY)?\s+)?TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
-    r"(?P<name>\"[^\"]+\"|`[^`]+`|\[[^\]]+\]|\w+)\s+AS\s+(?P<sel>SELECT\s+.*|WITH\s+.*)$",
+    rf"(?P<name>{_IDENT})\s+AS\s+(?P<sel>SELECT\s+.*|WITH\s+.*)$",
     re.S | re.I,
 )
 
@@ -362,13 +560,13 @@ def parse_ctas(sql: str):
     return (
         unquote_ident(m.group("name")).lower(),
         bool(m.group("ine")),
-        m.group("sel").strip().rstrip(";"),
+        sql[m.start("sel") :].strip().rstrip(";"),
     )
 
 
 _CREATE_RE = re.compile(
     r"^\s*CREATE\s+(?:TEMP(?:ORARY)?\s+)?TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
-    r"(?P<name>\"[^\"]+\"|`[^`]+`|\[[^\]]+\]|\w+)\s*\((?P<body>.*)\)\s*;?\s*$",
+    rf"(?P<name>{_IDENT})\s*\((?P<body>.*)\)\s*;?\s*$",
     re.S | re.I,
 )
 
@@ -380,62 +578,55 @@ _COL_CONSTRAINT_WORDS = (
 _GENERATED_RE = re.compile(r"(?:GENERATED\s+ALWAYS\s+)?AS\s*\(", re.I)
 
 
+def _group_body(s: str, i: int) -> tuple[str, int]:
+    """(inner text, end offset) of the paren group opening at ``i``; an
+    unclosed group runs to the end of ``s``."""
+    try:
+        e = paren_end(s, i)
+    except ValueError:
+        return s[i + 1 :], len(s)
+    return s[i + 1 : e - 1], e
+
+
 def _extract_generated(text: str) -> str | None:
     """The GENERATED ALWAYS AS (expr) / AS (expr) expression of a column
-    def, balanced-paren extracted, or None."""
+    def, or None."""
     m = _GENERATED_RE.search(text)
-    if not m:
-        return None
-    i, depth, in_str = m.end(), 1, None
-    while i < len(text) and depth:
-        ch = text[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        i += 1
-    return text[m.end() : i - 1].strip()
+    return _group_body(text, m.end() - 1)[0].strip() if m else None
+
 
 _CHECK_HEAD_RE = re.compile(
-    r"(?:CONSTRAINT\s+(\"[^\"]+\"|`[^`]+`|\[[^\]]+\]|\w+)\s+)?CHECK\s*\(", re.I
+    rf"(?:CONSTRAINT\s+({_IDENT})\s+)?CHECK\s*\(", re.I
 )
 
 
 def extract_checks(text: str) -> list[tuple[str, str]]:
     """All (label, expr) CHECK constraints in a CREATE TABLE item, in
-    declaration order, with balanced-paren expression extraction.
-    Label = constraint name when given, else the expression text."""
+    declaration order. Label = constraint name when given, else the
+    expression text as SQLite reports it (comments included); the
+    expression is the text of its own tokens, so it embeds safely."""
     out: list[tuple[str, str]] = []
-    pos = 0
-    while True:
-        m = _CHECK_HEAD_RE.search(text, pos)
-        if not m:
-            return out
-        i, depth, in_str = m.end(), 1, None
-        n = len(text)
-        while i < n and depth:
-            ch = text[i]
-            if in_str:
-                if ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            i += 1
-        expr = text[m.end() : i - 1].strip()
+    shape, pos = blank_comments(text), 0
+    while m := _CHECK_HEAD_RE.search(shape, pos):
+        body, pos = _group_body(text, m.end() - 1)
+        expr = _span(body, tokens(body))
         name = m.group(1)
-        out.append((unquote_ident(name) if name else expr, expr))
-        pos = i
+        out.append((unquote_ident(name) if name else _check_label(body), expr))
+    return out
 
-_REF_RE = re.compile(r"REFERENCES\s+(\"[^\"]+\"|`[^`]+`|\w+)\s*(?:\((\s*[^)]+\s*)\))?", re.I)
+
+def _check_label(text: str) -> str:
+    """SQLite's label for an unnamed CHECK: its text, dequoted the way
+    sqlite3Dequote does it — text that opens with a quote becomes that
+    one quoted token's content (sqlite3-probed: ``CHECK ("b" > 0)``
+    fails as "CHECK constraint failed: b")."""
+    text = text.strip()
+    if text[:1] not in ("'", '"', "`", "["):
+        return text
+    return _dequote(_lex(text)[0][1])
+
+
+_REF_RE = re.compile(rf"REFERENCES\s+({_IDENT})\s*(?:\((\s*[^)]+\s*)\))?", re.I)
 
 
 _TABLE_OPTS_RE = re.compile(
@@ -449,6 +640,9 @@ STRICT_TYPES = {"INT", "INTEGER", "REAL", "TEXT", "BLOB", "ANY"}
 
 def parse_create_table(sql: str) -> TableDef:
     source_sql = sql.strip().rstrip(";")
+    # the shape regexes read a comment-blanked copy; CHECK labels come
+    # from the original text, where SQLite's messages keep comments
+    raw, sql = sql, blank_comments(sql)
     # table options after the column list, comma-separable in any order
     # like SQLite: WITHOUT ROWID (tables store by PK directly in SQLite;
     # here every table is PK-organized anyway — accept the clause and
@@ -466,7 +660,7 @@ def parse_create_table(sql: str) -> TableDef:
     if not m:
         raise ValueError(f'near "{sql.strip()[:40]}": syntax error')
     name = unquote_ident(m.group("name")).lower()
-    body = m.group("body")
+    raw_body = raw[m.start("body") : m.end("body")]
     fields: list[T.StructField] = []
     td = TableDef(
         name=name,
@@ -476,7 +670,8 @@ def parse_create_table(sql: str) -> TableDef:
     )
 
     col_pk_desc = False  # column-level INTEGER PRIMARY KEY DESC seen
-    for item in split_top_level(body):
+    for raw_item in split_top_level(raw_body):
+        item = blank_comments(raw_item)
         up = item.upper()
         if up.startswith("PRIMARY KEY"):
             # per-column ASC/DESC sort orders are legal here and do NOT
@@ -519,14 +714,15 @@ def parse_create_table(sql: str) -> TableDef:
             # table-level CHECK (possibly named) is enforced on write;
             # other named table constraints (CONSTRAINT x UNIQUE/PK/FK)
             # keep the pre-existing accept-and-skip posture
-            new_checks = extract_checks(item)
+            new_checks = extract_checks(raw_item)
             td.checks.extend(new_checks)
             td.check_origins.extend([None] * len(new_checks))
             continue
 
         # column definition: name [type tokens...] [constraints...]
-        toks = item.split()
-        col = unquote_ident(toks[0]).lower()
+        head = tokens(item)[0]
+        toks = [head[1], *item[head[3] :].split()]
+        col = unquote_ident(head[1]).lower()
         type_toks: list[str] = []
         i = 1
         while i < len(toks):
@@ -556,9 +752,7 @@ def parse_create_table(sql: str) -> TableDef:
             dtype = T.StringType("UTF8_BINARY_RTRIM")
         # the constraint itself, not text inside a parenthesised body or
         # a string literal: CHECK (a IS NOT NULL) is a CHECK
-        bare = re.sub(r"'(?:[^']|'')*'", "''", rest)
-        while re.search(r"\([^()]*\)", bare):
-            bare = re.sub(r"\([^()]*\)", "", bare)
+        bare = " ".join(t[1] for t in tokens(rest) if t[4] == 0 and t[0] == "word")
         if re.search(r"\bNOT\s+NULL\b", bare):
             td.not_null.add(col)
         if "PRIMARY KEY" in rest:
@@ -613,7 +807,7 @@ def parse_create_table(sql: str) -> TableDef:
                 fm2 = re.match(r"[A-Za-z_]\w*\s*\(", tail)
                 if fm2 or tail.startswith("("):
                     try:
-                        end = _balanced_end(tail, (fm2.end() - 1) if fm2 else 0)
+                        end = paren_end(tail, (fm2.end() - 1) if fm2 else 0)
                         td.defaults[col] = tail[:end]
                     except ValueError:
                         pass
@@ -621,7 +815,7 @@ def parse_create_table(sql: str) -> TableDef:
                     vm = re.match(r"'(?:[^']|'')*'|\S+", tail)
                     if vm:
                         td.defaults[col] = vm.group(0)
-        col_checks = extract_checks(item)
+        col_checks = extract_checks(raw_item)
         td.checks.extend(col_checks)
         td.check_origins.extend([col] * len(col_checks))
 
@@ -670,55 +864,21 @@ def parse_create_table(sql: str) -> TableDef:
 # INSERT / UPDATE / DELETE shape parsers
 # --------------------------------------------------------------------------
 
-def find_top_level_keyword(s: str, keyword: str) -> int:
-    """Index of the first occurrence of ``keyword`` outside parens and
-    quotes, or -1 (word-bounded, case-insensitive; a multi-word keyword
-    like "ON CONFLICT" tolerates any whitespace run between its words).
-    Lets UPDATE/DELETE parsing skip the WHERE of a nested subquery."""
-    pat = re.compile(
-        r"\s+".join(re.escape(w) for w in keyword.upper().split()) + r"(?![\w])",
-        re.I | re.S,
-    )
-    depth, i = 0, 0
-    in_str: str | None = None
-    n = len(s)
-    while i < n:
-        ch = s[i]
-        if in_str:
-            if ch == in_str:
-                if i + 1 < n and s[i + 1] == in_str:
-                    i += 1
-                else:
-                    in_str = None
-        elif ch in ("'", '"', "`"):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and pat.match(s, i):
-            before_ok = i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_")
-            if before_ok:
-                return i
-        i += 1
-    return -1
-
-
 _INSERT_RE = re.compile(
     r"^\s*(?:INSERT|REPLACE)\s+(?:OR\s+\w+\s+)?INTO\s+"
-    r"(?P<name>\"[^\"]+\"|`[^`]+`|\[[^\]]+\]|\w+)\s*"
+    rf"(?P<name>{_IDENT})\s*"
     r"(?:\((?P<cols>[^)]*)\))?\s*(?P<rest>DEFAULT\s+VALUES\s*;?|VALUES\s*.*|SELECT\s+.*|WITH\s+.*)\s*$",
     re.S | re.I,
 )
 
 _UPDATE_HEAD_RE = re.compile(
     r"^\s*UPDATE\s+(?:OR\s+(?P<orconf>IGNORE|REPLACE|ABORT|FAIL|ROLLBACK)\s+)?"
-    r"(?P<name>\"[^\"]+\"|`[^`]+`|\[[^\]]+\]|\w+)\s+SET\s+",
+    rf"(?P<name>{_IDENT})\s+SET\s+",
     re.S | re.I,
 )
 
 _DELETE_RE = re.compile(
-    r"^\s*DELETE\s+FROM\s+(?P<name>\"[^\"]+\"|`[^`]+`|\[[^\]]+\]|\w+)"
+    rf"^\s*DELETE\s+FROM\s+(?P<name>{_IDENT})"
     r"(?:\s+WHERE\s+(?P<where>.*))?\s*;?\s*$",
     re.S | re.I,
 )
@@ -732,7 +892,7 @@ def split_dml_tail(text: str) -> tuple[str, str | None]:
     to Spark verbatim (ORDER BY / LIMIT / OFFSET all native)."""
     cut = len(text)
     for kw in ("ORDER BY", "LIMIT"):
-        i = find_top_level_keyword(text, kw)
+        i = find_top_level(text, kw)
         if 0 <= i < cut:
             cut = i
     if cut == len(text):
@@ -740,7 +900,7 @@ def split_dml_tail(text: str) -> tuple[str, str | None]:
     return text[:cut].rstrip(), text[cut:].strip().rstrip(";") or None
 
 _DROP_RE = re.compile(
-    r"^\s*DROP\s+(?P<kind>TABLE|VIEW|INDEX|TRIGGER)\s+(?P<ie>IF\s+EXISTS\s+)?(?P<name>\"[^\"]+\"|`[^`]+`|\[[^\]]+\]|\w+)\s*;?\s*$",
+    rf"^\s*DROP\s+(?P<kind>TABLE|VIEW|INDEX|TRIGGER)\s+(?P<ie>IF\s+EXISTS\s+)?(?P<name>{_IDENT})\s*;?\s*$",
     re.S | re.I,
 )
 
@@ -781,10 +941,11 @@ def strip_returning(sql: str) -> tuple[str, str | None]:
     """Split a DML statement's top-level RETURNING clause (SQLite
     3.35+): returns (core_sql, projection_sql | None). Scanner-based —
     a RETURNING inside a string literal or subquery is left alone."""
-    i = find_top_level_keyword(sql, "RETURNING")
+    i = find_top_level(sql, "RETURNING")
     if i < 0:
         return sql, None
-    return sql[:i].rstrip(), sql[i + len("RETURNING"):].strip().rstrip(";").strip() or None
+    proj = blank_comments(sql[i + len("RETURNING") :])
+    return sql[:i].rstrip(), proj.strip().rstrip(";").strip() or None
 
 
 _ON_CONFLICT_RE = re.compile(
@@ -845,7 +1006,7 @@ def _parse_insert_body(sql: str) -> InsertStmt:
     on_conflict = None
     # locate the clause with the paren/quote-aware scanner — a bare
     # regex search could match inside a trailing string literal
-    oc_i = find_top_level_keyword(sql, "ON CONFLICT")
+    oc_i = find_top_level(sql, "ON CONFLICT")
     oc = _ON_CONFLICT_RE.match(sql, oc_i) if oc_i > 0 else None
     if oc:
         target = None
@@ -859,7 +1020,7 @@ def _parse_insert_body(sql: str) -> InsertStmt:
             # and gates whether that row is updated at all
             sets_text = oc.group("sets")
             oc_where = None
-            wi = find_top_level_keyword(sets_text, "WHERE")
+            wi = find_top_level(sets_text, "WHERE")
             if wi >= 0:
                 oc_where = sets_text[wi + 5 :].strip()
                 sets_text = sets_text[:wi]
@@ -914,13 +1075,13 @@ def parse_update(sql: str) -> UpdateStmt:
     rest = sql[m.end():].rstrip().rstrip(";")
     rest, tail = split_dml_tail(rest)
     # the WHERE boundary must ignore subquery WHEREs inside SET exprs
-    wi = find_top_level_keyword(rest, "WHERE")
+    wi = find_top_level(rest, "WHERE")
     sets_sql, where = (rest[:wi], rest[wi + 5 :].strip()) if wi >= 0 else (rest, "")
     # UPDATE ... FROM (SQLite >= 3.33 join-update, db/src/db.rs:176
     # pass-through): the FROM clause is everything between SET list and
     # WHERE; it joins against the target with last-match-wins
     from_sql = None
-    fi = find_top_level_keyword(sets_sql, "FROM")
+    fi = find_top_level(sets_sql, "FROM")
     if fi >= 0:
         from_sql = sets_sql[fi + 4 :].strip()
         sets_sql = sets_sql[:fi]
@@ -1018,16 +1179,18 @@ def synth_create_sql(td: TableDef) -> str:
             f"REFERENCES {fk.ref_table}{tgt}{acts}"
         )
     for lbl, expr in td.checks:
-        prefix = f"CONSTRAINT {lbl} " if lbl != expr else ""
+        # an unnamed check's label is its text (_check_label), which may
+        # carry leading or trailing comments its expression drops
+        named = lbl != _check_label(expr) and _span(lbl, tokens(lbl)) != expr
+        prefix = f"CONSTRAINT {lbl} " if named else ""
         parts.append(f"{prefix}CHECK({expr})")
     return f"CREATE TABLE {td.name} ({', '.join(parts)})"
 
 
 _ALTER_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<name>\"[^\"]+\"|`[^`]+`|\[[^\]]+\]|\w+)\s+(?P<rest>.*?)\s*;?\s*$",
+    rf"^\s*ALTER\s+TABLE\s+(?P<name>{_IDENT})\s+(?P<rest>.*?)\s*;?\s*$",
     re.S | re.I,
 )
-_IDENT = r"(\"[^\"]+\"|`[^`]+`|\[[^\]]+\]|\w+)"
 
 
 def parse_alter(sql: str) -> tuple:
@@ -1046,13 +1209,13 @@ def parse_alter(sql: str) -> tuple:
         # DEFAULT, CHECK, UNIQUE/PK for rejection, REFERENCES) through
         # the CREATE TABLE parser on a one-column synthetic table
         return ("add", name, parse_create_table(f"CREATE TABLE __alter__ ({d})"))
-    mm = re.match(r"RENAME\s+TO\s+" + _IDENT + r"$", rest, re.I)
+    mm = re.match(rf"RENAME\s+TO\s+({_IDENT})$", rest, re.I)
     if mm:
         return ("rename_table", name, unquote_ident(mm.group(1)).lower())
-    mm = re.match(r"RENAME\s+(?:COLUMN\s+)?" + _IDENT + r"\s+TO\s+" + _IDENT + r"$", rest, re.I)
+    mm = re.match(rf"RENAME\s+(?:COLUMN\s+)?({_IDENT})\s+TO\s+({_IDENT})$", rest, re.I)
     if mm:
         return ("rename_column", name, unquote_ident(mm.group(1)).lower(), unquote_ident(mm.group(2)).lower())
-    mm = re.match(r"DROP\s+(?:COLUMN\s+)?" + _IDENT + r"$", rest, re.I)
+    mm = re.match(rf"DROP\s+(?:COLUMN\s+)?({_IDENT})$", rest, re.I)
     if mm:
         return ("drop_column", name, unquote_ident(mm.group(1)).lower())
     raise ValueError(f'near "{sql.strip()[:40]}": syntax error')
@@ -1085,9 +1248,8 @@ def parse_detach(sql: str) -> str:
 
 def rewrite_attached_names(sql: str, aliases: dict[str, str]) -> str:
     """Rewrite ``alias.table`` qualified names to the attached catalog's
-    prefixed view names (``{prefix}{table}``). Token-level: skips
-    single-quoted string literals AND double-quoted/backtick identifier
-    segments, so data containing "alias.x" is untouched.
+    prefixed view names (``{prefix}{table}``), outside literals, quoted
+    identifiers and comments, so data containing "alias.x" is untouched.
 
     Known limitation (documented, matches SQLite only approximately): a
     query table alias that shadows an attached database name
@@ -1096,18 +1258,10 @@ def rewrite_attached_names(sql: str, aliases: dict[str, str]) -> str:
     quote it (``"a".col`` is left alone) to disambiguate."""
     if not aliases:
         return sql
-    pat = re.compile(
-        r"('(?:[^']|'')*')|(\"(?:[^\"]|\"\")*\")|(`(?:[^`]|``)*`)"
-        r"|\b(" + "|".join(map(re.escape, aliases)) + r")\.(\w+)",
-        re.I,
+    pat = re.compile(r"\b(" + "|".join(map(re.escape, aliases)) + r")\.(\w+)", re.I)
+    return _map_outside_strings(
+        sql, lambda seg: pat.sub(lambda m: aliases[m.group(1).lower()] + m.group(2), seg)
     )
-
-    def sub(m):
-        if m.group(4) is None:
-            return m.group(0)  # quoted literal/identifier — leave alone
-        return aliases[m.group(4).lower()] + m.group(5)
-
-    return pat.sub(sub, sql)
 
 
 def parse_pragma(sql: str) -> tuple[str, str | None, str | None]:
@@ -1144,8 +1298,6 @@ def parse_pragma(sql: str) -> tuple[str, str | None, str | None]:
 # Anything not expressible here (table refs, expressions, COLLATE,
 # bare aliases) returns None and takes the normal Spark path.
 # --------------------------------------------------------------------------
-
-_COMPOUND_WORD_RE = re.compile(r"[A-Za-z_][A-Za-z_0-9]*|\S", re.S)
 
 
 def _ordinal(n: int) -> str:
@@ -1190,16 +1342,10 @@ _COMPOUND_ALIAS_RE = re.compile(
 )
 
 
-def _parens_balanced(s: str) -> bool:
-    depth = 0
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < 0:
-                return False
-    return depth == 0
+def _is_group(s: str) -> bool:
+    """True when ``s`` is exactly one paren group."""
+    toks = tokens(s)
+    return bool(toks) and toks[0][1] == "(" and toks[0][5] == len(toks) - 1
 
 
 def _parse_compound_item(text: str, _folded: bool = False):
@@ -1221,11 +1367,7 @@ def _parse_compound_item(text: str, _folded: bool = False):
             folded = rewrite_typed_ops("SELECT " + expr)[7:].strip()
         except Exception:
             return None
-        while (
-            folded.startswith("(")
-            and folded.endswith(")")
-            and _parens_balanced(folded[1:-1])
-        ):
+        while _is_group(folded):
             folded = folded[1:-1].strip()
         got = _parse_compound_item(folded, _folded=True)
         if got is None:
@@ -1279,104 +1421,32 @@ def _split_compound(sql: str):
     """Split a statement into ([(op, arm_sql), ...], tail) at top-level
     compound operators; op of the first arm is None. ``tail`` is the
     trailing ORDER BY/LIMIT text (possibly empty). Returns None if the
-    statement has no top-level compound op or contains constructs we
-    don't model (comments, semicolons mid-text)."""
-    if "--" in sql or "/*" in sql:
-        return None
+    statement has no top-level compound op or a semicolon mid-text."""
+    toks = tokens(sql)
     arms: list[tuple[str | None, str]] = []
-    tail = ""
-    depth = 0
-    i, n = 0, len(sql)
-    seg_start, cur_op = 0, None
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            i = j + 1
-            continue
-        if ch == '"' or ch == "`":
-            j = sql.find(ch, i + 1)
-            i = n if j < 0 else j + 1
-            continue
-        if ch == "[":
-            j = sql.find("]", i + 1)
-            i = n if j < 0 else j + 1
-            continue
-        if ch == "(":
-            depth += 1
-            i += 1
-            continue
-        if ch == ")":
-            depth -= 1
-            i += 1
-            continue
-        if depth == 0 and ch.isalpha():
-            m = re.match(r"[A-Za-z_][A-Za-z_0-9]*", sql[i:])
-            w = m.group(0).upper()
-            if w in ("UNION", "INTERSECT", "EXCEPT"):
-                arms.append((cur_op, sql[seg_start:i]))
-                cur_op = w
-                i += len(w)
-                if w == "UNION":
-                    m2 = re.match(r"\s+ALL\b", sql[i:], re.I)
-                    if m2:
-                        cur_op = "UNION ALL"
-                        i += m2.end()
-                seg_start = i
-                continue
-            if w == "ORDER" and re.match(r"ORDER\s+BY\b", sql[i:], re.I):
-                arms.append((cur_op, sql[seg_start:i]))
-                tail = sql[i:]
-                return (arms, tail) if len(arms) >= 2 else None
-            if w == "LIMIT":
-                arms.append((cur_op, sql[seg_start:i]))
-                tail = sql[i:]
-                return (arms, tail) if len(arms) >= 2 else None
-            i += len(m.group(0))
-            continue
-        if ch == ";":
-            if sql[i:].strip() != ";":
+    seg_start, cur_op, end = 0, None, len(sql)
+    k, n = 0, len(toks)
+    while k < n:
+        kind, text, s, _e, depth, _ = toks[k]
+        w = text.upper() if kind == "word" and depth == 0 else ""
+        if w in ("UNION", "INTERSECT", "EXCEPT"):
+            arms.append((cur_op, sql[seg_start:s]))
+            cur_op = w
+            if w == "UNION" and k + 1 < n and toks[k + 1][1].upper() == "ALL":
+                cur_op = "UNION ALL"
+                k += 1
+            seg_start = toks[k][3]
+        elif w == "LIMIT" or (w == "ORDER" and k + 1 < n and toks[k + 1][1].upper() == "BY"):
+            arms.append((cur_op, sql[seg_start:s]))
+            return (arms, sql[s:]) if len(arms) >= 2 else None
+        elif kind == "op" and text == ";" and depth == 0:
+            if k != n - 1:
                 return None
-            n = i
+            end = s
             break
-        i += 1
-    arms.append((cur_op, sql[seg_start:n]))
-    return (arms, tail) if len(arms) >= 2 else None
-
-
-def _split_top_commas(s: str) -> list[str]:
-    out, depth, start = [], 0, 0
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if s[j] == "'":
-                    if j + 1 < n and s[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append(s[start:i])
-            start = i + 1
-        i += 1
-    out.append(s[start:])
-    return out
+        k += 1
+    arms.append((cur_op, sql[seg_start:end]))
+    return (arms, "") if len(arms) >= 2 else None
 
 
 def try_static_compound(sql: str):
@@ -1398,7 +1468,7 @@ def try_static_compound(sql: str):
         if not m:
             return None
         items = []
-        for item in _split_top_commas(m.group(1)):
+        for item in split_top_level(m.group(1)):
             got = _parse_compound_item(item)
             if got is None:
                 return None
@@ -1448,7 +1518,7 @@ def parse_compound_tail(tail: str, names: list[str], ncols: int):
             terms_txt, lim_txt = None, tail
         if terms_txt is not None:
             lname = {nm.lower(): i for i, nm in reversed(list(enumerate(names)))}
-            for ti, term in enumerate(_split_top_commas(terms_txt), start=1):
+            for ti, term in enumerate(split_top_level(terms_txt), start=1):
                 t = term.strip()
                 md = re.match(r"^(.*?)\s+(ASC|DESC)$", t, re.S | re.I)
                 desc = False
@@ -1726,8 +1796,6 @@ _FN_RENAMES = {
     "json_patch": "__json_patch",       # RFC-7386 merge patch (json1.py)
 }
 
-_FN_RENAME_RE = re.compile(r"\b(" + "|".join(_FN_RENAMES) + r")\s*\(", re.I)
-
 
 _DEC_LITERAL_RE = re.compile(r"(?<![\w.$])(\d+\.\d*|\.\d+)(?![\w.])")
 
@@ -1760,73 +1828,48 @@ def _double_literals(seg: str) -> str:
     return _DEC_LITERAL_RE.sub(r"\1D", _EXP_LITERAL_RE.sub(_exp, seg))
 
 
+def _backticked(qid: str) -> str:
+    """A quoted-identifier token ("x", [x] or `x`) in backtick form."""
+    if qid[0] == "`":
+        return qid
+    return "`" + _dequote(qid).replace("`", "``") + "`"
+
+
 def dquote_idents_to_backticks(sql: str) -> str:
-    """SQLite double-quoted tokens are IDENTIFIERS (Spark's parser
-    reads them as string literals) — convert ``"name"`` to
-    ``` `name` ``` outside single-quoted strings, so keyword-named
-    tables/columns ('SELECT "order" FROM "select"') resolve. Doubled
-    ``""`` inside is the escaped quote. SQLite's deprecated
-    string-literal FALLBACK for unresolvable double-quoted tokens is
-    deliberately not reproduced (the documented misfeature)."""
-    if '"' not in sql:
+    """SQLite double-quoted and [bracketed] tokens are IDENTIFIERS
+    (Spark's parser reads "x" as a string literal and has no [x]) —
+    convert them to backticks, so keyword-named tables/columns
+    ('SELECT "order" FROM "select"') resolve. SQLite's deprecated
+    string-literal FALLBACK for unresolvable double-quoted tokens is the
+    caller's retry (the session swaps the one unresolved token)."""
+    if '"' not in sql and "[" not in sql:
         return sql
-    out, i, n = [], 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if ch == '"':
-            j = i + 1
-            name = []
-            while j < n:
-                if sql[j] == '"':
-                    if j + 1 < n and sql[j + 1] == '"':
-                        name.append('"')
-                        j += 2
-                        continue
-                    break
-                name.append(sql[j])
-                j += 1
-            out.append("`" + "".join(name).replace("`", "``") + "`")
-            i = j + 1
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+    return _map_tokens(sql, ("qid",), _backticked)
+
+
+def dquote_to_literal(sql: str, name: str | None) -> str:
+    """``sql`` with every double-quoted token reading ``name`` turned
+    into the string literal 'name': SQLite's fallback for a "x" that
+    names no column in scope. Unchanged when ``name`` is None or no
+    such token exists."""
+    if not name:
+        return sql
+    lit = "'" + name.replace("'", "''") + "'"
+    return _map_tokens(
+        sql, ("qid",), lambda q: lit if q[0] == '"' and _dequote(q) == name else q
+    )
 
 
 def escape_raw_literals(sql: str) -> str:
     """SQLite single-quoted literals are RAW (backslash is an ordinary
     character); Spark's parser treats backslash as an escape. Double
-    every backslash inside single-quoted segments so ``'ab\\%cd'`` and
+    every backslash inside string literals so ``'ab\\%cd'`` and
     ``ESCAPE '\\'`` survive the trip (r6 differential finding). Runs
     FIRST, before any rewrite layer injects Spark-targeted literals
     (whose backslashes must stay single)."""
     if "\\" not in sql:
         return sql
-    out, i, n, in_str = [], 0, len(sql), False
-    while i < n:
-        ch = sql[i]
-        if in_str:
-            out.append("\\\\" if ch == "\\" else ch)
-            if ch == "'":
-                in_str = False
-        else:
-            out.append(ch)
-            if ch == "'":
-                in_str = True
-        i += 1
-    return "".join(out)
+    return _map_tokens(sql, ("str",), lambda t: t.replace("\\", "\\\\"))
 
 
 # --------------------------------------------------------------------------
@@ -1888,7 +1931,6 @@ def _limit_expr_value(text: str):
 
 
 _LIMIT_KW_RE = re.compile(r"\bLIMIT\b", re.I)
-_OFFSET_KW_RE = re.compile(r"^OFFSET\b", re.I)
 
 
 # --------------------------------------------------------------------------
@@ -1984,28 +2026,21 @@ def rewrite_frame_bounds(sql: str) -> str:
             and toks[j + 1][1].lower() == "row"
         ):
             return (j + 1, j, j)  # empty span: nothing to validate
-        depth, k = 0, j
-        while k < n:
+        base = toks[j][4] if j < n else 0
+        for k in range(j, n):
             t = toks[k]
-            v = t[1]
-            if v == "(":
-                depth += 1
-            elif v == ")":
-                if depth == 0:
-                    return None
-                depth -= 1
-            elif depth == 0 and t[0] == "word":
-                w = v.lower()
-                if w in ("preceding", "following"):
-                    return (k, j, k) if k > j else None
-                if w in (
-                    "select", "from", "where", "order", "group", "limit",
-                    "and", "or", "over", "partition", "exclude", "window",
-                ) and not (w == "and" and False):
-                    return None
-            elif depth == 0 and v in (",", ";"):
+            if t[4] < base:
+                return None  # the ')' closing the enclosing group
+            if t[4] > base:
+                continue
+            w = t[1].lower() if t[0] == "word" else ""
+            if w in ("preceding", "following"):
+                return (k, j, k) if k > j else None
+            if w in (
+                "select", "from", "where", "order", "group", "limit",
+                "and", "or", "over", "partition", "exclude", "window",
+            ) or t[1] in (",", ";"):
                 return None
-            k += 1
         return None
 
     edits: list[tuple[int, int, str]] = []
@@ -2063,75 +2098,44 @@ def rewrite_limit_offset(sql: str) -> str:
     must not re-run it, though the output is idempotent anyway)."""
     if not _LIMIT_KW_RE.search(sql):
         return sql
+    toks = tokens(sql)
+    n = len(toks)
 
-    def _expr_end(s: str, j: int, allow_comma: bool):
-        """End of a limit expression starting at j: the first top-level
-        ',' (comma form), 'OFFSET', ';', or a ')' that closes an
-        enclosing scope. Returns (end, stop) with stop in
-        {'comma', 'offset', 'end'}."""
-        depth, in_str, i, n = 0, None, j, len(s)
-        while i < n:
-            ch = s[i]
-            if in_str:
-                if ch == in_str:
-                    if in_str == "'" and i + 1 < n and s[i + 1] == "'":
-                        i += 2
-                        continue
-                    in_str = None
-            elif ch in ("'", '"', "`"):
-                in_str = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    return i, "end"
-                depth -= 1
-            elif depth == 0:
-                if ch == ";":
-                    return i, "end"
-                if ch == "," and allow_comma:
-                    return i, "comma"
-                if ch in "Oo" and not (i > 0 and (s[i - 1].isalnum() or s[i - 1] == "_")):
-                    if _OFFSET_KW_RE.match(s[i : i + 6]) and not (
-                        i + 6 < n and (s[i + 6].isalnum() or s[i + 6] == "_")
-                    ):
-                        return i, "offset"
-            i += 1
-        return n, "end"
+    def _expr(k: int, allow_comma: bool):
+        """(text, end offset, stop token index, stop) of the limit
+        expression starting at token ``k``: it runs to the first ','
+        (comma form), OFFSET or ';' at its own depth, or to a ')' that
+        closes an enclosing group. stop is 'comma', 'offset' or 'end'."""
+        base, j, stop = toks[k - 1][4], k, "end"
+        while j < n:
+            kind, text, _, _, depth, _ = toks[j]
+            if depth < base or (depth == base and kind == "op" and text == ";"):
+                break
+            if depth == base and kind == "op" and text == "," and allow_comma:
+                stop = "comma"
+                break
+            if depth == base and kind == "word" and text.upper() == "OFFSET":
+                stop = "offset"
+                break
+            j += 1
+        if j == k:
+            end = toks[k][2] if k < n else len(sql)
+            return "", end, j, stop
+        return _span(sql, toks[k:j]), toks[j - 1][3], j, stop
 
-    out, pos, n = [], 0, len(sql)
-    while True:
-        m = None
-        # find the next LIMIT keyword outside quoted regions
-        i, in_str = pos, None
-        while i < n:
-            ch = sql[i]
-            if in_str:
-                if ch == in_str:
-                    if in_str == "'" and i + 1 < n and sql[i + 1] == "'":
-                        i += 2
-                        continue
-                    in_str = None
-            elif ch in ("'", '"', "`"):
-                in_str = ch
-            elif ch in "Ll" and not (i > 0 and (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-                if re.match(r"LIMIT\b", sql[i:], re.I):
-                    m = i
-                    break
-            i += 1
-        if m is None:
-            out.append(sql[pos:])
-            return "".join(out)
-        j = m + 5
-        e1_end, stop = _expr_end(sql, j, allow_comma=True)
-        e1 = sql[j:e1_end]
+    out, pos, k = [], 0, 0
+    while k < n:
+        if not (toks[k][0] == "word" and toks[k][1].upper() == "LIMIT"):
+            k += 1
+            continue
+        m = toks[k][2]
+        e1, e1_end, k, stop = _expr(k + 1, allow_comma=True)
         if stop == "comma":
             # MySQL form: LIMIT offset, count — the COUNT is the limit,
             # and a ZERO limit short-circuits before the offset is ever
             # evaluated (probed: LIMIT 'abc', 0 returns [] with no
             # error), so evaluate the count first
-            e2_end, _ = _expr_end(sql, e1_end + 1, allow_comma=False)
-            e2 = sql[e1_end + 1 : e2_end]
+            e2, e2_end, k, _ = _expr(k + 1, allow_comma=False)
             lim_v = _limit_expr_value(e2)
             if lim_v == 0:
                 out.append(sql[pos:m] + "LIMIT 0 ")
@@ -2139,8 +2143,6 @@ def rewrite_limit_offset(sql: str) -> str:
                 continue
             off_v = _limit_expr_value(e1)
             if off_v is None or lim_v is None:
-                out.append(sql[pos:e2_end])
-                pos = e2_end
                 continue
             lim_txt = str(lim_v) if -(2**31) < lim_v <= 2**31 - 1 else "-1"
             off_txt = str(max(0, min(off_v, 2**31 - 1)))
@@ -2151,53 +2153,30 @@ def rewrite_limit_offset(sql: str) -> str:
         if lim_v is not None:
             lim_txt = str(lim_v) if -(2**31) < lim_v <= 2**31 - 1 else "-1"
             out.append(sql[pos:m] + f"LIMIT {lim_txt} ")
-            pos = e1_end
         else:
             out.append(sql[pos:e1_end])
-            pos = e1_end
+        pos = e1_end
         if stop == "offset":
-            j2 = e1_end + 6
-            e2_end, _ = _expr_end(sql, j2, allow_comma=False)
+            e2, e2_end, k, _ = _expr(k + 1, allow_comma=False)
             if lim_v == 0:
                 # LIMIT 0 short-circuits: the offset expression is
                 # never evaluated, so a 'datatype mismatch' there must
                 # NOT surface (probed) — drop the clause entirely
                 pos = e2_end
                 continue
-            off_v = _limit_expr_value(sql[j2:e2_end])
+            off_v = _limit_expr_value(e2)
             if off_v is not None:
                 off_txt = str(max(0, min(off_v, 2**31 - 1)))
-                out.append(f"OFFSET {off_txt} ")
+                out.append(f" OFFSET {off_txt} ")
                 pos = e2_end
+    out.append(sql[pos:])
+    return "".join(out)
 
 
 _AGG_CALL_RE = re.compile(
     r"\b(count|sum|avg|total|group_concat|string_agg|min|max|median)\s*\(", re.I
 )
 _SIMPLE_IDENT_RE = re.compile(r"^[A-Za-z_]\w*(\.[A-Za-z_]\w*)*$")
-
-
-def _scan_top_level(sql: str, start: int, stop_re) -> int:
-    """Index of the first top-level (outside strings/parens) match of
-    ``stop_re`` at or after ``start``; len(sql) if none."""
-    i, n, depth, in_str = start, len(sql), 0, None
-    while i < n:
-        ch = sql[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            m = stop_re.match(sql, i)
-            if m:
-                return i
-        i += 1
-    return n
 
 
 def rewrite_bare_group_columns(sql: str) -> str | None:
@@ -2222,19 +2201,17 @@ def rewrite_bare_group_columns(sql: str) -> str | None:
     if not m:
         return None
     sel_start = m.end()
-    from_re = re.compile(r"FROM\b", re.I)
-    from_idx = _scan_top_level(rest, sel_start, from_re)
-    if from_idx >= len(rest):
+    from_idx = find_top_level(rest, "FROM", sel_start)
+    if from_idx < 0:
         return None
     select_list = rest[sel_start:from_idx]
-    gb_re = re.compile(r"GROUP\s+BY\b", re.I)
-    gb_idx = _scan_top_level(rest, from_idx, gb_re)
-    if gb_idx >= len(rest):
+    gb_idx = find_top_level(rest, "GROUP BY", from_idx)
+    if gb_idx < 0:
         return None
     gb_start = re.compile(r"GROUP\s+BY\s*", re.I).match(rest, gb_idx).end()
     end_re = re.compile(r"(HAVING|ORDER\s+BY|LIMIT|WINDOW|UNION|INTERSECT|EXCEPT)\b", re.I)
-    gb_end = _scan_top_level(rest, gb_start, end_re)
-    group_exprs = [g.strip() for g in split_top_level(rest[gb_start:gb_end]) if g.strip()]
+    gb_end = find_top_level(rest, end_re, gb_start)
+    group_exprs = split_top_level(rest[gb_start : gb_end if gb_end >= 0 else len(rest)])
 
     def norm(x: str) -> str:
         return re.sub(r"\s+", "", x).lower()
@@ -2249,7 +2226,7 @@ def rewrite_bare_group_columns(sql: str) -> str | None:
     for it in items:
         for am in _AGG_CALL_RE.finditer(it):
             try:
-                end = _balanced_end(it, am.end() - 1)
+                end = paren_end(it, am.end() - 1)
             except ValueError:
                 return None
             args = split_top_level(it[am.end() : end - 1])
@@ -2266,7 +2243,7 @@ def rewrite_bare_group_columns(sql: str) -> str | None:
 
     out_items, wrapped_any = [], False
     for pos, it in enumerate(items, start=1):
-        ma = re.match(r"(?i)^(.*?)\s+AS\s+([A-Za-z_]\w*|\"[^\"]+\"|`[^`]+`)\s*$", it, re.S)
+        ma = re.match(rf"(?i)^(.*?)\s+AS\s+({_IDENT})\s*$", it, re.S)
         expr, alias = (ma.group(1).strip(), ma.group(2)) if ma else (it, None)
         if (
             norm(expr) in grouped
@@ -2281,7 +2258,7 @@ def rewrite_bare_group_columns(sql: str) -> str | None:
         name = alias
         if name is None:
             name = expr.split(".")[-1] if _SIMPLE_IDENT_RE.match(expr) else expr
-        name = name.strip('`"')
+        name = unquote_ident(name)
         call = (
             f"{wrapper}({expr})"
             if order_arg is None
@@ -2310,83 +2287,57 @@ def _rewrite_row_values(sql: str) -> str:
     bigint column — r6 differential finding). ``=`` expands to an AND,
     ``<``/``<=`` etc. to the lexicographic ladder; subqueries and
     function calls are left untouched."""
-    i, n = 0, len(sql)
-    out = []
-    in_str = None
-    while i < n:
-        ch = sql[i]
-        if in_str:
-            out.append(ch)
-            if ch == in_str:
-                in_str = None
-            i += 1
+    toks = tokens(sql)
+    out, pos, k = [], 0, 0
+    while k < len(toks):
+        kind, text, i, _, _, mate = toks[k]
+        k += 1
+        # adjacency test on the RAW previous char: `f(` is a call,
+        # `WHERE (` / `AND (` are grouping (keyword + space)
+        if text != "(" or kind != "op" or mate < 0 or (
+            i > 0 and (sql[i - 1].isalnum() or sql[i - 1] == "_")
+        ):
             continue
-        if ch in ("'", '"'):
-            in_str = ch
-            out.append(ch)
-            i += 1
+        e1 = toks[mate][3]
+        mo = _ROW_OP_RE.match(sql, e1)
+        if not mo:
             continue
-        if ch == "(":
-            # adjacency test on the RAW previous char: `f(` is a call,
-            # `WHERE (` / `AND (` are grouping (keyword + space)
-            if i > 0 and (sql[i - 1].isalnum() or sql[i - 1] == "_"):
-                out.append(ch)
-                i += 1
-                continue
-            try:
-                e1 = _balanced_end(sql, i)
-            except ValueError:
-                out.append(ch)
-                i += 1
-                continue
-            left_inner = sql[i + 1 : e1 - 1]
-            mo = _ROW_OP_RE.match(sql, e1)
-            if not mo:
-                out.append("(" + _rewrite_row_values(left_inner) + ")")
-                i = e1
-                continue
-            try:
-                e2 = _balanced_end(sql, mo.end() - 1)
-            except ValueError:
-                out.append("(" + _rewrite_row_values(left_inner) + ")")
-                i = e1
-                continue
-            right_inner = sql[mo.end() : e2 - 1]
-            ls = [x.strip() for x in split_top_level(_rewrite_row_values(left_inner))]
-            rs = [x.strip() for x in split_top_level(_rewrite_row_values(right_inner))]
-            if (
-                len(ls) < 2
-                or len(ls) != len(rs)
-                or re.match(r"(?i)\s*SELECT\b", left_inner)
-                or re.match(r"(?i)\s*SELECT\b", right_inner)
-            ):
-                out.append("(" + _rewrite_row_values(left_inner) + ")")
-                i = e1
-                continue
-            op = mo.group(1)
-            if op == "==":
-                op = "="
-            if op in ("=", "!=", "<>"):
-                eq = " AND ".join(f"({a}) = ({b})" for a, b in zip(ls, rs))
-                expanded = f"({eq})" if op == "=" else f"(NOT ({eq}))"
-            else:
-                strict = op.rstrip("=")
+        try:
+            e2 = paren_end(sql, mo.end() - 1)
+        except ValueError:
+            continue
+        left_inner, right_inner = sql[i + 1 : e1 - 1], sql[mo.end() : e2 - 1]
+        ls = split_top_level(_rewrite_row_values(left_inner))
+        rs = split_top_level(_rewrite_row_values(right_inner))
+        if (
+            len(ls) < 2
+            or len(ls) != len(rs)
+            or re.match(r"(?i)\s*SELECT\b", left_inner)
+            or re.match(r"(?i)\s*SELECT\b", right_inner)
+        ):
+            continue
+        op = mo.group(1)
+        if op == "==":
+            op = "="
+        if op in ("=", "!=", "<>"):
+            eq = " AND ".join(f"({a}) = ({b})" for a, b in zip(ls, rs))
+            expanded = f"({eq})" if op == "=" else f"(NOT ({eq}))"
+        else:
+            strict = op.rstrip("=")
 
-                def ladder(k: int) -> str:
-                    a, b = ls[k], rs[k]
-                    last = k == len(ls) - 1
-                    cmp_op = op if last else strict
-                    head = f"({a}) {cmp_op} ({b})"
-                    if last:
-                        return head
-                    return f"({head} OR (({a}) = ({b}) AND {ladder(k + 1)}))"
+            def ladder(j: int) -> str:
+                a, b = ls[j], rs[j]
+                last = j == len(ls) - 1
+                head = f"({a}) {op if last else strict} ({b})"
+                if last:
+                    return head
+                return f"({head} OR (({a}) = ({b}) AND {ladder(j + 1)}))"
 
-                expanded = f"({ladder(0)})"
-            out.append(expanded)
-            i = e2
-            continue
-        out.append(ch)
-        i += 1
+            expanded = f"({ladder(0)})"
+        out.append(sql[pos:i] + expanded)
+        pos = e2
+        k = _tok_at(toks, e2 - 1) + 1
+    out.append(sql[pos:])
     return "".join(out)
 
 
@@ -2411,6 +2362,21 @@ def _frame_bound_sign(text: str):
         return float("inf")
     n = int(m.group(2) or m.group(3))
     return -n if "PRECEDING" in t else n
+
+
+def _call_before(head: str):
+    """(name, argument text, name offset) of the call ``name(args)``
+    that ``head`` ends with; the name is "" (offset: the paren) for a
+    bare paren group, and None comes back when ``head`` does not end
+    with a group."""
+    toks = tokens(head)
+    if not toks or toks[-1][1] != ")" or toks[-1][5] < 0:
+        return None
+    o = toks[-1][5]
+    args = head[toks[o][3] : toks[-1][2]]
+    if o > 0 and toks[o - 1][0] == "word":
+        return toks[o - 1][1], args, toks[o - 1][2]
+    return "", args, toks[o][2]
 
 
 def rewrite_exclude_frames(sql: str) -> str | None:
@@ -2438,7 +2404,7 @@ def rewrite_exclude_frames(sql: str) -> str | None:
             out.append(sql[i:])
             break
         try:
-            close = _balanced_end(sql, mo.end() - 1)
+            close = paren_end(sql, mo.end() - 1)
         except ValueError:
             return None
         body = sql[mo.end() : close - 1]
@@ -2468,34 +2434,10 @@ def rewrite_exclude_frames(sql: str) -> str | None:
         if lo is None or hi is None or not (lo <= 0 <= hi):
             return None
         # the aggregate call immediately before OVER
-        head = sql[: mo.start()].rstrip()
-        if not head.endswith(")"):
+        call = _call_before(sql[: mo.start()])
+        if call is None:
             return None
-        depth, j, instr = 0, len(head) - 1, None
-        while j >= 0:
-            ch = head[j]
-            if instr:
-                if ch == instr:
-                    instr = None
-            elif ch in ("'", '"'):
-                instr = ch
-            elif ch == ")":
-                depth += 1
-            elif ch == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            j -= 1
-        if j < 0:
-            return None
-        argtext = head[j + 1 : -1].strip()
-        k = j - 1
-        while k >= 0 and head[k].isspace():
-            k -= 1
-        name_end = k
-        while k >= 0 and (head[k].isalnum() or head[k] == "_"):
-            k -= 1
-        fname = head[k + 1 : name_end + 1].lower()
+        fname, argtext, ns = call[0].lower(), call[1].strip(), call[2]
         if re.search(r"\bDISTINCT\b", argtext, re.I):
             return None
         if fname in ("min", "max"):
@@ -2523,7 +2465,7 @@ def rewrite_exclude_frames(sql: str) -> str | None:
                 repl = f"({sides[0]})"
             else:  # frame was just the current row: excluded → NULL
                 repl = f"(CASE WHEN 1 = 0 THEN {fname}({argtext}) OVER ({prefix} {frame}) END)"
-            out.append(sql[i : k + 1] + repl)
+            out.append(sql[i:ns] + repl)
             i = close
             continue
         if fname not in ("sum", "count", "avg", "total"):
@@ -2560,7 +2502,7 @@ def rewrite_exclude_frames(sql: str) -> str | None:
             if x is None:
                 return None
             repl = f"(CAST({sum_excl} AS DOUBLE) / nullif({cnt_excl}, 0))"
-        out.append(sql[i : k + 1] + repl)
+        out.append(sql[i:ns] + repl)
         i = close
     return "".join(out)
 
@@ -2581,7 +2523,7 @@ def strip_noop_excludes(sql: str) -> str:
             out.append(sql[i:])
             break
         try:
-            close = _balanced_end(sql, mo.end() - 1)
+            close = paren_end(sql, mo.end() - 1)
         except ValueError:
             out.append(sql[i:])
             break
@@ -2607,6 +2549,30 @@ def strip_noop_excludes(sql: str) -> str:
         out.append(sql[i : mo.end()] + body + ")")
         i = close
     return "".join(out)
+
+
+_SELECT_HEAD_RE = re.compile(r"(\s*SELECT\s+)(DISTINCT\s+|ALL\s+)?", re.I)
+_FROM_END_RE = re.compile(
+    r"(GROUP\s+BY|HAVING|WINDOW|ORDER\s+BY|LIMIT|UNION|INTERSECT|EXCEPT)\b", re.I
+)
+
+
+def _simple_select(sql: str):
+    """(head match, select list, FROM body, tail) of a single SELECT with
+    no GROUP BY / HAVING / WINDOW clause; None for any other shape."""
+    m = _SELECT_HEAD_RE.match(sql)
+    if not m:
+        return None
+    from_idx = find_top_level(sql, "FROM", m.end())
+    if from_idx < 0:
+        return None
+    end_idx = find_top_level(sql, _FROM_END_RE, from_idx + 4)
+    if end_idx < 0:
+        end_idx = len(sql)
+    tail = sql[end_idx:]
+    if re.match(r"(GROUP|HAVING|WINDOW)\b", tail, re.I):
+        return None
+    return m, sql[m.end() : from_idx], sql[from_idx + 4 : end_idx].strip(), tail
 
 
 def rewrite_exclude_minmax_range(sql: str) -> str | None:
@@ -2635,24 +2601,10 @@ def rewrite_exclude_minmax_range(sql: str) -> str | None:
     excl_re = re.compile(r"\bEXCLUDE\s+(CURRENT\s+ROW|GROUP|TIES)\b", re.I)
     if not excl_re.search(sql) or not re.search(r"\b(min|max)\s*\(", sql, re.I):
         return None
-    m = re.match(r"(\s*SELECT\s+)(DISTINCT\s+|ALL\s+)?", sql, re.I)
-    if not m:
+    got = _simple_select(sql)
+    if got is None:
         return None
-    sel_start = m.end()
-    from_idx = _scan_top_level(sql, sel_start, re.compile(r"FROM\b", re.I))
-    if from_idx >= len(sql):
-        return None
-    select_list = sql[sel_start:from_idx]
-    from_body_start = from_idx + 4
-    end_idx = _scan_top_level(
-        sql,
-        from_body_start,
-        re.compile(r"(GROUP\s+BY|HAVING|WINDOW|ORDER\s+BY|LIMIT|UNION|INTERSECT|EXCEPT)\b", re.I),
-    )
-    tail = sql[end_idx:]
-    if re.match(r"\s*(GROUP|HAVING|WINDOW)\b", tail, re.I):
-        return None
-    from_part = sql[from_body_start:end_idx].strip()
+    m, select_list, from_part, tail = got
     items = split_top_level(select_list)
     if any(it.strip() == "*" or it.strip().endswith(".*") for it in items):
         return None
@@ -2685,40 +2637,15 @@ def rewrite_exclude_minmax_range(sql: str) -> str | None:
                 out.append(text[i:])
                 break
             try:
-                close = _balanced_end(text, mo.end() - 1)
+                close = paren_end(text, mo.end() - 1)
             except ValueError:
                 return None
             body = text[mo.end() : close - 1]
             em = excl_re.search(body)
             fm = re.search(r"\bRANGE\b", body, re.I)
             # aggregate call immediately before OVER
-            head = text[: mo.start()].rstrip()
-            fname, argtext, k = None, None, -1
-            if head.endswith(")"):
-                depth, j, instr = 0, len(head) - 1, None
-                while j >= 0:
-                    ch = head[j]
-                    if instr:
-                        if ch == instr:
-                            instr = None
-                    elif ch in ("'", '"'):
-                        instr = ch
-                    elif ch == ")":
-                        depth += 1
-                    elif ch == "(":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    j -= 1
-                if j >= 0:
-                    argtext = head[j + 1 : -1].strip()
-                    k = j - 1
-                    while k >= 0 and head[k].isspace():
-                        k -= 1
-                    name_end = k
-                    while k >= 0 and (head[k].isalnum() or head[k] == "_"):
-                        k -= 1
-                    fname = head[k + 1 : name_end + 1].lower()
+            call = _call_before(text[: mo.start()])
+            fname, argtext, ns = (call[0].lower(), call[1].strip(), call[2]) if call else (None, None, 0)
             if (
                 not em
                 or not fm
@@ -2816,7 +2743,7 @@ def rewrite_exclude_minmax_range(sql: str) -> str | None:
                     f"OVER ({part_prefix}ORDER BY {dr}) END)"
                 )
             changed = True
-            out.append(text[i : k + 1] + repl)
+            out.append(text[i:ns] + repl)
             i = close
         return "".join(out)
 
@@ -2875,40 +2802,25 @@ def rewrite_groups_frames(sql: str) -> str | None:
 def _rewrite_groups_recurse(sql: str) -> tuple:
     """(text, changed): every parenthesized SELECT/WITH body rewritten
     bottom-up via :func:`_rewrite_groups_stmt`."""
-    out, i, n = [], 0, len(sql)
-    changed, in_str = False, None
-    while i < n:
-        ch = sql[i]
-        if in_str:
-            out.append(ch)
-            if ch == in_str:
-                in_str = None
-            i += 1
+    toks = tokens(sql)
+    out, pos, changed = [], 0, False
+    for kind, text, s, _, depth, mate in toks:
+        if text != "(" or kind != "op" or depth != 0:
             continue
-        if ch in ("'", '"'):
-            in_str = ch
-            out.append(ch)
-            i += 1
-            continue
-        if ch == "(":
-            try:
-                close = _balanced_end(sql, i)
-            except ValueError:
-                out.append(sql[i:])
-                return "".join(out), changed
-            inner, ch2 = _rewrite_groups_recurse(sql[i + 1 : close - 1])
-            if re.match(r"\s*(SELECT|WITH)\b", inner, re.I) and re.search(
-                r"\bGROUPS\b", inner, re.I
-            ):
-                sub = _rewrite_groups_stmt(inner)
-                if sub is not None:
-                    inner, ch2 = sub, True
-            changed = changed or ch2
-            out.append("(" + inner + ")")
-            i = close
-            continue
-        out.append(ch)
-        i += 1
+        if mate < 0:
+            break
+        close = toks[mate][3]
+        inner, ch2 = _rewrite_groups_recurse(sql[s + 1 : close - 1])
+        if re.match(r"\s*(SELECT|WITH)\b", inner, re.I) and re.search(
+            r"\bGROUPS\b", inner, re.I
+        ):
+            sub = _rewrite_groups_stmt(inner)
+            if sub is not None:
+                inner, ch2 = sub, True
+        changed = changed or ch2
+        out.append(sql[pos:s] + "(" + inner + ")")
+        pos = close
+    out.append(sql[pos:])
     return "".join(out), changed
 
 
@@ -2937,7 +2849,7 @@ def _rewrite_groups_stmt(sql: str) -> str | None:
                 return None
             i += mname.end() - 1
             try:
-                i = _balanced_end(sql, i)
+                i = paren_end(sql, i)
             except ValueError:
                 return None
             mc = re.match(r"\s*,", sql[i:])
@@ -2948,24 +2860,10 @@ def _rewrite_groups_stmt(sql: str) -> str | None:
         prefix, sql = sql[:i], sql[i:]
         if re.search(r"\bGROUPS\b", prefix, re.I):
             return None
-    m = re.match(r"(\s*SELECT\s+)(DISTINCT\s+|ALL\s+)?", sql, re.I)
-    if not m:
+    got = _simple_select(sql)
+    if got is None:
         return None
-    sel_start = m.end()
-    from_idx = _scan_top_level(sql, sel_start, re.compile(r"FROM\b", re.I))
-    if from_idx >= len(sql):
-        return None
-    select_list = sql[sel_start:from_idx]
-    from_body_start = from_idx + 4
-    end_idx = _scan_top_level(
-        sql,
-        from_body_start,
-        re.compile(r"(GROUP\s+BY|HAVING|WINDOW|ORDER\s+BY|LIMIT|UNION|INTERSECT|EXCEPT)\b", re.I),
-    )
-    tail = sql[end_idx:]
-    if re.match(r"\s*(GROUP|HAVING|WINDOW)\b", tail, re.I):
-        return None
-    from_part = sql[from_body_start:end_idx].strip()
+    m, select_list, from_part, tail = got
     if re.search(r"\bGROUPS\b", from_part, re.I):
         return None  # an unrewritable GROUPS survives in a subquery
     items = split_top_level(select_list)
@@ -2986,12 +2884,12 @@ def _rewrite_groups_stmt(sql: str) -> str | None:
                 out.append(text[i:])
                 break
             try:
-                close = _balanced_end(text, mo.end() - 1)
+                close = paren_end(text, mo.end() - 1)
             except ValueError:
                 return None
             body = text[mo.end() : close - 1]
-            gi = _scan_top_level(body, 0, re.compile(r"GROUPS\b", re.I))
-            if gi >= len(body):
+            gi = find_top_level(body, "GROUPS")
+            if gi < 0:
                 out.append(text[i:close])
                 i = close
                 continue
@@ -3056,58 +2954,27 @@ def truthy_sql(expr: str) -> str:
 
 
 def _split_bool_keyword(e: str, kw: str) -> list[str]:
-    """Split ``e`` on top-level ``kw`` (AND/OR) — outside strings,
+    """Split ``e`` on top-level ``kw`` (AND/OR) — outside literals,
     parens and CASE..END, and never the AND that closes a BETWEEN."""
-    kw_re = re.compile(rf"\b{kw}\b", re.I)
-    case_re = re.compile(r"\bCASE\b", re.I)
-    end_re = re.compile(r"\bEND\b", re.I)
-    between_re = re.compile(r"\bBETWEEN\b", re.I)
-    parts, last = [], 0
-    i, n, depth, in_str, case_d, pending_between = 0, len(e), 0, None, 0, 0
-    while i < n:
-        ch = e[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-            i += 1
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-            i += 1
-            continue
-        if ch == "(":
-            depth += 1
-            i += 1
-            continue
-        if ch == ")":
-            depth -= 1
-            i += 1
-            continue
-        if depth == 0:
-            if case_re.match(e, i):
-                case_d += 1
-                i += 4
+    kw = kw.lower()
+    parts, cur, case_d, pending_between = [], [], 0, 0
+    for t in tokens(e):
+        w = t[1].lower() if t[0] == "word" and t[4] == 0 else ""
+        if w == "case":
+            case_d += 1
+        elif w == "end" and case_d:
+            case_d -= 1
+        elif case_d == 0 and w == "between":
+            pending_between += 1
+        elif case_d == 0 and w == kw:
+            if kw == "and" and pending_between > 0:
+                pending_between -= 1
+            else:
+                parts.append(_span(e, cur))
+                cur = []
                 continue
-            if case_d and end_re.match(e, i):
-                case_d -= 1
-                i += 3
-                continue
-            if case_d == 0:
-                if between_re.match(e, i):
-                    pending_between += 1
-                    i += 7
-                    continue
-                m = kw_re.match(e, i)
-                if m:
-                    if kw.upper() == "AND" and pending_between > 0:
-                        pending_between -= 1
-                    else:
-                        parts.append(e[last : i])
-                        last = m.end()
-                    i = m.end()
-                    continue
-        i += 1
-    parts.append(e[last:])
+        cur.append(t)
+    parts.append(_span(e, cur))
     return parts
 
 
@@ -3125,12 +2992,8 @@ def truthy_expr(e: str) -> str:
     m = re.match(r"(?i)^NOT\b", e)
     if m:
         return "(NOT " + truthy_expr(e[m.end() :]) + ")"
-    if e.startswith("(") and not re.match(r"(?i)^\(\s*SELECT\b", e):
-        try:
-            if _balanced_end(e, 0) == len(e):
-                return truthy_expr(e[1:-1])
-        except ValueError:
-            pass
+    if _is_group(e) and not re.match(r"(?i)^\(\s*SELECT\b", e):
+        return truthy_expr(e[1:-1])
     return truthy_sql(e)
 
 
@@ -3142,76 +3005,41 @@ def _wrap_case_when_truthy(sql: str) -> str:
     THEN``) in :func:`truthy_expr` — SQLite accepts any value as the
     condition. Simple CASE (``CASE x WHEN v``) comparisons are values,
     not conditions, and are left alone."""
-    m = _CASE_WHEN_RE.search(sql)
-    if not m:
+    if not _CASE_WHEN_RE.search(sql):
         return sql
-    out, i, n, in_str, depth = [], 0, len(sql), None, 0
-    when_re = re.compile(r"\bWHEN\b", re.I)
-    then_re = re.compile(r"\bTHEN\b", re.I)
-    case_re = re.compile(r"\bCASE\b", re.I)
-    end_re = re.compile(r"\bEND\b", re.I)
+    toks = tokens(sql)
+    n = len(toks)
+    out, pos, k = [], 0, 0
     # stack of flags: True = searched CASE at this nesting level
     searched: list[bool] = []
-    while i < n:
-        ch = sql[i]
-        if in_str:
-            out.append(ch)
-            if ch == in_str:
-                in_str = None
-            i += 1
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-            out.append(ch)
-            i += 1
-            continue
-        if case_re.match(sql, i):
-            searched.append(bool(_CASE_WHEN_RE.match(sql, i)))
-            out.append(sql[i : i + 4])
-            i += 4
-            continue
-        if searched and end_re.match(sql, i):
+    while k < n:
+        kind, _, s, _, depth, _ = toks[k]
+        w = toks[k][1].lower() if kind == "word" else ""
+        k += 1
+        if w == "case":
+            searched.append(k < n and toks[k][1].lower() == "when")
+        elif w == "end" and searched:
             searched.pop()
-            out.append(sql[i : i + 3])
-            i += 3
-            continue
-        if searched and searched[-1] and when_re.match(sql, i):
+        elif w == "when" and searched and searched[-1]:
             # condition runs to the matching THEN at this level
-            j, d2, instr2, cd = i + 4, 0, None, 0
-            then_at = None
-            while j < n:
-                cj = sql[j]
-                if instr2:
-                    if cj == instr2:
-                        instr2 = None
-                elif cj in ("'", '"'):
-                    instr2 = cj
-                elif cj == "(":
-                    d2 += 1
-                elif cj == ")":
-                    d2 -= 1
-                elif d2 == 0:
-                    if case_re.match(sql, j):
-                        cd += 1
-                        j += 4
-                        continue
-                    if cd and end_re.match(sql, j):
-                        cd -= 1
-                        j += 3
-                        continue
-                    if cd == 0 and then_re.match(sql, j):
-                        then_at = j
-                        break
-                j += 1
-            if then_at is None:
-                out.append(sql[i:])
-                return "".join(out)
-            cond = _wrap_case_when_truthy(sql[i + 4 : then_at]).strip()
-            out.append("WHEN " + truthy_expr(cond) + " ")
-            i = then_at
-            continue
-        out.append(ch)
-        i += 1
+            then_k, cd = None, 0
+            for j in range(k, n):
+                if toks[j][4] < depth:
+                    break
+                wj = toks[j][1].lower() if toks[j][0] == "word" and toks[j][4] == depth else ""
+                if wj == "case":
+                    cd += 1
+                elif wj == "end" and cd:
+                    cd -= 1
+                elif wj == "then" and cd == 0:
+                    then_k = j
+                    break
+            if then_k is None or then_k == k:
+                break
+            cond = _wrap_case_when_truthy(_span(sql, toks[k:then_k]))
+            out.append(sql[pos:s] + "WHEN " + truthy_expr(cond))
+            pos, k = toks[then_k - 1][3], then_k
+    out.append(sql[pos:])
     return "".join(out)
 
 
@@ -3242,58 +3070,28 @@ def wrap_where_truthy(sql: str, only_having: bool = False) -> str | None:
         changed = pre != sql
         sql = pre
         clause_re = _WHERE_HAVING_RE
-    out, i, n, in_str, depth = [], 0, len(sql), None, 0
-    while i < n:
-        ch = sql[i]
-        if in_str:
-            out.append(ch)
-            if ch == in_str:
-                in_str = None
-            i += 1
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-            out.append(ch)
-            i += 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        m = clause_re.match(sql, i)
+    toks = tokens(sql)
+    n = len(toks)
+    out, pos, k = [], 0, 0
+    while k < n:
+        kind, _, s, _, depth, _ = toks[k]
+        m = clause_re.match(sql, s) if kind == "word" else None
+        k += 1
         if not m:
-            out.append(ch)
-            i += 1
             continue
         # clause body: to the next same-depth clause keyword, a ')'
         # closing this depth, or end-of-string
-        j, d2, instr2 = m.end(), depth, None
-        body_end = n
-        while j < n:
-            cj = sql[j]
-            if instr2:
-                if cj == instr2:
-                    instr2 = None
-            elif cj in ("'", '"'):
-                instr2 = cj
-            elif cj == "(":
-                d2 += 1
-            elif cj == ")":
-                if d2 == depth:
-                    body_end = j
-                    break
-                d2 -= 1
-            elif d2 == depth and _CLAUSE_END_RE.match(sql, j):
-                body_end = j
-                break
+        j = k
+        while j < n and toks[j][4] >= depth and not (
+            toks[j][4] == depth and toks[j][0] == "word" and _CLAUSE_END_RE.match(sql, toks[j][2])
+        ):
             j += 1
-        body = sql[m.end() : body_end].strip()
-        if body:
-            out.append(m.group(1) + " " + truthy_expr(body) + " ")
+        if j > k:
+            out.append(sql[pos:s] + m.group(1) + " " + truthy_expr(_span(sql, toks[k:j])))
+            pos = toks[j - 1][3]
             changed = True
-        else:
-            out.append(sql[i:body_end])
-        i = body_end
+        k = j
+    out.append(sql[pos:])
     return "".join(out) if changed else None
 
 
@@ -3315,7 +3113,7 @@ def _rewrite_window_filter(sql: str) -> str:
             return sql
         open_idx = sql.index("(", m.start())
         try:
-            close = _balanced_end(sql, open_idx)
+            close = paren_end(sql, open_idx)
         except ValueError:
             return sql
         if not re.match(r"\s*OVER\b", sql[close:], re.I):
@@ -3323,43 +3121,14 @@ def _rewrite_window_filter(sql: str) -> str:
             continue
         where_kw = re.compile(r"WHERE\b", re.I).search(sql, open_idx)
         pred = sql[where_kw.end() : close - 1].strip()
-        head = sql[: m.start()].rstrip()
-        if not head.endswith(")"):
-            pos = close
-            continue
-        depth, j = 0, len(head) - 1
-        in_str = None
-        # backward balanced scan (strings handled by symmetry of quotes)
-        while j >= 0:
-            ch = head[j]
-            if in_str:
-                if ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == ")":
-                depth += 1
-            elif ch == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            j -= 1
-        if j < 0:
-            pos = close
-            continue
-        argtext = head[j + 1 : -1]
-        k = j - 1
-        while k >= 0 and head[k].isspace():
-            k -= 1
-        name_end = k
-        while k >= 0 and (head[k].isalnum() or head[k] == "_"):
-            k -= 1
-        fname = head[k + 1 : name_end + 1]
-        if not fname or re.search(r"\bDISTINCT\b", argtext, re.I):
+        head = sql[: m.start()]
+        call = _call_before(head)
+        if not call or not call[0] or re.search(r"\bDISTINCT\b", call[1], re.I):
             pos = close  # unsupported shape: let Spark surface its error
             continue
+        fname, argtext, ns = call
         inner = "1" if argtext.strip() == "*" else f"({argtext})"
-        new_head = f"{head[: k + 1]}{fname}(CASE WHEN ({pred}) THEN {inner} END)"
+        new_head = f"{head[:ns]}{fname}(CASE WHEN ({pred}) THEN {inner} END)"
         sql = new_head + sql[close:]
         pos = len(new_head)
 
@@ -3383,37 +3152,14 @@ def rewrite_sqlite_fns(sql: str) -> str:
     # as a TEXT-class primary; the second sweep runs on rewritten Spark
     # text where '->' is a lambda and must keep arrows off
     sql = rewrite_typed_ops(sql, arrows=True)
-    out, i, in_str = [], 0, None
-    while i < len(sql):
-        ch = sql[i]
-        if in_str:
-            out.append(ch)
-            if ch == in_str:
-                in_str = None
-            i += 1
-        elif ch in ("'", '"'):
-            in_str = ch
-            out.append(ch)
-            i += 1
-        else:
-            m = _FN_RENAME_RE.match(sql, i)
-            if m:
-                # an identifier in TABLE position is not a function call:
-                # CREATE TABLE log(...), INSERT INTO log(...), DELETE
-                # FROM log — r7 (found by the trigger differential; the
-                # rename layer turned the table 'log' into 'log10')
-                tailw = re.search(r"([A-Za-z_]\w*)\s*$", "".join(out[-24:]))
-                if tailw and tailw.group(1).upper() in (
-                    "TABLE", "INTO", "FROM", "JOIN", "UPDATE", "VIEW", "TRIGGER",
-                ):
-                    out.append(m.group(1))
-                    i = m.start() + len(m.group(1))
-                    continue
-                out.append(_FN_RENAMES[m.group(1).lower()] + "(")
-                i = m.end()
-            else:
-                out.append(ch)
-                i += 1
+    toks = tokens(sql)
+    out, pos = [], 0
+    for k, (kind, text, s, e, _, _) in enumerate(toks):
+        name = _FN_RENAMES.get(text.lower()) if kind == "word" else None
+        if name and k + 1 < len(toks) and toks[k + 1][1] == "(" and not _table_position(toks, k):
+            out.append(sql[pos:s] + name)
+            pos = e
+    out.append(sql[pos:])
     return _rewrite_operators(
         _rewrite_glob_operator(
             _rewrite_arg_fns(
@@ -3423,45 +3169,40 @@ def rewrite_sqlite_fns(sql: str) -> str:
     )
 
 
-def _scan_back_primary(s: str, i: int) -> int:
-    """Start index of the primary expression ending at ``i`` (exclusive):
-    a balanced-paren group with optional function-name head, a string
-    literal, or an identifier/number chain (incl. dotted and quoted
-    identifiers). Used to capture the LHS of a JSON arrow operator."""
-    j = i
-    while j > 0 and s[j - 1].isspace():
+_TABLE_POSITION_WORDS = frozenset(("table", "into", "from", "join", "update", "view", "trigger"))
+
+
+def _table_position(toks, k: int) -> bool:
+    """An identifier in TABLE position is not a function call: CREATE
+    TABLE log(...), INSERT INTO round(...), DELETE FROM char — r7, found
+    by the trigger differential (the rename layer turned the table
+    'log' into 'log10')."""
+    return k > 0 and toks[k - 1][0] == "word" and toks[k - 1][1].lower() in _TABLE_POSITION_WORDS
+
+
+def _primary_before(toks, k: int) -> int:
+    """Offset where the primary expression ending just before token
+    ``k`` starts: a paren group with its call name, a literal, or an
+    unbroken identifier/number chain (dotted and quoted parts
+    included). Used to capture the LHS of a JSON arrow or GLOB."""
+    if k == 0:
+        return toks[0][2]
+    j = k - 1
+    kind, text, s, e, _, mate = toks[j]
+    if text == ")" and mate >= 0:
+        o = mate
+        if o > 0 and toks[o - 1][0] == "word" and toks[o - 1][3] == toks[o][2]:
+            o -= 1
+        return toks[o][2]
+    if kind in ("str", "blob"):
+        return s
+    if kind not in ("word", "num", "qid") and text != ".":
+        return e
+    while j > 0 and toks[j - 1][3] == toks[j][2] and (
+        toks[j - 1][0] in ("word", "num", "qid") or toks[j - 1][1] == "."
+    ):
         j -= 1
-    if j == 0:
-        return j
-    if s[j - 1] == ")":
-        depth = 0
-        while j > 0:
-            j -= 1
-            if s[j] == ")":
-                depth += 1
-            elif s[j] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-        # function-call head (identifier immediately before the parens)
-        k = j
-        while k > 0 and (s[k - 1].isalnum() or s[k - 1] in "_$"):
-            k -= 1
-        return k
-    if s[j - 1] == "'":
-        j -= 1
-        while j > 0:
-            j -= 1
-            if s[j] == "'":
-                if j > 0 and s[j - 1] == "'":
-                    j -= 1  # escaped '' inside the literal
-                    continue
-                break
-        return j
-    k = j
-    while k > 0 and (s[k - 1].isalnum() or s[k - 1] in '_$."`[]'):
-        k -= 1
-    return k
+    return toks[j][2]
 
 
 _ARROW_RHS_RE = re.compile(r"\s*('(?:[^']|'')*'|\d+)")
@@ -3477,29 +3218,25 @@ def _rewrite_json_arrows(sql: str) -> str:
     (``x -> x + 1``) untouched. The ->> dynamic result type (SQLite
     returns INTEGER for json ints) flattens to TEXT — the documented
     dynamic-typing divergence family."""
-    while True:
-        # scan outside string literals for the leftmost arrow
-        i, in_str, found = 0, None, -1
-        while i < len(sql) - 1:
-            ch = sql[i]
-            if in_str:
-                if ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "-" and sql[i + 1] == ">":
-                found = i
-                break
-            i += 1
-        if found < 0:
+    while "->" in sql:
+        # the leftmost arrow: '-' glued to '>' (or '>>')
+        toks = tokens(sql)
+        k = next(
+            (
+                k
+                for k in range(len(toks) - 1)
+                if toks[k][1] == "-" and toks[k + 1][1] in (">", ">>") and toks[k + 1][2] == toks[k][3]
+            ),
+            None,
+        )
+        if k is None:
             return sql
-        deep = sql[found : found + 3] == "->>"
-        op_end = found + (3 if deep else 2)
-        m = _ARROW_RHS_RE.match(sql, op_end)
+        found, deep = toks[k][2], toks[k + 1][1] == ">>"
+        m = _ARROW_RHS_RE.match(sql, toks[k + 1][3])
         if not m:
             return sql  # not a JSON arrow (e.g. lambda) — leave whole text
         rhs = m.group(1)
-        lhs_start = _scan_back_primary(sql, found)
+        lhs_start = _primary_before(toks, k)
         lhs = sql[lhs_start:found].strip()
         if not lhs:
             return sql
@@ -3518,6 +3255,7 @@ def _rewrite_json_arrows(sql: str) -> str:
         else:
             repl = f"to_json(try_variant_get(try_parse_json({lhs}), {path}))"
         sql = sql[:lhs_start] + repl + sql[m.end():]
+    return sql
 
 
 # -- operator-level SQLite semantics ---------------------------------------
@@ -3557,27 +3295,6 @@ def normalize_numbered_params(sql: str, params) -> tuple[str, list]:
         return _QPARAM_RE.sub(sub, seg)
 
     return _map_outside_strings(sql, fix), new_params
-
-
-def _map_outside_strings(sql: str, fn) -> str:
-    """Apply ``fn`` to the segments of ``sql`` outside string literals."""
-    out, seg, i, in_str = [], [], 0, None
-    while i < len(sql):
-        ch = sql[i]
-        if in_str:
-            out.append(ch)
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            out.append(fn("".join(seg)))
-            seg = []
-            out.append(ch)
-            in_str = ch
-        else:
-            seg.append(ch)
-        i += 1
-    out.append(fn("".join(seg)))
-    return "".join(out)
 
 
 _NEG_LIMIT_RE = re.compile(r"\bLIMIT\s+-\d+\b", re.I)
@@ -3625,42 +3342,30 @@ def _rewrite_glob_operator(sql: str) -> str:
     compared to 1/0. Primary operands only (literal / column ref /
     parameter) — the call form glob(p, x) goes through the rename
     layer, excluded here by the no-paren lookahead."""
-    while True:
-        i, in_str, found = 0, None, -1
-        n = len(sql)
-        neg = False
-        op_end = -1
-        while i < n:
-            ch = sql[i]
-            if in_str:
-                if ch == in_str:
-                    in_str = None
-                i += 1
-                continue
-            if ch in ("'", '"'):
-                in_str = ch
-                i += 1
-                continue
-            if ch in "NnGg" and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-                m = _GLOB_OP_HEAD_RE.match(sql, i)
-                if m:
-                    found = i
-                    neg = bool(m.group(1))
-                    op_end = m.end()
-                    break
-            i += 1
-        if found < 0:
+    while re.search(r"\bGLOB\b", sql, re.I):
+        toks = tokens(sql)
+        k, m = next(
+            (
+                (k, m)
+                for k, t in enumerate(toks)
+                if t[0] == "word" and (m := _GLOB_OP_HEAD_RE.match(sql, t[2]))
+            ),
+            (None, None),
+        )
+        if k is None:
             return sql
-        mr = _GLOB_RHS_RE.match(sql, op_end)
+        found, neg = toks[k][2], bool(m.group(1))
+        mr = _GLOB_RHS_RE.match(sql, m.end())
         if not mr:
             return sql
         rhs = mr.group(1)
-        lhs_start = _scan_back_primary(sql, found)
+        lhs_start = _primary_before(toks, k)
         lhs = sql[lhs_start:found].strip()
         if not lhs:
             return sql
         repl = f"__sqlite_glob({rhs}, {lhs}) = {0 if neg else 1}"
         sql = sql[:lhs_start] + repl + sql[mr.end() :]
+    return sql
 
 
 def _rewrite_operators(sql: str) -> str:
@@ -3689,8 +3394,6 @@ def _rewrite_operators(sql: str) -> str:
 # with one of these names shadows the alias, exactly like SQLite.
 _ROWID_RE = re.compile(r"\b(rowid|_rowid_|oid)\b", re.I)
 
-_WORD_RE = re.compile(r"[A-Za-z_]\w*")
-_ROWID_ITEM_TAIL_RE = re.compile(r"\s*(,|\bFROM\b)", re.I)
 
 _FROM_STOP_WORDS = {
     "where", "group", "order", "limit", "having", "window", "union",
@@ -3708,83 +3411,61 @@ def parse_from_aliases(sql: str) -> dict[str, str]:
     rowid token stays unresolved, matching SQLite's 'no such column'
     posture."""
     out: dict[str, str] = {}
-    i, n = 0, len(sql)
+    toks = tokens(sql)
+    n = len(toks)
     in_from = False  # inside a FROM clause (until a clause ender)
     expect = False  # the next reference is a FROM-list entry
     _enders = {
         "where", "group", "order", "limit", "having", "window",
         "union", "intersect", "except",
     }
-    _alias_re = re.compile(r"\s*(?:AS\s+([A-Za-z_]\w*)|([A-Za-z_]\w*))", re.I)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"'):
-            j = i + 1
-            while j < n and sql[j] != ch:
-                j += 1
-            i = j + 1
-            continue
-        if ch == "(":
+
+    def name_at(j: int):
+        """The lowercased name at token ``j``: a word that is no FROM
+        keyword, or any quoted identifier (never a keyword); None
+        otherwise."""
+        if j < n and toks[j][0] == "qid":
+            return unquote_ident(toks[j][1]).lower()
+        if j < n and toks[j][0] == "word":
+            w = toks[j][1].lower()
+            if w not in _FROM_STOP_WORDS and w != "as":
+                return w
+        return None
+
+    def alias_at(j: int):
+        """([AS] alias, index after it) at token ``j``; (None, j) when
+        no alias follows."""
+        a = j + 1 if j < n and toks[j][0] == "word" and toks[j][1].lower() == "as" else j
+        cand = name_at(a)
+        return (cand, a + 1) if cand is not None else (None, j)
+
+    k = 0
+    while k < n:
+        kind, text, _, _, _, mate = toks[k]
+        k += 1
+        if kind == "op" and text == "(":
             # skip subquery/function bodies wholesale
-            depth = 1
-            i += 1
-            while i < n and depth:
-                c2 = sql[i]
-                if c2 in ("'", '"'):
-                    j = i + 1
-                    while j < n and sql[j] != c2:
-                        j += 1
-                    i = j
-                elif c2 == "(":
-                    depth += 1
-                elif c2 == ")":
-                    depth -= 1
-                i += 1
+            k = mate + 1 if mate >= 0 else n
             if expect:
                 # (subquery) [AS] alias — consume the alias WITHOUT
                 # recording it: it must not shadow-resolve to a real
                 # table of the same name
-                ma = _alias_re.match(sql, i)
-                if ma:
-                    cand = ma.group(1) or ma.group(2)
-                    if cand and cand.lower() not in _FROM_STOP_WORDS:
-                        i = ma.end()
+                k = alias_at(k)[1]
                 expect = False
-            continue
-        if ch == ",":
-            if in_from:
-                expect = True
-            i += 1
-            continue
-        m = _WORD_RE.match(sql, i)
-        if not m:
-            i += 1
-            continue
-        wl = m.group(0).lower()
-        i = m.end()
-        if wl in ("from", "join"):
-            in_from = True
-            expect = True
-            continue
-        if wl in _enders:
-            in_from = False
-            expect = False
-            continue
-        if wl in _FROM_STOP_WORDS:
-            continue  # on/using/join-modifiers: stay in the FROM clause
-        if expect:
-            tname = wl
-            alias = tname
-            ma = _alias_re.match(sql, i)
-            if ma:
-                cand = ma.group(1) or ma.group(2)
-                if cand and cand.lower() not in _FROM_STOP_WORDS and cand.upper() != "AS":
-                    alias = cand.lower()
-                    i = ma.end()
-            # an alias HIDES the base name ('SELECT t.rowid FROM t AS a'
-            # is 'no such column: t.rowid' in SQLite) — only the alias
-            # (or the bare reference itself) lands in the map
-            out[alias] = tname
+        elif kind == "op" and text == ",":
+            expect = expect or in_from
+        elif kind == "word" and text.lower() in ("from", "join"):
+            in_from = expect = True
+        elif kind == "word" and text.lower() in _enders:
+            in_from = expect = False
+        elif expect and name_at(k - 1) is not None:
+            # on/using/join-modifiers stay in the FROM clause; an
+            # alias HIDES the base name ('SELECT t.rowid FROM t AS a'
+            # is 'no such column: t.rowid' in SQLite) — only the
+            # alias (or the bare reference itself) lands in the map
+            tname = name_at(k - 1)
+            alias, k = alias_at(k)
+            out[alias or tname] = tname
             expect = False
     return out
 
@@ -3804,116 +3485,69 @@ def resolve_rowid_multi(sql: str, alias_tdefs: dict):
     select items with an implicit table in scope abort resolution
     (returns the original sql and []) rather than leak hidden columns.
     """
-    out: list[str] = []
-    i, n = 0, len(sql)
-    depth = 0
-    sel_depths: list[int] = []
+    toks = tokens(sql)
+    items = _select_item_heads(toks)
+    out, pos = [], 0
     used: dict[int, object] = {}
     any_implicit = any(td.implicit_rowid for td in alias_tdefs.values())
-
-    def qualifier():
-        prev = "".join(out).rstrip()
-        if not prev.endswith("."):
-            return None
-        mq = re.search(r"([A-Za-z_]\w*)\s*\.\s*$", prev)
-        return mq.group(1).lower() if mq else None
-
-    def at_item_head(skip_qual: bool) -> bool:
-        prev = "".join(out).rstrip()
-        if skip_qual and prev.endswith("."):
-            prev = prev[:-1].rstrip()
-            mq = re.search(r"[\w`]+$", prev)
-            if mq:
-                prev = prev[: mq.start()].rstrip()
-        return prev.endswith(",") or bool(
-            re.search(r"\b(select|distinct|all)$", prev, re.I)
+    for k, (kind, text, s, e, _, _) in enumerate(toks):
+        qual = (
+            toks[k - 2][1].lower()
+            if k >= 2 and toks[k - 1][1] == "." and toks[k - 2][0] == "word"
+            else None
         )
+        td = alias_tdefs.get(qual) if qual else None
+        wl = text.lower()
+        if kind == "op" and text == "*" and items[k]:
+            if qual is None and any_implicit:
+                return sql, []  # bare * can't be safely expanded here
+            if td is not None and td.implicit_rowid:
+                used[id(td)] = td
+                expanded = ", ".join(f"{qual}.{c.name}" for c in td.visible_fields())
+                # the qualifier + dot stay — strip them from the first column
+                out.append(sql[pos:s] + expanded[len(qual) + 1 :])
+                pos = e
+        elif (
+            kind == "word"
+            and wl in _ROWID_NAMES
+            and td is not None
+            and td.rowid_column
+            and wl not in {f.name.lower() for f in td.schema.fields}
+        ):
+            if td.implicit_rowid:
+                used[id(td)] = td
+            rep = td.rowid_column
+            if items[k] and td.implicit_rowid:
+                rep += " AS rowid"
+            out.append(sql[pos:s] + rep)
+            pos = e
+    out.append(sql[pos:])
+    return "".join(out), list(used.values())
 
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"'):
-            j = i + 1
-            while j < n and sql[j] != ch:
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "`":
-            j = sql.find("`", i + 1)
-            j = n - 1 if j < 0 else j
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-            out.append(ch)
-            i += 1
-            continue
-        if ch == ")":
-            depth = max(0, depth - 1)
+
+def _select_item_heads(toks) -> list[bool]:
+    """Per token: does it stand alone as a select-list item (modulo a
+    ``qual.`` prefix) — inside an open SELECT list at that list's paren
+    depth, after SELECT/DISTINCT/ALL/',' and before ',' or FROM? Commas
+    inside calls or IN lists never fake an item position."""
+    flags = [False] * len(toks)
+    sel_depths: list[int] = []  # paren depths with an open SELECT list
+    for k, (kind, text, _, _, depth, _) in enumerate(toks):
+        w = text.lower() if kind in ("word", "op") else ""
+        if w == ")":
             while sel_depths and sel_depths[-1] > depth:
                 sel_depths.pop()
-            out.append(ch)
-            i += 1
-            continue
-        if ch == "*":
-            is_item = (
-                bool(sel_depths)
-                and sel_depths[-1] == depth
-                and _ROWID_ITEM_TAIL_RE.match(sql, i + 1) is not None
-                and at_item_head(skip_qual=True)
-            )
-            qual = qualifier()
-            td = alias_tdefs.get(qual) if qual else None
-            if is_item and qual is None and any_implicit:
-                return sql, []  # bare * can't be safely expanded here
-            if is_item and td is not None and td.implicit_rowid:
-                used[id(td)] = td
-                visible = [f.name for f in td.visible_fields()]
-                expanded = ", ".join(f"{qual}.{c}" for c in visible)
-                # the qualifier + dot are already emitted — strip them
-                # from the first expanded column
-                out.append(expanded[len(qual) + 1 :])
-            else:
-                out.append(ch)
-            i += 1
-            continue
-        m = _WORD_RE.match(sql, i)
-        if not m:
-            out.append(ch)
-            i += 1
-            continue
-        word = m.group(0)
-        wl = word.lower()
-        if wl == "select":
+        elif w == "select":
             sel_depths.append(depth)
-        elif wl == "from" and sel_depths and sel_depths[-1] == depth:
+        elif w == "from" and sel_depths and sel_depths[-1] == depth:
             sel_depths.pop()
-        if wl in _ROWID_NAMES:
-            qual = qualifier()
-            td = alias_tdefs.get(qual) if qual else None
-            cols = (
-                {f.name.lower() for f in td.schema.fields} if td is not None else set()
+        elif sel_depths and sel_depths[-1] == depth and k + 1 < len(toks):
+            j = k - 3 if k >= 2 and toks[k - 1][1] == "." else k - 1
+            prev = toks[j][1].lower() if j >= 0 else ""
+            flags[k] = toks[k + 1][1].lower() in (",", "from") and prev in (
+                ",", "select", "distinct", "all",
             )
-            if td is not None and td.rowid_column and wl not in cols:
-                if td.implicit_rowid:
-                    used[id(td)] = td
-                is_item = (
-                    bool(sel_depths)
-                    and sel_depths[-1] == depth
-                    and _ROWID_ITEM_TAIL_RE.match(sql, m.end()) is not None
-                    and at_item_head(skip_qual=True)
-                )
-                if is_item and td.implicit_rowid:
-                    out.append(f"{td.rowid_column} AS rowid")
-                else:
-                    out.append(td.rowid_column)
-            else:
-                out.append(word)
-        else:
-            out.append(word)
-        i = m.end()
-    return "".join(out), list(used.values())
+    return flags
 
 
 def resolve_rowid(sql: str, tdef) -> str:
@@ -3953,92 +3587,21 @@ def resolve_rowid(sql: str, tdef) -> str:
         return _map_outside_strings(sql, lambda seg: _ROWID_RE.sub(sub, seg))
 
     visible = [f.name for f in tdef.visible_fields()]
-    out: list[str] = []
-    i, n = 0, len(sql)
-    depth = 0
-    sel_depths: list[int] = []  # paren depths with an open SELECT list
-
-    def at_item_head() -> bool:
-        prev = "".join(out).rstrip()
-        if prev.endswith("."):  # table-qualified: look before it
-            prev = prev[:-1].rstrip()
-            mq = re.search(r"[\w`]+$", prev)
-            if mq:
-                prev = prev[: mq.start()].rstrip()
-        return prev.endswith(",") or bool(
-            re.search(r"\b(select|distinct|all)$", prev, re.I)
-        )
-
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"'):
-            j = i + 1
-            while j < n and sql[j] != ch:
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "`":
-            j = sql.find("`", i + 1)
-            j = n - 1 if j < 0 else j
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-            out.append(ch)
-            i += 1
-            continue
-        if ch == ")":
-            depth = max(0, depth - 1)
-            while sel_depths and sel_depths[-1] > depth:
-                sel_depths.pop()
-            out.append(ch)
-            i += 1
-            continue
-        if ch == "*":
-            is_item = (
-                bool(sel_depths)
-                and sel_depths[-1] == depth
-                and _ROWID_ITEM_TAIL_RE.match(sql, i + 1) is not None
-                and at_item_head()
-            )
-            if is_item:
-                prev = "".join(out).rstrip()
-                qual = ""
-                if prev.endswith("."):
-                    mq = re.search(r"[\w`]+\.\s*$", prev)
-                    qual = mq.group(0).rstrip() if mq else ""
-                # the qualifier (if any) is already emitted — drop it
-                # from the first expanded column only
-                expanded = ", ".join(f"{qual}{c}" for c in visible)
-                out.append(expanded[len(qual) :])
-            else:
-                out.append(ch)
-            i += 1
-            continue
-        m = _WORD_RE.match(sql, i)
-        if not m:
-            out.append(ch)
-            i += 1
-            continue
-        word = m.group(0)
-        wl = word.lower()
-        if wl == "select":
-            sel_depths.append(depth)
-        elif wl == "from" and sel_depths and sel_depths[-1] == depth:
-            sel_depths.pop()
-        if wl in _ROWID_NAMES and wl not in cols:
-            is_item = (
-                bool(sel_depths)
-                and sel_depths[-1] == depth
-                and _ROWID_ITEM_TAIL_RE.match(sql, m.end()) is not None
-                and at_item_head()
-            )
-            out.append(f"{rc} AS rowid" if is_item else rc)
-        else:
-            out.append(word)
-        i = m.end()
+    toks = tokens(sql)
+    items = _select_item_heads(toks)
+    out, pos = [], 0
+    for k, (kind, text, s, e, _, _) in enumerate(toks):
+        if kind == "op" and text == "*" and items[k]:
+            qual = toks[k - 2][1] + "." if k >= 2 and toks[k - 1][1] == "." else ""
+            # the qualifier (if any) is already emitted — drop it from
+            # the first expanded column only
+            expanded = ", ".join(f"{qual}{c}" for c in visible)
+            out.append(sql[pos:s] + expanded[len(qual) :])
+            pos = e
+        elif kind == "word" and text.lower() in _ROWID_NAMES and text.lower() not in cols:
+            out.append(sql[pos:s] + (f"{rc} AS rowid" if items[k] else rc))
+            pos = e
+    out.append(sql[pos:])
     return "".join(out)
 
 
@@ -4182,24 +3745,10 @@ _CAST_REAL_WRAP = (
 
 def _last_top_level_as(s: str) -> int:
     """Offset of the last top-level ``AS`` keyword in ``s`` (−1: none)."""
-    depth, in_str, last = 0, None, -1
-    i = 0
-    while i < len(s):
-        ch = s[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch in "aA" and re.match(r"\bAS\b", s[i:], re.I):
-            if i == 0 or not (s[i - 1].isalnum() or s[i - 1] in "_`"):
-                last = i
-        i += 1
-    return last
+    return max(
+        (t[2] for t in tokens(s) if t[4] == 0 and t[0] == "word" and t[1].upper() == "AS"),
+        default=-1,
+    )
 
 
 def _rewrite_cast(arg: str) -> str | None:
@@ -4604,54 +4153,29 @@ def _rewrite_arg_fns(sql: str) -> str:
     """Single left-to-right scan, string-literal aware; args are
     rewritten recursively FIRST, and replacement text is emitted
     without rescanning (no self-recursion on e.g. sign→sign)."""
-    out, i, in_str = [], 0, None
-    while i < len(sql):
-        ch = sql[i]
-        if in_str:
-            out.append(ch)
-            if ch == in_str:
-                in_str = None
-            i += 1
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-            out.append(ch)
-            i += 1
-            continue
-        m = _ARG_FN_RE.match(sql, i)
-        if not m:
-            out.append(ch)
-            i += 1
-            continue
-        # an identifier in TABLE position is not a function call:
-        # CREATE TABLE log(...), INSERT INTO round(...), DELETE FROM
-        # char — r7, found by the trigger differential (the arg-fn
-        # layer rewrote the table 'log' into 'log10')
-        tailw = re.search(r"([A-Za-z_]\w*)\s*$", "".join(out[-24:]))
-        if tailw and tailw.group(1).upper() in (
-            "TABLE", "INTO", "FROM", "JOIN", "UPDATE", "VIEW", "TRIGGER",
-        ):
-            word_end = i + len(m.group(1)) if m.groups() else m.end()
-            out.append(sql[i:word_end])
-            i = word_end
+    toks = tokens(sql)
+    out, pos = [], 0
+    for k, (kind, _, s, _, _, _) in enumerate(toks):
+        m = _ARG_FN_RE.match(sql, s) if kind == "word" and s >= pos else None
+        if not m or _table_position(toks, k):
             continue
         try:
-            end = _balanced_end(sql, m.end() - 1)
+            end = paren_end(sql, m.end() - 1)
         except ValueError:
-            out.append(ch)
-            i += 1
             continue
         inner = sql[m.end() : end - 1]
-        raw_args = [a.strip() for a in split_top_level(inner)] if inner.strip() else []
+        raw_args = split_top_level(inner)
         args = [_rewrite_arg_fns(a) for a in raw_args]
+        out.append(sql[pos:s])
+        pos = end
         if m.group(1).lower() == "total" and len(args) == 1:
-            om = re.match(r"\s*OVER\s*\(", sql[end:], re.I)
+            om = re.compile(r"\s*OVER\s*\(", re.I).match(sql, end)
             if om:
                 # window form: the never-NULL coalesce must wrap the
                 # WHOLE windowed aggregate (r6: the plain rewrite left
                 # 'coalesce(sum(..), 0) OVER (..)', which doesn't parse)
                 try:
-                    oend = end + _balanced_end(sql[end:], om.end() - 1)
+                    oend = paren_end(sql, om.end() - 1)
                 except ValueError:
                     oend = None
                 if oend is not None:
@@ -4662,7 +4186,7 @@ def _rewrite_arg_fns(sql: str) -> str:
                         f"coalesce(sum({_CAST_REAL_WRAP.format(x=args[0])}) "
                         f"{over_txt}, CAST(0.0 AS DOUBLE))"
                     )
-                    i = oend
+                    pos = oend
                     continue
         repl = _rewrite_one_call(m.group(1), args, raw_args)
         if repl is not None:
@@ -4670,29 +4194,9 @@ def _rewrite_arg_fns(sql: str) -> str:
         elif args:
             out.append(m.group(1) + "(" + ", ".join(args) + ")")
         else:
-            out.append(sql[i:end])
-        i = end
+            out.append(sql[s:end])
+    out.append(sql[pos:])
     return "".join(out)
-
-
-def _balanced_end(s: str, i: int) -> int:
-    """``i`` at '(' → index one past the matching ')', string-aware."""
-    depth, in_str = 0, None
-    while i < len(s):
-        ch = s[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError("unbalanced parentheses")
 
 
 # --------------------------------------------------------------------------
@@ -4707,18 +4211,6 @@ def _balanced_end(s: str, i: int) -> int:
 # literals never affinity-convert), abs('12') is 12.0 REAL (numeric
 # prefix conversion, always REAL for text/blob input).
 # --------------------------------------------------------------------------
-
-_TYPED_TOKEN_RE = re.compile(
-    r"""(?P<ws>\s+)
-      | (?P<blob>[xX]'[0-9A-Fa-f]*')
-      | (?P<str>'(?:[^']|'')*')
-      | (?P<qid>"(?:[^"]|"")*"|`(?:[^`]|``)*`)
-      | (?P<num>0[xX][0-9A-Fa-f]+|(?:\d+\.\d*|\.\d+|\d+)(?:[eE][+-]?\d+)?[dD]?)
-      | (?P<word>[A-Za-z_]\w*)
-      | (?P<op><=|>=|<>|!=|==|\|\||<<|>>|[=<>/*%+\-.,();&|~?:@\[\]])
-    """,
-    re.X,
-)
 
 # storage classes for the typed passes
 _CLS_INT, _CLS_REAL, _CLS_TEXT, _CLS_BLOB, _CLS_NULL, _CLS_UNKNOWN = range(6)
@@ -4802,16 +4294,8 @@ def _in_prim_start(toks, i: int):
         return None
     t = toks[i - 1]
     if t[1] == ")":
-        depth, j = 0, i
-        while j > 0:
-            j -= 1
-            if toks[j][1] == ")":
-                depth += 1
-            elif toks[j][1] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-        if depth != 0:
+        j = t[5]
+        if j < 0:
             return None
         if (
             j > 0
@@ -4888,31 +4372,13 @@ def _fwd_operand_end(toks, i: int):
             return None
         t = toks[j]
         if t[1] == "(":
-            depth = 0
-            while j < n:
-                if toks[j][1] == "(":
-                    depth += 1
-                elif toks[j][1] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        return j + 1
-                j += 1
-            return None
+            return t[5] + 1 if t[5] >= 0 else None
         if t[0] in ("num", "str", "blob", "qid") or (
             t[0] == "word" and t[1].lower() not in _IN_STOP_WORDS
         ):
             k = j + 1
             if t[0] == "word" and k < n and toks[k][1] == "(":
-                depth = 0
-                while k < n:
-                    if toks[k][1] == "(":
-                        depth += 1
-                    elif toks[k][1] == ")":
-                        depth -= 1
-                        if depth == 0:
-                            return k + 1
-                    k += 1
-                return None
+                return toks[k][5] + 1 if toks[k][5] >= 0 else None
             while k + 1 < n and toks[k][1] == "." and toks[k + 1][0] in ("word", "qid"):
                 k += 2
             return k
@@ -4986,28 +4452,23 @@ def _expand_between(sql: str) -> str:
             # e.g. CASE WHEN 1 AND 1 THEN 0 ELSE 9 END; treating CASE
             # like an opening paren keeps them out of the scan while the
             # verbatim text slice still yields a valid expansion)
-            j, depth, case_depth, and_i = idx + 1, 0, 0, None
-            while j < n:
-                v = toks[j][1]
-                if v == "(":
-                    depth += 1
-                elif v == ")":
-                    if depth == 0:
+            base, case_depth, and_i = t[4], 0, None
+            for j in range(idx + 1, n):
+                if toks[j][4] < base:
+                    break  # the ')' closing the enclosing group
+                if toks[j][4] > base or toks[j][0] != "word":
+                    continue
+                w = toks[j][1].lower()
+                if w == "case":
+                    case_depth += 1
+                elif w == "end" and case_depth > 0:
+                    case_depth -= 1
+                elif case_depth == 0:
+                    if w == "and":
+                        and_i = j
                         break
-                    depth -= 1
-                elif toks[j][0] == "word":
-                    w = toks[j][1].lower()
-                    if w == "case":
-                        case_depth += 1
-                    elif w == "end" and case_depth > 0:
-                        case_depth -= 1
-                    elif depth == 0 and case_depth == 0:
-                        if w == "and":
-                            and_i = j
-                            break
-                        if w in _FRAME_BOUND_WORDS:
-                            break  # frame bound that slipped the prefix guard
-                j += 1
+                    if w in _FRAME_BOUND_WORDS:
+                        break  # frame bound that slipped the prefix guard
             if and_i is None or and_i == idx + 1:
                 continue
             up_lo = and_i + 1
@@ -5138,21 +4599,17 @@ def rewrite_simple_case(sql: str) -> str:
     n = len(toks)
 
     def _span_ok(lo, hi, is_base):
-        depth = 0
+        base = toks[lo][4] if lo < hi else 0
         for k in range(lo, hi):
             t = toks[k]
             v = t[1]
-            if v == "(":
-                depth += 1
-            elif v == ")":
-                depth -= 1
-            elif t[0] == "word":
+            if t[0] == "word":
                 w = v.lower()
-                if w in _CASE_BAIL_WORDS and (depth == 0 or w in (
+                if w in _CASE_BAIL_WORDS and (t[4] == base or w in (
                     "select", "case", "random", "randomblob"
                 )):
                     return False
-            elif depth == 0 and v in _CASE_BAIL_OPS:
+            elif t[4] == base and v in _CASE_BAIL_OPS:
                 return False
             if "?" in v:
                 return False
@@ -5164,7 +4621,7 @@ def rewrite_simple_case(sql: str) -> str:
         if t[0] != "word" or t[1].lower() != "case":
             continue
         # walk this CASE at its own nesting level
-        j, depth, case_depth = idx + 1, 0, 0
+        j, case_depth = idx + 1, 0
         base_lo, base_hi = idx + 1, None
         whens: list[int] = []  # WHEN-operand start token indices
         thens: list[int] = []  # matching THEN token indices
@@ -5173,14 +4630,10 @@ def rewrite_simple_case(sql: str) -> str:
         while j < n:
             tt = toks[j]
             v = tt[1]
-            if v == "(":
-                depth += 1
-            elif v == ")":
-                if depth == 0:
-                    ok = False
-                    break
-                depth -= 1
-            elif tt[0] == "word" and depth == 0:
+            if tt[4] < t[4]:
+                ok = False  # the ')' closing the enclosing group
+                break
+            if tt[0] == "word" and tt[4] == t[4]:
                 w = v.lower()
                 if w == "case":
                     case_depth += 1
@@ -5382,23 +4835,15 @@ def rewrite_real_text_contexts(sql: str, cls_map) -> str:
                 _wrap(*got)
         elif t[0] == "word" and v == "cast" and idx + 1 < n and toks[idx + 1][1] == "(":
             # CAST(col AS STRING) — find the AS at depth 1
-            depth, j, as_i, close = 0, idx + 1, None, None
-            while j < n:
-                w = toks[j][1]
-                if w == "(":
-                    depth += 1
-                elif w == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close = j
-                        break
-                elif (
-                    depth == 1
-                    and toks[j][0] == "word"
-                    and toks[j][1].lower() == "as"
-                ):
-                    as_i = j
-                j += 1
+            close = toks[idx + 1][5]
+            as_i = max(
+                (
+                    j
+                    for j in range(idx + 2, close)
+                    if toks[j][4] == t[4] + 1 and toks[j][0] == "word" and toks[j][1].lower() == "as"
+                ),
+                default=None,
+            )
             if (
                 as_i is not None
                 and close == as_i + 2
@@ -5424,24 +4869,14 @@ def rewrite_real_text_contexts(sql: str, cls_map) -> str:
             and toks[idx + 1][1] == "("
         ):
             # direct bare-column arguments at the listed positions
-            depth, j, arg_no, arg_start = 0, idx + 1, 0, idx + 2
-            positions = _REAL_TEXT_FN_ARGS[v]
-            while j < n:
-                w = toks[j][1]
-                if w == "(":
-                    depth += 1
-                elif w == ")":
-                    depth -= 1
-                    if depth == 0:
-                        if arg_no in positions:
-                            _wrap(arg_start, j)
-                        break
-                elif depth == 1 and w == ",":
-                    if arg_no in positions:
-                        _wrap(arg_start, j)
-                    arg_no += 1
-                    arg_start = j + 1
-                j += 1
+            close = toks[idx + 1][5]
+            if close < 0:
+                continue
+            commas = [j for j in range(idx + 2, close) if toks[j][1] == "," and toks[j][4] == t[4] + 1]
+            bounds = [idx + 1, *commas, close]
+            for arg_no in _REAL_TEXT_FN_ARGS[v]:
+                if arg_no + 1 < len(bounds):
+                    _wrap(bounds[arg_no] + 1, bounds[arg_no + 1])
     seen_spans: list[tuple[int, int]] = []
     final = []
     for s, e, r in sorted(edits, reverse=True):
@@ -5478,20 +4913,9 @@ def rewrite_text_sums(sql: str, cls_map) -> str:
         t = toks[idx]
         if t[0] != "word" or t[1].lower() != "sum":
             continue
-        if idx + 1 >= n or toks[idx + 1][1] != "(":
+        if idx + 1 >= n or toks[idx + 1][1] != "(" or toks[idx + 1][5] < 0:
             continue
-        depth, close = 0, None
-        for j in range(idx + 1, n):
-            v = toks[j][1]
-            if v == "(":
-                depth += 1
-            elif v == ")":
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-        if close is None:
-            continue
+        close = toks[idx + 1][5]
         ident = _is_dotted_ident(toks, idx + 2, close)
         if ident is None or _cls_of_ident(ident, cls_map) != _CLS_TEXT:
             continue
@@ -5527,28 +4951,14 @@ def _expand_in_lists(sql: str, cls_map=None) -> str:
                 continue
             if idx + 1 >= n or toks[idx + 1][1] != "(":
                 continue
-            depth, close = 0, None
-            for j in range(idx + 1, n):
-                v = toks[j][1]
-                if v == "(":
-                    depth += 1
-                elif v == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close = j
-                        break
-            if close is None or close == idx + 2:
+            close = toks[idx + 1][5]
+            if close < 0 or close == idx + 2:
                 continue
             bad = False
             members: list[tuple[int, int]] = []
-            depth, mstart = 0, idx + 2
+            mstart = idx + 2
             for j in range(idx + 2, close):
-                v = toks[j][1]
-                if v == "(":
-                    depth += 1
-                elif v == ")":
-                    depth -= 1
-                elif depth == 0 and v == ",":
+                if toks[j][1] == "," and toks[j][4] == t[4] + 1:
                     if j == mstart:
                         bad = True
                         break
@@ -5664,20 +5074,14 @@ def _expand_in_lists(sql: str, cls_map=None) -> str:
 
 
 def _typed_tokenize(sql: str):
-    """Token list [(kind, text, start, end)] with whitespace dropped, or
-    None when the text contains something this pass must not touch
-    (comments, an unmatched character)."""
-    toks = []
-    i, n = 0, len(sql)
-    while i < n:
-        if sql.startswith("--", i) or sql.startswith("/*", i):
+    """The code tokens of ``sql`` (:func:`tokens`; comments are
+    whitespace), or None when the text holds something the typed passes
+    must not touch: a character no lexical rule covers, or an
+    unterminated literal or quoted identifier."""
+    toks = tokens(sql)
+    for kind, text, *_ in toks:
+        if kind == "other" or (kind in ("str", "qid") and not _closed(text)):
             return None
-        m = _TYPED_TOKEN_RE.match(sql, i)
-        if not m:
-            return None
-        if m.lastgroup != "ws":
-            toks.append((m.lastgroup, m.group(0), m.start(), m.end()))
-        i = m.end()
     return toks
 
 
@@ -5885,7 +5289,6 @@ class _TypedPass:
         # nesting depth (a 4-level json_array() expansion took minutes;
         # parse results are deterministic per position, so caching is
         # exact, and cached subspans replay into the caller's list)
-        self._paren: dict[int, int] = {}
         self._prim: dict[int, tuple | None] = {}
         self._span: dict[tuple[int, int], int] = {}
 
@@ -5912,21 +5315,7 @@ class _TypedPass:
 
     def _match_paren(self, i: int) -> int:
         """toks[i] is '(' → index of matching ')' token (or -1)."""
-        hit = self._paren.get(i)
-        if hit is not None:
-            return hit
-        depth = 0
-        for j in range(i, len(self.toks)):
-            t = self.toks[j][1]
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-                if depth == 0:
-                    self._paren[i] = j
-                    return j
-        self._paren[i] = -1
-        return -1
+        return self.toks[i][5]
 
     def parse_primary(self, i: int, subspans: list):
         """Memoizing wrapper over :meth:`_parse_primary_uncached` —
@@ -6019,15 +5408,15 @@ class _TypedPass:
                     return None
                 subspans.append((i + 2, j))
                 # type keyword(s): tokens after the LAST top-level AS
-                depth, as_pos = 0, -1
-                for k in range(i + 2, j):
-                    t = toks[k][1]
-                    if t == "(":
-                        depth += 1
-                    elif t == ")":
-                        depth -= 1
-                    elif depth == 0 and toks[k][0] == "word" and t.lower() == "as":
-                        as_pos = k
+                inner = toks[i + 1][4] + 1
+                as_pos = max(
+                    (
+                        k
+                        for k in range(i + 2, j)
+                        if toks[k][4] == inner and toks[k][0] == "word" and toks[k][1].lower() == "as"
+                    ),
+                    default=-1,
+                )
                 if as_pos < 0:
                     return None
                 decl = " ".join(t[1] for t in toks[as_pos + 1 : j])
@@ -6060,16 +5449,10 @@ class _TypedPass:
                     # without this, HAVING max(tx) / 2 never takes the
                     # prefix conversion). Multi-arg scalar min/max are
                     # dynamic — class only when no top-level comma.
-                    depth2, single = 0, True
-                    for k2 in range(i + 2, j):
-                        t2 = toks[k2][1]
-                        if t2 == "(":
-                            depth2 += 1
-                        elif t2 == ")":
-                            depth2 -= 1
-                        elif t2 == "," and depth2 == 0:
-                            single = False
-                            break
+                    inner = toks[i + 1][4] + 1
+                    single = not any(
+                        toks[k2][1] == "," and toks[k2][4] == inner for k2 in range(i + 2, j)
+                    )
                     acls = self.type_of_span(i + 2, j) if single else _CLS_UNKNOWN
                     if wl == "sum" and acls not in (_CLS_INT, _CLS_REAL):
                         acls = _CLS_UNKNOWN  # sum over TEXT is content-typed
@@ -6657,22 +6040,20 @@ class _TypedPass:
         stopped by a function call's '(' (word immediately before) or
         any clause keyword."""
         toks = self.toks
-        depth = 0
         j = i - 1
         while j >= 0:
-            k, v = toks[j][0], toks[j][1]
+            k, v, mate = toks[j][0], toks[j][1], toks[j][5]
             lv = v.lower() if k == "word" else v
-            if v == ")":
-                depth += 1
-            elif v == "(":
-                if depth > 0:
-                    depth -= 1
-                elif j > 0 and toks[j - 1][0] == "word" and toks[j - 1][1].lower() not in (
+            if v == ")" and mate >= 0:
+                j = mate - 1  # a whole group before the token
+                continue
+            if v == "(":
+                if j > 0 and toks[j - 1][0] == "word" and toks[j - 1][1].lower() not in (
                     "in", "values", "on", "and", "or", "not", "when", "then", "else",
                 ):
                     return False  # function-call argument: never positional
                 # bare grouping parens are transparent (Spark strips them)
-            elif depth == 0 and k == "word":
+            elif k == "word":
                 if lv == "by" and j > 0 and toks[j - 1][1].lower() in ("order", "group"):
                     return True
                 if lv in self._POSITIONAL_STOP:
@@ -7326,35 +6707,31 @@ class TriggerDef:
 
 
 _TRIGGER_HEAD_RE = re.compile(
-    r"""^\s*CREATE\s+(?P<temp>TEMP(?:ORARY)?\s+)?TRIGGER\s+
+    rf"""^\s*CREATE\s+(?P<temp>TEMP(?:ORARY)?\s+)?TRIGGER\s+
         (?P<ine>IF\s+NOT\s+EXISTS\s+)?
-        (?P<name>"[^"]+"|`[^`]+`|\[[^\]]+\]|[A-Za-z_]\w*)\s+
+        (?P<name>{_IDENT})\s+
         (?P<timing>BEFORE\s+|AFTER\s+|INSTEAD\s+OF\s+)?
         (?P<event>DELETE|INSERT|UPDATE)
         (?:\s+OF\s+(?P<ofcols>.+?))?\s+
-        ON\s+(?P<table>"[^"]+"|`[^`]+`|\[[^\]]+\]|[A-Za-z_]\w*)\s+
+        ON\s+(?P<table>{_IDENT})\s+
         (?:FOR\s+EACH\s+ROW\s+)?
     """,
     re.I | re.X | re.S,
 )
 
 
-def _unquote_ident(t: str) -> str:
-    if t and t[0] in ('"', "`", "["):
-        return t[1:-1]
-    return t
-
-
 def parse_create_trigger(sql: str) -> TriggerDef:
     """Parse CREATE TRIGGER into a :class:`TriggerDef`.  Raises
     ValueError with a SQLite-shaped message on malformed text."""
+    source_sql = sql.strip().rstrip(";").strip()
+    sql = blank_comments(sql)
     m = _TRIGGER_HEAD_RE.match(sql)
     if not m:
         raise ValueError('near "TRIGGER": syntax error')
     rest_at = m.end()
     when_sql = None
-    begin_at = _scan_top_level(sql, rest_at, re.compile(r"BEGIN\b", re.I))
-    if begin_at >= len(sql):
+    begin_at = find_top_level(sql, "BEGIN", rest_at)
+    if begin_at < 0:
         raise ValueError('near "BEGIN": syntax error')
     wm = re.match(r"\s*WHEN\b", sql[rest_at:begin_at], re.I)
     if wm:
@@ -7363,44 +6740,26 @@ def parse_create_trigger(sql: str) -> TriggerDef:
             raise ValueError('near "BEGIN": syntax error')
     elif sql[rest_at:begin_at].strip():
         raise ValueError('near "BEGIN": syntax error')
+    # the body: top-level ';'-separated statements up to the final END
     tail = sql[begin_at + len("BEGIN") :]
-    # strip the trailing END (+ optional ';'), then split statements on
-    # top-level semicolons — CASE..END inside statements is paren/; safe
-    tm = re.search(r"\bEND\s*;?\s*$", tail, re.I)
-    if not tm:
+    toks = tokens(tail)
+    k = len(toks) - (1 if toks and toks[-1][1] == ";" else 0)
+    if not k or toks[k - 1][0] != "word" or toks[k - 1][1].upper() != "END":
         raise ValueError('near "END": syntax error')
-    body_text = tail[: tm.start()]
-    stmts = []
-    i, last, n, in_str = 0, 0, len(body_text), None
-    while i < n:
-        ch = body_text[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-        elif ch == ";":
-            if body_text[last:i].strip():
-                stmts.append(body_text[last:i].strip())
-            last = i + 1
-        i += 1
-    if body_text[last:].strip():
-        stmts.append(body_text[last:].strip())
+    stmts = split_top_level(tail[: toks[k - 1][2]], ";")
     if not stmts:
         raise ValueError('near "END": syntax error')
-    of_cols = tuple(
-        _unquote_ident(c.strip()) for c in (m.group("ofcols") or "").split(",") if c.strip()
-    )
+    of_cols = tuple(unquote_ident(c) for c in split_top_level(m.group("ofcols") or ""))
     timing = re.sub(r"\s+", " ", (m.group("timing") or "BEFORE").strip().upper())
     return TriggerDef(
-        name=_unquote_ident(m.group("name")),
+        name=unquote_ident(m.group("name")),
         timing=timing,
         event=m.group("event").upper(),
         of_cols=of_cols,
-        table=_unquote_ident(m.group("table")),
+        table=unquote_ident(m.group("table")),
         when_sql=when_sql,
         body=tuple(stmts),
-        source_sql=sql.strip().rstrip(";").strip(),
+        source_sql=source_sql,
         temp=bool(m.group("temp")),
         if_not_exists=bool(m.group("ine")),
     )

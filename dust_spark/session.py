@@ -65,7 +65,7 @@ class _TriggerIgnore(Exception):
 _CREATE_VIEW_RE = re.compile(
     r"^\s*CREATE\s+(?P<rep>OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?VIEW\s+"
     r"(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
-    r"(?P<name>\"[^\"]+\"|`[^`]+`|\w+)\s*(?:\((?P<cols>[^)]*)\))?\s+AS\s+(?P<sel>.*)$",
+    rf"(?P<name>{dialect._IDENT})\s*(?:\((?P<cols>[^)]*)\))?\s+AS\s+(?P<sel>.*)$",
     re.S | re.I,
 )
 
@@ -80,26 +80,15 @@ def bind_params(sql: str, params: list[Any]) -> str:
     if not params:
         return sql
     sql, params = dialect.normalize_numbered_params(sql, params)
-    out: list[str] = []
     it = iter(params)
-    in_str: str | None = None
-    for ch in sql:
-        if in_str:
-            out.append(ch)
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-            out.append(ch)
-        elif ch == "?":
-            try:
-                v = next(it)
-            except StopIteration:
-                raise DustError("not enough parameters for statement") from None
-            out.append(_sql_literal(v))
-        else:
-            out.append(ch)
-    return "".join(out)
+
+    def bind(_m) -> str:
+        try:
+            return _sql_literal(next(it))
+        except StopIteration:
+            raise DustError("not enough parameters for statement") from None
+
+    return dialect._map_outside_strings(sql, lambda seg: re.sub(r"\?", bind, seg))
 
 
 def _sqlite_truthy(v: Any) -> bool:
@@ -314,9 +303,10 @@ class DustSession:
         for stmt in req.statements:
             if stmt.sql == "":  # skipped, no Response (db/src/db.rs:170-172)
                 continue
-            kind = statement_kind(stmt.sql)
+            code = dialect.blank_comments(stmt.sql)
+            kind = statement_kind(code)
             sp = (
-                dialect.parse_savepoint_stmt(stmt.sql)
+                dialect.parse_savepoint_stmt(code)
                 if kind in ("SAVEPOINT", "RELEASE", "ROLLBACK")
                 else None
             )
@@ -487,9 +477,10 @@ class DustSession:
         for stmt in req.statements:
             if stmt.sql == "":
                 continue
-            kind = statement_kind(stmt.sql)
+            code = dialect.blank_comments(stmt.sql)
+            kind = statement_kind(code)
             if kind == "PRAGMA":
-                results.append(self._pragma_query(stmt.sql))
+                results.append(self._pragma_query(code))
             elif kind in dialect.WRITE_KINDS or kind in ("CREATE_TABLE", "CREATE_INDEX", "CREATE_VIEW", "ATTACH", "DETACH"):
                 # rusqlite happily runs DDL/DML through prepare/query_map
                 # (exercised at db/src/db.rs:694,737) → empty result set,
@@ -544,7 +535,7 @@ class DustSession:
                 # SQLite's per-row dynamic typing (r11 — the one shape
                 # where Spark's static column types change the ROW
                 # COUNT: SELECT 1 UNION SELECT '1' is two rows)
-                bound = (
+                bound = dialect.blank_comments(
                     bind_params(stmt.sql, list(stmt.parameters))
                     if stmt.parameters
                     else stmt.sql
@@ -727,7 +718,7 @@ class DustSession:
             lines = [ln for ln in f if ln.strip()]
         for i, line in enumerate(lines):
             doc = json.loads(line)
-            kind = statement_kind(doc["sql"])
+            kind = statement_kind(dialect.blank_comments(doc["sql"]))
             pre_snapshot = doc.get("seq", i + 1) <= snapshot_seq
             if pre_snapshot and kind not in ("ATTACH", "DETACH"):
                 continue  # data already in the manifest snapshot
@@ -750,20 +741,26 @@ class DustSession:
 
     def _apply(self, overlay: Overlay, stmt: Statement) -> Response:
         raw = bind_params(stmt.sql, list(stmt.parameters or []))
-        sql = dialect.rewrite_sqlite_fns(dialect.escape_raw_literals(raw))
-        kind = statement_kind(sql)
+        sql = dialect.rewrite_attached_names(
+            dialect.rewrite_sqlite_fns(dialect.escape_raw_literals(raw)),
+            self._attached_prefixes(),
+        )
+        # every statement parser reads ``code``, where comments are
+        # spaces; CREATE TABLE / VIEW / TRIGGER also get the text as
+        # written (sqlite_master.sql, CHECK labels, view column names)
+        code = dialect.blank_comments(sql)
+        kind = statement_kind(code)
         if kind in ("INSERT", "REPLACE", "UPDATE", "DELETE") and not self._capture_returning:
-            _core, _ret = dialect.strip_returning(sql)
+            _core, _ret = dialect.strip_returning(code)
             if _ret:
                 # rusqlite: execute() refuses row-returning statements
                 raise DustError("Execute returned results - did you mean to call query?")
         if kind == "ATTACH":
-            return self._attach(sql)
+            return self._attach(code)
         if kind == "DETACH":
-            return self._detach(sql)
-        sql = dialect.rewrite_attached_names(sql, self._attached_prefixes())
+            return self._detach(code)
         if self.deterministic_guard and kind in ("INSERT", "UPDATE", "DELETE", "REPLACE"):
-            reason = dialect.nondeterministic_reason(sql)
+            reason = dialect.nondeterministic_reason(code)
             if reason:
                 raise DustError(reason)
         # legal SQLite surface the engine deliberately excludes — reject
@@ -786,29 +783,29 @@ class DustSession:
                 # schema cookie bumps on every DDL statement (SQLite's
                 # schema_version behavior; bump only on success)
                 if kind == "CREATE_TABLE":
-                    r = self._create_table(overlay, sql)
+                    r = self._create_table(overlay, code, sql)
                 elif kind == "CREATE_INDEX":
                     r = self._ok()  # accepted & ignored (SURVEY §2 B10)
                 elif kind == "CREATE_VIEW":
-                    r = self._create_view(sql)
+                    r = self._create_view(code, sql)
                 elif kind == "DROP":
-                    r = self._drop_table(overlay, sql)
+                    r = self._drop_table(overlay, code)
                 else:
-                    r = self._alter_table(overlay, sql)
+                    r = self._alter_table(overlay, code)
                 self._schema_version += 1
                 return r
             if kind == "PRAGMA":
-                return self._pragma_exec(sql)
+                return self._pragma_exec(code)
             if kind in ("VACUUM", "ANALYZE", "REINDEX"):
                 if kind == "VACUUM" and self._explicit_tx is not None:
                     raise DustError("cannot VACUUM from within a transaction")
                 return self._ok()  # maintenance statements: accepted no-ops
             if kind in ("INSERT", "REPLACE"):
-                return self._insert(overlay, sql)
+                return self._insert(overlay, code)
             if kind == "UPDATE":
-                return self._update(overlay, sql)
+                return self._dquote_fallback(overlay, code, self._update)
             if kind == "DELETE":
-                return self._delete(overlay, sql)
+                return self._dquote_fallback(overlay, code, self._delete)
             # SELECT & co through the execute path: SQLite's conn.execute
             # rejects row-returning statements
             raise DustError("Execute returned results - did you mean to call query?")
@@ -822,8 +819,8 @@ class DustSession:
 
     # -- DDL ------------------------------------------------------------
 
-    def _create_table(self, overlay: Overlay, sql: str) -> Response:
-        ctas = dialect.parse_ctas(sql)
+    def _create_table(self, overlay: Overlay, code: str, sql: str) -> Response:
+        ctas = dialect.parse_ctas(code)
         if ctas is not None:
             return self._create_table_as(overlay, *ctas)
         try:
@@ -881,12 +878,13 @@ class DustSession:
         overlay.put(name, st)
         return self._ok()
 
-    def _create_view(self, sql: str) -> Response:
+    def _create_view(self, code: str, sql: str) -> Response:
         """CREATE [TEMP] VIEW [IF NOT EXISTS] name [(cols)] AS select —
         duplicate names error like SQLite ('view v already exists' /
         'table t already exists'); an explicit column list renames the
-        select's output positionally."""
-        m = _CREATE_VIEW_RE.match(sql)
+        select's output positionally. ``code`` is ``sql`` with its
+        comments blanked; the select keeps them."""
+        m = _CREATE_VIEW_RE.match(code)
         if not m:
             raise DustError(f'near "{sql.strip()[:40]}": syntax error')
         name = dialect.unquote_ident(m.group("name")).lower()
@@ -896,7 +894,7 @@ class DustSession:
             raise DustError(f"view {name} already exists")
         if name in self.catalog.tables:
             raise DustError(f"table {name} already exists")
-        sel = m.group("sel").strip().rstrip(";")
+        sel = sql[m.start("sel") :].strip().rstrip(";")
         if m.group("cols"):
             # positional rename: wrap with an aliasing projection
             inner = sel
@@ -1120,7 +1118,7 @@ class DustSession:
         aliases resolve through the rowid column); a reference to the
         missing side raises SQLite's runtime error string."""
         ref_re = re.compile(
-            r'\b(new|old)\s*\.\s*("[^"]+"|`[^`]+`|\[[^\]]+\]|[A-Za-z_]\w*)', re.I
+            rf"\b(new|old)\s*\.\s*({dialect._IDENT})", re.I
         )
 
         def repl(m):
@@ -1588,7 +1586,7 @@ class DustSession:
                 # (quoted) table name
                 tdef.source_sql = re.sub(
                     r"(CREATE\s+(?:TEMP(?:ORARY)?\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?)"
-                    r"(\"[^\"]+\"|`[^`]+`|\[[^\]]+\]|\w+)",
+                    rf"({dialect._IDENT})",
                     lambda m: m.group(1) + f'"{new}"',
                     tdef.source_sql,
                     count=1,
@@ -3480,25 +3478,8 @@ class DustSession:
             held.append(text)
             return f"__dustph{nonce}x{len(held) - 1}__"
 
-        # 1. pull string literals / double-quoted identifiers out
-        buf: list[str] = []
-        cur: list[str] = []
-        in_str: str | None = None
-        for ch in expr:
-            if in_str:
-                cur.append(ch)
-                if ch == in_str:
-                    buf.append(hold("".join(cur)))
-                    cur = []
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-                cur.append(ch)
-            else:
-                buf.append(ch)
-        if cur:  # unterminated string: keep verbatim, opaque
-            buf.append(hold("".join(cur)))
-        text = "".join(buf)
+        # 1. pull literals, "quoted" identifiers and comments out
+        text = dialect._map_tokens(expr, dialect._OPAQUE, lambda t: t if t[0] == "`" else hold(t))
 
         def ref_sub(row: dict):
             def sub(m):
@@ -3589,6 +3570,26 @@ class DustSession:
         finally:
             cur = overlay.get(name) or st
             cur.visible_df().createOrReplaceTempView(view)
+
+    def _dquote_fallback(self, overlay: Overlay, code: str, run) -> Response:
+        """Run the UPDATE / DELETE ``code`` with every "x" read as an
+        identifier, as the read path reads it (:meth:`_sql`). SQLite's
+        fallback for a double-quoted token that names no column in scope
+        is a string literal: when Spark cannot resolve such a token, the
+        statement's work is undone and it re-runs with the token as 'x'
+        (sqlite3-probed: ``SET v = "nocol"`` stores 'nocol')."""
+        snap = overlay.snapshot()
+        while True:
+            try:
+                return run(overlay, dialect.dquote_idents_to_backticks(code))
+            except DustError:
+                raise
+            except Exception as e:
+                alt = dialect.dquote_to_literal(code, _unresolved_name(str(e)))
+                if alt == code:
+                    raise
+                overlay.restore_snapshot(snap)
+                code = alt
 
     def _update(self, overlay: Overlay, sql: str) -> Response:
         up = dialect.parse_update(sql)
@@ -3964,7 +3965,7 @@ class DustSession:
         from_clause = up.from_sql
         pos_expr = "monotonically_increasing_id()"
         m = re.match(
-            r'^\s*("[^"]+"|`[^`]+`|\[[^\]]+\]|\w+)\s*(?:AS\s+(\w+)|(\w+))?\s*;?\s*$',
+            rf"^\s*({dialect._IDENT})\s*(?:AS\s+(\w+)|(\w+))?\s*;?\s*$",
             up.from_sql,
             re.I,
         )
@@ -4472,11 +4473,13 @@ class DustSession:
 
     @staticmethod
     def _refs(expr: str, col: str) -> bool:
-        """Whether SQL text ``expr`` names column ``col`` (string
-        literals aside) — the reference test SQLite applies before
+        """Whether SQL text ``expr`` names column ``col`` (a name token,
+        quoted or not) — the reference test SQLite applies before
         re-checking a CHECK or generated column on UPDATE."""
-        bare = re.sub(r"'(?:[^']|'')*'", "''", expr)
-        return re.search(rf"(?<![\w$]){re.escape(col)}(?![\w$])", bare, re.I) is not None
+        return any(
+            t[0] in ("word", "qid") and dialect.unquote_ident(t[1]).lower() == col.lower()
+            for t in dialect.tokens(expr)
+        )
 
     @staticmethod
     def _unique_order(tdef: TableDef) -> list[list[str]]:
@@ -4865,12 +4868,9 @@ class DustSession:
                         # token that resolves to no column is a string
                         # literal — swap that ONE token and loop (the
                         # reference's own tests use "..." strings)
-                        nm = re.search(r"name `((?:[^`]|``)+)`(?:\.`((?:[^`]|``)+)`)*", msg)
-                        parts = re.findall(r"`((?:[^`]|``)+)`", msg.split("cannot be resolved")[0]) if nm else []
-                        token = ".".join(parts) if parts else None
-                        if token and f'"{token}"' in dq_source:
-                            lit = "'" + token.replace("'", "''") + "'"
-                            dq_source = dq_source.replace(f'"{token}"', lit)
+                        alt = dialect.dquote_to_literal(dq_source, _unresolved_name(msg))
+                        if alt != dq_source:
+                            dq_source = alt
                             sql = dialect.dquote_idents_to_backticks(dq_source)
                             continue
                         break
@@ -5257,26 +5257,15 @@ class DustSession:
 
     def _pragma_tvf_sub(self, sql: str, sub) -> str:
         # the argument is inside quotes, so a plain outside-strings map
-        # would split the call — scan manually: find call heads outside
-        # string literals, replace the whole call (incl. quoted arg)
-        out = []
-        i, n = 0, len(sql)
-        while i < n:
-            ch = sql[i]
-            if ch in ("'", '\"'):
-                j = i + 1
-                while j < n and sql[j] != ch:
-                    j += 1
-                out.append(sql[i : j + 1])
-                i = j + 1
-                continue
-            m = self._PRAGMA_TVF_RE.match(sql, i)
+        # would split the call: replace each whole call (quoted arg
+        # included) whose head is a code token
+        out, pos = [], 0
+        for kind, _, s, *_ in dialect.tokens(sql):
+            m = self._PRAGMA_TVF_RE.match(sql, s) if kind == "word" and s >= pos else None
             if m:
-                out.append(sub(m))
-                i = m.end()
-                continue
-            out.append(ch)
-            i += 1
+                out.append(sql[pos:s] + sub(m))
+                pos = m.end()
+        out.append(sql[pos:])
         return "".join(out)
 
     def _register_sqlite_sequence(self) -> None:
@@ -5318,39 +5307,35 @@ class DustSession:
         sp = dialect.split_with_prefix(sql)
         if sp:
             sql = sp[1]  # CTE names don't shape the output columns
-        m = re.match(r"^\s*SELECT\s+(?:DISTINCT\s+)?(.*)$", sql, re.S | re.I)
+        m = re.match(r"^\s*SELECT\s+(?:DISTINCT\s+)?", dialect.blank_comments(sql), re.I)
         if not m:
             return None
-        rest = m.group(1)
-        # cut at top-level FROM
-        depth = 0
-        in_str: str | None = None
-        cut = len(rest)
-        for i, ch in enumerate(rest):
-            if in_str:
-                if ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and rest[i : i + 5].upper() == "FROM " and (i == 0 or rest[i - 1].isspace()):
-                cut = i
-                break
-        items = dialect.split_top_level(rest[:cut])
+        # the select items: top-level ','-separated tokens up to FROM. An
+        # unaliased expression is named by its source text up to the
+        # next token, comments included, as SQLite does
+        rest = sql[m.end() :]
+        items, cur = [], []
+        for t in dialect.tokens(rest) + ((None, None, len(rest), None, 0, None),):
+            if t[4] == 0 and (t[0] is None or t[1] in (",", ";") or t[1].upper() == "FROM"):
+                if cur:
+                    items.append((dialect._span(rest, cur), rest[cur[0][2] : t[2]].rstrip()))
+                if t[1] != ",":
+                    break
+                cur = []
+            else:
+                cur.append(t)
         if not items:
             return None
         names: list[str] = []
-        for item in items:
-            am = re.search(r"\s+AS\s+(\"[^\"]+\"|`[^`]+`|\w+)\s*$", item, re.I)
+        for item, text in items:
+            am = re.search(rf"\s+AS\s+({dialect._IDENT})\s*$", item, re.I)
             if am:
                 names.append(dialect.unquote_ident(am.group(1)))
             elif item == "*" or item.endswith(".*"):
                 names.append("*")
-            elif re.fullmatch(r"[A-Za-z_][\w]*(\.[A-Za-z_][\w]*)*", item):
-                last = item.split(".")[-1]
+            elif re.fullmatch(r"(?:`[^`]+`|\[[^\]]+\]|[A-Za-z_]\w*)(?:\s*\.\s*(?:`[^`]+`|\[[^\]]+\]|[A-Za-z_]\w*))*", item):
+                # a bare column ref ([x] and `x` are names too): its name
+                last = dialect.unquote_ident(dialect.tokens(item)[-1][1])
                 rtd = self._rowid_tdef
                 if (
                     rtd is not None
@@ -5362,7 +5347,7 @@ class DustSession:
                 else:
                     names.append(last)
             else:
-                names.append(item)
+                names.append(text)
         n_stars = names.count("*")
         if n_stars > 1:
             return None
@@ -5411,6 +5396,16 @@ class DustSession:
 _SQL_KEYWORDS = frozenset(
     "from where group order select limit having join on and or not as by".split()
 )
+
+
+def _unresolved_name(msg: str) -> str | None:
+    """The (dotted) column name of a Spark UNRESOLVED_COLUMN error."""
+    if "UNRESOLVED_COLUMN" not in msg:
+        return None
+    if not re.search(r"name `((?:[^`]|``)+)`", msg):
+        return None
+    parts = re.findall(r"`((?:[^`]|``)+)`", msg.split("cannot be resolved")[0])
+    return ".".join(parts) or None
 
 
 def _clean_error(e: Exception) -> str:
