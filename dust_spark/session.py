@@ -40,6 +40,7 @@ from contextlib import contextmanager
 from functools import reduce
 from typing import Any
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -203,6 +204,8 @@ class DustSession:
         # approximation — same philosophy as the 100k-edge union-find
         # gate in graph.py
         self._SEQ_EXACT_ROWS = 10_000
+        # (expression, schema) -> its "x" resolution (_dq_resolve)
+        self._dq_memo: dict = {}
         self._recursive_triggers = False
         self._attached: dict[str, Catalog] = {}
         self._last_insert_id = 0
@@ -802,10 +805,13 @@ class DustSession:
                 return self._ok()  # maintenance statements: accepted no-ops
             if kind in ("INSERT", "REPLACE"):
                 return self._insert(overlay, code)
-            if kind == "UPDATE":
-                return self._dquote_fallback(overlay, code, self._update)
-            if kind == "DELETE":
-                return self._dquote_fallback(overlay, code, self._delete)
+            if kind in ("UPDATE", "DELETE"):
+                # an UPDATE / DELETE reads every "x" as an identifier, as the
+                # read path does; a retry with the token as 'x' re-runs it
+                # from the statement's snapshot
+                run = self._update if kind == "UPDATE" else self._delete
+                snap = overlay.snapshot()
+                return _dquote_retry(code, lambda c: run(overlay, c), lambda: overlay.restore_snapshot(snap))
             # SELECT & co through the execute path: SQLite's conn.execute
             # rejects row-returning statements
             raise DustError("Execute returned results - did you mean to call query?")
@@ -842,6 +848,29 @@ class DustSession:
         overlay.put(tdef.name, st)
         return self._ok()
 
+    def _dq_resolve(self, tdef: TableDef, expr: str) -> str:
+        """A CHECK or generated-column expression of ``tdef`` with each
+        "x" read as SQLite reads it: an identifier where it names a column
+        of the table, else the string 'x' (``_dquote_retry`` over analysis
+        of the table's empty frame). Decided once per text and schema;
+        ``tdef`` keeps the text as written, for CHECK labels, sqlite_master
+        and RENAME COLUMN."""
+        if '"' not in expr:
+            return expr
+        key = (expr, tdef.schema.simpleString())
+        if key not in self._dq_memo:
+            df = self.spark.createDataFrame([], tdef.schema)
+
+            def attempt(code: str) -> str:
+                df.select(F.expr(self._dml_condition(dialect.rewrite_sqlite_fns(code), tdef)))
+                return code
+
+            try:
+                self._dq_memo[key] = _dquote_retry(expr, attempt)
+            except Exception:  # noqa: BLE001 — the statement reports it
+                self._dq_memo[key] = expr
+        return self._dq_memo[key]
+
     def _create_table_as(self, overlay: Overlay, name: str, if_not_exists: bool, sel: str) -> Response:
         """CREATE TABLE ... AS SELECT (implied SQLite surface): schema
         inferred from the SELECT, data snapshotted at creation; like
@@ -861,11 +890,8 @@ class DustSession:
         # CTAS results are rowid tables in SQLite: assign a hidden
         # sequential rowid (select order, partition-offset indexed — no
         # single-task funnel for large results)
-        df = (
-            self._with_insertion_index(df)
-            .withColumn(dialect.HIDDEN_ROWID, F.col("__rn").cast("long"))
-            .drop("__rn")
-        )
+        df, n = self._with_insertion_index(df)
+        df = df.withColumn(dialect.HIDDEN_ROWID, F.col("__rn").cast("long")).drop("__rn")
         tdef = TableDef(
             name=name,
             schema=df.schema,
@@ -873,7 +899,7 @@ class DustSession:
             rowid_column=dialect.HIDDEN_ROWID,
         )
         st = overlay.catalog.materialize(
-            name, TableState(tdef=tdef, df=df, high_water=df.count(), version=0)
+            name, TableState(tdef=tdef, df=df, high_water=n, version=0)
         )
         overlay.put(name, st)
         return self._ok()
@@ -1562,10 +1588,11 @@ class DustSession:
             tdef.foreign_keys.extend(sub.foreign_keys)
             tdef.source_sql = None  # sqlite_master sql re-synthesizes
             if col in sub.generated:
+                tdef.generated[col] = sub.generated[col]
+            if col in sub.generated:
                 # ADD COLUMN ... GENERATED ALWAYS AS: compute for
                 # existing rows (SQLite allows VIRTUAL adds)
-                tdef.generated[col] = sub.generated[col]
-                fill = F.expr(dialect.rewrite_sqlite_fns(sub.generated[col]))
+                fill = F.expr(dialect.rewrite_sqlite_fns(self._dq_resolve(tdef, tdef.generated[col])))
             else:
                 fill = (
                     F.expr(dialect.rewrite_sqlite_fns(default_sql))
@@ -1635,9 +1662,10 @@ class DustSession:
             for fk in tdef.foreign_keys:
                 fk.columns = tuple(ren(c) for c in fk.columns)
             # constraint expressions follow the rename (SQLite's schema
-            # rewrite); word-boundary substitution over the expr text
+            # rewrite); word-boundary substitution over the expr text, and
+            # over an unnamed check's label (its text, dequoted)
             tdef.checks = [
-                (word.sub(new, lbl) if lbl == expr else lbl, word.sub(new, expr))
+                (word.sub(new, lbl) if lbl in (expr, dialect._check_label(expr)) else lbl, word.sub(new, expr))
                 for lbl, expr in tdef.checks
             ]
             tdef.check_origins = [
@@ -2217,23 +2245,22 @@ class DustSession:
             # literal batches are driver-sized: the global window is fine
             w = Window.orderBy(F.monotonically_increasing_id())
             src = src.withColumn("__rn", F.row_number().over(w))
+            n_src = len(dialect.split_top_level(src_sql[len("VALUES"):]))
         else:
             # INSERT...SELECT can be billions of rows: per-partition
             # row_number + collected partition offsets keeps the same
             # (partition, row) total order as a global sort on
             # monotonically_increasing_id without funnelling the batch
             # through one task
-            src = self._with_insertion_index(src)
+            src, n_src = self._with_insertion_index(src)
         # exact sequential rowid/upsert semantics apply to VALUES batches
         # and to SMALL SELECT sources (r10, closing the last documented
         # rowid approximation): below the gate the source behaves exactly
-        # like a literal batch — sequential auto-id closed form, no burn
-        # on conflicting upsert rows via the replay. Above it, bulk
-        # INSERT...SELECT keeps the parallel monotone approximation (a
-        # sequential replay would collect billions of rows).
-        exact_seq = values_src or (
-            getattr(self, "_last_insertion_count", 0) <= self._SEQ_EXACT_ROWS
-        )
+        # like a literal batch — sequential auto-id closed form and the
+        # sequential replay where row order decides the data. Above it,
+        # bulk INSERT...SELECT keeps the parallel monotone approximation
+        # (a sequential replay would collect billions of rows).
+        exact_seq = values_src or n_src <= self._SEQ_EXACT_ROWS
 
         projected = []
         src_types = {fl.name: fl.dataType for fl in src.schema.fields}
@@ -2256,1202 +2283,529 @@ class DustSession:
         new_rows = src.select(*projected, F.col("__rn"))
         new_rows = self._apply_generated(tdef, new_rows)
 
-        # trigger-image capture points (only when this table has any
-        # trigger): OR IGNORE fires BEFORE INSERT for EVERY attempted
-        # row — even NOT NULL/CHECK/unique violators it then drops —
-        # and REPLACE fires BI+AI for every batch row including
-        # in-batch losers (sqlite3-probed r7)
-        has_trig = any(
-            t["table"] == ins.table.lower() for t in self.catalog.triggers.values()
-        )
-        bi_pre_ignore = new_rows if (has_trig and ins.or_ignore) else None
-
-        if ins.or_ignore:
-            # OR IGNORE silently drops rows violating NOT NULL, CHECK
-            # or uniqueness BEFORE the auto-rowid assignment below, so
-            # skipped rows don't burn ids — matching SQLite's id
-            # sequence (sqlite3-probed). FK violations still ERROR:
-            # SQLite's conflict algorithms do not apply to FOREIGN KEY
-            # constraints.
-            for c_ in sorted(tdef.not_null):
-                if c_ != tdef.rowid_column:  # auto-assigned below
-                    new_rows = new_rows.filter(F.col(c_).isNotNull())
-            for _lbl, expr in tdef.checks:
-                new_rows = new_rows.filter(F.expr(self._check_pass_sql(expr, tdef)))
-            if ins.on_conflict is None:
-                # non-rowid uniqueness: first batch row wins, rows
-                # clashing with existing data drop (NULL keys exempt —
-                # they never conflict, and null join keys never match)
-                for colset in tdef.unique:
-                    if colset == [tdef.rowid_column]:
-                        continue
-                    nt = None
-                    for c_ in colset:
-                        cnd = F.col(c_).isNull()
-                        nt = cnd if nt is None else (nt | cnd)
-                    w_ig = Window.partitionBy(*colset).orderBy("__rn")
-                    new_rows = (
-                        new_rows.withColumn(
-                            "__rk",
-                            F.when(nt, F.lit(1)).otherwise(F.row_number().over(w_ig)),
-                        )
-                        .filter(F.col("__rk") == 1)
-                        .drop("__rk")
-                        .join(
-                            st.df.select(*colset).na.drop().distinct(),
-                            list(colset),
-                            "left_anti",
-                        )
-                    )
-
-        if has_trig or (exact_seq and ins.on_conflict is not None and tdef.rowid_column):
-            # SQLite's BEFORE INSERT NEW.<rowid> is -1 for rows whose
-            # rowid is auto-assigned (sqlite3-probed); remember which.
-            # VALUES upserts on rowid tables need the marker too: auto
-            # ids must not burn on conflicting rows (sqlite allocates
-            # only on successful insert — r8 ADVICE), which the upsert
-            # replay simulates from this flag
-            new_rows = new_rows.withColumn(
-                "__auto",
-                F.col(tdef.rowid_column).isNull()
-                if tdef.rowid_column is not None
-                else F.lit(False),
-            )
-        if tdef.rowid_column is not None:
-            f = next(fl for fl in tdef.schema.fields if fl.name == tdef.rowid_column)
-            c = F.col(tdef.rowid_column)
-            if not exact_seq:
-                # bulk INSERT...SELECT above the gate keeps the parallel
-                # partition-offset assignment (a sequential scan would
-                # serialize billions of rows through one task);
-                # explicit/auto mixing there takes the monotone
-                # approximation
-                c = F.coalesce(c, F.lit(st.high_water) + F.col("__rn"))
-            else:
-                c = self._seq_rowids(c, st.high_water)
-            new_rows = new_rows.withColumn(tdef.rowid_column, c.cast(f.dataType))
-            if ins.or_ignore and ins.on_conflict is None:
-                # explicit-rowid conflicts drop under OR IGNORE (auto
-                # ids can never conflict; conflicting explicit ids are
-                # <= high_water so dropping them cannot shift later auto
-                # assignments — SQLite id-sequence parity holds)
-                rc = tdef.rowid_column
-                w_ig = Window.partitionBy(rc).orderBy("__rn")
-                new_rows = (
-                    new_rows.withColumn("__rk", F.row_number().over(w_ig))
-                    .filter(F.col("__rk") == 1)
-                    .drop("__rk")
-                    .join(st.df.select(rc).distinct(), [rc], "left_anti")
-                )
-
-        existing = st.df
-        all_rows_pre_replace = new_rows if (has_trig and ins.or_replace) else None
-        replace_prefired = False
-        if ins.or_replace:
-            # SQLite REPLACE semantics: conflicting existing rows are
-            # deleted; within the batch the LAST conflicting row wins
-            replace_sets = [list(u) for u in tdef.unique]
-            if tdef.implicit_rowid and tdef.rowid_column in cols:
-                # explicit rowid on an implicit table conflicts by rowid
-                replace_sets.insert(0, [tdef.rowid_column])
-            if has_trig:
-                rp_b = self._table_triggers(ins.table, "INSERT", "BEFORE")
-                rp_a = self._table_triggers(ins.table, "INSERT", "AFTER")
-                rp_db = rp_da = []
-                if self._recursive_triggers:
-                    rp_db = self._table_triggers(ins.table, "DELETE", "BEFORE")
-                    rp_da = self._table_triggers(ins.table, "DELETE", "AFTER")
-                if (rp_b and self._may_ignore(rp_b)) or (
-                    rp_db and self._may_ignore(rp_db)
-                ):
-                    # may-RAISE(IGNORE) REPLACE: the whole trigger
-                    # replay runs sequentially BEFORE the merge so
-                    # ignored rows can be skipped entirely (r8 — see
-                    # _fire_insert_ignorable)
-                    new_rows = new_rows.localCheckpoint(eager=True)
-                    seq = []
-                    for r in new_rows.orderBy("__rn").collect():
-                        d = r.asDict()
-                        rn_ = d.pop("__rn", None)
-                        auto_ = d.pop("__auto", False)
-                        seq.append((rn_, auto_, d))
-                    ign_rns, id_map = self._fire_insert_ignorable(
-                        overlay, tdef, st, seq, rp_b, rp_a, rp_db, rp_da, replace_sets
-                    )
-                    if ign_rns:
-                        new_rows = new_rows.filter(
-                            ~F.col("__rn").isin(list(ign_rns))
-                        )
-                    new_rows = self._override_rowids(
-                        new_rows, tdef, id_map
-                    ).localCheckpoint(eager=True)
-                    replace_prefired = True
-            for colset in replace_sets:
-                w2 = Window.partitionBy(*colset).orderBy(F.col("__rn").desc())
-                new_rows = (
-                    new_rows.withColumn("__rk", F.row_number().over(w2))
-                    .filter(F.col("__rk") == 1)
-                    .drop("__rk")
-                )
-                # a USING join moves the key columns first: restore the
-                # table's column order
-                existing = existing.join(
-                    new_rows.select(*colset).na.drop().distinct(), list(colset), "left_anti"
-                ).select(*st.df.columns)
-
-        if ins.on_conflict is not None:
-            return self._upsert(overlay, st, tdef, ins, new_rows)
-
-        trig_b = self._table_triggers(ins.table, "INSERT", "BEFORE")
-        trig_a = self._table_triggers(ins.table, "INSERT", "AFTER")
-        fired = None
-        if (trig_b or trig_a) and not replace_prefired:
-            # final row images (defaults, generated, assigned rowids) in
-            # insertion order — checkpoint so the collect and the later
-            # count/union share one materialization
-            new_rows = new_rows.localCheckpoint(eager=True)
-
-            def _images(df: DataFrame, before: bool) -> list:
-                out = []
-                for r in df.orderBy("__rn").collect():
-                    d = r.asDict()
-                    rn = d.pop("__rn", None)
-                    auto = d.pop("__auto", False)
-                    if before and tdef.rowid_column and (
-                        auto or d.get(tdef.rowid_column) is None
-                    ):
-                        # SQLite BEFORE INSERT: auto rowid reads -1
-                        # (pre-assign capture has NULL there instead)
-                        d = dict(d, **{tdef.rowid_column: -1})
-                    out.append((rn, (None, d)))
-                return out
-
-            ai_list = _images(
-                all_rows_pre_replace if all_rows_pre_replace is not None else new_rows,
-                before=False,
-            )
-            bi_rows = (
-                bi_pre_ignore
-                if bi_pre_ignore is not None
-                else (
-                    all_rows_pre_replace
-                    if all_rows_pre_replace is not None
-                    else new_rows
-                )
-            )
-            bi_list = _images(bi_rows, before=True)
-            fired = [p for _, p in ai_list]
-            # REPLACE under PRAGMA recursive_triggers=ON fires DELETE
-            # triggers for the displaced rows (sqlite3-probed; with the
-            # default OFF they are suppressed) — handled by a dedicated
-            # per-row replay below
-            del_b = del_a = []
-            if ins.or_replace and self._recursive_triggers:
-                del_b = self._table_triggers(ins.table, "DELETE", "BEFORE")
-                del_a = self._table_triggers(ins.table, "DELETE", "AFTER")
-            may_ign_b = trig_b and self._may_ignore(trig_b)
-            pre_b_done = False
-            if (
-                trig_b
-                and trig_a
-                and may_ign_b
-                and not ins.or_replace
-                and not ins.or_ignore
-                and not (del_b or del_a)
-            ):
-                # both timings + may-RAISE(IGNORE): per-row sequential
-                # replay pre-mutation — B/A interleave (was B1..Bn,
-                # A1..An), ignored rows skipped entirely, auto ids
-                # re-simulated over the survivors (r8)
-                seq = []
-                for r in new_rows.orderBy("__rn").collect():
-                    d = r.asDict()
-                    rn_ = d.pop("__rn", None)
-                    auto_ = d.pop("__auto", False)
-                    seq.append((rn_, auto_, d))
-                ign_rns, id_map = self._fire_insert_ignorable(
-                    overlay, tdef, st, seq, trig_b, trig_a, [], [], []
-                )
-                if ign_rns:
-                    new_rows = new_rows.filter(~F.col("__rn").isin(list(ign_rns)))
-                new_rows = self._override_rowids(
-                    new_rows, tdef, id_map
-                ).localCheckpoint(eager=True)
-                fired = None
-            elif trig_b and not (del_b or del_a) and (
-                not trig_a or (may_ign_b and not ins.or_replace)
-            ):
-                # single-timing fast path: phase order == SQLite's
-                # observable per-row order, and BEFORE bodies run
-                # pre-mutation (own-table writes overwritten — documented).
-                # Also taken with BOTH timings when a BEFORE trigger may
-                # RAISE(IGNORE): the ignored rows must be excluded from
-                # the batch apply, so B programs run pre-mutation for
-                # every row (B1..Bn,A1..An log order — documented).
-                pre_b_done = True
-                ign = self._fire_triggers(overlay, tdef, trig_b, [p for _, p in bi_list])
-                if ign and not ins.or_replace:
-                    # RAISE(IGNORE)d rows: not inserted, not counted,
-                    # no AFTER triggers (sqlite3-probed)
-                    bad = {bi_list[i][0] for i in ign}
-                    new_rows = new_rows.filter(~F.col("__rn").isin(list(bad)))
-                    if tdef.rowid_column is not None:
-                        # ignored rows don't consume auto ids (probed):
-                        # null the auto slots back out and assign them
-                        # again over the survivors
-                        rc = tdef.rowid_column
-                        fld = next(fl for fl in tdef.schema.fields if fl.name == rc)
-                        cnull = F.when(F.col("__auto"), F.lit(None)).otherwise(F.col(rc))
-                        new_rows = new_rows.withColumn(
-                            rc, self._seq_rowids(cnull, st.high_water).cast(fld.dataType)
-                        )
-                    new_rows = new_rows.localCheckpoint(eager=True)
-                    ai_list = _images(new_rows, before=False)
-                    fired = [p for _, p in ai_list]
-
-        # one constraint pass, with the row count and id stats folded
-        # in. Auto-assigned rowids cannot conflict, so the rowid set is
-        # checked only when the column list names it
         rc = tdef.rowid_column
-        stats = {"n": (F.lit(1), F.count)}
+        fields = [f.name for f in tdef.schema.fields]
+        action, targets, sets, where = self._conflict(tdef, ins, cols)
+        t = ins.table
+        trig = {
+            "b": self._table_triggers(t, "INSERT", "BEFORE"),
+            "a": self._table_triggers(t, "INSERT", "AFTER"),
+            "db": [],
+            "da": [],
+            "ub": [],
+            "ua": [],
+        }
+        if action == "replace" and self._recursive_triggers:
+            # REPLACE fires DELETE triggers for the rows it displaces only
+            # under PRAGMA recursive_triggers=ON (sqlite3-probed)
+            trig["db"] = self._table_triggers(t, "DELETE", "BEFORE")
+            trig["da"] = self._table_triggers(t, "DELETE", "AFTER")
+        if action == "update":
+            trig["ub"] = self._table_triggers(t, "UPDATE", "BEFORE", list(sets))
+            trig["ua"] = self._table_triggers(t, "UPDATE", "AFTER", list(sets))
         if rc:
-            stats["mx"] = (F.col(rc), F.max)
-            stats["last"] = (F.struct(F.col("__rn"), F.col(rc)), F.max)
-        res = self._check_constraints(
-            overlay,
-            tdef,
-            new_rows,
-            changed=F.lit(True),
-            order=F.col("__rn"),
-            rest=existing,
-            ipk=rc in cols,
-            stats=stats,
-            broadcast=exact_seq,
-        )
-        n = int(res["n"])
-        if n == 0:
-            return self._ok(0)
-        if rc:
-            high_water = max(st.high_water, int(res["mx"]))
-            last_id = int(res["last"][rc])
-        else:
-            high_water = st.high_water + n
-            last_id = high_water
+            # BEFORE INSERT reads an auto-assigned rowid as -1, and SQLite
+            # allocates max(rowid)+1 only for a row that lands: remember
+            # which ids are auto
+            new_rows = new_rows.withColumn("__auto", F.col(rc).isNull())
+        if ins.or_ignore:
+            # OR IGNORE skips a row failing NOT NULL or CHECK, after its
+            # BEFORE triggers. FK violations still ERROR: SQLite's conflict
+            # algorithms do not apply to FOREIGN KEY constraints
+            ok = F.lit(True)
+            for c_ in sorted(tdef.not_null - {rc}):
+                ok = ok & F.col(c_).isNotNull()
+            for _lbl, expr in tdef.checks:
+                ok = ok & F.expr(self._check_pass_sql(expr, tdef))
+            new_rows = new_rows.withColumn("__ok", ok)
+        if rc and (action == "replace" or not exact_seq):
+            # REPLACE allocates a row's id before it resolves conflicts (a
+            # row that a later one displaces has taken its id); above the
+            # exactness gate ids take the parallel approximation up front
+            new_rows = self._assign_rowids(st, new_rows, exact_seq)
+        cand = new_rows.filter(F.col("__ok")) if ins.or_ignore else new_rows
 
+        # SQLite's row loop decides the data (the sequential replay runs
+        # before the write) when a BEFORE trigger may RAISE(IGNORE), or
+        # when the outcome depends on row order: an in-batch key group
+        # under DO UPDATE or under two or more key sets, an auto id a
+        # later explicit id of the batch may meet, or a DO UPDATE arm
+        # that changes a key a later row may meet. One Spark action looks
+        # for the groups and ids; a single-row batch has neither
+        replay = any(self._may_ignore(trig[k]) for k in ("b", "db", "ub") if trig[k])
+        groups = targets if action == "update" or (exact_seq and len(targets) > 1) else []
+        ids = exact_seq and bool(rc) and [rc] in targets and action != "replace"
+        if not replay and n_src > 1 and (groups or ids):
+            replay = self._batch_group(cand, groups, rc if ids else None, st.high_water)
+        existing = st.df
+        if not replay:
+            if action is None:
+                rows, rest = cand.withColumn("__w", F.lit(1)), existing
+            else:
+                rows, rest = self._resolve_keys(
+                    cand, existing, targets, last=action == "replace", in_batch=n_src > 1 and not groups
+                )
+            if rc and exact_seq and action != "replace":
+                rows = self._assign_rowids(st, rows, True, lands=F.col("__w") == 1)
+            rows = rows.select(*fields, "__rn", "__w", F.lit(1).alias("__new"))
+            if action == "update":
+                moves = [c for c in dict.fromkeys((*targets[0], rc)) if c in sets] if exact_seq and n_src > 1 else []
+                updated, rest, replay = self._upsert(tdef, ins, rows, existing, targets[0], sets, where, moves)
+                rows = rows.unionByName(updated)
+        fires = any(trig.values())
+        batch = []
+        if replay or fires:
+            batch = [
+                (r["__rn"], bool(rc) and r["__auto"], not ins.or_ignore or r["__ok"], {c: r[c] for c in fields})
+                for r in new_rows.orderBy("__rn").collect()
+            ]
+
+        def run():
+            return self._insert_replay(overlay, st, ins, action, targets, sets, where, trig, batch)
+
+        after = changes = None
+        if replay:
+            images, gone, changes = run()
+            rows = self._images_frame(tdef, images)
+            rest = existing
+            if gone:
+                idk = [rc] if rc else list(tdef.primary_key)
+                gone_df = self.spark.createDataFrame(
+                    list(gone), T.StructType([tdef.schema[c] for c in idk])
+                )
+                rest = existing.join(gone_df, idk, "left_anti").select(*existing.columns)
+        elif fires and not (trig["a"] or trig["da"] or trig["ua"]):
+            run()  # BEFORE triggers alone fire before the write
+        elif fires:
+            # with AFTER triggers both timings fire after the write,
+            # interleaved per row (B1, A1, B2, ...) as SQLite logs them
+            after = run
+
+        # the write: ``rows`` holds each proposed batch row (``__w`` = 1
+        # when it lands) and each row a DO UPDATE arm rewrote (``__new`` =
+        # 0); ``rest`` is the rest of the table. One constraint pass checks
+        # NOT NULL and CHECK on every proposed row (SQLite checks them
+        # before it looks for a conflict) and keys and foreign keys on the
+        # landing ones, with the change count (or the replay's), the
+        # high-water and last_insert_rowid folded in
+        w = F.col("__w") == 1
+        new = w & (F.col("__new") == 1)
+        stats = {"k": (F.when(new, F.lit(1)), F.count)}
+        if changes is None:
+            # REPLACE counts every row it inserts, the ones a later row
+            # displaces included (sqlite3-probed)
+            stats["n"] = (F.when(F.lit(True) if action == "replace" else w, F.lit(1)), F.count)
+        if rc:
+            stats["mx"] = (F.when(new, F.col(rc)), F.max)
+            stats["last"] = (F.when(new, F.struct(F.col("__rn"), F.col(rc))), F.max)
         if self._capture_returning:
             # checkpoint once, reuse for BOTH the returning capture and
             # the table union — no double evaluation of the source plan
-            new_rows = new_rows.localCheckpoint(eager=True)
-            self._returning_df = new_rows.orderBy("__rn").drop("__rn", "__auto")
-            self._returning_table = ins.table
-        out_df = existing.unionByName(new_rows.drop("__rn", "__auto"))
-        new_st = overlay.catalog.materialize(
-            ins.table, TableState(tdef, out_df, high_water, st.version + 1)
+            rows = rows.localCheckpoint(eager=True)
+            self._returning_df = rows.filter(w).orderBy("__rn").select(*fields)
+            self._returning_table = t
+        if action == "replace":
+            # REPLACE deletes the rows it displaces before it inserts:
+            # their ON DELETE actions see the table without them, so a
+            # REPLACE that puts a key back still cascades
+            rest = self._check_child_fks(overlay, t, rest, dml="delete")
+        out_df = rest.unionByName(rows.filter(w).select(*fields))
+        if action == "update":
+            out_df = self._check_child_fks(overlay, t, out_df, dml="delete")
+        # the parent side of the foreign keys, for the rows REPLACE and
+        # DO UPDATE removed
+        removes = action in ("replace", "update")
+        res = self._check_constraints(
+            overlay,
+            tdef,
+            rows,
+            changed=w,
+            check_all=True,
+            order=F.col("__rn"),
+            # a row an arm rewrote held its key before the batch: a batch
+            # row meeting that key fails at its own position
+            key_order=F.when(F.col("__new") == 1, F.col("__rn")).otherwise(F.col("__rn") - F.lit(1 << 62)),
+            rest=rest,
+            ipk=rc in cols or (action == "update" and rc in sets),
+            restrict=(existing, out_df, "delete") if removes else None,
+            stats=stats,
+            broadcast=exact_seq,
         )
-        overlay.put(ins.table, new_st)
-        self._last_insert_id = last_id
-        if fired is not None:
-            if del_b or del_a:
-                # REPLACE + recursive_triggers=ON: per-row BI, then
-                # BD/AD for each row this one displaces (existing-table
-                # or earlier-batch victim), then AI (sqlite3-probed
-                # order). replace_sets is in scope — or_replace is set.
-                self._fire_replace_triggers(
-                    overlay, tdef, st, ins, replace_sets,
-                    bi_list, ai_list, trig_b, trig_a, del_b, del_a,
-                )
-            elif trig_b and trig_a and not pre_b_done:
-                # both timings: SQLite's per-row interleave (B:row1,
-                # A:row1, B:row2, ...), pairing BEFORE images with the
-                # landed rows by insertion index — OR IGNORE drops fire
-                # BEFORE only, exactly like SQLite's sequential loop
-                landed = {rn: p for rn, p in ai_list}
-                for rn, bp in bi_list:
-                    self._fire_triggers(overlay, tdef, trig_b, [bp])
-                    if rn in landed:
-                        self._fire_triggers(overlay, tdef, trig_a, [landed[rn]])
-            elif trig_a:
-                self._fire_triggers(overlay, tdef, trig_a, fired)
-            self._last_insert_id = last_id  # body inserts must not leak out
-        return Response(last_insert_id=last_id, rows_affected=n)
+        n = int(res["n"]) if changes is None else changes
+        k = int(res["k"])
+        hw, last = st.high_water, self._last_insert_id
+        if k and rc:
+            hw, last = max(hw, int(res["mx"])), int(res["last"][rc])
+        elif k:
+            hw = last = hw + k
+        if n:
+            new_st = overlay.catalog.materialize(t, TableState(tdef, out_df, hw, st.version + 1))
+            overlay.put(t, new_st)
+        self._last_insert_id = last
+        if after is not None:
+            after()
+            self._last_insert_id = last  # body inserts must not leak out
+        return Response(last_insert_id=last, rows_affected=n)
+
+    def _conflict(self, tdef: TableDef, ins, cols: list) -> tuple:
+        """An INSERT's conflict action — None (ABORT), "ignore",
+        "replace", "nothing" or "update" — with the key sets it resolves
+        and, for DO UPDATE, the SET map and WHERE. An upsert's target
+        defaults to every uniqueness constraint; a rowid set is left out
+        where every id is auto-assigned (such ids never conflict), except
+        as a DO UPDATE target."""
+        rc = tdef.rowid_column
+        if ins.on_conflict is None and not (ins.or_ignore or ins.or_replace):
+            return None, [], {}, None
+        sets, where = {}, None
+        targets = [list(u) for u in tdef.unique]
+        if rc and [rc] not in targets:
+            targets.insert(0, [rc])  # the hidden rowid of an implicit table
+        if ins.on_conflict is None:
+            action = "ignore" if ins.or_ignore else "replace"
+        else:
+            action, target = ins.on_conflict[0], ins.on_conflict[1]
+            # the hidden rowid counts as a constraint only where the batch
+            # supplies rowids, else every 1-unique implicit table would look
+            # multi-constraint to a targetless DO UPDATE
+            targets = [s for s in targets if s != [rc] or not tdef.implicit_rowid or rc in cols]
+            if not target:
+                if action == "update" and len(targets) > 1:
+                    # modern SQLite fires targetless DO UPDATE on any
+                    # constraint; with several constraints the row pairing
+                    # is ambiguous — require a target
+                    raise DustError('near "DO": syntax error')
+                if not targets:
+                    raise DustError(
+                        "ON CONFLICT clause does not match any PRIMARY KEY or UNIQUE constraint"
+                    )
+            else:
+                # ON CONFLICT(rowid): legal SQLite — resolves to the rowid
+                # column (alias or hidden) unless a real column shadows it
+                real = {f.name for f in tdef.schema.fields if f.name != dialect.HIDDEN_ROWID}
+                tgt = [
+                    rc if (c.lower() in ("rowid", "_rowid_", "oid") and c.lower() not in real and rc) else c.lower()
+                    for c in target
+                ]
+                # the explicit target must NAME an actual uniqueness
+                # constraint (column order-insensitive) — SQLite rejects
+                # 'ON CONFLICT(x)' on a table whose PK is (x, y) (r6)
+                if frozenset(tgt) not in {frozenset(s) for s in targets}:
+                    raise DustError(
+                        "ON CONFLICT clause does not match any PRIMARY KEY or UNIQUE constraint"
+                    )
+                targets = [tgt]
+            if action == "update":
+                sets = dict(ins.on_conflict[2])
+                names = [f.name for f in tdef.schema.fields]
+                unknown = [c for c in sets if c not in names]
+                if unknown:
+                    raise DustError(f"no such column: {unknown[0]}")
+                for g in tdef.generated:
+                    if g in sets:
+                        raise DustError(f'cannot UPDATE generated column "{g}"')
+                where = ins.on_conflict[3] if len(ins.on_conflict) > 3 else None
+                return action, targets, sets, where
+        return action, [s for s in targets if s != [rc] or rc in cols], sets, where
+
+    def _assign_rowids(self, st: TableState, rows: DataFrame, exact: bool, lands=None) -> DataFrame:
+        """``rows`` with their NULL rowids auto-assigned: sequentially in
+        ``__rn`` order (``_seq_rowids``), or above the exactness gate by
+        the parallel partition-offset approximation (a sequential scan
+        would serialize billions of rows through one task)."""
+        rc = st.tdef.rowid_column
+        c = F.col(rc)
+        if exact:
+            c = self._seq_rowids(c, st.high_water, lands)
+        else:
+            c = F.coalesce(c, F.lit(st.high_water) + F.col("__rn"))
+        return rows.withColumn(rc, c.cast(st.tdef.schema[rc].dataType))
 
     @staticmethod
-    def _seq_rowids(c, high_water: int):
+    def _seq_rowids(c, high_water: int, lands=None):
         """Rowid column ``c`` with its NULLs auto-assigned the way
         SQLite does, SEQUENTIALLY over the batch order ``__rn``: each
         NULL id takes (max rowid seen so far, incl. larger EXPLICIT ids
         earlier in this batch) + 1. Closed form: id(rn) = A(rn) +
         max(high_water, max_{j<=rn, explicit}(E(j) − A(j))) where A =
         running count of auto rows; all-auto batches reduce to
-        high_water + row_number."""
+        high_water + row_number. Rows where ``lands`` is false do not
+        land: they take no id from the sequence, and an auto one reads
+        the id it would have taken (its ``excluded.rowid``)."""
+        land = F.lit(True) if lands is None else lands
         run = Window.orderBy("__rn").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        a_run = F.sum(F.when(c.isNull(), 1).otherwise(0)).over(run)
-        e_base = F.max(F.when(c.isNotNull(), c.cast("long") - a_run)).over(run)
+        a_run = F.sum(F.when(c.isNull() & land, 1).otherwise(0)).over(run)
+        e_base = F.max(F.when(c.isNotNull() & land, c.cast("long") - a_run)).over(run)
         hw = F.lit(high_water).cast("long")
-        return F.coalesce(c, a_run + F.greatest(hw, F.coalesce(e_base, hw)))
+        top = a_run + F.greatest(hw, F.coalesce(e_base, hw))
+        return F.coalesce(c, F.when(land, top).otherwise(top + 1))
 
-    def _override_rowids(self, new_rows: DataFrame, tdef, id_map: dict) -> DataFrame:
-        """Replace upstream-assigned auto rowids with the sequential
-        replay's simulation (RAISE(IGNORE)d rows burn no ids —
-        sqlite3-probed)."""
-        if not id_map:
-            return new_rows
-        rc = tdef.rowid_column
-        fld = next(f for f in tdef.schema.fields if f.name == rc)
-        mdf = self.spark.createDataFrame(
-            [(int(k), int(v)) for k, v in id_map.items()], "__rn bigint, __newid bigint"
-        )
-        return (
-            new_rows.join(mdf, "__rn", "left")
-            .withColumn(rc, F.coalesce(F.col("__newid").cast(fld.dataType), F.col(rc)))
-            .drop("__newid")
-        )
-
-    def _replay_fresh_frame(self, tdef, schema_cols: list, fresh_rows: dict) -> DataFrame:
-        """Materialize the upsert replay's exact insert set (rn -> final
-        image) as the merge's `fresh` frame, `__rn` included so the
-        downstream last_insert_rowid stats keep their batch-order
-        tiebreak. Generated columns recompute from the base columns."""
-        frn_schema = T.StructType(
-            list(tdef.schema.fields) + [T.StructField("__rn", T.LongType())]
-        )
-        fdata = [
-            tuple(d.get(c) for c in schema_cols) + (int(rn),)
-            for rn, d in fresh_rows.items()
+    @staticmethod
+    def _batch_group(rows: DataFrame, sets: list, rc: str | None, high_water: int) -> bool:
+        """Whether two of ``rows`` share a key in any of the key ``sets``
+        (NULL keys never conflict), or, given the rowid column ``rc``, an
+        auto-id row comes before an explicit id above ``high_water`` (the
+        id the auto row takes may be that one): one Spark action."""
+        probes = [
+            rows.na.drop(subset=s).groupBy(*s).agg((F.count("*") > 1).alias("x")).select("x")
+            for s in sets
         ]
-        return self._apply_generated(
-            tdef, self.spark.createDataFrame(fdata, schema=frn_schema)
-        )
+        if rc:
+            auto = F.min(F.when(F.col("__auto"), F.col("__rn")))
+            probes.append(rows.agg((auto < F.max(F.when(F.col(rc) > high_water, F.col("__rn")))).alias("x")))
+        return bool(reduce(DataFrame.unionAll, probes).agg(F.max("x")).first()[0])
 
-    def _fire_insert_ignorable(
-        self,
-        overlay: Overlay,
-        tdef,
-        st: TableState,
-        rows: list,
-        trig_b: list,
-        trig_a: list,
-        del_b: list,
-        del_a: list,
-        replace_sets: list,
+    @staticmethod
+    def _resolve_keys(rows: DataFrame, existing: DataFrame, sets: list, last: bool, in_batch: bool):
+        """Set-based conflict resolution, for a batch whose outcome does
+        not depend on row order (one key set, or no two rows sharing a
+        key): ``__w`` = 1 on the rows that land. First row per key wins
+        (OR IGNORE, DO NOTHING, DO UPDATE), and a row meeting a key an
+        existing row holds does not land; or the last row per key wins
+        (REPLACE), and the existing rows holding a batch key are deleted.
+        NULL keys never conflict; ``in_batch`` ranks the rows of each key.
+        Returns ``(rows, rest of the table)``."""
+        w = F.lit(True)
+        rest = existing
+        for i, s in enumerate(sets):
+            if in_batch:
+                rank = Window.partitionBy(*s).orderBy(F.col("__rn").desc() if last else F.col("__rn"))
+                free = reduce(lambda a, b: a | b, [F.col(c).isNull() for c in s])
+                w = w & (free | (F.row_number().over(rank) == 1))
+            if last:
+                # a USING join moves the key columns first: restore the
+                # table's column order
+                rest = rest.join(rows.select(*s).na.drop().distinct(), s, "left_anti").select(*existing.columns)
+            else:
+                held = existing.select(*s).na.drop().distinct().withColumn(f"__h{i}", F.lit(1))
+                rows = rows.join(held, s, "left").select(*rows.columns, f"__h{i}")
+                w = w & F.col(f"__h{i}").isNull()
+        rows = rows.withColumn("__w", w.cast("int"))
+        return rows.drop(*[f"__h{i}" for i in range(len(sets))]), rest
+
+    def _upsert(
+        self, tdef: TableDef, ins, rows: DataFrame, existing: DataFrame, target: list, sets: dict, where, moves: list
     ):
-        """Pre-merge sequential INSERT/REPLACE trigger replay when a
-        BEFORE trigger may RAISE(IGNORE) (r8, all sqlite3-probed):
+        """SQLite upsert's DO UPDATE SET (INSERT ... ON CONFLICT(target)
+        DO UPDATE), set-based: each proposed row of ``rows`` that meets an
+        existing row's ``target`` key (``__w`` = 0) applies its arm to that
+        row, ``excluded.x`` reading the proposed row. The caller takes this
+        path only where no two batch rows share a target key, so each
+        existing row meets at most one arm; SQLite's row loop
+        (``_insert_replay``) decides the rest. A WHERE gates each arm
+        (sqlite3-probed: WHERE false leaves the row untouched AND does not
+        count toward changes(); excluded.* and bare/table-qualified target
+        columns are legal). Returns (the updated rows, ordered at their
+        arm's ``__rn``; the rest of the table; whether an arm changed one
+        of the key columns ``moves``, which a later batch row may then
+        meet — one Spark action, only when ``moves`` is given)."""
+        fields = [f.name for f in tdef.schema.fields]
 
-        - an ignored batch row is skipped ENTIRELY — no insert, no
-          displacement of existing rows, no auto-id burn, no AFTER
-          INSERT (was: ignore consumed, set-based change kept);
-        - BEFORE/AFTER interleave per row (B1,A1,B2,A2 — was
-          B1..Bn,A1..An);
-        - REPLACE under recursive_triggers=ON fires the displaced rows'
-          BD/AD between the row's B and A; a displaced-delete
-          RAISE(IGNORE) leaves the old row in place, so the row's
-          insert hits the UNIQUE constraint — statement error + full
-          rollback, exactly like SQLite.
+        def strip(e: str) -> str:
+            e = re.sub(r"\bexcluded\.", "__exc_", e, flags=re.I)
+            # table-qualified target refs (SET n = u1.n * 10) are legal
+            return re.sub(rf"\b{re.escape(ins.table)}\.", "", e, flags=re.I)
 
-        ``rows``: ordered (rn, auto, final-image dict) triples. Auto
-        rowids are re-simulated sequentially over the survivors
-        (max(rowid)+1) and returned as {rn: id} for the batch apply.
-        Trigger bodies run pre-mutation (documented own-table-read
-        altitude). Returns (ignored_rns, id_map)."""
+        upd = "__exc_m = 1" + (f" AND coalesce(({strip(where)}), false)" if where else "")
+        projs = [
+            f"CAST(CASE WHEN {upd} THEN ({strip(sets[f.name])}) ELSE `{f.name}` END "
+            f"AS {f.dataType.simpleString()}) AS `{f.name}`"
+            if f.name in sets
+            else f"`{f.name}`"
+            for f in tdef.schema.fields
+        ] + [f"CASE WHEN {upd} THEN 1 ELSE 0 END AS __upd", "__xrn AS __rn"] + [f"`{c}` AS `__old_{c}`" for c in moves]
+        exc = rows.filter(F.col("__w") == 0).select(
+            F.lit(1).alias("__exc_m"),
+            F.col("__rn").alias("__xrn"),
+            *[F.col(c).alias(f"__exc_{c}") for c in fields],
+        )
+        cond = reduce(lambda a, b: a & b, [existing[c] == exc[f"__exc_{c}"] for c in target])
+        joined = existing.join(exc, cond, "left")
+        if ins.with_sql:
+            # WITH-CTE upserts: the CTEs are visible to DO UPDATE SET/WHERE
+            # subqueries too (sqlite3-probed, r8)
+            joined.createOrReplaceTempView("__dust_upsert_stage")
+            marked = self.spark.sql(f"{ins.with_sql} SELECT {', '.join(projs)} FROM __dust_upsert_stage")
+        else:
+            marked = joined.selectExpr(*projs)
+        marked = self._apply_generated(tdef, marked).localCheckpoint(eager=True)
+        hit = F.col("__upd") == 1
+        updated = marked.filter(hit).select(*fields, "__rn", F.lit(1).alias("__w"), F.lit(0).alias("__new"))
+        moved = bool(moves) and marked.agg(
+            F.max(F.when(hit & ~reduce(lambda a, b: a & b, [F.col(c).eqNullSafe(F.col(f"__old_{c}")) for c in moves]), 1))
+        ).first()[0] is not None
+        return updated, marked.filter(~hit).select(*fields), moved
+
+    @staticmethod
+    def _key_rows(df: DataFrame, sets: list, rows: list) -> list:
+        """The rows of ``df`` (as dicts) holding a key of the row dicts
+        ``rows`` in any of the key ``sets``: one filter on the batch's own
+        keys and one collect, so it stays bounded by the batch. NULL keys
+        never conflict."""
+        cond = None
+        for s in sets:
+            for k in {tuple(r[c] for c in s) for r in rows}:
+                if None in k:
+                    continue
+                kc = reduce(lambda a, b: a & b, [F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(s, k)])
+                cond = kc if cond is None else (cond | kc)
+        return [] if cond is None else [r.asDict() for r in df.filter(cond).collect()]
+
+    def _images_frame(self, tdef: TableDef, images: list) -> DataFrame:
+        """The replay's row images (rn, image, landed, new) as the write
+        tail's rows frame; generated columns recompute from the base
+        columns."""
+        schema = T.StructType(
+            list(tdef.schema.fields)
+            + [T.StructField(c, t) for c, t in (("__rn", T.LongType()), ("__w", T.IntegerType()), ("__new", T.IntegerType()))]
+        )
+        data = [tuple(d.get(f.name) for f in tdef.schema.fields) + (int(rn), w, n) for rn, d, w, n in images]
+        return self._apply_generated(tdef, self.spark.createDataFrame(data, schema))
+
+    def _insert_replay(
+        self, overlay: Overlay, st: TableState, ins, action, targets: list, sets: dict, where, trig: dict, batch: list
+    ):
+        """SQLite's INSERT row loop (insert.c) over ``batch``, the
+        (rn, auto, ok, row) of every proposed row in statement order,
+        firing the row triggers as it goes (all sqlite3-probed):
+
+        - BEFORE INSERT fires (an auto rowid reads -1); RAISE(IGNORE)
+          skips the row entirely — no insert, no displacement, no id;
+        - a row failing NOT NULL or CHECK under OR IGNORE (``ok`` false)
+          is skipped;
+        - a row meeting a held key of ``targets``: IGNORE and DO NOTHING
+          skip it; REPLACE deletes every row holding one of its keys,
+          firing their DELETE triggers (``trig`` holds them only under
+          recursive_triggers) — an ignored delete leaves the row in
+          place, so the insert fails its UNIQUE constraint; DO UPDATE
+          applies its WHERE gate and SET to the held row as it stands
+          (evolving across the batch), fires BEFORE/AFTER UPDATE (a
+          BEFORE RAISE(IGNORE) keeps the row as it was), and an arm that
+          moves the key vacates its old slot — moving onto a held key is
+          a UNIQUE error;
+        - otherwise the row lands, an auto id taking max(rowid)+1 (which
+          ``excluded.rowid`` reads even when the row does not land), and
+          AFTER INSERT fires.
+
+        Returns ``(images, gone, changes)``: the rows frame of the write
+        tail as (rn, image, landed, new) — every proposed row, the final
+        image of each landed row, and of each existing row an arm rewrote
+        — the rowid (or PRIMARY KEY) of each existing row REPLACE deleted
+        or an arm rewrote, and changes(), which counts every insert and
+        every applied arm. A body reading its own table sees the pre- or
+        post-statement state where SQLite sees the row-partial image
+        (documented)."""
+        tdef = st.tdef
         fields = [f.name for f in tdef.schema.fields]
         rc = tdef.rowid_column
-        track_victims = bool(replace_sets and (del_b or del_a))
-        cur: dict = {}
-        if track_victims:
-            def keys_of(row: dict):
-                out = []
-                for si, colset in enumerate(replace_sets):
-                    key = tuple(row.get(c) for c in colset)
-                    if all(v is not None for v in key):
-                        out.append((si, key))
-                return out
+        idk = [rc] if rc else list(tdef.primary_key)
+        # collated key columns compare as the engine's joins do (r9)
+        norms = [[self._key_norm(tdef, c) or (lambda v: v) for c in s] for s in targets]
 
-            batch_keys = {kk for _, _, row in rows for kk in keys_of(row)}
-            cond = None
-            for si, colset in enumerate(replace_sets):
-                for k in {k for s, k in batch_keys if s == si}:
-                    kc = None
-                    for c, v in zip(colset, k):
-                        e = F.col(c).eqNullSafe(F.lit(v))
-                        kc = e if kc is None else (kc & e)
-                    cond = kc if cond is None else (cond | kc)
-            if cond is not None:
-                for r in st.df.filter(cond).collect():
-                    d = {c: r[c] for c in fields}
-                    for kk in keys_of(d):
-                        cur[kk] = d
+        def key(i: int, row: dict):
+            k = tuple(fn(row[c]) for fn, c in zip(norms[i], targets[i]))
+            return None if None in k else k
+
+        def label(s: list) -> str:
+            return ", ".join(f"{tdef.name}.{'rowid' if c == dialect.HIDDEN_ROWID else c}" for c in s)
+
+        def hold(e: list) -> None:
+            for i in range(len(targets)):
+                k = key(i, e[0])
+                if k is not None:
+                    cur[(i, k)] = e
+
+        # (set, key) -> [image, origin] of the row holding the key; the
+        # origin is ("old", rowid key) for a row of the table, or
+        # ("new", rn) for a row of the batch
+        cur: dict = {}
+        for d in self._key_rows(st.df, targets, [row for *_, row in batch]):
+            hold([{c: d[c] for c in fields}, ("old", tuple(d[c] for c in idk))])
+        wp = (ins.with_sql + " ") if ins.with_sql else ""
         cur_max = st.high_water
-        ignored: set = set()
-        id_map: dict = {}
-        for rn, auto, row in rows:
-            bp = dict(row)
-            if rc and (auto or bp.get(rc) is None):
-                bp[rc] = -1
-            if trig_b and self._fire_triggers(overlay, tdef, trig_b, [(None, bp)]):
-                ignored.add(rn)
+        images, fresh, rewritten, gone, n = [], {}, {}, set(), 0
+        for rn, auto, ok, row in batch:
+            if trig["b"] and self._fire_triggers(
+                overlay, tdef, trig["b"], [(None, dict(row, **{rc: -1}) if auto else row)]
+            ):
                 continue
-            if rc:
-                if auto or row.get(rc) is None:
-                    nid = cur_max + 1
-                    row = dict(row, **{rc: nid})
-                    id_map[rn] = nid
-                    cur_max = nid
-                else:
-                    try:
-                        cur_max = max(cur_max, int(row[rc]))
+            if not ok:
+                continue
+            if auto:
+                row = dict(row, **{rc: cur_max + 1})
+            images.append((rn, row, 0, 1))
+            hits = []
+            for i in range(len(targets)):
+                e = cur.get((i, key(i, row)))
+                if e is not None and not any(e is h for h, _ in hits):
+                    hits.append((e, i))
+            if hits and action in ("ignore", "nothing"):
+                continue
+            if hits and action == "update":
+                e = hits[0][0]
+                old = e[0]
+                try:
+                    if where is not None:
+                        pred = self._subst_upsert_expr(where, old, row, ins.table, fields)
+                        if not _sqlite_truthy(self._sql(f"{wp}SELECT ({pred}) AS __t", None).collect()[0][0]):
+                            continue
+                    projs = [
+                        f"CAST(({self._subst_upsert_expr(sets[f.name], old, row, ins.table, fields)}) "
+                        f"AS {f.dataType.simpleString()}) AS `{f.name}`"
+                        if f.name in sets
+                        else f"{_sql_literal(old[f.name])} AS `{f.name}`"
+                        for f in tdef.schema.fields
+                    ]
+                    nr = self._sql(wp + "SELECT " + ", ".join(projs), None).collect()[0]
+                except Exception as ex:  # noqa: BLE001
+                    raise self._convert_raise(ex) from ex
+                new = {c: nr[c] for c in fields}
+                if self._fire_triggers(overlay, tdef, trig["ub"], [(old, new)]):
+                    continue  # RAISE(IGNORE): no AFTER UPDATE, the row keeps OLD
+                self._fire_triggers(overlay, tdef, trig["ua"], [(old, new)])
+                was, now = key(0, old), key(0, new)
+                if now != was:
+                    del cur[(0, was)]
+                    if now is not None:
+                        if (0, now) in cur:
+                            raise DustError(f"UNIQUE constraint failed: {label(targets[0])}")
+                        cur[(0, now)] = e
+                e[0] = new
+                if rc:
+                    try:  # a moved rowid raises the max
+                        cur_max = max(cur_max, int(new[rc]))
                     except (TypeError, ValueError):
                         pass
-            if track_victims:
-                victims = []
-                for kk in keys_of(row):
-                    v = cur.get(kk)
-                    if v is not None and not any(v is x for x, _ in victims):
-                        victims.append((v, kk[0]))
-                for v, si in victims:
-                    for kk in [k for k, val in cur.items() if val is v]:
-                        cur.pop(kk)
-                    if del_b and self._fire_triggers(overlay, tdef, del_b, [(v, None)]):
-                        cols = ", ".join(
-                            f"{tdef.name}.{'rowid' if c == dialect.HIDDEN_ROWID else c}"
-                            for c in replace_sets[si]
-                        )
-                        raise DustError(f"UNIQUE constraint failed: {cols}")
-                    if del_a:
-                        self._fire_triggers(overlay, tdef, del_a, [(v, None)])
-                for kk in keys_of(row):
-                    cur[kk] = row
-            if trig_a:
-                self._fire_triggers(overlay, tdef, trig_a, [(None, dict(row))])
-        return ignored, id_map
-
-    def _fire_replace_triggers(
-        self,
-        overlay: Overlay,
-        tdef: TableDef,
-        st: TableState,
-        ins,
-        replace_sets: list,
-        bi_list: list,
-        ai_list: list,
-        trig_b: list,
-        trig_a: list,
-        del_b: list,
-        del_a: list,
-    ) -> None:
-        """Per-row REPLACE trigger replay under recursive_triggers=ON:
-        each batch row fires BEFORE INSERT, then BEFORE/AFTER DELETE for
-        every row it displaces — an existing-table row or an
-        earlier-batch row it replaces in-batch — then AFTER INSERT.
-        Victims are tracked per uniqueness constraint; a row displaced
-        through several constraints fires its delete triggers once."""
-        fields = [f.name for f in tdef.schema.fields]
-        batch = [dict(p[1]) for _, p in ai_list]
-        # existing rows that share any constraint key with the batch
-        cur: dict = {}
-
-        def keys_of(row: dict):
-            out = []
-            for si, colset in enumerate(replace_sets):
-                key = tuple(row.get(c) for c in colset)
-                if all(v is not None for v in key):
-                    out.append((si, key))
-            return out
-
-        batch_keys = {kk for row in batch for kk in keys_of(row)}
-        if batch_keys:
-            cond = None
-            for si, colset in enumerate(replace_sets):
-                want = {k for s, k in batch_keys if s == si}
-                for k in want:
-                    kc = None
-                    for c, v in zip(colset, k):
-                        e = F.col(c).eqNullSafe(F.lit(v))
-                        kc = e if kc is None else (kc & e)
-                    cond = kc if cond is None else (cond | kc)
-            if cond is not None:
-                for r in st.df.filter(cond).collect():
-                    d = {c: r[c] for c in fields}
-                    for kk in keys_of(d):
-                        cur[kk] = d
-        for (rn, bp), (_, ap) in zip(bi_list, ai_list):
-            if trig_b:
-                self._fire_triggers(overlay, tdef, trig_b, [bp])
-            row = dict(ap[1])
-            victims = []
-            for kk in keys_of(row):
-                v = cur.get(kk)
-                if v is not None and not any(v is x for x in victims):
-                    victims.append(v)
-            for v in victims:
-                for kk in [k for k, val in cur.items() if val is v]:
-                    cur.pop(kk)
-                self._fire_pairs(overlay, tdef, del_b, del_a, [(v, None)])
-            for kk in keys_of(row):
-                cur[kk] = row
-            if trig_a:
-                self._fire_triggers(overlay, tdef, trig_a, [ap])
-
-    def _upsert(self, overlay: Overlay, st: TableState, tdef, ins, new_rows: DataFrame) -> Response:
-        """SQLite upsert (INSERT ... ON CONFLICT DO NOTHING / DO UPDATE
-        SET): conflict target defaults to the primary key; ``excluded.x``
-        in DO UPDATE expressions refers to the incoming row. Rows are
-        conceptually processed in statement order — first insert wins
-        for DO NOTHING, last update wins for DO UPDATE.
-
-        Known divergence (set-based vs SQLite's row-by-row loop): with a
-        targetless DO NOTHING over MULTIPLE constraints, a batch row
-        that loses the in-batch race on constraint A does not "free" its
-        claim under constraint B for later rows — SQLite, processing
-        sequentially, would. Batches that rely on that interleaving are
-        pathological; the common paths (single constraint, or rows
-        conflicting with existing data) match exactly."""
-        kind, target = ins.on_conflict[0], ins.on_conflict[1]
-        # trigger replay input: batch rows with the __auto rowid marker
-        # (present only when the table has triggers); the set-based
-        # merge below works on the clean projection
-        batch_trig_df = new_rows if "__auto" in new_rows.columns else None
-        new_rows = new_rows.drop("__auto")
-        all_constraints = [list(u) for u in tdef.unique]
-        # the hidden rowid of an implicit table only counts as a
-        # conflictable constraint when the batch supplies explicit
-        # rowids: auto ids never conflict, and unconditional inclusion
-        # would make every 1-unique implicit table look
-        # multi-constraint to targetless DO UPDATE
-        explicit_rowid = bool(ins.columns and tdef.rowid_column in ins.columns)
-        if (
-            tdef.rowid_column
-            and (not tdef.implicit_rowid or explicit_rowid)
-            and [tdef.rowid_column] not in all_constraints
-        ):
-            all_constraints.insert(0, [tdef.rowid_column])
-        if not target:
-            if kind == "update" and len(all_constraints) > 1:
-                # modern SQLite fires targetless DO UPDATE on any
-                # constraint; with several constraints the row pairing is
-                # ambiguous in our set-based merge — require a target
-                raise DustError('near "DO": syntax error')
-            if not all_constraints:
-                raise DustError(
-                    "ON CONFLICT clause does not match any PRIMARY KEY or UNIQUE constraint"
-                )
-            # targetless DO NOTHING skips a row conflicting on ANY
-            # uniqueness constraint
-            targets = all_constraints
-        else:
-            targets = [[c.lower() for c in target]]
-            # ON CONFLICT(rowid): legal SQLite — resolves to the rowid
-            # column (alias or hidden) unless a real column shadows it
-            real = {f.name for f in tdef.schema.fields if f.name != dialect.HIDDEN_ROWID}
-            targets = [
-                [
-                    tdef.rowid_column
-                    if (c in ("rowid", "_rowid_", "oid") and c not in real and tdef.rowid_column)
-                    else c
-                    for c in tgt
-                ]
-                for tgt in targets
-            ]
-            # the explicit target must NAME an actual uniqueness
-            # constraint (column order-insensitive) — SQLite rejects
-            # 'ON CONFLICT(x)' on a table whose PK is (x, y) (r6)
-            want = {frozenset(c) for c in all_constraints}
-            if frozenset(targets[0]) not in want:
-                raise DustError(
-                    "ON CONFLICT clause does not match any PRIMARY KEY or UNIQUE constraint"
-                )
-        target = targets[0]
-        existing = st.df
-        schema_cols = [f.name for f in tdef.schema.fields]
-
-        # may-RAISE(IGNORE) upserts (r8): the whole sequential trigger
-        # replay runs BEFORE the merge — BI-ignored rows are dropped
-        # from the batch entirely (no insert, no DO UPDATE, no auto-id
-        # burn) and the DO UPDATE path applies the replay's exact
-        # per-key final images (BU-ignored/WHERE-gated arms shape them)
-        seq_replay = None
-        need_replay = False
-        if batch_trig_df is not None:
-            tb_ = self._table_triggers(ins.table, "INSERT", "BEFORE")
-            bu_ = (
-                self._table_triggers(
-                    ins.table, "UPDATE", "BEFORE",
-                    assigned=list(dict(ins.on_conflict[2])),
-                )
-                if kind == "update"
-                else []
-            )
-            need_replay = (tb_ and self._may_ignore(tb_)) or (
-                bu_ and self._may_ignore(bu_)
-            )
-        # SQLite checks a proposed row's NOT NULL and CHECK constraints
-        # before it looks for a conflict, so a row that would update or
-        # be skipped fails them too (sqlite3-probed): ``first_bad`` is
-        # the first such row's (__rn, flag index)
-        flags = [
-            (F.col(c).isNull(), f"NOT NULL constraint failed: {tdef.name}.{c}")
-            for c in schema_cols
-            if c in tdef.not_null
-        ] + [
-            (~F.expr(self._check_pass_sql(e, tdef)), f"CHECK constraint failed: {label}")
-            for label, e in tdef.checks
-        ]
-        rank = F.coalesce(*[F.when(fl, F.lit(i)) for i, (fl, _) in enumerate(flags)]) if flags else F.lit(None)
-        first_bad = F.min(F.when(rank.isNotNull(), F.struct(F.col("__rn"), rank.alias("r"))))
-        bad, checked = None, False
-        # rows with NULL in any target column never conflict (SQLite
-        # NULL semantics) — exempt them from in-batch dedup entirely
-        null_target = None
-        for c in target:
-            cnd = F.col(c).isNull()
-            null_target = cnd if null_target is None else (null_target | cnd)
-        if not need_replay and kind == "update":
-            # multi-row conflict groups (r8): SQLite applies the DO
-            # UPDATE arm per batch row with evolving target values and
-            # counts each arm — run the exact sequential replay for the
-            # data too (closing the documented one-fold divergence).
-            # The same action finds the first failing proposed row
-            dup = F.when(null_target, F.lit(0)).otherwise(F.count("*").over(Window.partitionBy(*target)))
-            got = new_rows.withColumn("__nk", dup).agg(F.max("__nk") > 1, first_bad).first()
-            need_replay, bad, checked = bool(got[0]), got[1], True
-        if not need_replay and tdef.rowid_column and batch_trig_df is not None:
-            # auto rowids must not burn on conflicting rows (sqlite
-            # allocates max+1 only on successful insert — r8 ADVICE);
-            # exactness needs the sequential replay whenever an auto row
-            # can meet a conflict. VALUES batches and gate-small SELECT
-            # sources (__auto marker present, r10) — bulk INSERT...SELECT
-            # above _SEQ_EXACT_ROWS keeps the documented monotone
-            # approximation.
-            if batch_trig_df.filter(F.col("__auto")).limit(1).count() > 0:
-                conflict_any = False
-                for tgt in targets:
-                    if (
-                        new_rows.na.drop(subset=tgt)
-                        .join(existing.select(*tgt).na.drop(), tgt, "left_semi")
-                        .limit(1)
-                        .count()
-                        > 0
-                    ):
-                        conflict_any = True
-                        break
-                if not conflict_any and kind == "nothing":
-                    for tgt in targets:
-                        nn2 = new_rows.na.drop(subset=tgt)
-                        if (
-                            nn2.groupBy(*tgt)
-                            .count()
-                            .filter(F.col("count") > 1)
-                            .limit(1)
-                            .count()
-                            > 0
-                        ):
-                            conflict_any = True
-                            break
-                need_replay = conflict_any
-        if need_replay:
-            bdf = (
-                batch_trig_df
-                if batch_trig_df is not None
-                else new_rows.withColumn("__auto", F.lit(False))
-            )
-            seq_replay = self._fire_upsert_triggers(
-                overlay, tdef, ins, bdf, targets, kind,
-                existing, ignorable=True, high_water=st.high_water,
-            )
-            bi_ign_rns, upd_id_map, upd_images, replay_fresh, n_arms = seq_replay
-            batch_trig_df = None  # fully fired pre-merge
-            if bi_ign_rns:
-                new_rows = new_rows.filter(
-                    ~F.col("__rn").isin(list(bi_ign_rns))
-                )
-            new_rows = self._override_rowids(new_rows, tdef, upd_id_map)
-
-        if flags and (seq_replay is not None or not checked):
-            bad = new_rows.agg(first_bad).first()[0]
-        if bad is not None:
-            # the rows ahead of it run first: a failure of their own wins
-            self._upsert(overlay, st, tdef, ins, new_rows.filter(F.col("__rn") < bad["__rn"]))
-            raise DustError(flags[bad["r"]][1])
-
-        conflict_keys = existing.select(*target).na.drop().distinct()
-
-        if kind == "nothing" and seq_replay is not None:
-            # the replay is the exact sequential insert set (r9): use
-            # its final images directly (also covers the documented
-            # targetless multi-constraint interleave when a replay ran)
-            fresh = self._replay_fresh_frame(tdef, schema_cols, replay_fresh)
-            updated = existing
-            n_updated = 0
-        elif kind == "nothing":
-            fresh = new_rows
-            for tgt in targets:
-                nt = None
-                for c in tgt:
-                    cnd = F.col(c).isNull()
-                    nt = cnd if nt is None else (nt | cnd)
-                w = Window.partitionBy(*tgt).orderBy("__rn")  # first wins in-batch
-                fresh = (
-                    fresh.withColumn(
-                        "__rk",
-                        F.when(nt, F.lit(1)).otherwise(F.row_number().over(w)),
-                    )
-                    .filter(F.col("__rk") == 1)
-                    .drop("__rk")
-                    .join(existing.select(*tgt).na.drop().distinct(), tgt, "left_anti")
-                )
-            updated = existing
-            n_updated = 0
-        else:
-            sets = dict(ins.on_conflict[2])
-            unknown = [c for c in sets if c not in schema_cols]
-            if unknown:
-                raise DustError(f"no such column: {unknown[0]}")
-            for g in tdef.generated:
-                if g in sets:
-                    raise DustError(f'cannot UPDATE generated column "{g}"')
-            # DO UPDATE ... WHERE pred: the predicate gates each
-            # conflicting row's update (probed against sqlite3: WHERE
-            # false → row untouched AND changes() not incremented;
-            # excluded.* and bare/table-qualified target columns legal)
-            oc_where = ins.on_conflict[3] if len(ins.on_conflict) > 3 else None
-            upd_cond = "__exc_m = 1"
-            if oc_where:
-                w_e = re.sub(r"\bexcluded\.", "__exc_", oc_where, flags=re.I)
-                w_e = re.sub(rf"\b{re.escape(ins.table)}\.", "", w_e, flags=re.I)
-                upd_cond = f"__exc_m = 1 AND coalesce(({w_e}), false)"
-            # SQLite processes the batch row-by-row: the FIRST row of an
-            # in-batch conflict group inserts (or updates the existing
-            # row); every later row fires DO UPDATE SET again. Folded
-            # set-based: non-SET columns come from the group's first row,
-            # SET columns apply with excluded = the group's last row.
-            # (A SET expression referencing the target row's own columns
-            # folds once, not per-row — divergence only for
-            # self-accumulating SETs across 3+ conflicting batch rows.)
-            w_first = Window.partitionBy(*target).orderBy("__rn")
-            w_last = Window.partitionBy(*target).orderBy(F.col("__rn").desc())
-            ranked = new_rows.withColumn(
-                "__nk",
-                F.when(null_target, F.lit(1)).otherwise(
-                    F.count("*").over(Window.partitionBy(*target))
-                ),
-            )
-            firsts = (
-                ranked.withColumn(
-                    "__rk",
-                    F.when(null_target, F.lit(1)).otherwise(F.row_number().over(w_first)),
-                )
-                .filter(F.col("__rk") == 1)
-                .drop("__rk")
-            )
-            lasts = (
-                ranked.withColumn(
-                    "__rk",
-                    F.when(null_target, F.lit(1)).otherwise(F.row_number().over(w_last)),
-                )
-                .filter(F.col("__rk") == 1)
-                .drop("__rk")
-            )
-
-            def _set_projs(extra: list[str]) -> list[str]:
-                projs = []
-                for f in tdef.schema.fields:
-                    if f.name in sets:
-                        e = re.sub(r"\bexcluded\.", "__exc_", sets[f.name], flags=re.I)
-                        # table-qualified target refs (SET n = u1.n * 10)
-                        # are legal SQLite — same strip as the WHERE
-                        e = re.sub(rf"\b{re.escape(ins.table)}\.", "", e, flags=re.I)
-                        projs.append(
-                            f"CAST(CASE WHEN {upd_cond} THEN ({e}) ELSE `{f.name}` END "
-                            f"AS {f.dataType.simpleString()}) AS `{f.name}`"
-                        )
-                    else:
-                        projs.append(f"`{f.name}`")
-                return projs + extra
-
-            # WITH-CTE upserts: the CTEs are visible to DO UPDATE
-            # SET/WHERE subqueries too (sqlite3-probed, r8) — evaluate
-            # the projections through spark.sql with the CTE prefix
-            # scoped over a staged view instead of bare selectExpr
-            with_prefix = (ins.with_sql + " ") if ins.with_sql else ""
-
-            def _proj(df: DataFrame, projs: list[str]) -> DataFrame:
-                if not with_prefix:
-                    return df.selectExpr(*projs)
-                df.createOrReplaceTempView("__dust_upsert_stage")
-                return self.spark.sql(
-                    f"{with_prefix}SELECT {', '.join(projs)} FROM __dust_upsert_stage"
-                )
-
-            if seq_replay is not None:
-                # exact sequential images from the pre-merge replay: exc
-                # carries the FINAL row values per conflict key whose DO
-                # UPDATE arm applied ≥1 time (WHERE gating, BU-ignores
-                # and evolving OLDs already baked in), joined on the OLD
-                # key (a SET may move the target column itself). The
-                # verbatim projection also removes the one-fold
-                # divergence for multi-row groups on this path.
-                upd_cond = "__exc_m = 1"
-                sets = {c: f"`__exc_{c}`" for c in schema_cols if c not in tdef.generated}
-                kf = [next(f for f in tdef.schema.fields if f.name == c) for c in target]
-                img_schema = T.StructType(
-                    list(tdef.schema.fields)
-                    + [T.StructField(f"__k{i}", f_.dataType) for i, f_ in enumerate(kf)]
-                )
-                data = [
-                    tuple(d.get(c) for c in schema_cols) + tuple(k)
-                    for k, d in upd_images.items()
-                ]
-                img_df = self.spark.createDataFrame(data, schema=img_schema)
-                exc = img_df.select(
-                    F.lit(1).alias("__exc_m"),
-                    *[F.col(c).alias(f"__exc_{c}") for c in schema_cols],
-                    *[F.col(f"__k{i}") for i in range(len(target))],
-                )
-                cond = None
-                for i, c in enumerate(target):
-                    eq = existing[c] == exc[f"__k{i}"]
-                    cond = eq if cond is None else (cond & eq)
-            else:
-                upd_src = lasts.join(conflict_keys, target, "left_semi")
-                exc = upd_src.select(
-                    F.lit(1).alias("__exc_m"),
-                    *[F.col(c).alias(f"__exc_{c}") for c in schema_cols],
-                )
-                cond = None
-                for c in target:
-                    eq = existing[c] == exc[f"__exc_{c}"]
-                    cond = eq if cond is None else (cond & eq)
-            joined = existing.join(exc, cond, "left")
-            marked = self._apply_generated(
-                tdef,
-                _proj(
-                    joined,
-                    _set_projs([f"CASE WHEN {upd_cond} THEN 1 ELSE 0 END AS __upd"]),
-                ),
-            ).localCheckpoint(eager=True)
-            n_updated = marked.filter(F.col("__upd") == 1).count()
-            if seq_replay is not None:
-                # SQLite's changes() counts each APPLIED DO UPDATE arm
-                # (sqlite3-probed: two arms on one key = 2) — the replay
-                # counted them exactly
-                n_updated = n_arms
-            updated = marked.drop("__upd")
-
-            # fresh keys: insert the FIRST batch row, then apply the
-            # later rows' DO UPDATE arms. With a replay, the replay IS
-            # the exact insert set — including rows whose conflict slot
-            # was VACATED by a key-moving arm (r9, sqlite3-probed) —
-            # with final per-row images after all in-batch arms.
-            # Otherwise the one-fold with excluded = last row
-            # (single-row groups only reach here without a replay,
-            # where both agree).
-            if seq_replay is not None:
-                fresh = self._replay_fresh_frame(tdef, schema_cols, replay_fresh)
-            else:
-                fresh_base = firsts.join(conflict_keys, target, "left_anti")
-                exc_new = lasts.filter(F.col("__nk") > 1).select(
-                    F.lit(1).alias("__exc_m"),
-                    *[F.col(c).alias(f"__exc_{c}") for c in schema_cols],
-                )
-                condf = None
-                for c in target:
-                    eq = fresh_base[c] == exc_new[f"__exc_{c}"]
-                    condf = eq if condf is None else (condf & eq)
-                fresh = self._apply_generated(
-                    tdef,
-                    _proj(fresh_base.join(exc_new, condf, "left"), _set_projs(["__rn"])),
-                )
-
-        if self._capture_returning:
-            fresh = fresh.localCheckpoint(eager=True)  # reused below
-            upd_rows = (
-                marked.filter(F.col("__upd") == 1).drop("__upd")
-                if kind == "update"
-                else self.spark.createDataFrame([], tdef.schema)
-            )
-            self._returning_df = upd_rows.unionByName(fresh.drop("__rn"))
-            self._returning_table = ins.table
-        out_df = updated.unionByName(fresh.drop("__rn"))
-        # REPLACE removes conflicting parent rows: ON DELETE actions run
-        out_df = self._check_child_fks(overlay, ins.table, out_df, dml="delete")
-        # constraint pass over the written rows: inserted (__rn > 0, in
-        # batch order) and DO UPDATE'd (__upd = 1, ahead of them). Each
-        # DO UPDATE'd row needs an order of its own, below every __rn:
-        # the in-batch duplicate branch compares written rows by order,
-        # so a shared one would let two updates write the same key
-        fresh_w = fresh.withColumn("__w", F.lit(1))
-        if kind == "update":
-            rows = marked.withColumn(
-                "__rn", F.monotonically_increasing_id() - F.lit(1 << 62)
-            ).withColumnRenamed("__upd", "__w").unionByName(fresh_w)
-            rest = rows.filter(F.col("__w") == 0)
-        else:
-            rows, rest = fresh_w, existing
-        new = F.col("__rn") > 0
-        rc = tdef.rowid_column
-        stats = {"n": (F.when(new, F.lit(1)), F.count)}
-        if rc:
-            stats["mx"] = (F.when(new, F.col(rc)), F.max)
-            stats["last"] = (F.when(new, F.struct(F.col("__rn"), F.col(rc))), F.max)
-        res = self._check_constraints(
-            overlay,
-            tdef,
-            rows,
-            changed=F.col("__w") == 1,
-            order=F.col("__rn"),
-            rest=rest,
-            ipk=True,
-            restrict=(existing, out_df, "delete"),
-            stats=stats,
-        )
-        n_fresh = int(res["n"])
-        if n_fresh and rc:
-            high_water = max(st.high_water, int(res["mx"]))
-            self._last_insert_id = int(res["last"][rc])
-        elif n_fresh:
-            high_water = st.high_water + n_fresh
-            self._last_insert_id = high_water
-        else:
-            high_water = st.high_water
-        new_st = overlay.catalog.materialize(
-            ins.table, TableState(tdef, out_df, high_water, st.version + 1)
-        )
-        overlay.put(ins.table, new_st)
-        if batch_trig_df is not None:
-            self._fire_upsert_triggers(
-                overlay, tdef, ins, batch_trig_df, targets, kind, existing
-            )
-        return Response(last_insert_id=self._last_insert_id, rows_affected=n_fresh + n_updated)
-
-    def _fire_upsert_triggers(
-        self,
-        overlay: Overlay,
-        tdef: TableDef,
-        ins,
-        batch_df: DataFrame,
-        targets: list,
-        kind: str,
-        existing: DataFrame,
-        ignorable: bool = False,
-        high_water: int = 0,
-    ):
-        """Row-by-row trigger replay for upserts (sqlite3-probed r7):
-        every batch row fires BEFORE INSERT (auto rowids read -1);
-        a fresh row then fires AFTER INSERT; a conflicting row fires
-        BEFORE/AFTER UPDATE under DO UPDATE (gated by the DO UPDATE
-        WHERE) and nothing further under DO NOTHING. OLD images evolve
-        across same-key batch rows exactly as SQLite's sequential loop.
-
-        ``ignorable`` (r8): the replay runs BEFORE the data merge so
-        RAISE(IGNORE) decisions shape the data too. Returns
-        (bi_ignored_rns, auto_id_map, images, fresh_rows, n_arms) where
-        ``images`` maps each existing row's SEED conflict key to its
-        exact sequential final row (the merge applies these verbatim —
-        which also fixes the one-fold divergence on multi-row groups
-        whenever the replay runs), ``fresh_rows`` maps __rn -> final
-        image for every row the replay actually inserted (the merge
-        materializes these directly — covering key-vacating DO UPDATE
-        arms, r9), and ``n_arms`` counts applied DO UPDATE arms
-        (SQLite's changes() counts each arm, sqlite3-probed).
-        Non-ignorable mode fires post-merge and returns None (the
-        set-based data merge keeps its documented one-fold divergence
-        there)."""
-        fields = [f.name for f in tdef.schema.fields]
-
-        # collated key columns (r9): the replay's conflict matching is a
-        # Python dict lookup over collation-normalized keys. The merge
-        # joins re-compare normalized literals through the collated
-        # columns, so normalized seed keys still join correctly.
-        norm_fns = [[self._key_norm(tdef, c) for c in tgt] for tgt in targets]
-
-        def norm_key(ti: int, vals) -> tuple:
-            return tuple(
-                fn(v) if fn is not None else v
-                for fn, v in zip(norm_fns[ti], vals)
-            )
-
-        trig_bi = self._table_triggers(ins.table, "INSERT", "BEFORE")
-        trig_ai = self._table_triggers(ins.table, "INSERT", "AFTER")
-        sets = dict(ins.on_conflict[2]) if kind == "update" else {}
-        oc_where = (
-            ins.on_conflict[3]
-            if kind == "update" and len(ins.on_conflict) > 3
-            else None
-        )
-        assigned = list(sets) if kind == "update" else None
-        trig_bu = (
-            self._table_triggers(ins.table, "UPDATE", "BEFORE", assigned=assigned)
-            if kind == "update"
-            else []
-        )
-        trig_au = (
-            self._table_triggers(ins.table, "UPDATE", "AFTER", assigned=assigned)
-            if kind == "update"
-            else []
-        )
-        bi_ign: set = set()
-        id_map: dict = {}
-        images: dict = {}
-        # rn -> final image of every row the replay actually INSERTED
-        # (kept current through later in-batch arms) — the merge builds
-        # the fresh frame from this verbatim (r9)
-        fresh_rows: dict = {}
-        n_arms = 0
-        if not ignorable and not (trig_bi or trig_ai or trig_bu or trig_au):
-            return None
-        # ignorable mode runs even with NO triggers: it doubles as the
-        # exact sequential DATA replay for multi-row conflict groups
-        # (r8 — closes the one-fold divergence and the per-arm
-        # changes() counting on those statements)
-        batch = []
-        for r in batch_df.orderBy("__rn").collect():
-            d = r.asDict()
-            rn = d.pop("__rn", None)
-            batch.append((d, d.pop("__auto", False), rn))
-        # pre-statement rows for the batch's conflict keys, keyed per
-        # target constraint (bounded: filters on the batch's own keys)
-        cur: dict = {}
-        for ti, tgt in enumerate(targets):
-            keys = {
-                tuple(d[c] for c in tgt)
-                for d, *_ in batch
-                if all(d[c] is not None for c in tgt)
-            }
-            if not keys:
-                continue
-            cond = None
-            for k in keys:
-                kc = None
-                for c, v in zip(tgt, k):
-                    e = F.col(c).eqNullSafe(F.lit(v))
-                    kc = e if kc is None else (kc & e)
-                cond = kc if cond is None else (cond | kc)
-            for r in existing.filter(cond).collect():
-                d = r.asDict()
-                k = norm_key(ti, (d[c] for c in tgt))
-                # origin tags where an arm's final image must land: a
-                # seeded entry updates the existing row (merge joins on
-                # the SEED key even after a key-moving arm), a fresh one
-                # updates the in-batch inserted row (by __rn)
-                cur[(ti, k)] = ({c: d[c] for c in fields}, ("seed", k))
-        cur_max = int(high_water)
-        for row, auto, rn in batch:
-            if trig_bi:
-                bi = dict(row)
-                if tdef.rowid_column and (auto or bi.get(tdef.rowid_column) is None):
-                    bi[tdef.rowid_column] = -1
-                if self._fire_triggers(overlay, tdef, trig_bi, [(None, bi)]):
-                    # RAISE(IGNORE): the row's later trigger programs
-                    # are abandoned; in ignorable (pre-merge) mode the
-                    # row is skipped from the data change too (r8)
-                    bi_ign.add(rn)
-                    continue
-            auto_pending = False
-            if ignorable and tdef.rowid_column:
-                # sqlite allocates max+1 only on SUCCESSFUL insert (r8
-                # ADVICE: a conflicting DO UPDATE/DO NOTHING row burns
-                # no auto id) — but the excluded pseudo-row still SEES
-                # the would-be id (sqlite3-probed: excluded.id reads
-                # max+1 while the next actual insert gets the same id).
-                # Fill it in; advance cur_max only on insert below.
-                rc_ = tdef.rowid_column
-                if auto or row.get(rc_) is None:
-                    row = dict(row, **{rc_: cur_max + 1})
-                    auto_pending = True
-            hit = None
-            for ti, tgt in enumerate(targets):
-                key = norm_key(ti, (row[c] for c in tgt))
-                if all(v is not None for v in key) and (ti, key) in cur:
-                    hit = (ti, key)
-                    break
-            if hit is None:
-                if ignorable and tdef.rowid_column:
-                    rc_ = tdef.rowid_column
-                    if auto_pending:
-                        cur_max += 1
-                        id_map[rn] = cur_max
-                    else:
-                        # explicit ids raise the b-tree max only when
-                        # the row actually lands
-                        try:
-                            cur_max = max(cur_max, int(row[rc_]))
-                        except (TypeError, ValueError):
-                            pass
-                if trig_ai:
-                    self._fire_triggers(overlay, tdef, trig_ai, [(None, dict(row))])
-                if ignorable:
-                    fresh_rows[rn] = dict(row)
-                for ti, tgt in enumerate(targets):
-                    key = norm_key(ti, (row[c] for c in tgt))
-                    if all(v is not None for v in key):
-                        cur[(ti, key)] = (dict(row), ("fresh", rn))
-                continue
-            if kind != "update":
-                continue  # DO NOTHING: conflicting row fires BI only
-            old, origin = cur[hit]
-            # DO UPDATE arms see the statement's WITH CTEs (r8)
-            wp = (ins.with_sql + " ") if getattr(ins, "with_sql", None) else ""
-            if oc_where is not None:
-                pred = self._subst_upsert_expr(oc_where, old, row, ins.table, fields)
-                try:
-                    val = self._sql(f"{wp}SELECT ({pred}) AS __t", None).collect()[0][0]
-                except Exception as e:  # noqa: BLE001
-                    raise self._convert_raise(e) from e
-                if not _sqlite_truthy(val):
-                    continue
-            projs = []
-            for f in tdef.schema.fields:
-                if f.name in sets:
-                    e = self._subst_upsert_expr(
-                        sets[f.name], old, row, ins.table, fields
-                    )
-                    projs.append(
-                        f"CAST(({e}) AS {f.dataType.simpleString()}) AS `{f.name}`"
-                    )
+                n += 1
+                kind, at = e[1]
+                if kind == "old":
+                    rewritten[at] = (rn, new)
                 else:
-                    projs.append(f"{_sql_literal(old[f.name])} AS `{f.name}`")
-            try:
-                nr = self._sql(wp + "SELECT " + ", ".join(projs), None).collect()[0]
-            except Exception as e:  # noqa: BLE001
-                raise self._convert_raise(e) from e
-            new = {f.name: nr[f.name] for f in tdef.schema.fields}
-            if trig_bu and self._fire_triggers(overlay, tdef, trig_bu, [(old, new)]):
-                continue  # RAISE(IGNORE): no AU, sequential view keeps OLD
-            if trig_au:
-                self._fire_triggers(overlay, tdef, trig_au, [(old, new)])
-            # conflict-key moves (r9, sqlite3-probed): an arm that moves
-            # the target key VACATES the old slot — a later same-key
-            # batch row inserts fresh — and claims the new one; moving
-            # onto an occupied key is a UNIQUE error + full statement
-            # rollback (trigger effects included)
-            tgt_h = targets[hit[0]]
-            newkey = norm_key(hit[0], (new.get(c) for c in tgt_h))
-            if newkey != hit[1]:
-                cur.pop(hit)
-                if all(v is not None for v in newkey):
-                    if (hit[0], newkey) in cur:
-                        cols = ", ".join(
-                            f"{tdef.name}."
-                            f"{'rowid' if c == dialect.HIDDEN_ROWID else c}"
-                            for c in tgt_h
-                        )
-                        raise DustError(f"UNIQUE constraint failed: {cols}")
-                    cur[(hit[0], newkey)] = (new, origin)
-            else:
-                cur[hit] = (new, origin)
-            if ignorable and tdef.rowid_column:
-                # an arm that moves the rowid raises the b-tree max
+                    fresh[at] = new
+                continue
+            for e, i in hits:  # REPLACE (an ABORT statement resolves no keys)
+                for kk in [kk for kk, v in cur.items() if v is e]:
+                    del cur[kk]
+                if self._fire_triggers(overlay, tdef, trig["db"], [(e[0], None)]):
+                    raise DustError(f"UNIQUE constraint failed: {label(targets[i])}")
+                self._fire_triggers(overlay, tdef, trig["da"], [(e[0], None)])
+                kind, at = e[1]
+                if kind == "old":
+                    gone.add(at)
+                else:
+                    del fresh[at]
+            if rc:
                 try:
-                    cur_max = max(cur_max, int(new[tdef.rowid_column]))
+                    cur_max = max(cur_max, int(row[rc]))
                 except (TypeError, ValueError):
                     pass
-            n_arms += 1
-            if ignorable:
-                if origin[0] == "seed":
-                    images[origin[1]] = new
-                else:
-                    fresh_rows[origin[1]] = new
-        return (bi_ign, id_map, images, fresh_rows, n_arms) if ignorable else None
+            fresh[rn] = row
+            hold([row, ("new", rn)])
+            n += 1
+            self._fire_triggers(overlay, tdef, trig["a"], [(None, dict(row))])
+        images += [(rn, d, 1, 1) for rn, d in fresh.items()]
+        images += [(rn, d, 1, 0) for rn, d in rewritten.values()]
+        return images, gone | set(rewritten), n
 
     @staticmethod
     def _subst_upsert_expr(
@@ -3509,13 +2863,14 @@ class DustSession:
             rf"__dustph{nonce}x(\d+)__", lambda m: held[int(m.group(1))], text
         )
 
-    def _with_insertion_index(self, src: DataFrame) -> DataFrame:
+    def _with_insertion_index(self, src: DataFrame) -> tuple[DataFrame, int]:
         """Add ``__rn`` = 1..n in insertion order, in parallel: tag rows
         with (partition id, intra-partition position), collect only the
         per-partition counts (numPartitions tiny rows), and offset each
         partition's row_numbers — the zipWithIndex construction in
         DataFrame form. A global Window.orderBy would serialize the
-        whole batch through a single task."""
+        whole batch through a single task. Returns the frame and its
+        row count n."""
         from pyspark.sql import types as T
 
         # pin the tagging: the counts job and the final insert would
@@ -3538,9 +2893,8 @@ class DustSession:
         schema = T.StructType(
             [T.StructField("__pid", T.IntegerType()), T.StructField("__off", T.LongType())]
         )
-        self._last_insertion_count = acc
         if not offsets:
-            return src.withColumn("__rn", F.lit(1).cast("long"))  # empty source
+            return src.withColumn("__rn", F.lit(1).cast("long")), 0  # empty source
         off_df = self.spark.createDataFrame(offsets, schema)
         pw = Window.partitionBy("__pid").orderBy("__mid")
         return (
@@ -3548,7 +2902,7 @@ class DustSession:
             .join(F.broadcast(off_df), "__pid")
             .withColumn("__rn", (F.col("__off") + F.col("__pos")).cast("long"))
             .drop("__mid", "__pid", "__off", "__pos")
-        )
+        ), acc
 
     @contextmanager
     def _exposed_rowid_view(self, overlay: Overlay, name: str, st: TableState, sql: str):
@@ -3570,26 +2924,6 @@ class DustSession:
         finally:
             cur = overlay.get(name) or st
             cur.visible_df().createOrReplaceTempView(view)
-
-    def _dquote_fallback(self, overlay: Overlay, code: str, run) -> Response:
-        """Run the UPDATE / DELETE ``code`` with every "x" read as an
-        identifier, as the read path reads it (:meth:`_sql`). SQLite's
-        fallback for a double-quoted token that names no column in scope
-        is a string literal: when Spark cannot resolve such a token, the
-        statement's work is undone and it re-runs with the token as 'x'
-        (sqlite3-probed: ``SET v = "nocol"`` stores 'nocol')."""
-        snap = overlay.snapshot()
-        while True:
-            try:
-                return run(overlay, dialect.dquote_idents_to_backticks(code))
-            except DustError:
-                raise
-            except Exception as e:
-                alt = dialect.dquote_to_literal(code, _unresolved_name(str(e)))
-                if alt == code:
-                    raise
-                overlay.restore_snapshot(snap)
-                code = alt
 
     def _update(self, overlay: Overlay, sql: str) -> Response:
         up = dialect.parse_update(sql)
@@ -3815,7 +3149,7 @@ class DustSession:
             # (tx IN (7, '9e1')) used to DATATYPE_MISMATCH at insert);
             # boolean results store 0/1 like SQLite, and the value then
             # takes the write-affinity cast
-            cond = self._dml_condition(dialect.rewrite_sqlite_fns(expr), tdef)
+            cond = self._dml_condition(dialect.rewrite_sqlite_fns(self._dq_resolve(tdef, expr)), tdef)
             val = F.expr(cond)
             try:
                 rtype = df.select(val.alias("__g")).schema[0].dataType
@@ -4510,7 +3844,9 @@ class DustSession:
         rows: DataFrame,
         *,
         changed=None,
+        check_all: bool = False,
         order=None,
+        key_order=None,
         assigned=None,
         rest: DataFrame | None = None,
         ipk: bool = False,
@@ -4524,7 +3860,9 @@ class DustSession:
 
         ``rows`` filtered by ``changed`` are the rows the statement
         writes (``changed=None``: it writes none, as in a DELETE), taken
-        in ``order``; ``rest`` is the rest of the table's post-image.
+        in ``order``; NOT NULL and CHECK test the written ones, or every
+        row of ``rows`` (``check_all``). Of two written rows sharing a key,
+        the later by ``key_order`` (default: ``order``) fails; ``rest`` is the rest of the table's post-image.
         ``stats`` maps a name to ``(column over rows, aggregate)``; the
         aggregate must ignore NULLs. ``restrict=(pre, post, dml)`` adds
         the parent side for NO ACTION / RESTRICT children of keys the
@@ -4606,7 +3944,9 @@ class DustSession:
                 ks = [f"__k{j}" for j in range(len(u))]
                 qs = [f"__q{j}" for j in range(len(u))]
                 keys = staged.filter(not_null(u)).select(
-                    *[F.col(c).alias(k) for c, k in zip(u, ks)], order.cast("long").alias("__o")
+                    *[F.col(c).alias(k) for c, k in zip(u, ks)],
+                    order.cast("long").alias("__o"),
+                    (order if key_order is None else key_order).cast("long").alias("__ko"),
                 )
                 keys_b = F.broadcast(keys) if broadcast else keys
                 if rest is not None:
@@ -4617,8 +3957,8 @@ class DustSession:
                         .select(vio(0, F.col("__o"), r).alias("__v"))
                     )
                 # an earlier written row with the same key
-                prior = keys.select(*[F.col(k).alias(q) for k, q in zip(ks, qs)], F.col("__o").alias("__p"))
-                cond = eq([F.col(k) for k in ks], [F.col(q) for q in qs]) & (F.col("__o") > F.col("__p"))
+                prior = keys.select(*[F.col(k).alias(q) for k, q in zip(ks, qs)], F.col("__ko").alias("__p"))
+                cond = eq([F.col(k) for k in ks], [F.col(q) for q in qs]) & (F.col("__ko") > F.col("__p"))
                 branches.append(
                     keys.join(F.broadcast(prior) if broadcast else prior, cond)
                     .select(vio(0, F.col("__o"), r).alias("__v"))
@@ -4678,7 +4018,7 @@ class DustSession:
             return None
         rank = F.coalesce(*[F.when(fl, F.lit(i)) for i, fl in enumerate(flags)]) if flags else None
         v = (
-            F.when(changed & rank.isNotNull(), vio(0, order, rank))
+            F.when((F.lit(True) if check_all else changed) & rank.isNotNull(), vio(0, order, rank))
             if rank is not None
             else F.lit(None).cast("struct<f:int,o:bigint,r:int>")
         )
@@ -4987,7 +4327,7 @@ class DustSession:
         then SQLite TRUTHINESS (numeric-prefix — CHECK('abc') always
         FAILS where the old try_cast-to-BOOLEAN silently passed), with
         NULL passing per SQLite's rule."""
-        cond = self._dml_condition(dialect.rewrite_sqlite_fns(expr), tdef)
+        cond = self._dml_condition(dialect.rewrite_sqlite_fns(self._dq_resolve(tdef, expr)), tdef)
         return f"coalesce({dialect.truthy_expr(cond)}, true)"
 
     def _dml_condition(self, cond: str, tdef) -> str:
@@ -5396,6 +4736,27 @@ class DustSession:
 _SQL_KEYWORDS = frozenset(
     "from where group order select limit having join on and or not as by".split()
 )
+
+
+def _dquote_retry(code: str, attempt, undo=None):
+    """``attempt(code)`` with every "x" of ``code`` read as an identifier.
+    SQLite's fallback for a double-quoted token that names no column in
+    scope is a string literal: when Spark cannot resolve such a token,
+    ``undo`` runs and the attempt repeats with the token as 'x'
+    (sqlite3-probed: ``SET v = "nocol"`` stores 'nocol'). Any other error
+    propagates."""
+    while True:
+        try:
+            return attempt(dialect.dquote_idents_to_backticks(code))
+        except DustError:
+            raise
+        except Exception as e:
+            alt = dialect.dquote_to_literal(code, _unresolved_name(str(e)))
+            if alt == code:
+                raise
+            if undo is not None:
+                undo()
+            code = alt
 
 
 def _unresolved_name(msg: str) -> str | None:

@@ -7,7 +7,9 @@ its absence) and on the full contents of both tables.
 The alphabet aims at the constraint pass: single- and multi-row
 INSERTs with explicit and auto ids, in-batch duplicates and NULLs;
 multi-row upserts whose DO UPDATE arms write UNIQUE columns, CHECK
-columns or the rowid;
+columns or the rowid; multi-row INSERT OR IGNORE, INSERT OR REPLACE
+and targetless DO NOTHING across the three key sets (id, email,
+handle), where REPLACE may displace a parent of ``txn``;
 UPDATEs that do and do not assign constrained columns (NOT NULL,
 CHECK, both UNIQUE sets, the child key, the parent key); DELETEs on
 both sides of the foreign key; and ``PRAGMA foreign_keys`` toggles,
@@ -89,6 +91,13 @@ _OPS = st.one_of(
     ),
     st.tuples(st.lists(_ACCT_ROW, min_size=1, max_size=3), st.sampled_from(_UPSERT_ARMS)).map(
         lambda x: _upsert(*x)
+    ),
+    # the conflict clauses that resolve all three key sets row by row
+    st.tuples(st.sampled_from(["INSERT OR IGNORE", "INSERT OR REPLACE"]), st.lists(_ACCT_ROW, min_size=1, max_size=3)).map(
+        lambda x: _insert("acct", ["id", "email", "handle", "balance", "lo", "hi"], x[1]).replace("INSERT", x[0], 1)
+    ),
+    st.lists(_ACCT_ROW, min_size=1, max_size=3).map(
+        lambda rs: _insert("acct", ["id", "email", "handle", "balance", "lo", "hi"], rs) + " ON CONFLICT DO NOTHING"
     ),
     st.lists(_TXN_ROW, min_size=1, max_size=3).map(
         lambda rs: _insert("txn", ["id", "acct_id", "amount"], rs)

@@ -118,6 +118,31 @@ CASES = {
         "INSERT INTO r2 VALUES (6), (5)",
         "SELECT r1.rowid, r2.rowid FROM \"r1\" JOIN \"r2\" ON r1.a = r2.a ORDER BY 1",
     ],
+    # "x" in a CHECK or generated column names the column when one has
+    # that name, else it is the string 'x' (labels keep the text)
+    "dquote-check-column": [
+        'CREATE TABLE c9 (b INT CHECK ("b" > 0), s TEXT CHECK ("s" <> "nope"))',
+        "INSERT INTO c9 VALUES (-1, 'a')",
+        "INSERT INTO c9 VALUES (1, 'nope')",
+        "INSERT INTO c9 VALUES (2, 'ok')",
+    ],
+    # ... and keeps its text as written when ADD COLUMN re-renders the
+    # table (unnamed) and RENAME COLUMN rewrites it with its label
+    "dquote-check-survives-alter": [
+        'CREATE TABLE c11 (b INT CHECK ("b" > 0))',
+        "ALTER TABLE c11 ADD COLUMN e INT",
+        "SELECT sql LIKE '%CHECK%(\"b\" > 0)%' AND sql NOT LIKE '%CONSTRAINT%' FROM sqlite_master WHERE name = 'c11'",
+        "INSERT INTO c11 VALUES (-1, 1)",
+        "ALTER TABLE c11 RENAME COLUMN b TO bb",
+        "INSERT INTO c11 VALUES (-2, 1)",
+        "INSERT INTO c11 VALUES (2, 1)",
+    ],
+    "dquote-generated-column": [
+        'CREATE TABLE c10 (b INT, c INT AS ("b" + 1), d TEXT AS ("b" || "nope"))',
+        "INSERT INTO c10(b) VALUES (4)",
+        'ALTER TABLE c10 ADD COLUMN e INT AS ("c" * 2)',
+        "SELECT b, c, d, e FROM c10",
+    ],
     # a named CHECK keeps its name when ADD COLUMN re-renders the table
     "named-check-survives-add-column": [
         "CREATE TABLE c8 (flag INT, CONSTRAINT flagged CHECK (flag))",

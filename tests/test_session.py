@@ -872,7 +872,7 @@ def test_bulk_insert_select_parallel_rowid(db, spark):
     from pyspark.sql import functions as F
 
     src_df = spark.range(0, 1000).repartition(8).select(F.col("id").alias("v"))
-    indexed = db._with_insertion_index(src_df)
+    indexed, _ = db._with_insertion_index(src_df)
     plan = indexed._jdf.queryExecution().executedPlan().toString()
     assert "partitionBy" not in plan or "__pid" in plan
     ids = [r["__rn"] for r in indexed.collect()]
@@ -1459,8 +1459,94 @@ def test_update_or_ignore_replace_sqlite_differential(db):
             "UPDATE w SET v = v + 10 LIMIT 3",
             "DELETE FROM w WHERE v > 0 LIMIT 1",
         ],
+        # INSERT under two key sets: SQLite's row loop decides each row
+        # against the rows before it, so a row that lost frees its keys
+        # (OR IGNORE, DO NOTHING) and a displaced row is gone (REPLACE)
+        [
+            "CREATE TABLE t (a INT UNIQUE, b INT UNIQUE)",
+            "INSERT OR IGNORE INTO t VALUES (1, 1), (2, 1), (2, 2)",
+        ],
+        [
+            "CREATE TABLE t (a INT UNIQUE, b INT UNIQUE)",
+            "INSERT OR REPLACE INTO t VALUES (1, 1), (2, 1), (2, 2)",
+        ],
+        [
+            "CREATE TABLE t (a INT UNIQUE, b INT UNIQUE)",
+            "INSERT INTO t VALUES (1, 1), (2, 1), (2, 2) ON CONFLICT DO NOTHING",
+        ],
+        [
+            "CREATE TABLE t (id INTEGER PRIMARY KEY, u TEXT UNIQUE)",
+            "INSERT INTO t VALUES (1, 'a'), (2, 'a'), (2, 'b') ON CONFLICT DO NOTHING",
+        ],
+        [
+            "CREATE TABLE t (id INTEGER PRIMARY KEY, u TEXT UNIQUE)",
+            "INSERT OR IGNORE INTO t VALUES (1, 'a'), (1, 'b'), (2, 'b')",
+        ],
+        # the parent row REPLACE displaces takes its foreign-key action
+        [
+            "PRAGMA foreign_keys=ON",
+            "CREATE TABLE p (id INTEGER PRIMARY KEY, e TEXT UNIQUE)",
+            "CREATE TABLE c (id INTEGER PRIMARY KEY, pid INT REFERENCES p(id))",
+            "INSERT INTO p VALUES (1, 'a')",
+            "INSERT INTO c VALUES (1, 1)",
+            "INSERT OR REPLACE INTO p VALUES (9, 'a')",
+            "INSERT OR REPLACE INTO p VALUES (1, 'z')",
+        ],
+        [
+            "PRAGMA foreign_keys=ON",
+            "CREATE TABLE p (id INTEGER PRIMARY KEY, e TEXT UNIQUE)",
+            "CREATE TABLE c (id INTEGER PRIMARY KEY, pid INT REFERENCES p(id) ON DELETE CASCADE)",
+            "INSERT INTO p VALUES (1, 'a')",
+            "INSERT INTO c VALUES (1, 1)",
+            "INSERT OR REPLACE INTO p VALUES (9, 'a')",
+        ],
+        # REPLACE deletes before it inserts: a key it puts back still
+        # takes the ON DELETE actions of the row it displaced
+        [
+            "PRAGMA foreign_keys=ON",
+            "CREATE TABLE p (id INTEGER PRIMARY KEY, e TEXT UNIQUE)",
+            "CREATE TABLE c (id INTEGER PRIMARY KEY, pid INT REFERENCES p(id) ON DELETE CASCADE)",
+            "CREATE TABLE d (id INTEGER PRIMARY KEY, pid INT REFERENCES p(id) ON DELETE SET NULL)",
+            "INSERT INTO p VALUES (1, 'a'), (2, 'b')",
+            "INSERT INTO c VALUES (1, 1), (2, 2)",
+            "INSERT INTO d VALUES (1, 1), (2, 2)",
+            "INSERT OR REPLACE INTO p VALUES (1, 'z'), (5, 'y')",
+            "INSERT OR REPLACE INTO p VALUES (3, 'b')",
+        ],
+        [
+            "PRAGMA foreign_keys=ON",
+            "CREATE TABLE p (id INTEGER PRIMARY KEY, e TEXT UNIQUE, up INT REFERENCES p(id) ON DELETE CASCADE)",
+            "INSERT INTO p VALUES (1, 'a', NULL), (2, 'b', 1), (3, 'c', 2)",
+            "INSERT OR REPLACE INTO p VALUES (1, 'z', NULL)",
+        ],
+        # an auto id is max(rowid)+1 when its row lands, so a later
+        # explicit id of the batch may meet it
+        [
+            "CREATE TABLE t (id INTEGER PRIMARY KEY, v TEXT)",
+            "INSERT OR IGNORE INTO t VALUES (NULL, 'a'), (1, 'b')",
+        ],
+        [
+            "CREATE TABLE t (id INTEGER PRIMARY KEY, v TEXT)",
+            "INSERT INTO t VALUES (NULL, 'a'), (1, 'b') ON CONFLICT DO NOTHING",
+        ],
+        [
+            "CREATE TABLE t (id INTEGER PRIMARY KEY, v TEXT)",
+            "INSERT INTO t VALUES (NULL, 'a'), (1, 'b') ON CONFLICT(id) DO UPDATE SET v = excluded.v",
+        ],
+        # an arm that moves a key: a later row meets the moved row
+        [
+            "CREATE TABLE t (id INTEGER PRIMARY KEY, v TEXT)",
+            "INSERT INTO t VALUES (1, 'a')",
+            "INSERT INTO t VALUES (1, 'x'), (5, 'y') ON CONFLICT(id) DO UPDATE SET id = 5, v = excluded.v",
+        ],
     ],
-    ids=["or-ignore-from", "or-replace-from", "or-ignore-keys", "without-rowid-scan", "without-rowid-pk2"],
+    ids=[
+        "or-ignore-from", "or-replace-from", "or-ignore-keys", "without-rowid-scan", "without-rowid-pk2",
+        "insert-ignore-two-sets", "insert-replace-two-sets", "do-nothing-two-sets", "do-nothing-pk-unique",
+        "insert-ignore-pk-unique", "replace-parent-no-action", "replace-parent-cascade",
+        "replace-same-key-actions", "replace-same-key-self-cascade",
+        "ignore-auto-then-id", "do-nothing-auto-then-id", "do-update-auto-then-id", "do-update-moves-key",
+    ],
 )
 def test_row_change_order_sqlite_differential(db, stmts):
     """Statement-for-statement replay vs sqlite3: error text and
@@ -1680,7 +1766,11 @@ def test_constraint_pass_job_budget(spark, tmp_path):
     row (NOT NULL, CHECK) in the action that looks for in-batch key
     groups; DO NOTHING has no such action and spends one more. An
     UPDATE OR IGNORE that assigns no key column resolves without
-    collecting rows."""
+    collecting rows. The OR IGNORE, OR REPLACE and targetless DO NOTHING
+    bounds, and that of a two-row DO UPDATE assigning its target key
+    without moving it, are their counts before the INSERT family shared
+    one path (a single-row batch has no in-batch key group to look
+    for)."""
     db = DustSession(spark, warehouse=str(tmp_path / "wh"))
     sc = spark.sparkContext
     try:
@@ -1711,5 +1801,11 @@ def test_constraint_pass_job_budget(spark, tmp_path):
         assert jobs(f"upu-{tag}", ups + "UPDATE SET balance = excluded.balance") <= 32
         assert jobs(f"upn-{tag}", ups + "NOTHING") <= 17
         assert jobs(f"ign-{tag}", "UPDATE OR IGNORE acct SET note = 'q' WHERE id = 2") <= 4
+        assert jobs(f"ori-{tag}", "INSERT OR IGNORE INTO acct(email, balance) VALUES ('c@x', 1.0)") <= 14
+        assert jobs(f"orr-{tag}", "INSERT OR REPLACE INTO acct(id, email, balance) VALUES (4, 'd@x', 3.0)") <= 15
+        dn = "INSERT INTO acct(email, balance) VALUES ('zz@x', 9.0) ON CONFLICT DO NOTHING"
+        assert jobs(f"dn-{tag}", dn) <= 33
+        two = "INSERT INTO acct(id, email, balance) VALUES (1, 'a@x', 7.0), (2, 'b@x', 8.0) ON CONFLICT(id) DO "
+        assert jobs(f"upk-{tag}", two + "UPDATE SET id = excluded.id, balance = excluded.balance") <= 32
     finally:
         db.close()
