@@ -336,15 +336,6 @@ def statement_kind(sql: str) -> str:
     return kind
 
 
-def is_write(sql: str) -> bool:
-    return statement_kind(sql) in WRITE_KINDS or statement_kind(sql) in (
-        "CREATE_TABLE",
-        "CREATE_INDEX",
-        "CREATE_VIEW",
-        "CREATE_TRIGGER",
-    )
-
-
 # --------------------------------------------------------------------------
 # deterministic-statement guard (reference README.md:30-33: only
 # deterministic SQL is safe under statement-based replication)

@@ -844,26 +844,6 @@ def kmeans_centroids(
     return cents
 
 
-def _centroid_dist_array(v, cents: np.ndarray):
-    """array<struct<d,i>> of squared L2 distances to each centroid —
-    pure Catalyst (centroids as literal arrays). array_min gives the
-    nearest list (ties to the lowest id via the lexicographic (d, i)
-    struct compare — same rule as np.argmin); array_sort + slice gives
-    the n_probe nearest. Only for small coarse quantizers: the literal
-    tree grows with n_lists x dim, the Arrow GEMM path takes over past
-    _CATALYST_CENTROID_CAP."""
-    structs = []
-    for i, c in enumerate(cents):
-        carr = F.array(*[F.lit(float(x)) for x in c])
-        d = F.aggregate(
-            F.zip_with(v, carr, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        )
-        structs.append(F.struct(d.alias("d"), F.lit(i).alias("i")))
-    return F.array(*structs)
-
-
 _CATALYST_CENTROID_CAP = 2048  # n_lists x dim literals before Arrow wins
 
 

@@ -967,16 +967,21 @@ class DustSession:
                 if fk.ref_table == parent:
                     yield child, cst, fk
 
-    def _fk_action_children(self, overlay: Overlay, parent: str, dml: str = "update") -> bool:
-        """True when some foreign key references ``parent`` with an ON
-        UPDATE (or ON DELETE) action — CASCADE/SET NULL/SET DEFAULT.
-        The update paths then carry pre-image key columns so
-        `_check_child_fks` can map old→new key values."""
-        return any(
-            (fk.on_delete if dml == "delete" else fk.on_update)
-            in ("CASCADE", "SET NULL", "SET DEFAULT")
-            for _, _, fk in self._fk_children(overlay, parent)
-        )
+    def _fk_acts(self, overlay: Overlay, parent: str, assigned=None) -> list:
+        """``(child, child state, fk, referenced columns)`` of every foreign
+        key referencing ``parent`` whose ON DELETE action (``assigned`` is
+        None) or ON UPDATE action is CASCADE, SET NULL or SET DEFAULT. As
+        in SQLite, an UPDATE's actions run only when it assigns
+        (``assigned``) a referenced column."""
+        if not self._fk_enabled:
+            return []
+        acts = []
+        for child, cst, fk in self._fk_children(overlay, parent):
+            if (fk.on_delete if assigned is None else fk.on_update) in ("CASCADE", "SET NULL", "SET DEFAULT"):
+                rcs = self._fk_ref_columns(overlay, cst.tdef, fk)
+                if assigned is None or set(rcs) & set(assigned):
+                    acts.append((child, cst, fk, rcs))
+        return acts
 
     def _drop_table(self, overlay: Overlay, sql: str) -> Response:
         """DROP TABLE / VIEW / INDEX with SQLite's probed error strings
@@ -1195,6 +1200,28 @@ class DustSession:
             for s in (*t["body"], *((t["when"],) if t["when"] else ()))
         )
 
+    @contextmanager
+    def _trigger_level(self, key: str):
+        """One level of trigger recursion: a trigger program, or the child
+        statement of a foreign-key action (SQLite runs both as trigger
+        programs). Depth-capped at SQLite's SQLITE_MAX_TRIGGER_DEPTH
+        (1000) with its error string."""
+        if len(self._trigger_stack) >= self._max_trigger_depth:
+            raise DustError("too many levels of trigger recursion")
+        # each level re-enters the statement executor (~tens of Python
+        # frames per level): grow the interpreter's recursion limit ahead
+        # of the stack so a depth-999 chain never trips RecursionError
+        import sys
+
+        need = (len(self._trigger_stack) + 16) * 60 + 1000
+        if sys.getrecursionlimit() < need:
+            sys.setrecursionlimit(need)
+        self._trigger_stack.append(key)
+        try:
+            yield
+        finally:
+            self._trigger_stack.pop()
+
     def _fire_triggers(self, overlay: Overlay, tdef: TableDef, trigs: list, rows: list) -> set:
         """Fire ``trigs`` for each (old, new) row dict pair, per-row in
         statement order (SQLite's row-at-a-time model — the engine's
@@ -1216,22 +1243,7 @@ class DustSession:
                 key = t["name"].lower()
                 if not self._recursive_triggers and key in self._trigger_stack:
                     continue  # re-entry through a cycle: suppressed
-                if len(self._trigger_stack) >= self._max_trigger_depth:
-                    # PRAGMA recursive_triggers=ON: depth-capped at
-                    # SQLite's SQLITE_MAX_TRIGGER_DEPTH (1000) with its
-                    # error string
-                    raise DustError("too many levels of trigger recursion")
-                # each trigger level re-enters the statement executor
-                # (~tens of Python frames per level): grow the
-                # interpreter's recursion limit ahead of the stack so a
-                # depth-999 chain never trips RecursionError
-                import sys
-
-                need = (len(self._trigger_stack) + 16) * 60 + 1000
-                if sys.getrecursionlimit() < need:
-                    sys.setrecursionlimit(need)
-                self._trigger_stack.append(key)
-                try:
+                with self._trigger_level(key):
                     try:
                         if t["when"]:
                             w = dialect.rewrite_raise(
@@ -1265,8 +1277,6 @@ class DustSession:
                         # IGNORE never reaches here — it is consumed by
                         # the inner statement's own firing loop.
                         ignored.add(idx)
-                finally:
-                    self._trigger_stack.pop()
                 if idx in ignored:
                     break
         return ignored
@@ -1315,17 +1325,6 @@ class DustSession:
                 d[alias] = ordinal
         return d
 
-    def _fire_pairs(self, overlay: Overlay, tdef, trig_b: list, trig_a: list, pairs: list) -> None:
-        """Post-mutation trigger firing that preserves SQLite's per-row
-        interleave (B:row1, A:row1, B:row2, ...) when BOTH timings have
-        triggers."""
-        if not trig_b:
-            self._fire_triggers(overlay, tdef, trig_a, pairs)
-            return
-        for p in pairs:
-            self._fire_triggers(overlay, tdef, trig_b, [p])
-            self._fire_triggers(overlay, tdef, trig_a, [p])
-
     @staticmethod
     def _scan_key(tdef) -> str:
         """SQL for SQLite's scan order over a table, the b-tree order:
@@ -1339,28 +1338,17 @@ class DustSession:
 
     @staticmethod
     def _row_pairs(tdef, rows: DataFrame, update: bool) -> tuple[list, list]:
-        """The (OLD, NEW) row pairs of ``rows`` with their ``__ord``
-        keys, in SQLite's firing order: ``__ord`` (``_scan_key``), or on
-        a frame without it (the child rows of an FK action, whose keys
-        are then None) the rowid or PRIMARY KEY tuple of OLD, keeping
-        frame order where keys do not compare. An UPDATE's rows carry
-        OLD as ``__old_<col>`` next to NEW; a DELETE's rows are OLD and
-        have no NEW."""
+        """The (OLD, NEW) row pairs of ``rows`` with their ``__ord`` keys,
+        in SQLite's firing order, ``__ord`` (``_scan_key``). An UPDATE's
+        rows carry OLD as ``__old_<col>`` next to NEW; a DELETE's rows are
+        OLD and have no NEW."""
         fields = [f.name for f in tdef.schema.fields]
         got = []
         for r in rows.collect():
             d = r.asDict()
             cur = {c: d[c] for c in fields}
-            pair = ({c: d[f"__old_{c}"] for c in fields}, cur) if update else (cur, None)
-            got.append((d.get("__ord"), pair))
-        if "__ord" in rows.columns:
-            got.sort(key=lambda g: g[0])
-        else:
-            key = [tdef.rowid_column] if tdef.rowid_column else list(tdef.primary_key)
-            try:
-                got = sorted(got, key=lambda g: tuple(g[1][0][c] for c in key))
-            except TypeError:
-                pass
+            got.append((d["__ord"], ({c: d[f"__old_{c}"] for c in fields}, cur) if update else (cur, None)))
+        got.sort(key=lambda g: g[0])
         return [p for _, p in got], [o for o, _ in got]
 
     def _row_triggers(
@@ -2351,7 +2339,7 @@ class DustSession:
             if action == "update":
                 moves = [c for c in dict.fromkeys((*targets[0], rc)) if c in sets] if exact_seq and n_src > 1 else []
                 updated, rest, replay = self._upsert(tdef, ins, rows, existing, targets[0], sets, where, moves)
-                rows = rows.unionByName(updated)
+                rows = rows.unionByName(updated, allowMissingColumns=True)
         fires = any(trig.values())
         batch = []
         if replay or fires:
@@ -2404,33 +2392,41 @@ class DustSession:
             rows = rows.localCheckpoint(eager=True)
             self._returning_df = rows.filter(w).orderBy("__rn").select(*fields)
             self._returning_table = t
+
+        def check(restrict=None):
+            return self._check_constraints(
+                overlay,
+                tdef,
+                rows,
+                changed=w,
+                check_all=True,
+                order=F.col("__rn"),
+                # a row an arm rewrote held its key before the batch: a
+                # batch row meeting that key fails at its own position
+                key_order=F.when(F.col("__new") == 1, F.col("__rn")).otherwise(F.col("__rn") - F.lit(1 << 62)),
+                rest=rest,
+                ipk=rc in cols or (action == "update" and rc in sets),
+                restrict=restrict,
+                stats=stats,
+                broadcast=exact_seq,
+            )
+
         if action == "replace":
             # REPLACE deletes the rows it displaces before it inserts:
             # their ON DELETE actions see the table without them, so a
             # REPLACE that puts a key back still cascades
-            rest = self._check_child_fks(overlay, t, rest, dml="delete")
+            idk = [rc] if rc else list(tdef.primary_key)
+            own = self._fk_actions(overlay, t, st, rest, existing.join(rest, idk, "left_anti"), None, check)
+            rest = rest if own is None else own.df
         out_df = rest.unionByName(rows.filter(w).select(*fields))
         if action == "update":
-            out_df = self._check_child_fks(overlay, t, out_df, dml="delete")
-        # the parent side of the foreign keys, for the rows REPLACE and
-        # DO UPDATE removed
+            # a DO UPDATE arm that moves a key takes its ON UPDATE actions
+            own = self._fk_actions(overlay, t, st, out_df, rows.filter(w & (F.col("__new") == 0)), sets, check)
+            out_df = out_df if own is None else own.df
+        # the parent side of the foreign keys, for the rows REPLACE
+        # removed and the keys DO UPDATE moved
         removes = action in ("replace", "update")
-        res = self._check_constraints(
-            overlay,
-            tdef,
-            rows,
-            changed=w,
-            check_all=True,
-            order=F.col("__rn"),
-            # a row an arm rewrote held its key before the batch: a batch
-            # row meeting that key fails at its own position
-            key_order=F.when(F.col("__new") == 1, F.col("__rn")).otherwise(F.col("__rn") - F.lit(1 << 62)),
-            rest=rest,
-            ipk=rc in cols or (action == "update" and rc in sets),
-            restrict=(existing, out_df, "delete") if removes else None,
-            stats=stats,
-            broadcast=exact_seq,
-        )
+        res = check((existing, out_df, "update" if action == "update" else "delete") if removes else None)
         n = int(res["n"]) if changes is None else changes
         k = int(res["k"])
         hw, last = st.high_water, self._last_insert_id
@@ -2596,9 +2592,10 @@ class DustSession:
         (sqlite3-probed: WHERE false leaves the row untouched AND does not
         count toward changes(); excluded.* and bare/table-qualified target
         columns are legal). Returns (the updated rows, ordered at their
-        arm's ``__rn``; the rest of the table; whether an arm changed one
-        of the key columns ``moves``, which a later batch row may then
-        meet — one Spark action, only when ``moves`` is given)."""
+        arm's ``__rn``, with their pre-image as ``__old_<col>``; the rest
+        of the table; whether an arm changed one of the key columns
+        ``moves``, which a later batch row may then meet — one Spark
+        action, only when ``moves`` is given)."""
         fields = [f.name for f in tdef.schema.fields]
 
         def strip(e: str) -> str:
@@ -2613,7 +2610,7 @@ class DustSession:
             if f.name in sets
             else f"`{f.name}`"
             for f in tdef.schema.fields
-        ] + [f"CASE WHEN {upd} THEN 1 ELSE 0 END AS __upd", "__xrn AS __rn"] + [f"`{c}` AS `__old_{c}`" for c in moves]
+        ] + [f"CASE WHEN {upd} THEN 1 ELSE 0 END AS __upd", "__xrn AS __rn"] + [f"`{c}` AS `__old_{c}`" for c in fields]
         exc = rows.filter(F.col("__w") == 0).select(
             F.lit(1).alias("__exc_m"),
             F.col("__rn").alias("__xrn"),
@@ -2630,7 +2627,9 @@ class DustSession:
             marked = joined.selectExpr(*projs)
         marked = self._apply_generated(tdef, marked).localCheckpoint(eager=True)
         hit = F.col("__upd") == 1
-        updated = marked.filter(hit).select(*fields, "__rn", F.lit(1).alias("__w"), F.lit(0).alias("__new"))
+        updated = marked.filter(hit).select(
+            *fields, "__rn", F.lit(1).alias("__w"), F.lit(0).alias("__new"), *[f"__old_{c}" for c in fields]
+        )
         moved = bool(moves) and marked.agg(
             F.max(F.when(hit & ~reduce(lambda a, b: a & b, [F.col(c).eqNullSafe(F.col(f"__old_{c}")) for c in moves]), 1))
         ).first()[0] is not None
@@ -2652,14 +2651,20 @@ class DustSession:
         return [] if cond is None else [r.asDict() for r in df.filter(cond).collect()]
 
     def _images_frame(self, tdef: TableDef, images: list) -> DataFrame:
-        """The replay's row images (rn, image, landed, new) as the write
-        tail's rows frame; generated columns recompute from the base
+        """The replay's row images (rn, image, landed, new, pre-image)
+        as the write tail's rows frame, a rewritten row's pre-image as
+        ``__old_<col>``; generated columns recompute from the base
         columns."""
+        fs = tdef.schema.fields
         schema = T.StructType(
-            list(tdef.schema.fields)
+            list(fs)
             + [T.StructField(c, t) for c, t in (("__rn", T.LongType()), ("__w", T.IntegerType()), ("__new", T.IntegerType()))]
+            + [T.StructField(f"__old_{f.name}", f.dataType) for f in fs]
         )
-        data = [tuple(d.get(f.name) for f in tdef.schema.fields) + (int(rn), w, n) for rn, d, w, n in images]
+        data = [
+            tuple(d.get(f.name) for f in fs) + (int(rn), w, n) + tuple((o or {}).get(f.name) for f in fs)
+            for rn, d, w, n, o in images
+        ]
         return self._apply_generated(tdef, self.spark.createDataFrame(data, schema))
 
     def _insert_replay(
@@ -2688,11 +2693,12 @@ class DustSession:
           AFTER INSERT fires.
 
         Returns ``(images, gone, changes)``: the rows frame of the write
-        tail as (rn, image, landed, new) — every proposed row, the final
-        image of each landed row, and of each existing row an arm rewrote
-        — the rowid (or PRIMARY KEY) of each existing row REPLACE deleted
-        or an arm rewrote, and changes(), which counts every insert and
-        every applied arm. A body reading its own table sees the pre- or
+        tail as (rn, image, landed, new, pre-image) — every proposed row,
+        the final image of each landed row, and of each existing row an
+        arm rewrote with its image before the statement — the rowid (or
+        PRIMARY KEY) of each existing row REPLACE deleted or an arm
+        rewrote, and changes(), which counts every insert and every
+        applied arm. A body reading its own table sees the pre- or
         post-statement state where SQLite sees the row-partial image
         (documented)."""
         tdef = st.tdef
@@ -2733,7 +2739,7 @@ class DustSession:
                 continue
             if auto:
                 row = dict(row, **{rc: cur_max + 1})
-            images.append((rn, row, 0, 1))
+            images.append((rn, row, 0, 1, None))
             hits = []
             for i in range(len(targets)):
                 e = cur.get((i, key(i, row)))
@@ -2778,8 +2784,8 @@ class DustSession:
                         pass
                 n += 1
                 kind, at = e[1]
-                if kind == "old":
-                    rewritten[at] = (rn, new)
+                if kind == "old":  # keeps the row's image from before the statement
+                    rewritten[at] = (rn, new, rewritten[at][2] if at in rewritten else old)
                 else:
                     fresh[at] = new
                 continue
@@ -2803,8 +2809,8 @@ class DustSession:
             hold([row, ("new", rn)])
             n += 1
             self._fire_triggers(overlay, tdef, trig["a"], [(None, dict(row))])
-        images += [(rn, d, 1, 1) for rn, d in fresh.items()]
-        images += [(rn, d, 1, 0) for rn, d in rewritten.values()]
+        images += [(rn, d, 1, 1, None) for rn, d in fresh.items()]
+        images += [(rn, d, 1, 0, o) for rn, d, o in rewritten.values()]
         return images, gone | set(rewritten), n
 
     @staticmethod
@@ -2965,15 +2971,13 @@ class DustSession:
         # one pre-image serves conflict resolution, the triggers' OLD rows
         # and the old→new key map of FK ON UPDATE actions
         olds = []
-        if up.or_action or trig_b or trig_a or (
-            self._fk_enabled and self._fk_action_children(overlay, up.table)
-        ):
+        if up.or_action or trig_b or trig_a or self._fk_acts(overlay, up.table, assigned):
             olds = [f"`{f.name}` AS `__old_{f.name}`" for f in tdef.schema.fields]
         if up.from_sql is not None:
             if up.tail is not None:
                 raise DustError("unsupported: UPDATE ... FROM with ORDER BY/LIMIT")
             marked = self._update_from(overlay, st, up, where, assigned, olds)
-            return self._row_change(overlay, st, up.table, marked, trig_b, trig_a, assigned, up.or_action)
+            return self._ok(self._row_change(overlay, st, up.table, marked, trig_b, trig_a, assigned, up.or_action)[0])
 
         # WITH-CTE DML: the CTE list prefixes the rewrite so SET/WHERE
         # subqueries can reference it (SQLite CTE-DML semantics)
@@ -3014,7 +3018,7 @@ class DustSession:
             f"CASE WHEN ({where}) THEN 1 ELSE 0 END AS __m, {self._scan_key(tdef)} AS __ord "
             f"FROM __dust_stage AS `{up.table}`"
         )
-        return self._row_change(overlay, st, up.table, marked, trig_b, trig_a, assigned, up.or_action)
+        return self._ok(self._row_change(overlay, st, up.table, marked, trig_b, trig_a, assigned, up.or_action)[0])
 
     def _stage_where(self, st: TableState, table: str, where: str, tail, with_prefix: str) -> str:
         """Stage ``st`` as ``__dust_stage`` for an UPDATE or DELETE and
@@ -3039,16 +3043,20 @@ class DustSession:
 
     def _row_change(
         self, overlay: Overlay, st: TableState, table: str, marked: DataFrame, trig_b: list, trig_a: list,
-        assigned=None, or_action=None,
-    ) -> Response:
-        """The shared tail of every UPDATE, UPDATE...FROM and DELETE,
-        over the statement's marked frame: the table's columns (an
-        UPDATE's post-image), ``__m`` (1 on the rows it changes),
-        ``__ord`` (SQLite's scan order: the old rowid, or a monotone id
-        on WITHOUT ROWID tables) and, when an UPDATE's conflict
-        resolution, triggers or FK ON UPDATE actions need it, the
-        pre-image as ``__old_<col>``. ``assigned`` holds an UPDATE's SET
-        columns and is None on a DELETE."""
+        assigned=None, or_action=None, fk_parent: str | None = None,
+    ) -> tuple[int, TableState]:
+        """The shared tail of every UPDATE, UPDATE...FROM, DELETE and
+        foreign-key action, over the statement's marked frame: the
+        table's columns (an UPDATE's post-image), ``__m`` (1 on the rows
+        it changes), ``__ord`` (SQLite's scan order: the old rowid, or a
+        monotone id on WITHOUT ROWID tables) and, when an UPDATE's
+        conflict resolution, triggers or FK ON UPDATE actions need it,
+        the pre-image as ``__old_<col>``. ``assigned`` holds an UPDATE's
+        SET columns and is None on a DELETE; ``fk_parent`` names the
+        parent table when this is the child statement of a foreign-key
+        action. Returns the change count and the table's new state,
+        written when a row changed, except by an action on its own table
+        (the parent statement writes that)."""
         tdef = st.tdef
         fields = [f.name for f in tdef.schema.fields]
         update = assigned is not None
@@ -3057,6 +3065,8 @@ class DustSession:
         if update:
             marked = self._apply_generated(tdef, marked)
         marked = marked.localCheckpoint(eager=True)
+        if or_action == "replace":
+            gone, marked = marked.filter(F.col("__drop")), marked.filter(~F.col("__drop")).drop("__drop")
 
         def revert(back) -> DataFrame:
             # reverted rows keep their OLD image and don't count toward
@@ -3073,6 +3083,10 @@ class DustSession:
             if back is not None:
                 marked = revert(back)
         ignored, after = self._row_triggers(overlay, tdef, trig_b, trig_a, marked, update, admit)
+        if ignored and fk_parent is not None:
+            # a child row a trigger's RAISE(IGNORE) keeps still holds the
+            # parent's old key, which SQLite's statement counter reports
+            raise DustError("FOREIGN KEY constraint failed")
         if ignored:
             marked = revert(F.col("__ord").isin(ignored)).localCheckpoint(eager=True)
         hit = F.col("__m") == 1
@@ -3081,59 +3095,53 @@ class DustSession:
             self._returning_df = marked.filter(hit).select(*fields)
             self._returning_table = table
 
-        # child FK actions first (a self-referencing ON UPDATE CASCADE
-        # fixes the post-image), then the constraint pass on the final
-        # frame — SQLite checks FKs after actions have applied
-        if update:
-            new_df = self._check_child_fks(
-                overlay, table, new_df, dml="update", changes_df=marked.filter(hit)
-            )
-            n, hw = self._update_checks(overlay, st, marked, assigned, new_df)
-        elif self._fk_enabled and self._fk_action_children(overlay, table, "delete"):
-            n = marked.filter(hit).count()
-            new_df = self._check_child_fks(overlay, table, new_df, dml="delete")
-            _, hw = self._delete_checks(overlay, st, new_df, new_df)
-        else:
-            n, hw = self._delete_checks(overlay, st, marked, new_df, deleted=hit)
-        new_st = overlay.catalog.materialize(table, TableState(tdef, new_df, hw, st.version + 1))
-        overlay.put(table, new_st)
-        after()
-        return self._ok(n)
-
-    def _update_checks(
-        self, overlay: Overlay, st: TableState, marked: DataFrame, assigned, new_df: DataFrame
-    ) -> tuple[int, int]:
-        """The UPDATE paths' constraint pass over the marked post-image
-        (``__m`` = changed, ``__ord`` = scan order), with the change
-        count and, when the rowid moves, the new high-water folded in.
-        ``new_df`` is the post-image after FK actions: the parent side
-        checks children against it."""
-        tdef = st.tdef
+        # the FK actions run before the constraint pass (SQLite changes
+        # the row, runs its actions, and checks immediate foreign keys at
+        # the end of the statement); a self-referencing one changes the
+        # post-image. One pass then returns the change count and the
+        # rowid high-water: max(rowid) over the rows that stay, or the
+        # monotone one of an AUTOINCREMENT table, which only a moved
+        # rowid raises (sqlite3-probed)
         rc = tdef.rowid_column
-        hit = F.col("__m") == 1
         stats = {"n": (F.when(hit, F.lit(1)), F.count)}
-        if rc in assigned:
-            stats["mx"] = (F.col(rc), F.max)
-        res = self._check_constraints(
-            overlay,
-            tdef,
-            marked,
-            changed=hit,
-            order=F.col("__ord"),
-            assigned=set(assigned),
-            rest=marked.filter(~hit),
-            ipk=True,
-            restrict=(st.df, new_df, "update"),
-            stats=stats,
-        )
-        hw = st.high_water
-        if rc in assigned:
-            # SQLite's next auto rowid is max(rowid)+1, so an UPDATE
-            # that moves the max moves the sequence either way
-            # (sqlite3-probed; AUTOINCREMENT stays monotone)
+        if rc and (not tdef.autoincrement or rc in (assigned or ())):
+            stats["mx"] = (F.col(rc) if update else F.when(~hit, F.col(rc)), F.max)
+
+        def check(restrict=None):
+            return self._check_constraints(
+                overlay,
+                tdef,
+                marked,
+                changed=hit if update else None,
+                order=F.col("__ord"),
+                assigned=set(assigned) if update else None,
+                rest=marked.filter(~hit),
+                ipk=True,
+                restrict=restrict,
+                stats=stats,
+            )
+
+        own = None
+        if or_action == "replace":
+            # the rows REPLACE deletes take their ON DELETE actions
+            own = self._fk_actions(overlay, table, st, new_df, gone, None, check)
+            new_df = new_df if own is None else own.df
+        own = self._fk_actions(overlay, table, st, new_df, marked.filter(hit), assigned, check) or own
+        if own is not None:
+            new_df = own.df
+        res = check((st.df, new_df, "update" if update else "delete"))
+        n, hw = int(res["n"]), st.high_water
+        if "mx" in stats:
             mx = int(res["mx"] or 0)
             hw = max(hw, mx) if tdef.autoincrement else mx
-        return int(res["n"]), hw
+        if own is not None and not tdef.autoincrement:
+            hw = own.high_water  # the self-referencing actions' rows
+        new_st = TableState(tdef, new_df, hw, st.version + 1)
+        if n and table != fk_parent:
+            new_st = overlay.catalog.materialize(table, new_st)
+            overlay.put(table, new_st)
+        after()
+        return n, new_st
 
     def _apply_generated(self, tdef: TableDef, df: DataFrame) -> DataFrame:
         """(Re)compute GENERATED ALWAYS AS columns from the current row
@@ -3247,8 +3255,9 @@ class DustSession:
     def _update_replace(tdef: TableDef, marked: DataFrame) -> DataFrame:
         """UPDATE OR REPLACE over the set-based post-image
         (sqlite3-probed): rows conflicting with an updated row's new key
-        are DELETED, the last updated row in scan order (``__ord``)
-        winning the key; changes() counts only the updates, like SQLite.
+        are DELETED (flagged ``__drop``), the last updated row in scan
+        order (``__ord``) winning the key; changes() counts only the
+        updates, like SQLite.
 
         Residual divergence (documented): SQLite visits the rowids it
         collected up front, so a row that moves onto a later row's rowid
@@ -3269,8 +3278,8 @@ class DustSession:
             drop = drop | (
                 ~nullk & (grp_cnt > 1) & (has_upd == 1) & (F.col("__ord") != last_upd)
             )
-        # windows can't sit in a WHERE — materialize the flag first
-        return marked.withColumn("__drop", drop).filter(~F.col("__drop")).drop("__drop")
+        # windows can't sit in a WHERE: the caller filters on the flag
+        return marked.withColumn("__drop", drop)
 
     def _update_from(
         self,
@@ -3373,30 +3382,7 @@ class DustSession:
         )
         trig_b = self._table_triggers(de.table, "DELETE", "BEFORE")
         trig_a = self._table_triggers(de.table, "DELETE", "AFTER")
-        return self._row_change(overlay, st, de.table, marked, trig_b, trig_a)
-
-    def _delete_checks(
-        self, overlay: Overlay, st: TableState, rows: DataFrame, post: DataFrame, deleted=None
-    ) -> tuple[int | None, int]:
-        """A DELETE's one aggregate over ``rows``: the deleted count
-        (``deleted`` marks them; None: not counted), the parent-side FK
-        check of the post-image ``post``, and the new high-water.
-        SQLite's auto-rowid base is max(rowid) over the CURRENT rows
-        (ids free up when the max row is deleted, sqlite3-probed);
-        AUTOINCREMENT tables keep the monotone high-water instead."""
-        rc = st.tdef.rowid_column
-        track = bool(rc) and not st.tdef.autoincrement
-        stats = {}
-        if deleted is not None:
-            stats["n"] = (F.when(deleted, F.lit(1)), F.count)
-        if track:
-            keep = F.col(rc) if deleted is None else F.when(~deleted, F.col(rc))
-            stats["mx"] = (keep, F.max)
-        res = self._check_constraints(
-            overlay, st.tdef, rows, restrict=(st.df, post, "delete"), stats=stats
-        )
-        n = int(res["n"]) if deleted is not None else None
-        return n, (int(res["mx"] or 0) if track else st.high_water)
+        return self._ok(self._row_change(overlay, st, de.table, marked, trig_b, trig_a)[0])
 
     def _check_strict_types(self, tdef: TableDef, df: DataFrame, pairs) -> None:
         """STRICT table type enforcement (sqlite3-probed matrix,
@@ -3469,11 +3455,11 @@ class DustSession:
                         fail("REAL")
 
     def _fk_ref_columns(self, overlay: Overlay, child_tdef: TableDef, fk) -> tuple:
-        """Resolve ``REFERENCES t`` with no column list to the parent's
-        PRIMARY KEY (SQLite lang_foreignkeys); arity mismatch or a
-        PK-less parent raises SQLite's 'foreign key mismatch'."""
-        if fk.ref_columns:
-            return fk.ref_columns
+        """The parent key of ``fk``: its column list, or the parent's
+        PRIMARY KEY for ``REFERENCES t`` with none (SQLite
+        lang_foreignkeys). A key that is not the parent's PRIMARY KEY or
+        a UNIQUE set, or of another arity, raises SQLite's 'foreign key
+        mismatch'."""
         if fk.ref_table == child_tdef.name:
             ptd = child_tdef
         else:
@@ -3481,329 +3467,127 @@ class DustSession:
             if pst is None:
                 raise DustError(f"no such table: {fk.ref_table}")
             ptd = pst.tdef
-        pk = tuple(ptd.primary_key)
-        if not pk or len(pk) != len(fk.columns):
+        rcs = tuple(fk.ref_columns or ptd.primary_key)
+        low = {c.lower() for c in rcs}
+        if len(rcs) != len(fk.columns) or not any({c.lower() for c in u} == low for u in ptd.unique):
             raise DustError(
                 f'foreign key mismatch - "{child_tdef.name}" referencing "{fk.ref_table}"'
             )
-        return pk
+        return rcs
 
-    def _check_child_fks(
-        self,
-        overlay: Overlay,
-        parent: str,
-        parent_new_df: DataFrame,
-        dml: str = "update",
-        changes_df: DataFrame | None = None,
-        depth: int = 0,
-    ) -> DataFrame:
-        """Reverse FK enforcement with the full ON DELETE / ON UPDATE
-        action matrix: a parent DELETE applies each child FK's declared
-        ON DELETE action — CASCADE deletes the orphaned child rows
-        (recursively, through grandchildren and self-reference chains),
-        SET NULL nulls the child key columns, SET DEFAULT rewrites them
-        to the column defaults (then re-verifies the defaulted key
-        against the parent — sqlite3-probed: a default with no matching
-        parent row fails the whole statement). A parent UPDATE applies
-        the ON UPDATE action to rows whose referenced key actually
-        changed (old→new mapping from ``changes_df``, the changed rows of
-        the statement's marked frame: pre-image ``__old_<col>`` next to
-        the post-image):
-        CASCADE rewrites child keys to the new values, SET NULL /
-        SET DEFAULT as above. NO ACTION / RESTRICT are not checked here:
-        the statement's `_check_constraints` pass does that (its
-        ``restrict``) on the final post-image. Returns the possibly-
-        modified parent post-image — self-referencing actions change it,
-        and the caller materializes the returned frame. Real SQLite
-        semantics via PRAGMA foreign_keys=ON (reference pass-through
-        db/src/db.rs:350-376; actions probed against sqlite3 in
-        test_fk_on_update_actions_sqlite_differential)."""
-        if not self._fk_enabled:
-            return parent_new_df
-        for child, cst, fk in self._fk_children(overlay, parent):
-            rcs = self._fk_ref_columns(overlay, cst.tdef, fk)
-            action = fk.on_delete if dml == "delete" else fk.on_update
-            if action in ("NO ACTION", "RESTRICT"):
-                continue  # checked by the statement's constraint pass
+    def _fk_actions(
+        self, overlay: Overlay, table: str, st: TableState, post: DataFrame, changes: DataFrame, assigned, check
+    ) -> TableState | None:
+        """SQLite's foreign-key actions for a statement that turns ``st``
+        into ``post``: the ON DELETE actions of the rows it removed
+        (``changes``, when ``assigned`` is None), or the ON UPDATE actions
+        of the rows it changed (``changes``: ``__old_<col>`` next to the new
+        image; ``assigned``: the SET columns). Each action is a statement on
+        the child through the row-change tail, as in SQLite: ON DELETE
+        CASCADE deletes the child rows of an old key, every other action
+        updates their key columns (to the new key, NULL or the column
+        default), with the child's triggers, generated columns, one
+        constraint pass (its keys against ``post``: SQLite changes the
+        parent row before its actions run) and the child's own actions.
+        One Spark action finds the children that have rows to change.
+        When an action fails, ``check()``, the statement's own constraint
+        pass, runs first: SQLite checks a row's NOT NULL, CHECK and UNIQUE
+        before its actions run, and foreign keys at the end of the
+        statement. Returns the table's state after its self-referencing
+        actions (None when none ran) for the caller to write."""
+        update = assigned is not None
+        acts = self._fk_acts(overlay, table, assigned)
+        if not acts:
+            return None
 
-            def refsel(pdf):
-                return pdf.select(
-                    *[F.col(rc).alias(f"__ref{j}") for j, rc in enumerate(rcs)]
-                ).distinct()
-
-            nn = None  # match NONE: ANY NULL child key column exempts the row
-            for c in fk.columns:
-                cond = F.col(c).isNotNull()
-                nn = cond if nn is None else (nn & cond)
-            on = None
-            for j, c in enumerate(fk.columns):
-                cond = F.col(c) == F.col(f"__ref{j}")
-                on = cond if on is None else (on & cond)
-
-            # self-referencing tables check against their post-image
-            child_df = parent_new_df if child == parent else cst.df
-
-            # FK actions fire the child table's own triggers even
-            # with recursive_triggers off (sqlite3-probed r7):
-            # CASCADE deletes fire child DELETE triggers, SET NULL
-            # fires child UPDATE triggers
-            del_b = self._table_triggers(child, "DELETE", "BEFORE")
-            del_a = self._table_triggers(child, "DELETE", "AFTER")
-
-            if dml == "update" and action in ("CASCADE", "SET NULL", "SET DEFAULT"):
-                # old→new mapping of the rows whose referenced key
-                # changed; parent ref columns are PK/UNIQUE, so each
-                # old key maps to at most one new key
-                mp = changes_df.select(
-                    *[
-                        F.col(f"__old_{rc}").alias(f"__oldr{j}")
-                        for j, rc in enumerate(rcs)
-                    ],
-                    *[F.col(rc).alias(f"__newr{j}") for j, rc in enumerate(rcs)],
-                )
-                chg = None
-                for j in range(len(rcs)):
-                    c_ = ~F.col(f"__oldr{j}").eqNullSafe(F.col(f"__newr{j}"))
-                    chg = c_ if chg is None else (chg | c_)
-                mp = mp.filter(chg).distinct().withColumn("__fkhit", F.lit(1))
-                on_old = None
-                for j, c in enumerate(fk.columns):
-                    cond = F.col(c) == F.col(f"__oldr{j}")
-                    on_old = cond if on_old is None else (on_old & cond)
-                marked2 = child_df.join(mp, on_old, "left")
-                if marked2.filter(F.col("__fkhit").isNotNull()).limit(1).count() == 0:
-                    continue
-                newvals = {}
-                for j, c in enumerate(fk.columns):
-                    if action == "CASCADE":
-                        newvals[c] = F.col(f"__newr{j}")
-                    elif action == "SET NULL":
-                        newvals[c] = F.lit(None)
-                    else:
-                        d_ = cst.tdef.defaults.get(c)
-                        newvals[c] = F.expr(d_) if d_ is not None else F.lit(None)
-                res = self._apply_fk_child_update(
-                    overlay,
-                    parent,
-                    child,
-                    cst,
-                    fk,
-                    marked2,
-                    newvals,
-                    verify_refs=refsel(parent_new_df)
-                    if action == "SET DEFAULT"
-                    else None,
-                    depth=depth,
-                )
-                if child == parent:
-                    parent_new_df = res
-                continue
-
-            if action == "CASCADE":
-                if child == parent:
-                    # self-reference chains: removing a row can
-                    # orphan the next — iterate to a fixpoint on the
-                    # post-image (caller materializes the result)
-                    initial = parent_new_df
-                    for _ in range(64):
-                        keep = parent_new_df.filter(~nn).unionByName(
-                            parent_new_df.filter(nn).join(
-                                refsel(parent_new_df), on, "left_semi"
-                            )
-                        ).localCheckpoint(eager=True)
-                        if keep.count() == parent_new_df.count():
-                            break
-                        parent_new_df = keep
-                    else:
-                        raise DustError("foreign key cascade depth exceeded")
-                    if del_b or del_a:
-                        cascaded, _ = self._row_pairs(
-                            cst.tdef, initial.exceptAll(parent_new_df), False
-                        )
-                        self._fire_pairs(overlay, cst.tdef, del_b, del_a, cascaded)
-                    continue
-                pairs = []
-                if del_b or del_a:
-                    victims = child_df.filter(nn).join(
-                        refsel(parent_new_df), on, "left_anti"
-                    )
-                    pairs, _ = self._row_pairs(cst.tdef, victims, False)
-                keep = child_df.filter(~nn).unionByName(
-                    child_df.filter(nn).join(refsel(parent_new_df), on, "left_semi")
-                ).localCheckpoint(eager=True)
-                if keep.count() == child_df.count():
-                    continue  # no orphans — leave the child untouched
-                # cascade ripples to the child's own children
-                keep = self._check_child_fks(overlay, child, keep, dml="delete")
-                self._check_constraints(
-                    overlay, cst.tdef, keep, restrict=(child_df, keep, "delete")
-                )
-                new_cst = overlay.catalog.materialize(
-                    child, TableState(cst.tdef, keep, cst.high_water, cst.version + 1)
-                )
-                self._route(overlay, child).put(child, new_cst)
-                if pairs:
-                    self._fire_pairs(overlay, cst.tdef, del_b, del_a, pairs)
-                continue
-
-            if action == "SET NULL":
-                hit = refsel(parent_new_df).withColumn("__hit", F.lit(1))
-                marked = child_df.join(hit, on, "left")
-                orphan = nn & F.col("__hit").isNull()
-                if marked.filter(orphan).limit(1).count() == 0:
-                    continue
-                for c in fk.columns:
-                    if c in cst.tdef.not_null:
-                        raise DustError(
-                            f"NOT NULL constraint failed: {cst.tdef.name}.{c}"
-                        )
-                upd_b = self._table_triggers(
-                    child, "UPDATE", "BEFORE", assigned=list(fk.columns)
-                )
-                upd_a = self._table_triggers(
-                    child, "UPDATE", "AFTER", assigned=list(fk.columns)
-                )
-                cols = []
-                for f_ in cst.tdef.schema.fields:
-                    if f_.name in fk.columns:
-                        cols.append(
-                            F.when(orphan, F.lit(None).cast(f_.dataType))
-                            .otherwise(F.col(f_.name))
-                            .alias(f_.name)
-                        )
-                    else:
-                        cols.append(F.col(f_.name))
-                pairs = []
-                if upd_b or upd_a:
-                    olds = [F.col(f_.name).alias(f"__old_{f_.name}") for f_ in cst.tdef.schema.fields]
-                    pairs, _ = self._row_pairs(cst.tdef, marked.filter(orphan).select(*cols, *olds), True)
-                nulled = marked.select(*cols).localCheckpoint(eager=True)
-                if child == parent:
-                    parent_new_df = nulled
-                    if pairs:
-                        self._fire_pairs(overlay, cst.tdef, upd_b, upd_a, pairs)
-                    continue
-                new_cst = overlay.catalog.materialize(
-                    child, TableState(cst.tdef, nulled, cst.high_water, cst.version + 1)
-                )
-                self._route(overlay, child).put(child, new_cst)
-                if pairs:
-                    self._fire_pairs(overlay, cst.tdef, upd_b, upd_a, pairs)
-                continue
-
-            if action == "SET DEFAULT":
-                hitp = refsel(parent_new_df).withColumn("__php", F.lit(1))
-                marked2 = (
-                    child_df.join(hitp, on, "left")
-                    .withColumn(
-                        "__fkhit",
-                        F.when(nn & F.col("__php").isNull(), F.lit(1)),
-                    )
-                    .drop("__php", *[f"__ref{j}" for j in range(len(rcs))])
-                )
-                if marked2.filter(F.col("__fkhit").isNotNull()).limit(1).count() == 0:
-                    continue
-                newvals = {}
-                for c in fk.columns:
-                    d_ = cst.tdef.defaults.get(c)
-                    newvals[c] = F.expr(d_) if d_ is not None else F.lit(None)
-                res = self._apply_fk_child_update(
-                    overlay,
-                    parent,
-                    child,
-                    cst,
-                    fk,
-                    marked2,
-                    newvals,
-                    verify_refs=refsel(parent_new_df),
-                    depth=depth,
-                )
-                if child == parent:
-                    parent_new_df = res
-                continue
-
-        return parent_new_df
-
-    def _apply_fk_child_update(
-        self,
-        overlay: Overlay,
-        parent: str,
-        child: str,
-        cst: TableState,
-        fk,
-        marked2: DataFrame,
-        newvals: dict,
-        verify_refs: DataFrame | None,
-        depth: int,
-    ) -> DataFrame | None:
-        """Apply an FK action that rewrites the child's key columns
-        (ON UPDATE CASCADE / SET NULL / SET DEFAULT, ON DELETE SET
-        DEFAULT). ``marked2`` is the child pre-image with a ``__fkhit``
-        marker on the victim rows (plus any join helper columns);
-        ``newvals`` maps each fk column to its replacement Column (may
-        reference helper columns, e.g. the mapped new key). Enforces
-        NOT NULL on the rewritten columns, optionally re-verifies the
-        rewritten keys against ``verify_refs`` (SET DEFAULT: the
-        defaulted key must reference an existing parent row —
-        sqlite3-probed 'FOREIGN KEY constraint failed'), fires the
-        child's UPDATE triggers with the fk columns as the assigned set
-        (sqlite3-probed: UPDATE OF on other columns does not fire), and
-        ripples ON UPDATE actions to the child's own children. Returns
-        the new child frame for self-referencing calls (child ==
-        parent); otherwise materializes into the overlay and returns
-        None."""
-        tdef = cst.tdef
-        fields = [f_.name for f_ in tdef.schema.fields]
-        hit = F.col("__fkhit").isNotNull()
-        sel = []
-        for f_ in tdef.schema.fields:
-            if f_.name in newvals:
-                sel.append(
-                    F.when(hit, newvals[f_.name].cast(f_.dataType))
-                    .otherwise(F.col(f_.name))
-                    .alias(f_.name)
-                )
+        def marked(child: TableState, fk, rcs: tuple) -> DataFrame:
+            # the child's rows, __m on those holding an old key, with the
+            # new key (__n<j>) they take on an ON UPDATE CASCADE; parent
+            # keys are unique (_fk_ref_columns), so no child row repeats
+            ks = [f"__k{j}" for j in range(len(rcs))]
+            old = [F.col(f"__old_{c}" if update else c).alias(k) for c, k in zip(rcs, ks)]
+            if update:
+                moved = reduce(lambda a, b: a | b, [~F.col(f"__old_{c}").eqNullSafe(F.col(c)) for c in rcs])
+                hits = changes.filter(moved).select(*old, *[F.col(c).alias(f"__n{j}") for j, c in enumerate(rcs)])
             else:
-                sel.append(F.col(f_.name))
-        olds = [F.col(c).alias(f"__old_{c}") for c in fields]
-        upd = marked2.select(*sel, *olds, F.col("__fkhit")).localCheckpoint(eager=True)
-        for c in fk.columns:
-            if c in tdef.not_null and upd.filter(hit & F.col(c).isNull()).limit(1).count() > 0:
-                raise DustError(f"NOT NULL constraint failed: {tdef.name}.{c}")
-        if verify_refs is not None:
-            nn2 = None
-            on2 = None
+                hits = changes.select(*old)
+            on = reduce(lambda a, b: a & b, [F.col(c) == F.col(k) for c, k in zip(fk.columns, ks)])
+            tdef = child.tdef
+            joined = child.df.withColumn("__ord", F.expr(self._scan_key(tdef))).join(
+                hits.withColumn("__hit", F.lit(1)), on, "left"
+            )
+            hit = F.col("__hit").isNotNull()
+            action = fk.on_update if update else fk.on_delete
+            fields = [f.name for f in tdef.schema.fields]
+            if not update and action == "CASCADE":
+                return joined.select(*fields, F.when(hit, 1).otherwise(0).alias("__m"), "__ord")
+            new = {}
             for j, c in enumerate(fk.columns):
-                cond = F.col(c).isNotNull()
-                nn2 = cond if nn2 is None else (nn2 & cond)
-                eq = F.col(c) == F.col(f"__ref{j}")
-                on2 = eq if on2 is None else (on2 & eq)
-            if upd.filter(hit & nn2).join(verify_refs, on2, "left_anti").limit(1).count() > 0:
-                raise DustError("FOREIGN KEY constraint failed")
-        upd_b = self._table_triggers(child, "UPDATE", "BEFORE", assigned=list(fk.columns))
-        upd_a = self._table_triggers(child, "UPDATE", "AFTER", assigned=list(fk.columns))
-        pairs = []
-        if upd_b or upd_a:
-            pairs, _ = self._row_pairs(tdef, upd.filter(hit), True)
-        new_child = upd.select(*fields)
-        if depth < 32 and child != parent and self._fk_action_children(overlay, child):
-            new_child = self._check_child_fks(
-                overlay, child, new_child, dml="update", changes_df=upd.filter(hit), depth=depth + 1
+                d = tdef.defaults.get(c) if action == "SET DEFAULT" else None
+                new[c] = F.col(f"__n{j}") if action == "CASCADE" else F.expr(d) if d is not None else F.lit(None)
+            return joined.select(
+                *[
+                    F.when(hit, new[f.name].cast(f.dataType)).otherwise(F.col(f.name)).alias(f.name)
+                    if f.name in new
+                    else f.name
+                    for f in tdef.schema.fields
+                ],
+                *[F.col(c).alias(f"__old_{c}") for c in fields],
+                F.when(hit, 1).otherwise(0).alias("__m"),
+                "__ord",
             )
-            self._check_constraints(
-                overlay, tdef, new_child, restrict=(cst.df, new_child, "update")
-            )
-        if child == parent:
-            if pairs:
-                self._fire_pairs(overlay, tdef, upd_b, upd_a, pairs)
-            return new_child
-        new_cst = overlay.catalog.materialize(
-            child, TableState(tdef, new_child, cst.high_water, cst.version + 1)
+
+        own_st = TableState(st.tdef, post, st.high_water, st.version)
+        probe = reduce(
+            lambda a, b: a.unionByName(b),
+            [
+                marked(own_st if child == table else cst, fk, rcs).select(
+                    F.when(F.col("__m") == 1, F.lit(i)).alias("__a")
+                )
+                for i, (child, cst, fk, rcs) in enumerate(acts)
+            ],
         )
-        self._route(overlay, child).put(child, new_cst)
-        if pairs:
-            self._fire_pairs(overlay, tdef, upd_b, upd_a, pairs)
-        return None
+        # one task: a global aggregate over one partition takes no shuffle
+        found = set(probe.coalesce(1).agg(F.collect_set("__a")).first()[0])
+        if not found:
+            return None
+        # the children's constraint passes read the parent's post-image;
+        # the caller's write replaces it, a failure rolls it back
+        self._route(overlay, table).put(table, own_st)
+        own = None
+        capture, self._capture_returning = self._capture_returning, False
+        try:
+            for i, (child, _, fk, rcs) in enumerate(acts):
+                if i not in found:
+                    continue
+                cst = own_st if child == table else self._route(overlay, child).get(child)
+                cols = list(fk.columns) if update or fk.on_delete != "CASCADE" else None
+                event = "DELETE" if cols is None else "UPDATE"
+                with self._trigger_level(" fk"):
+                    n, res = self._row_change(
+                        overlay,
+                        cst,
+                        child,
+                        marked(cst, fk, rcs),
+                        self._table_triggers(child, event, "BEFORE", cols),
+                        self._table_triggers(child, event, "AFTER", cols),
+                        cols,
+                        fk_parent=table,
+                    )
+                self._total_changes += n  # an action's rows count, as a trigger body's do
+                if child == table:
+                    own = own_st = res
+                    self._route(overlay, table).put(table, own_st)
+        except DustError:
+            try:
+                check()
+            except DustError as e:
+                if str(e) != "FOREIGN KEY constraint failed":
+                    raise e from None
+            raise
+        finally:
+            self._capture_returning = capture
+        return own
 
     @staticmethod
     def _refs(expr: str, col: str) -> bool:
@@ -3998,7 +3782,7 @@ class DustSession:
             pre, post, dml = restrict
             for child, cst, fk in self._fk_children(overlay, name):
                 if (fk.on_delete if dml == "delete" else fk.on_update) not in ("NO ACTION", "RESTRICT"):
-                    continue
+                    continue  # its action (_fk_actions) leaves no child of a removed key
                 rcs = self._fk_ref_columns(overlay, cst.tdef, fk)
                 if not touched(rcs):
                     continue

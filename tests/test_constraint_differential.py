@@ -1,8 +1,9 @@
 """Constraint differential machine: hypothesis drives random statement
 sequences over the oltp_durable schema — plus a second UNIQUE column
-and a two-column CHECK — against DustSession AND in-process sqlite3.
-After every statement both engines must agree on the error text (or
-its absence) and on the full contents of both tables.
+and a two-column CHECK, and a second child of ``acct`` with foreign-key
+actions — against DustSession AND in-process sqlite3. After every
+statement both engines must agree on the error text (or its absence)
+and on the full contents of every table.
 
 The alphabet aims at the constraint pass: single- and multi-row
 INSERTs with explicit and auto ids, in-batch duplicates and NULLs;
@@ -14,7 +15,11 @@ UPDATEs that do and do not assign constrained columns (NOT NULL,
 CHECK, both UNIQUE sets, the child key, the parent key); DELETEs on
 both sides of the foreign key; and ``PRAGMA foreign_keys`` toggles,
 which let dangling child rows in so that SQLite's changed-column and
-counter rules are exercised.
+counter rules are exercised. ``memo`` holds the actions: ON DELETE
+CASCADE and ON UPDATE SET DEFAULT on a UNIQUE key with a CHECK, so the
+parent DELETEs, REPLACEs, key UPDATEs and key-moving upserts drive
+child statements that can fail their UNIQUE, CHECK or foreign key.
+Every sequence starts from two seeded parents with a memo each.
 
 Out of the alphabet, as a known divergence of the set-based UPDATE
 rather than of the constraint pass: multi-row UPDATEs that shift a
@@ -40,8 +45,16 @@ DDL = [
     "lo INT, hi INT, CHECK(lo <= hi))",
     "CREATE TABLE txn (id INTEGER PRIMARY KEY, acct_id INTEGER NOT NULL REFERENCES acct(id), "
     "amount REAL NOT NULL)",
+    "CREATE TABLE memo (id INTEGER PRIMARY KEY, acct_id INTEGER UNIQUE DEFAULT 1 "
+    "REFERENCES acct(id) ON DELETE CASCADE ON UPDATE SET DEFAULT, tag TEXT, CHECK (acct_id <> 1 OR tag IS NULL))",
 ]
-TABLES = ("acct", "txn")
+TABLES = ("acct", "txn", "memo")
+# two parents with a memo each, so that the parent DELETEs, REPLACEs and
+# key UPDATEs meet action children from the first statement on
+SEED = [
+    "INSERT INTO acct(id, email, balance, lo, hi) VALUES (1, 'e1', 2.5, 0, 1), (2, 'e2', 0.0, 1, 2)",
+    "INSERT INTO memo VALUES (1, 1, NULL), (2, 2, 't1')",
+]
 
 
 def _lit(v) -> str:
@@ -60,6 +73,8 @@ _AMOUNT = st.sampled_from([None, 1.5, 4.0])
 
 _ACCT_ROW = st.tuples(_OPT_ID, _EMAIL, _HANDLE, _BAL, _SMALL, _SMALL)
 _TXN_ROW = st.tuples(_OPT_ID, _OPT_ID, _AMOUNT)
+_TAG = st.sampled_from([None, "t1", "t2"])
+_MEMO_ROW = st.tuples(_OPT_ID, _OPT_ID, _TAG)
 
 
 def _insert(table: str, cols: list[str], rows: list[tuple]) -> str:
@@ -118,6 +133,10 @@ _OPS = st.one_of(
     _SMALL.map(lambda v: f"DELETE FROM acct WHERE lo = {_lit(v)}"),
     _ID.map(lambda i: f"DELETE FROM txn WHERE id = {i}"),
     _ID.map(lambda a: f"DELETE FROM txn WHERE acct_id = {a}"),
+    st.lists(_MEMO_ROW, min_size=1, max_size=2).map(lambda rs: _insert("memo", ["id", "acct_id", "tag"], rs)),
+    st.tuples(_OPT_ID, _ID).map(lambda x: f"UPDATE memo SET acct_id = {_lit(x[0])} WHERE id = {x[1]}"),
+    st.tuples(_TAG, _ID).map(lambda x: f"UPDATE memo SET tag = {_lit(x[0])} WHERE id = {x[1]}"),
+    _ID.map(lambda i: f"DELETE FROM memo WHERE id = {i}"),
 )
 
 
@@ -132,7 +151,7 @@ def test_constraint_machine_matches_sqlite(spark, ops):
     ref.isolation_level = None
     db = DustSession(spark)
     try:
-        for ddl in ["PRAGMA foreign_keys=ON", *DDL]:
+        for ddl in ["PRAGMA foreign_keys=ON", *DDL, *SEED]:
             ref.execute(ddl)
             assert db.execute_string_stmt(ddl)[0].error == ""
         for op in ops:

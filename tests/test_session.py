@@ -1539,6 +1539,104 @@ def test_update_or_ignore_replace_sqlite_differential(db):
             "INSERT INTO t VALUES (1, 'a')",
             "INSERT INTO t VALUES (1, 'x'), (5, 'y') ON CONFLICT(id) DO UPDATE SET id = 5, v = excluded.v",
         ],
+        # a foreign-key action is a statement on the child: it frees the
+        # child's rowids, and takes its constraints and generated columns
+        [
+            "PRAGMA foreign_keys=ON",
+            "CREATE TABLE p (id INTEGER PRIMARY KEY, v INT)",
+            "CREATE TABLE c (id INTEGER PRIMARY KEY, pid INT REFERENCES p(id) ON DELETE CASCADE)",
+            "INSERT INTO p(id) VALUES (1), (2)",
+            "INSERT INTO c VALUES (10, 1), (11, 2)",
+            "DELETE FROM p WHERE id = 2",
+            "INSERT INTO c(pid) VALUES (1)",
+        ],
+        [
+            "PRAGMA foreign_keys=ON",
+            "CREATE TABLE p (id INTEGER PRIMARY KEY, v INT)",
+            "CREATE TABLE c (id INTEGER PRIMARY KEY, pid INT REFERENCES p(id) ON DELETE SET NULL, "
+            "CHECK (pid IS NOT NULL OR id > 100))",
+            "INSERT INTO p(id) VALUES (1), (2)",
+            "INSERT INTO c VALUES (1, 1), (101, 2)",
+            "DELETE FROM p WHERE id = 1",
+            "DELETE FROM p WHERE id = 2",
+        ],
+        [
+            "PRAGMA foreign_keys=ON",
+            "CREATE TABLE p (id INTEGER PRIMARY KEY, v INT)",
+            "CREATE TABLE c (id INTEGER PRIMARY KEY, pid INT UNIQUE DEFAULT 5 REFERENCES p(id) ON DELETE SET DEFAULT)",
+            "INSERT INTO p(id) VALUES (1), (2), (5)",
+            "INSERT INTO c VALUES (1, 1), (2, 2)",
+            "DELETE FROM p WHERE id IN (1, 2)",
+            "DELETE FROM p WHERE id = 1",
+        ],
+        [
+            "PRAGMA foreign_keys=ON",
+            "CREATE TABLE p (id INTEGER PRIMARY KEY, v INT)",
+            "CREATE TABLE c (id INTEGER PRIMARY KEY, pid INT CHECK (pid < 50) REFERENCES p(id) ON UPDATE CASCADE)",
+            "INSERT INTO p(id) VALUES (1)",
+            "INSERT INTO c VALUES (1, 1)",
+            "UPDATE p SET id = 60",
+            "UPDATE p SET id = 40",
+        ],
+        [
+            "PRAGMA foreign_keys=ON",
+            "CREATE TABLE p (id INTEGER PRIMARY KEY, v INT)",
+            "CREATE TABLE c (id INTEGER PRIMARY KEY, pid INT REFERENCES p(id) ON DELETE SET NULL, "
+            "g INT AS (coalesce(pid, -1) * 10))",
+            "INSERT INTO p(id) VALUES (1)",
+            "INSERT INTO c(id, pid) VALUES (1, 1)",
+            "DELETE FROM p WHERE id = 1",
+        ],
+        [
+            "PRAGMA foreign_keys=ON",
+            "CREATE TABLE p (id INTEGER PRIMARY KEY, v INT)",
+            "CREATE TABLE c (id INTEGER PRIMARY KEY, pid INT REFERENCES p(id) ON UPDATE CASCADE, "
+            "g INT AS (pid * 10) STORED)",
+            "INSERT INTO p(id) VALUES (1)",
+            "INSERT INTO c(id, pid) VALUES (1, 1)",
+            "UPDATE p SET id = 3",
+        ],
+        # an upsert whose DO UPDATE moves a parent key takes ON UPDATE
+        [
+            "PRAGMA foreign_keys=ON",
+            "CREATE TABLE p (id INTEGER PRIMARY KEY, v TEXT)",
+            "CREATE TABLE c (id INTEGER PRIMARY KEY, pid INT REFERENCES p(id) ON UPDATE CASCADE ON DELETE CASCADE)",
+            "INSERT INTO p VALUES (1, 'a')",
+            "INSERT INTO c VALUES (1, 1)",
+            "INSERT INTO p VALUES (1, 'x') ON CONFLICT(id) DO UPDATE SET id = 7",
+        ],
+        # a child row a cascaded DELETE trigger keeps by RAISE(IGNORE)
+        # still points at the deleted parent: the statement fails whole
+        [
+            "PRAGMA foreign_keys=ON",
+            "CREATE TABLE p (id INTEGER PRIMARY KEY, v INT)",
+            "CREATE TABLE c (id INTEGER PRIMARY KEY, pid INT REFERENCES p(id) ON DELETE CASCADE)",
+            "CREATE TRIGGER ci BEFORE DELETE ON c WHEN OLD.id = 2 BEGIN SELECT RAISE(IGNORE); END",
+            "INSERT INTO p(id) VALUES (1), (2)",
+            "INSERT INTO c VALUES (1, 1), (2, 1), (3, 2)",
+            "DELETE FROM p WHERE id = 1",
+            "DELETE FROM p WHERE id = 2",
+        ],
+        # the rows UPDATE OR REPLACE deletes take their ON DELETE actions
+        [
+            "PRAGMA foreign_keys=ON",
+            "CREATE TABLE p (id INTEGER PRIMARY KEY, u INT UNIQUE)",
+            "CREATE TABLE c (id INTEGER PRIMARY KEY, pid INT REFERENCES p(id) ON DELETE CASCADE)",
+            "INSERT INTO p VALUES (1, 1), (2, 2), (3, 3)",
+            "INSERT INTO c VALUES (1, 1), (2, 2), (3, 3)",
+            "UPDATE OR REPLACE p SET u = 2 WHERE id = 1",
+        ],
+        # a row's own constraints fail before its actions run
+        [
+            "PRAGMA foreign_keys=ON",
+            "CREATE TABLE p (id INTEGER PRIMARY KEY, v INT)",
+            "CREATE TABLE c (id INTEGER PRIMARY KEY, pid INT UNIQUE DEFAULT 1 REFERENCES p(id) ON UPDATE SET DEFAULT, "
+            "tag TEXT, CHECK (pid <> 1 OR tag IS NULL))",
+            "INSERT INTO p(id) VALUES (1), (2)",
+            "INSERT INTO c VALUES (1, 2, 't')",
+            "UPDATE p SET id = 1 WHERE id = 2",
+            "UPDATE p SET id = 3 WHERE id = 2",
+        ],
     ],
     ids=[
         "or-ignore-from", "or-replace-from", "or-ignore-keys", "without-rowid-scan", "without-rowid-pk2",
@@ -1546,6 +1644,9 @@ def test_update_or_ignore_replace_sqlite_differential(db):
         "insert-ignore-pk-unique", "replace-parent-no-action", "replace-parent-cascade",
         "replace-same-key-actions", "replace-same-key-self-cascade",
         "ignore-auto-then-id", "do-nothing-auto-then-id", "do-update-auto-then-id", "do-update-moves-key",
+        "fk-cascade-delete-high-water", "fk-set-null-check", "fk-set-default-unique", "fk-cascade-update-check",
+        "fk-set-null-generated", "fk-cascade-update-generated", "upsert-moves-parent-key", "fk-cascade-child-ignore",
+        "update-or-replace-parent", "fk-own-unique-first",
     ],
 )
 def test_row_change_order_sqlite_differential(db, stmts):
@@ -1807,5 +1908,103 @@ def test_constraint_pass_job_budget(spark, tmp_path):
         assert jobs(f"dn-{tag}", dn) <= 33
         two = "INSERT INTO acct(id, email, balance) VALUES (1, 'a@x', 7.0), (2, 'b@x', 8.0) ON CONFLICT(id) DO "
         assert jobs(f"upk-{tag}", two + "UPDATE SET id = excluded.id, balance = excluded.balance") <= 32
+    finally:
+        db.close()
+
+
+def test_fk_action_counters_and_returning_sqlite_differential(db):
+    """An FK action is a statement on the child: changes() and
+    last_insert_rowid() stay the parent statement's while
+    total_changes() counts the action's rows, and RETURNING reports
+    only the parent's rows — each as in sqlite3."""
+    import sqlite3
+
+    ref = sqlite3.connect(":memory:")
+    ref.isolation_level = None
+    counters = "SELECT changes(), total_changes(), last_insert_rowid()"
+    try:
+        for sql in [
+            "PRAGMA foreign_keys=ON",
+            "CREATE TABLE p (id INTEGER PRIMARY KEY, v INT)",
+            "CREATE TABLE c (id INTEGER PRIMARY KEY, pid INT REFERENCES p(id) ON DELETE CASCADE ON UPDATE CASCADE)",
+            "CREATE TABLE n (id INTEGER PRIMARY KEY, pid INT REFERENCES p(id) ON DELETE SET NULL ON UPDATE SET NULL)",
+            "INSERT INTO p VALUES (1, 1), (2, 2), (3, 3)",
+            "INSERT INTO c VALUES (1, 1), (2, 1), (3, 2)",
+            "INSERT INTO n VALUES (7, 1), (8, 2)",
+            "DELETE FROM p WHERE id = 1",
+            "UPDATE p SET id = 5 WHERE id = 2",
+        ]:
+            ref.execute(sql)
+            assert db.execute_string_stmt(sql)[0].error == "", sql
+            assert db.query_string_stmt(counters)[0].values == [list(ref.execute(counters).fetchone())], sql
+        ret = "DELETE FROM p WHERE id > 2 RETURNING id, v"
+        assert sorted(db.query_string_stmt(ret)[0].values) == sorted(map(list, ref.execute(ret).fetchall()))
+        for t in ("p", "c", "n"):
+            q = f"SELECT * FROM {t} ORDER BY id"
+            assert db.query_string_stmt(q)[0].values == [list(r) for r in ref.execute(q)], t
+    finally:
+        ref.close()
+
+
+def test_fk_action_job_budget(spark, tmp_path):
+    """Spark jobs of statements on a parent whose children carry FK
+    actions (disk warehouse, FK on), bounded by their counts when each
+    action kind had its own hand-copied block with one probe job per
+    child: a DELETE that removes a key no child holds 17, one that
+    cascades a child and nulls another 22, a SET NULL-only one 21, and a
+    one-row key UPDATE that cascades 18. One job now finds the children
+    with rows to change, and each action runs the row-change tail. An
+    UPDATE that assigns no referenced key runs no ON UPDATE action, as
+    in SQLite, so it costs what an UPDATE of a parent without action
+    children does: 4 (6 when every child was probed)."""
+    db = DustSession(spark, warehouse=str(tmp_path / "wh"))
+    sc = spark.sparkContext
+    try:
+        for sql in [
+            "PRAGMA foreign_keys=ON",
+            "CREATE TABLE p (id INTEGER PRIMARY KEY, v TEXT)",
+            "CREATE TABLE kc (id INTEGER PRIMARY KEY, pid INT REFERENCES p(id) ON DELETE CASCADE ON UPDATE CASCADE)",
+            "CREATE TABLE kn (id INTEGER PRIMARY KEY, pid INT REFERENCES p(id) ON DELETE SET NULL)",
+            "INSERT INTO p VALUES (1, 'a'), (2, 'b'), (3, 'c'), (4, 'd'), (5, 'e')",
+            "INSERT INTO kc VALUES (1, 1), (2, 2), (3, 5)",
+            "INSERT INTO kn VALUES (1, 1), (2, 3), (3, 5)",
+            "CREATE TABLE t (id INTEGER PRIMARY KEY, up INT REFERENCES t(id) ON DELETE CASCADE)",
+            "INSERT INTO t VALUES (1, NULL), (2, 1), (3, 2), (4, NULL)",
+        ]:
+            assert db.execute_string_stmt(sql)[0].error == ""
+
+        def versions() -> dict:
+            return {t: db.catalog.tables[t].version for t in ("p", "kc", "kn", "t")}
+
+        def jobs(tag: str, sql: str) -> int:
+            sc.setJobGroup(tag, tag, False)
+            try:
+                assert db.execute_string_stmt(sql)[0].error == ""
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+        tag = uuid.uuid4().hex
+        assert jobs(f"upv-{tag}", "UPDATE p SET v = 'z' WHERE id = 4") <= 4
+        before = versions()
+        assert jobs(f"del0-{tag}", "DELETE FROM p WHERE id = 4") <= 17
+        # a child no action changes keeps its table version
+        assert versions() == dict(before, p=before["p"] + 1)
+        assert jobs(f"del2-{tag}", "DELETE FROM p WHERE id = 1") <= 22
+        assert jobs(f"deln-{tag}", "DELETE FROM p WHERE id = 3") <= 21
+        assert jobs(f"upk-{tag}", "UPDATE p SET id = 20 WHERE id = 2") <= 18
+        # a self-referencing cascade acts on the statement's post-image,
+        # and the table is written once
+        before = versions()
+        assert db.execute_string_stmt("DELETE FROM t WHERE id = 1")[0].error == ""
+        assert versions() == dict(before, t=before["t"] + 1)
+        want = {
+            "p": [[5, "e"], [20, "b"]],
+            "kc": [[2, 20], [3, 5]],
+            "kn": [[1, None], [2, None], [3, 5]],
+            "t": [[4, None]],
+        }
+        for t, rows in want.items():
+            assert db.query_string_stmt(f"SELECT * FROM {t} ORDER BY id")[0].values == rows, t
     finally:
         db.close()
