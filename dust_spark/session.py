@@ -53,7 +53,12 @@ from dust_spark.model import Request, Response, Rows, Statement, rows_from_dataf
 
 class DustError(Exception):
     """Engine error; message format mirrors SQLite where the reference
-    asserts on exact text."""
+    asserts on exact text. ``row``: the failing row's place in the
+    statement's row order, when a constraint pass reports it."""
+
+    def __init__(self, msg: str = "", row: int | None = None):
+        super().__init__(msg)
+        self.row = row
 
 
 class _TriggerIgnore(Exception):
@@ -2420,8 +2425,11 @@ class DustSession:
             rest = rest if own is None else own.df
         out_df = rest.unionByName(rows.filter(w).select(*fields))
         if action == "update":
-            # a DO UPDATE arm that moves a key takes its ON UPDATE actions
-            own = self._fk_actions(overlay, t, st, out_df, rows.filter(w & (F.col("__new") == 0)), sets, check)
+            # a DO UPDATE arm that moves a key takes its ON UPDATE actions,
+            # in SQLite's row loop at the row that first rewrote it
+            own = self._fk_actions(
+                overlay, t, st, out_df, rows.filter(w & (F.col("__new") == 0)), sets, check, "__first" if replay else "__rn"
+            )
             out_df = out_df if own is None else own.df
         # the parent side of the foreign keys, for the rows REPLACE
         # removed and the keys DO UPDATE moved
@@ -2651,19 +2659,20 @@ class DustSession:
         return [] if cond is None else [r.asDict() for r in df.filter(cond).collect()]
 
     def _images_frame(self, tdef: TableDef, images: list) -> DataFrame:
-        """The replay's row images (rn, image, landed, new, pre-image)
-        as the write tail's rows frame, a rewritten row's pre-image as
-        ``__old_<col>``; generated columns recompute from the base
-        columns."""
+        """The replay's row images (rn, image, landed, new, pre-image,
+        first rn) as the write tail's rows frame, a rewritten row's
+        pre-image as ``__old_<col>`` and the row that first rewrote it as
+        ``__first``; generated columns recompute from the base columns."""
         fs = tdef.schema.fields
         schema = T.StructType(
             list(fs)
             + [T.StructField(c, t) for c, t in (("__rn", T.LongType()), ("__w", T.IntegerType()), ("__new", T.IntegerType()))]
             + [T.StructField(f"__old_{f.name}", f.dataType) for f in fs]
+            + [T.StructField("__first", T.LongType())]
         )
         data = [
-            tuple(d.get(f.name) for f in fs) + (int(rn), w, n) + tuple((o or {}).get(f.name) for f in fs)
-            for rn, d, w, n, o in images
+            tuple(d.get(f.name) for f in fs) + (int(rn), w, n) + tuple((o or {}).get(f.name) for f in fs) + (int(f0),)
+            for rn, d, w, n, o, f0 in images
         ]
         return self._apply_generated(tdef, self.spark.createDataFrame(data, schema))
 
@@ -2693,9 +2702,10 @@ class DustSession:
           AFTER INSERT fires.
 
         Returns ``(images, gone, changes)``: the rows frame of the write
-        tail as (rn, image, landed, new, pre-image) — every proposed row,
-        the final image of each landed row, and of each existing row an
-        arm rewrote with its image before the statement — the rowid (or
+        tail as (rn, image, landed, new, pre-image, first rn) — every
+        proposed row, the final image of each landed row, and of each
+        existing row an arm rewrote with its image before the statement
+        and the row that first rewrote it — the rowid (or
         PRIMARY KEY) of each existing row REPLACE deleted or an arm
         rewrote, and changes(), which counts every insert and every
         applied arm. A body reading its own table sees the pre- or
@@ -2739,7 +2749,7 @@ class DustSession:
                 continue
             if auto:
                 row = dict(row, **{rc: cur_max + 1})
-            images.append((rn, row, 0, 1, None))
+            images.append((rn, row, 0, 1, None, rn))
             hits = []
             for i in range(len(targets)):
                 e = cur.get((i, key(i, row)))
@@ -2785,7 +2795,7 @@ class DustSession:
                 n += 1
                 kind, at = e[1]
                 if kind == "old":  # keeps the row's image from before the statement
-                    rewritten[at] = (rn, new, rewritten[at][2] if at in rewritten else old)
+                    rewritten[at] = (rn, new, *(rewritten[at][2:] if at in rewritten else (old, rn)))
                 else:
                     fresh[at] = new
                 continue
@@ -2809,8 +2819,8 @@ class DustSession:
             hold([row, ("new", rn)])
             n += 1
             self._fire_triggers(overlay, tdef, trig["a"], [(None, dict(row))])
-        images += [(rn, d, 1, 1, None) for rn, d in fresh.items()]
-        images += [(rn, d, 1, 0, o) for rn, d, o in rewritten.values()]
+        images += [(rn, d, 1, 1, None, rn) for rn, d in fresh.items()]
+        images += [(rn, d, 1, 0, o, f0) for rn, d, o, f0 in rewritten.values()]
         return images, gone | set(rewritten), n
 
     @staticmethod
@@ -3126,7 +3136,7 @@ class DustSession:
             # the rows REPLACE deletes take their ON DELETE actions
             own = self._fk_actions(overlay, table, st, new_df, gone, None, check)
             new_df = new_df if own is None else own.df
-        own = self._fk_actions(overlay, table, st, new_df, marked.filter(hit), assigned, check) or own
+        own = self._fk_actions(overlay, table, st, new_df, marked.filter(hit), assigned, check, "__ord") or own
         if own is not None:
             new_df = own.df
         res = check((st.df, new_df, "update" if update else "delete"))
@@ -3455,11 +3465,12 @@ class DustSession:
                         fail("REAL")
 
     def _fk_ref_columns(self, overlay: Overlay, child_tdef: TableDef, fk) -> tuple:
-        """The parent key of ``fk``: its column list, or the parent's
-        PRIMARY KEY for ``REFERENCES t`` with none (SQLite
-        lang_foreignkeys). A key that is not the parent's PRIMARY KEY or
-        a UNIQUE set, or of another arity, raises SQLite's 'foreign key
-        mismatch'."""
+        """The parent key of ``fk`` in the parent's column names: its
+        column list, or the parent's PRIMARY KEY for ``REFERENCES t``
+        with none (SQLite lang_foreignkeys). An arity mismatch or a
+        PK-less parent raises SQLite's 'foreign key mismatch'. Indexes
+        are not recorded, so a key under a UNIQUE index is not checked
+        for one."""
         if fk.ref_table == child_tdef.name:
             ptd = child_tdef
         else:
@@ -3468,15 +3479,16 @@ class DustSession:
                 raise DustError(f"no such table: {fk.ref_table}")
             ptd = pst.tdef
         rcs = tuple(fk.ref_columns or ptd.primary_key)
-        low = {c.lower() for c in rcs}
-        if len(rcs) != len(fk.columns) or not any({c.lower() for c in u} == low for u in ptd.unique):
+        if not rcs or len(rcs) != len(fk.columns):
             raise DustError(
                 f'foreign key mismatch - "{child_tdef.name}" referencing "{fk.ref_table}"'
             )
-        return rcs
+        names = {f.name.lower(): f.name for f in ptd.schema.fields}
+        return tuple(names.get(c.lower(), c) for c in rcs)
 
     def _fk_actions(
-        self, overlay: Overlay, table: str, st: TableState, post: DataFrame, changes: DataFrame, assigned, check
+        self, overlay: Overlay, table: str, st: TableState, post: DataFrame, changes: DataFrame, assigned, check,
+        order: str | None = None,
     ) -> TableState | None:
         """SQLite's foreign-key actions for a statement that turns ``st``
         into ``post``: the ON DELETE actions of the rows it removed
@@ -3493,7 +3505,10 @@ class DustSession:
         When an action fails, ``check()``, the statement's own constraint
         pass, runs first: SQLite checks a row's NOT NULL, CHECK and UNIQUE
         before its actions run, and foreign keys at the end of the
-        statement. Returns the table's state after its self-referencing
+        statement. Its failure wins unless the actions of the rows before
+        the failing one (``changes``' ``order`` column, when known) fail
+        too. A failed statement's actions add nothing to total_changes().
+        Returns the table's state after its self-referencing
         actions (None when none ran) for the caller to write."""
         update = assigned is not None
         acts = self._fk_acts(overlay, table, assigned)
@@ -3502,8 +3517,7 @@ class DustSession:
 
         def marked(child: TableState, fk, rcs: tuple) -> DataFrame:
             # the child's rows, __m on those holding an old key, with the
-            # new key (__n<j>) they take on an ON UPDATE CASCADE; parent
-            # keys are unique (_fk_ref_columns), so no child row repeats
+            # new key (__n<j>) they take on an ON UPDATE CASCADE
             ks = [f"__k{j}" for j in range(len(rcs))]
             old = [F.col(f"__old_{c}" if update else c).alias(k) for c, k in zip(rcs, ks)]
             if update:
@@ -3511,6 +3525,8 @@ class DustSession:
                 hits = changes.filter(moved).select(*old, *[F.col(c).alias(f"__n{j}") for j, c in enumerate(rcs)])
             else:
                 hits = changes.select(*old)
+            if not any({c.lower() for c in u} == {c.lower() for c in rcs} for u in st.tdef.unique):
+                hits = hits.distinct()  # a UNIQUE index is not enforced: a key may repeat
             on = reduce(lambda a, b: a & b, [F.col(c) == F.col(k) for c, k in zip(fk.columns, ks)])
             tdef = child.tdef
             joined = child.df.withColumn("__ord", F.expr(self._scan_key(tdef))).join(
@@ -3547,12 +3563,14 @@ class DustSession:
                 for i, (child, cst, fk, rcs) in enumerate(acts)
             ],
         )
-        # one task: a global aggregate over one partition takes no shuffle
+        # one partition: under adaptive execution the exchange a global
+        # aggregate needs is a Spark job of its own
         found = set(probe.coalesce(1).agg(F.collect_set("__a")).first()[0])
         if not found:
             return None
         # the children's constraint passes read the parent's post-image;
         # the caller's write replaces it, a failure rolls it back
+        snap, total = overlay.snapshot(), self._total_changes
         self._route(overlay, table).put(table, own_st)
         own = None
         capture, self._capture_returning = self._capture_returning, False
@@ -3578,13 +3596,26 @@ class DustSession:
                 if child == table:
                     own = own_st = res
                     self._route(overlay, table).put(table, own_st)
-        except DustError:
+        except DustError as act:
+            self._total_changes = total
+            first = act
             try:
                 check()
             except DustError as e:
                 if str(e) != "FOREIGN KEY constraint failed":
-                    raise e from None
-            raise
+                    first = e
+                    if order is not None and e.row is not None:
+                        # SQLite runs each row's actions right after its
+                        # own checks: an earlier row's failing action wins
+                        # unless it fails a foreign key (checked at the end)
+                        overlay.restore_snapshot(snap)
+                        try:
+                            early = changes.filter(F.col(order) < e.row)
+                            self._fk_actions(overlay, table, st, post, early, assigned, lambda: None)
+                        except DustError as pre:
+                            first = e if str(pre) == "FOREIGN KEY constraint failed" else pre
+                        self._total_changes = total
+            raise first from None
         finally:
             self._capture_returning = capture
         return own
@@ -3824,7 +3855,7 @@ class DustSession:
             *[fn(F.col(f"__s_{k}")).alias(k) for k, (_, fn) in stats.items()],
         ).collect()[0]
         if res["__v"] is not None:
-            raise DustError(msgs[res["__v"]["r"]])
+            raise DustError(msgs[res["__v"]["r"]], res["__v"]["o"])
         if counts and res["__fkp"] and (res["__fkp"] > res["__fkm"] or res["__chg"] != 1):
             raise DustError(msgs[fk_rank])
         return res
